@@ -24,23 +24,7 @@ from ..functions.deterministic import (
     hilo_sum_exprs,
     pos_zero,
 )
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +61,7 @@ def q117_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the partition key is the entity id, so state never
     concentrates; no driver involvement."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    ev = table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     changes = (
         ev.withColumn("prev_type", F.lag("event_type").over(w))
         .filter(F.col("prev_type").isNull() | (F.col("prev_type") != F.col("event_type")))
@@ -151,7 +135,7 @@ def q118_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole fill is a single shuffle on event_type. Interpolation arithmetic
     is shaped identically to the oracle (exact decimal day-sums, one
     double multiply/divide) for bit-equality."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 300)
+    ev = table(spark, sf_dir, "events").filter(F.col("value") > 300)
     daily = (
         ev.groupBy("event_type", F.to_date(F.date_trunc("day", "ts")).alias("day"))
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("day_value"))
@@ -231,7 +215,7 @@ def q120_histogram_fixed_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     in Spark but not DuckDB; floor-div is the portable identical form).
     One map-side-combinable groupBy — the canonical distributed histogram;
     at 100 TB the bucket cardinality (~21) makes the shuffle negligible."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     bucket = F.floor(F.col("l_extendedprice") / F.lit(5000.0)).cast("bigint")
     return (
         li.groupBy(bucket.alias("bucket"))
@@ -307,7 +291,7 @@ def q121_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the shuffle carries each column's distinct values once instead of
     a 6x-expanded row stream. The oracle's UNION ALL restates the same
     stats as per-column scans."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     num_cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     str_cols = ["o_orderstatus", "o_orderpriority"]
     aggs = [F.count(F.lit(1)).alias("n_rows")]
@@ -416,7 +400,7 @@ def q122_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e3-magnitude covariances). At 100 TB this is the only sane shape:
     one scan, never one per pair; integer partial-sums map-side combine
     like any other SUM (decimal fallback documented for >8e8-row sf)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     moments = (
         li.select(*_Q122_COLS)
         .agg(*(F.expr(m) for m in _Q122_MOMENTS))
@@ -471,7 +455,7 @@ def q123_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     divide — deterministic. The classic session-behavior model at any
     scale: state size is |event_type|², independent of row count."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    ev = table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     pairs = (
         ev.withColumn("next_type", F.lead("event_type").over(w))
         .filter(F.col("next_type").isNotNull())
@@ -515,7 +499,7 @@ def q135_window_median_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-identical. At 100 TB the window key must be the partition
     key anyway, and a skewed event_type is exactly what AQE skew-split
     handles — no driver-side percentile collection."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type")
     med = F.median("value").over(w)
     return (
@@ -565,7 +549,7 @@ def q136_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partitioning); at 100 TB this is a single exchange over the
     distinct (user, day) pairs, which are orders of magnitude smaller
     than the raw events."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     days = e.select("user_id", F.to_date("ts").alias("d")).distinct()
     w = Window.partitionBy("user_id").orderBy("d")
     islands = days.withColumn("rn", F.row_number().over(w)).withColumn(
@@ -618,7 +602,7 @@ def q138_time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (Catalyst reuses the partitioning); weights are exact integer
     epoch-microsecond durations, value*dur sums in decimal — order-independent
     and oracle-exact. The final division is one double op per group."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     seg = (
         e.select("event_type", "value", "ts", F.col("event_id"))
@@ -688,7 +672,7 @@ def q141_conversion_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n^2) formulation. One shuffle on user_id; the purchase filter
     happens after the window (it must see the full history) but prunes
     before any further stage."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -738,7 +722,7 @@ def q142_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distinct-of-flatten). State per frame is |7-day users|, not 7 days
     of raw events — the same collapse a 100 TB rollup needs. Exact, not
     a sketch; the HLL variant for wider frames is q133."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     daily = (
         e.select(
             "event_type",
@@ -797,7 +781,7 @@ def q151_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak, which is what makes NTILE comparable across engines at
     all. Equi-depth bounds are what a query optimizer stores — skew
     shows up as wide buckets, not empty ones."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     return (
         e.select("event_type", "value", F.ntile(10).over(w).alias("decile"))
@@ -843,7 +827,7 @@ def q152_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile collection. The 1.4826 constant rescales MAD to sigma
     under normality; every arithmetic step is the same double op on both
     engines."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type")
     med = F.median("value").over(w)
     step1 = e.select("event_id", "event_type", "value", med.alias("med"))
@@ -880,7 +864,7 @@ def q154_grouping_id_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tell the all-types total from a NULL event_type group. Single Expand
     + one aggregate (same single-scan plan as q11/q12/q18, which cover
     the set shapes; this covers the marker functions)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     day = F.date_format(F.to_date("ts"), "yyyy-MM-dd")
     grouped = (
         e.select("event_type", day.alias("day"))
@@ -936,7 +920,7 @@ def q160_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     column). The interleave is pure integer shift/mask arithmetic in
     whole-stage codegen, bit-identical on both engines; the ORDER BY here
     stands in for the range-partitioned write of the real layout job."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     da = (F.col("user_id") % 256).cast("bigint")
     db = F.least(F.floor(F.col("value") * 2.55), F.lit(255)).cast("bigint")
     dims = e.select("event_id", da.alias("da"), db.alias("db"))
@@ -978,7 +962,7 @@ def q163_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregation over the bucketed key. Tie-safety: ts values
     are unique per type in this data; at 100 TB you'd tiebreak on
     (ts, event_id) via a packed struct."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     bar = F.window("ts", "15 minutes")["start"].alias("bar_start")
     return (
         e.groupBy("event_type", bar)
@@ -1024,7 +1008,7 @@ def q164_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     One range-partitioned sort; no self-join. The same rewrite carries
     any 2-D skyline at 100 TB; higher dimensions fall back to
     block-nested partitioning."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = table(spark, sf_dir, "events").filter(
         (F.col("ts") >= "2024-01-03") & (F.col("ts") < "2024-01-04")
     ).select("event_id", "ts", "value")
     w_later = (
@@ -1075,7 +1059,7 @@ def q167_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     or spiky digits). One scan to a 9-row aggregate; the total is a
     1-row broadcast. FLOOR before the integer cast (DuckDB's double->bigint cast ROUNDS,
     Spark's truncates) makes both engines' string paths identical; log10 of identical doubles is bit-equal."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
+    o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     digits = o.select(
         F.substring(F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1)
         .cast("int")
@@ -1117,7 +1101,7 @@ def q168_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparable across heterogeneous sensors/types (raw magnitudes are
     not). One window shuffle on event_type; the event_id tiebreak makes
     ranks deterministic so the [0,1] feature is reproducible."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     return (
         e.select(
@@ -1162,7 +1146,7 @@ def q169_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer microseconds so the only floats are the interpolated
     percentiles, computed from identical sorted integers on both
     engines."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (
         F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1208,7 +1192,7 @@ def q170_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     the unbounded frame). The merged-set state grows with total audience,
     which is exactly what the q133 sketch variant trades accuracy
     against; both are declared so the trade is explicit."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     daily = (
         e.select("event_type", F.to_date("ts").alias("day"), "user_id")
         .distinct()
@@ -1257,7 +1241,7 @@ def q171_events_since_marker(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration. Both windows share the user_id shuffle. Segments opened
     BY a purchase start counting after it (the -1 correction), the
     pre-first-purchase segment counts from the user's first event."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = e.select(
         "user_id",
@@ -1328,7 +1312,7 @@ def q172_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     validity range as a post-join filter — never a BNLJ — and each probe
     matches exactly one version (intervals partition the timeline by
     construction)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (
         e.select("user_id", "event_type", "ts", "event_id")
@@ -1391,7 +1375,7 @@ def q173_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate before the join (diff |keys| rows, not |rows|), the join
     keys carry the shuffle, and unchanged keys drop before any
     downstream work — the shape MERGE INTO (q115) consumes."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     old = (
         e.filter(F.col("ts") < "2024-01-16")
         .groupBy("user_id", "event_type")
@@ -1479,7 +1463,7 @@ def q174_ks_drift_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ordered window builds both ECDFs simultaneously — a single sort
     of the merged support instead of sorting either raw segment. ECDF
     divisions are int/int -> double, identical on both engines."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     a = e.filter(F.col("event_type") == "click").select("value")
     b = e.filter(F.col("event_type") == "view").select("value")
     na = a.count()  # two scalar actions on pruned scans — cheap and exact
@@ -1537,7 +1521,7 @@ def q177b_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic is order-independent and oracle-exact. The skew alarm for
     'one whale customer dominates the book' — and the same shape scores
     source concentration in a training corpus."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(dsum("o_totalprice").alias("revenue"))
     w = Window.orderBy("revenue", "o_custkey")
     ranked = cust.select(
@@ -1594,7 +1578,7 @@ def q178_groupwise_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts from order-independent inputs (builtin regr_slope accumulates
     in float and is NOT cross-engine reproducible — why it's not used).
     x is exact integer microseconds scaled to days in one double op."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     x = (
         (
             F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1659,7 +1643,7 @@ def q179_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     margins re-aggregated from it, expected counts and the statistic in
     plain arithmetic with the per-cell terms decimal-rounded before the
     final sum (order-independent, oracle-exact)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     obs = (
         e.groupBy("event_type", F.dayofweek("ts").alias("dow"))
         .agg(F.count(F.lit(1)).cast("double").alias("o"))
@@ -1720,7 +1704,7 @@ def q182_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins. DuckDB's MODE and Spark's mode() both tie-break
     deterministically on this data (unique max frequency per user
     checked by the oracle comparison itself)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     # frequent-type policy as an explicit (count, type) argmax: builtin
     # mode()'s tie-break is engine-arbitrary (measured 9-11 mismatching
     # users at sf0.01); max-of-struct ties deterministically on the type
@@ -1789,8 +1773,8 @@ def q183_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first crossing of half the total — no sort of raw lineitem, no
     quantile collection; integer weights make the crossing test exact on
     both engines."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey")
     w = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderpriority", "o_orderkey", "o_totalprice")
@@ -1860,7 +1844,7 @@ def q184_user_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates. At 100 TB this is the query you'd schedule incrementally via
     the maintained-aggregate machinery (incremental.py) rather than
     recompute — declared batch-first so the oracle pins semantics."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     base = e.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
@@ -1929,7 +1913,7 @@ def q185_whale_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     first crossing. The cumulative sum is float in both engines over the
     SAME descending sequence — identical accumulation order, so the
     crossing row matches exactly."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(dsum("o_totalprice").alias("revenue"))
     w = Window.orderBy(F.col("revenue").desc(), "o_custkey")
     ranked = cust.select(
@@ -1982,7 +1966,7 @@ def q186_population_stability_index(spark: SparkSession, sf_dir: str) -> DataFra
     discipline). Bins empty in either period would need the standard
     0.5-count smoothing — this data fills all bins, so the exact form
     holds."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     binned = e.select(
         F.least(F.floor(F.col("value") / 10.0), F.lit(9)).alias("bin"),
         F.when(F.col("ts") < "2024-01-16", "p1").otherwise("p2").alias("period"),
@@ -2040,7 +2024,7 @@ def q188_weekly_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     builtin corr() accumulates in float and is not cross-engine
     reproducible). Effectively free at any scale: everything after the
     daily aggregate touches ~days rows."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     daily = (
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
@@ -2091,7 +2075,7 @@ def q189_calendar_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the same single conditional-count aggregate as the oracle's
     FILTER columns — one scan, one 7-row shuffle, no second pass per
     column."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     block = F.concat(
         F.lit("h"),
         F.lpad((F.floor(F.hour("ts") / 4) * 4).cast("string"), 2, "0"),
@@ -2141,10 +2125,10 @@ def q190_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     are windows over THAT, so the percent-of-parent math costs nothing
     at any scale. Window sums run over decimal-exact revenues; the two
     divisions are single double ops."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    r = table(spark, sf_dir, "region")
+    n = table(spark, sf_dir, "nation")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
     nat = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -2206,7 +2190,7 @@ def q191_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     a self-join on user over ~5 types/user; the divisor relations are
     5-row broadcasts. All ratios are single double divisions of exact
     counts."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     baskets = e.select("user_id", "event_type").distinct()
     n_users = e.select("user_id").distinct().count()
     ts_ = baskets.groupBy("event_type").agg(F.count(F.lit(1)).cast("double").alias("s"))
@@ -2269,7 +2253,7 @@ def q195_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     row a cohort, each column a survival week, the diagonal the calendar
     frontier). Distinct (user, cohort, offset) first, then conditional
     distinct counts per offset — one pass, no per-column scans."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     first_week = e.groupBy("user_id").agg(
         F.min(F.date_trunc("week", "ts")).alias("cohort_week")
     )
@@ -2329,7 +2313,7 @@ def q196_repurchase_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     campaigns and LTV models are tuned against. The purchase filter
     pushes to the scan; one user-partitioned lag window over the
     filtered fraction; day-gaps are exact integer date arithmetic."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = p.select(
@@ -2382,7 +2366,7 @@ def q199_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     first; lag+lead share one ordered window; endpoints excluded (no
     defined neighborhood). Deliberately strict inequalities: plateau
     days are not peaks."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
     )

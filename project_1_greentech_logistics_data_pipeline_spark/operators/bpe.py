@@ -30,19 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune
-from ..sources.readers import load_table
+from ..registry import query, table
 from .text import tokens_expr
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
 
 
 def _adjacent_pairs(col: F.Column) -> F.Column:
@@ -133,8 +122,7 @@ def q140_bpe_learn_merges(
 ) -> DataFrame:
     """Learned BPE merge table: (rank, left, right, merged, pair_count).
     See module docstring for the scale argument."""
-    tune(spark)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     merges = learn_bpe_merges(docs, n_merges=n_merges)
     rows = [
         (i + 1, a, b, a + b, n) for i, (a, b, n) in enumerate(merges)
@@ -167,8 +155,7 @@ def q144_bpe_encode(
     |V| rows and the corpus-sized pass is a broadcast lookup + integer
     sums (measured 18s -> 7s at sf0.1 vs encoding per-occurrence; the
     same vocab/corpus asymmetry the learn step exploits)."""
-    tune(spark)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     merges = learn_bpe_merges(docs, n_merges=n_merges)
     chars = F.expr("filter(split(word, ''), x -> x <> '')")
     encoded_vocab = (

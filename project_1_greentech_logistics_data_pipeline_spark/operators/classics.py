@@ -18,23 +18,7 @@ from ..functions.deterministic import (
     hilo_sum_exprs,
     pos_zero,
 )
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 # ---------------------------------------------------------------------------
@@ -66,9 +50,9 @@ def q60_tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
     joins; the filtered customer side is broadcast; lineitem (the 100 TB
     side) streams through one broadcast join + one shuffle for the group-by.
     Top-10 is TakeOrderedAndProject."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-03-15")
+    c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-03-15")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(o.join(F.broadcast(c), o.o_custkey == c.c_custkey)),
@@ -110,13 +94,13 @@ ORDER BY revenue DESC, n_name
 
 @query("q61_tpch_q5_local_volume", _Q61_SQL)
 def q61_tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    n = table(spark, sf_dir, "nation")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     dims = (
         c.join(F.broadcast(n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)),
                c.c_nationkey == n.n_nationkey)
@@ -153,7 +137,7 @@ def q27_explode_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode (lateral view) + two-level frequency — the generalized form
     of the pipeline's array flatten (Glue_job.py:33). Partial aggregation
     runs map-side before the single shuffle on tok."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     from .text import tokens_expr
 
     return (
@@ -236,7 +220,7 @@ def q19_percentiles_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_Q19_STATS) are the same IEEE double expressions on both engines,
     so the absolute-decimal rounds can never straddle an
     accumulation-order boundary."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     moments = (
         li.groupBy("l_returnflag")
         .agg(
@@ -263,7 +247,7 @@ def q28_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++): the constant-memory distinct
     count for 100 TB cardinality estimation. tests/test_extensions.py checks
     the estimate lands within rsd of the exact count."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("approx_customers"),
         F.countDistinct("o_custkey").alias("exact_customers"),
@@ -297,7 +281,7 @@ def q29_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in tests/test_extensions.py."""
     from .text import _frac_threshold_hex, _md5_prefix
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     # F.concat, not concat_ws: concat NULL-propagates exactly like the
     # oracle's `||`, so a NULL key component reaches _md5_prefix's
     # COALESCE('__null__') sentinel on BOTH engines (concat_ws would
@@ -348,7 +332,7 @@ def q35_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     omitting the value list forces an extra distinct-collection job before
     the real aggregation. Output columns renamed to identifier-safe names
     shared with the oracle."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     df = (
         o.groupBy("o_orderstatus")
         .pivot("o_orderpriority", [v for v, _ in _PRIORITIES])
@@ -377,7 +361,7 @@ FROM (
 def q36_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unpivot/melt via stack() — wide-to-long without N scans (one pass,
     rows fan out 2x; the UNION ALL oracle form would scan the table twice)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.expr(

@@ -32,23 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum, pos_zero_col
+from ..registry import query, table
 from ..session import tune
 from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -89,24 +75,24 @@ def q82_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the final group-by on (nation, nation, year).
     """
     pair = ("NATION_3", "NATION_7")
-    n1 = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
+    n1 = table(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
     n2 = n1.alias("n2")
     s = (
-        _t(spark, sf_dir, "supplier")
+        table(spark, sf_dir, "supplier")
         .join(F.broadcast(n1), F.col("s_nationkey") == n1.n_nationkey)
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     c = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2.n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     o = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "cust_nation")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -163,26 +149,26 @@ def q83_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the ratio is bit-deterministic against the oracle. Seven-table join:
     every dim side is broadcast; lineitem is scanned once.
     """
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    n1 = _t(spark, sf_dir, "nation").select(
+    p = table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    n1 = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        table(spark, sf_dir, "supplier")
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
         .select("s_suppkey", "supp_nation")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    n2 = _t(spark, sf_dir, "nation").join(
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    n2 = table(spark, sf_dir, "nation").join(
         F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
     )
     c = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .join(F.broadcast(n2), F.col("c_nationkey") == n2.n_nationkey)
         .select("c_custkey")
     )
     o = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .filter(
             (F.col("o_orderdate") >= "1996-01-01")
             & (F.col("o_orderdate") < "1998-01-01")
@@ -190,7 +176,7 @@ def q83_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     nat_vol = F.when(F.col("supp_nation") == "NATION_8", vol).otherwise(F.lit(0.0))
     return (
@@ -236,15 +222,15 @@ def q88_tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `contains`); the filtered part and all other dims broadcast, so the
     100 TB lineitem side is one scan + one group-by shuffle.
     """
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    n = _t(spark, sf_dir, "nation")
+    p = table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    n = table(spark, sf_dir, "nation")
     s = (
-        _t(spark, sf_dir, "supplier")
+        table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = table(spark, sf_dir, "lineitem")
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(0.8) * F.col(
         "p_retailprice"
     ) * F.col("l_quantity")
@@ -290,12 +276,12 @@ def q84_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k on the aggregate — the group-by shuffle carries the key columns,
     the limit is TakeOrderedAndProject (no global sort materialization).
     """
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     cd = c.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey")).select(
         "c_custkey", "c_name", "c_acctbal", "n_name"
     )
@@ -346,11 +332,11 @@ def q85_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("Brand#13", 10, 30, 10, 20),
         ("Brand#22", 20, 50, 20, 30),
     ]
-    p = _t(spark, sf_dir, "part").filter(
+    p = table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin(*[b for b, *_ in bands])
         & F.col("p_size").between(min(b[1] for b in bands), max(b[2] for b in bands))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity").between(min(b[3] for b in bands), max(b[4] for b in bands))
     )
     disj = None
@@ -408,9 +394,9 @@ def q86_tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame
     exchanges. At 100 TB the win is that the anti side is pre-filtered to
     returnflag='R' before the shuffle.
     """
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = table(spark, sf_dir, "lineitem")
     l1 = (
         li.filter(F.col("l_returnflag") == "R")
         .alias("l1")
@@ -483,7 +469,7 @@ def q87_tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFram
     NOT EXISTS is a left_anti against the recent-orders custkey
     projection.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     # last DIGIT, not last-2: the driver corpus regenerates per round and
     # a 7-of-100 code slice over the handful of dormant customers at
     # sf0.001 goes empty on unlucky draws — 5-of-10 keeps the Q22
@@ -496,7 +482,7 @@ def q87_tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFram
              / F.count("c_acctbal")).alias("avg_bal")
         )
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     # timestamp-preserving interval arithmetic (NOT add_months, which
     # returns DATE and truncates time-of-day — the oracle's
     # `- INTERVAL 12 MONTH` keeps it, and o_orderdate is a timestamp)
@@ -554,7 +540,7 @@ def q89_variant_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between N parses and 1. try_variant_get returns NULL on a
     missing path (counted here as n_missing_k) instead of failing.
     """
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     v = F.parse_json(F.col("props"))
     k = F.try_variant_get(v, "$.k", "bigint")
     return (
@@ -653,7 +639,7 @@ def q95_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-collection-per-group (q19) stops being affordable. accuracy=10000
     bounds rank error at ~0.01%; the pytest checks the estimates land within
     rank tolerance of the exact interpolated percentiles."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.approx_percentile("l_extendedprice", F.lit(0.5), F.lit(10000)).alias(
             "approx_median"
@@ -693,8 +679,8 @@ def q98_tpch_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(o_orderkey) counts only matched rows, so no-order customers land
     in the c_count=0 bucket. The second aggregation's input is one row per
     customer — the second shuffle is tiny; AQE coalesces it."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_outer")
         .groupBy(c.c_custkey)
@@ -745,7 +731,7 @@ def q99_pandas_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     _geomean.__annotations__ = {"prices": pd.Series, "return": float}
     geomean = pandas_udf(_geomean, "double")
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(F.round(geomean("l_extendedprice"), 4).alias("geomean_price"))
@@ -787,10 +773,10 @@ def q106_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     AGGREGATE's output — thousands of rows regardless of fact size — so the
     window stage costs nothing at 100 TB; the plan is one fact pass + one
     group-by shuffle + one tiny window exchange."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
     cd = c.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey")).select(
         "c_custkey", F.col("n_name").alias("nation")
     )

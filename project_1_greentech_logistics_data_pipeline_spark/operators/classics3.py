@@ -28,23 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +55,7 @@ def q126_tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     projection prunes to 4 columns, and the aggregate is a partial+final
     pair with no group key — a two-row exchange. The 100 TB cost is the IO
     the pushdown skips, nothing else."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= "1997-01-01")
@@ -118,8 +102,8 @@ def q127_tpch_q12_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the one query here that earns a shuffle join on l_orderkey —
     which bucketing (sources/bucketing.py) amortizes across runs. The
     group-by has 3 groups: partial aggregation collapses it map-side."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     lag = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
@@ -169,7 +153,7 @@ def q128_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     into an equality filter — the decorrelated form that never rescans
     lineitem. Ties are kept, as the spec requires. Revenue equality is
     exact because both sides sum in decimal(38,6)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
     revenue = (
@@ -177,7 +161,7 @@ def q128_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue"))
     )
     top = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    s = _t(spark, sf_dir, "supplier")
+    s = table(spark, sf_dir, "supplier")
     return (
         revenue.join(F.broadcast(top), F.col("total_revenue") == F.col("max_revenue"))
         .join(F.broadcast(s), F.col("s_suppkey") == F.col("supplier_no"))
@@ -234,7 +218,7 @@ def q129_tpch_q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFra
     argmax, the same correlated-aggregate shape.)"""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     sp = (
         li.groupBy("l_partkey", "l_suppkey")
         .agg(dsum("l_quantity").alias("sup_qty"))
@@ -247,8 +231,8 @@ def q129_tpch_q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum(F.col("sup_qty").cast("decimal(38,6)")).over(wp).cast("double").alias("total_qty"),
         F.max("sup_qty").over(wp).alias("max_qty"),
     )
-    red = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    s = _t(spark, sf_dir, "supplier")
+    red = table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    s = table(spark, sf_dir, "supplier")
     return (
         enriched.filter(F.col("sup_qty") == F.col("max_qty"))
         .join(F.broadcast(red), F.col("p_partkey") == F.col("l_partkey"))
@@ -301,8 +285,8 @@ def q197_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Near-zero correlations on this synthetic data are themselves the
     honest answer: the generator draws discount and quantity
     independently."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     joined = li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey")).select(
         "p_brand", F.col("l_discount").alias("x"), F.col("l_quantity").alias("y")
     )
@@ -362,7 +346,7 @@ def q198_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     NTILE windows are global but run over the |customers| relation, not
     facts; o_custkey tie-breaks make every quintile boundary
     deterministic (NTILE without a total order is not reproducible)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
@@ -415,10 +399,10 @@ def q201_shipping_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's telemetry never aggregates). Orders project to two
     columns before the fact join; conditional counts and the exact
     median ride one aggregate; day-lags are integer date arithmetic."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     lag = F.datediff("l_shipdate", "o_orderdate")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity_expr
+from ..registry import query, table
 from ..session import tune
 from ..sources.readers import load_table
 
@@ -44,23 +44,6 @@ from .text import doc_fp_expr as _doc_fp_expr
 from .text import lang_stage_cte_sql as _lang_stage_cte_sql
 from .text import tokens_expr
 from .text2 import _lm_tier_sql
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -81,7 +64,7 @@ GROUP BY 1
 def q43_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by canonical fingerprint with a deterministic keeper
     (min doc_id) — the distributed form of dropDuplicates, made stable."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     return (
         d.select(_doc_fp_expr().alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
@@ -98,7 +81,7 @@ GROUP BY user_id, event_type
 
 @query("q43b_dedup_exact_events", _Q43B_SQL)
 def q43b_dedup_exact_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return e.groupBy("user_id", "event_type").agg(
         F.min("event_id").alias("first_event_id"), F.count("*").alias("n_dups")
     )
@@ -233,23 +216,12 @@ def _jaccard_mask_expr(ma: Column, mb: Column, sza: Column, szb: Column) -> Colu
     return inter.cast("double") / (sza + szb - inter)
 
 
-def hashed_token_sets(
-    spark: SparkSession,
-    sf_dir: str,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
+def hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, hset, sz): distinct tokens hashed ONCE to sorted
     longs. Set ops on long arrays are far cheaper than on string arrays
     (no UTF8 compares, 8-byte elements through joins); a 64-bit collision
-    changing a Jaccard count is astronomically unlikely. ``keep`` gates
-    the scan with a doc_id SEMI join (see bitmask_token_sets); ``docs``
-    (optional ``(doc_id, lang, text)`` relation) replaces the documents
-    scan entirely so compositions can enumerate pairs over TRANSFORMED
-    text (q217 builds the graph over redacted survivors)."""
-    d = docs if docs is not None else load_table(spark, sf_dir, "documents")
-    if keep is not None:
-        d = d.join(keep.select("doc_id"), "doc_id", "semi")
+    changing a Jaccard count is astronomically unlikely."""
+    d = load_table(spark, sf_dir, "documents")
     hset = F.array_sort(
         F.array_distinct(F.transform(tokens_expr("text"), lambda t: F.xxhash64(t)))
     )
@@ -349,31 +321,21 @@ def minhash_signature(hset: Column) -> Column:
     )
 
 
-def minhash_docs(
-    spark: SparkSession,
-    sf_dir: str,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    docs = hashed_token_sets(spark, sf_dir, keep, docs)
+def minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = hashed_token_sets(spark, sf_dir)
     return docs.select(
         "doc_id", "lang", "hset", "sz", minhash_signature(F.col("hset")).alias("sig")
     )
 
 
-def lsh_candidate_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b) MinHash-LSH candidate pairs: signature scan (narrow)
     -> explode to LSH bands -> equi-join on (band_id, band_hash). This is
     q45's pre-verify stage, exposed separately so the scale probe can
     measure candidate mass (the quantity the S-curve actually governs)
     independent of verify cost."""
     tune(spark)
-    docs = minhash_docs(spark, sf_dir, keep, docs).cache()
+    docs = minhash_docs(spark, sf_dir).cache()
     # lang rides along: the exact-verify bitmaps are dictionary-encoded PER
     # LANG, so a cross-lang candidate pair would popcount meaningless bit
     # overlap (or zip_with a NULL). Same-lang candidates only — matching
@@ -410,23 +372,20 @@ def lsh_candidate_pairs(
     )
 
 
-def _lsh_verified_pairs(
-    spark: SparkSession, sf_dir: str, *, round_first: bool,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """LSH candidates + exact bitmap-Jaccard verify at JACCARD_THRESHOLD.
+@query("q45_minhash_lsh_neardup", None)  # probabilistic candidates -> rows-only
+def q45_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH near-dup at threshold 0.95.
 
-    ``round_first`` selects which side of the 6-dp rounding the threshold
-    filter runs on: False matches q44/_Q44_SQL (WHERE on the raw score),
-    True matches the ROUND-then-WHERE order of q194's oracle — a pair
-    whose raw score sits in [t-5e-7, t) exists under True but not False,
-    so callers must pick the order their oracle uses. ``keep`` gates both
-    the candidate build and the verify bitmaps (see bitmask_token_sets);
-    ``docs`` overrides the scan on both (same relation both sides, so
-    candidate and verify token sets stay consistent)."""
-    cand = lsh_candidate_pairs(spark, sf_dir, keep, docs)
-    masks = bitmask_token_sets(spark, sf_dir, keep, docs).cache()
+    Plan: signature scan (narrow) -> explode to LSH bands -> equi-join on
+    (band_id, band_hash) to get candidates -> exact Jaccard verify on the
+    candidate set only. At 100 TB this is shuffle-on-band-hash + a verify
+    join, never a cross join. Verified pairs are exact (precision 1.0 by
+    construction); recall is probabilistic — tests/test_dedup.py checks it
+    against the brute-force q44 result. Threshold filters the RAW score
+    (q44's order).
+    """
+    cand = lsh_candidate_pairs(spark, sf_dir)
+    masks = bitmask_token_sets(spark, sf_dir).cache()
     a = masks.select(
         F.col("doc_id").alias("doc_a"), F.col("mask").alias("mask_a"), F.col("sz").alias("sz_a")
     )
@@ -441,28 +400,9 @@ def _lsh_verified_pairs(
         .join(F.broadcast(b), "doc_b")
         .select("doc_a", "doc_b", jac.alias("jaccard_raw"))
     )
-    if round_first:
-        return scored.select(
-            "doc_a", "doc_b", F.round("jaccard_raw", 6).cast("double").alias("jaccard")
-        ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     return scored.filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", F.round("jaccard_raw", 6).cast("double").alias("jaccard")
     )
-
-
-@query("q45_minhash_lsh_neardup", None)  # probabilistic candidates -> rows-only
-def q45_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup at threshold 0.95.
-
-    Plan: signature scan (narrow) -> explode to LSH bands -> equi-join on
-    (band_id, band_hash) to get candidates -> exact Jaccard verify on the
-    candidate set only. At 100 TB this is shuffle-on-band-hash + a verify
-    join, never a cross join. Verified pairs are exact (precision 1.0 by
-    construction); recall is probabilistic — tests/test_dedup.py checks it
-    against the brute-force q44 result. Threshold filters the RAW score
-    (q44's order); see _lsh_verified_pairs for the rounded-order twin.
-    """
-    return _lsh_verified_pairs(spark, sf_dir, round_first=False)
 
 
 # ---------------------------------------------------------------------------
@@ -575,7 +515,7 @@ def q47_embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding table is a fixed 500-2000 vectors); the LSH-bucketed scale
     variant is operators/similarity.py::q49. Cosine is a zip_with/aggregate
     expression — whole-stage codegen, no UDF."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     return _blocked_cosine_pairs(spark, e, COSINE_DUP_THRESHOLD)
 
 
@@ -964,17 +904,9 @@ def neardup_pairs(
     keep: DataFrame | None = None,
     docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate-pair source for clustering/curation (q73/q78/q214),
-    switchable via SPARK_GRAFT_NEARDUP_CANDIDATES:
-
-      exact (default) — q44's within-lang blocked all-pairs: the oracle
-        baseline, exact by construction, quadratic per lang block.
-      lsh — q45's MinHash-LSH candidates + exact-Jaccard verify: the
-        100 TB path (shuffle-on-band-hash, never a cartesian). Verified
-        pairs are exact (precision 1.0); recall at threshold 0.95 is
-        1-(1-s^8)^4 ≈ 0.99 at the boundary, ~1.0 above it —
-        tests/test_dedup_properties.py pins LSH-vs-exact parity on the
-        testdata corpus.
+    """Candidate-pair source for clustering/curation (q73/q78/q214): q44's
+    within-lang blocked all-pairs — the oracle baseline, exact by
+    construction, quadratic per lang block.
 
     ``keep`` (optional doc_id relation) restricts the pair graph to the
     induced subgraph on those documents — enforced by gating the SCAN,
@@ -985,17 +917,9 @@ def neardup_pairs(
     full-corpus components — removing a junk node may split a cluster).
 
     ``docs`` (optional ``(doc_id, lang, text)`` relation) replaces the
-    documents scan in BOTH modes — q217 builds the pair graph over
-    redaction-transformed survivor text, where pair existence itself
-    changes (two docs differing only in blocklisted terms become
-    near-identical after redaction)."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_NEARDUP_CANDIDATES", "exact")
-    if mode == "lsh":
-        return _lsh_verified_pairs(
-            spark, sf_dir, round_first=False, keep=keep, docs=docs
-        ).select("doc_a", "doc_b")
+    documents scan — q217 builds the pair graph over redaction-transformed
+    survivor text, where pair existence itself changes (two docs differing
+    only in blocklisted terms become near-identical after redaction)."""
     return _exact_pairs(spark, sf_dir, keep, docs).select("doc_a", "doc_b")
 
 
@@ -1065,7 +989,7 @@ def q78_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import tokens_expr as _tokens
 
     tune(spark)
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     keeper = F.min("doc_id").over(Window.partitionBy(_doc_fp_expr()))
@@ -1126,8 +1050,7 @@ def q109_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     join broadcasts it — a map-side hash probe per document, no corpus
     shuffle. For eval sets too big to broadcast, pre-partition both sides
     on the fingerprint prefix (the q41 shard_key)."""
-    tune(spark)
-    d = load_table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     fp = d.select("doc_id", "lang", _doc_fp_expr().alias("fingerprint"))
     benchmark = (
         fp.filter(F.col("doc_id") % 50 == 0).select("fingerprint").distinct()
@@ -1238,7 +1161,7 @@ def q192_neardup_explanations(spark: SparkSession, sf_dir: str) -> DataFrame:
     stringification — unsorted diffs would be partition-dependent)."""
     from .text import tokens_expr as _tok
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.array_distinct(_tok("text")).alias("toks")
     )
     pairs = q44_ngram_jaccard_neardup(spark, sf_dir).select("doc_a", "doc_b")
@@ -1284,17 +1207,16 @@ _NEG_RATE = 0.10
 
 def _neg_sample_sql(a: str, b: str) -> str:
     """Deterministic pseudo-random pair-sample predicate, written ONCE and
-    shared verbatim by both Spark modes (F.expr) and the DuckDB oracle —
-    three hand-copies of this rule would have to stay bit-identical for
-    mode equivalence to hold.
+    shared verbatim by Spark (F.expr) and the DuckDB oracle, so the two
+    copies cannot drift.
 
     Overflow-safe for ANY int64 doc ids: each id is pre-reduced mod the
     prime 99991 before the multiply, capping each product at ~2.7e14
     (the previous (a*10000+b)*knuth form overflowed int64 — ANSI Spark
-    raises, DuckDB errors — once ids passed ~3.5e8, i.e. exactly the
-    corpus sizes the LSH mode exists for; it was also non-injective for
-    b >= 10000). Pre-reduction only folds the sampling pattern with
-    period 99991 per id — irrelevant for an unbiased 10% sample."""
+    raises, DuckDB errors — once ids passed ~3.5e8; it was also
+    non-injective for b >= 10000). Pre-reduction only folds the sampling
+    pattern with period 99991 per id — irrelevant for an unbiased 10%
+    sample."""
     return (
         f"(({a} % {_NEG_REDUCE}) * {_NEG_P1} + ({b} % {_NEG_REDUCE}) * {_NEG_P2})"
         f" % {_NEG_MOD} < {int(_NEG_RATE * _NEG_MOD)}"
@@ -1305,19 +1227,11 @@ def _ngram_jaccard_scored(
     spark: SparkSession,
     sf_dir: str,
     min_score: float = _NEG_BAND[0],
-    presample: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for every same-lang pair with Jaccard >=
     ``min_score`` — q44's salted bitmap machinery with the size-band
     prune relaxed to the lower bound (sound: the band predicate is
-    monotone in the threshold), no final dup-threshold filter.
-
-    ``presample`` applies the deterministic pair sample (_neg_sample_sql)
-    BEFORE the popcount verify: the sampling predicate depends only on the
-    pair ids, so un-sampled candidates are dropped without ever computing
-    their Jaccard — the dominant verify mass shrinks by 1/rate. Only valid
-    when the caller wants exclusively the sampled subset (q194's LSH-
-    assisted negative path)."""
+    monotone in the threshold), no final dup-threshold filter."""
     tune(spark)
     docs = bitmask_token_sets(spark, sf_dir).cache()
     a = docs.withColumn("part", F.pmod(F.xxhash64("doc_id"), F.lit(_PAIR_SALT))).alias("a")
@@ -1335,8 +1249,6 @@ def _ngram_jaccard_scored(
         # the final filter below is on the rounded value.
         & _size_band(F.col("a.sz"), F.col("b.sz"), max(min_score - 1e-6, 0.0)),
     )
-    if presample:
-        joined = joined.filter(F.expr(_neg_sample_sql("a.doc_id", "b.doc_id")))
     return (
         joined.select(
             F.col("a.doc_id").alias("doc_a"),
@@ -1386,47 +1298,10 @@ def q194_dedup_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially separable). The negative sample uses the Knuth-hash rule
     on the pair key, so the dataset is reproducible and oracle-exact —
     label noise from RNG sampling would poison comparisons between
-    classifier runs. Reuses the q44 candidate machinery for scoring.
-
-    SPARK_GRAFT_Q194_MODE (env switch, neardup_pairs pattern):
-
-      exact (default) — one banded-quadratic scoring pass feeds both
-        labels: the oracle baseline, exact by construction.
-      lsh — the 100 TB shape: positives from q45's MinHash-LSH
-        candidates + exact verify (shuffle-on-band-hash, never
-        quadratic), negatives from the banded quadratic with the
-        Knuth sample applied BEFORE the popcount verify (the sampling
-        predicate is pair-key-only, so ~90% of band candidates are
-        dropped unverified — the dominant mass of the exact plan).
-        Result-equivalent on corpora where LSH recall at the 0.95
-        threshold is 1.0 (pinned vs the exact path at sf0.01 in
-        tests/test_dedup_properties.py); at true 100 TB the recall is
-        the documented 1-(1-s^8)^4 S-curve. Measured (SCALE.md q194
-        mode probe): 1.7-1.8x faster than exact on realistic-vocabulary
-        corpora at 5k-20k docs with a ~0.3% positive recall deficit;
-        a wash on the 0.63-background-Jaccard adversarial corpus where
-        band candidates are themselves near-quadratic. Both modes stay
-        ~quadratic overall — the hard-negative band requires it.
+    classifier runs. Reuses the q44 candidate machinery for scoring: one
+    banded-quadratic scoring pass feeds both labels (the hard-negative
+    band requires the quadratic).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_Q194_MODE", "exact") == "lsh":
-        # round_first=True: the q194 oracle filters the ROUNDED score, so
-        # the positives must too — q45's raw-order filter would drop a
-        # pair whose raw score sits in [t-5e-7, t) and break both
-        # oracle-exactness and mode equivalence at the 6-dp boundary.
-        pos = _lsh_verified_pairs(spark, sf_dir, round_first=True).select(
-            "doc_a", "doc_b", "jaccard", F.lit(True).alias("is_duplicate")
-        )
-        neg = (
-            _ngram_jaccard_scored(spark, sf_dir, presample=True)
-            .filter(
-                (F.col("jaccard") >= _NEG_BAND[0]) & (F.col("jaccard") < _NEG_BAND[1])
-            )
-            .select("doc_a", "doc_b", "jaccard", F.lit(False).alias("is_duplicate"))
-        )
-        return pos.unionByName(neg).orderBy("doc_a", "doc_b")
-
     scored = _ngram_jaccard_scored(spark, sf_dir)
     pos = scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", "jaccard", F.lit(True).alias("is_duplicate")
@@ -1499,7 +1374,7 @@ def _doc_unit_fanout(
     already hash-partitioned by doc_id. (The oracles derive the same
     totals from the exploded units, which doubles as a disjoint-cover
     check.)"""
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base = d.repartition(n_shuffle, F.col("doc_id")).select(
         "doc_id", tokens_expr("text").alias("toks")
@@ -2105,7 +1980,7 @@ def q210_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment above for the provable stage-order rationale (dedup-last is
     vacuous after a global span keeper), the Spark-vs-oracle token-
     rebuild equivalence, and the 100 TB plan shape."""
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select("doc_id", "text")
     keep_ids, scrubbed, span_kept = _curation_stages(base0)
@@ -2284,7 +2159,7 @@ def q213_filtered_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
         .select("doc_id")
         .cache()
     )
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select("doc_id", "text")
     # stage 0 — quality gate: only survivor doc_ids ride the join;
@@ -2348,20 +2223,14 @@ def q213_filtered_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
 # adjudicated order), cluster labels are min-over-component (engine-free),
 # q212/q210's integer machinery is reused verbatim — the only float is
 # the Jaccard comparison itself, computed as the SAME single IEEE
-# division on both engines (q44's driver-green construction). Candidate
-# discovery is env-switchable exact->LSH (neardup_pairs): exact is the
-# oracle-checkable default, banded MinHash-LSH is the 100 TB path
-# (precision 1.0 by construction — verified pairs only — so the ledger
-# is identical whenever LSH recall is 1, which test_dedup_properties
-# pins on this corpus; the q78 precedent).
+# division on both engines (q44's driver-green construction).
 #
 # 100 TB shape: the gate drops mass BEFORE the pair build (keep= gates
-# the scan, not the pair endpoints), signatures/bitmaps ship instead of
-# text, banding keeps candidates an equi-join, components converge in
-# O(diameter) rounds of partial-agg min-label propagation with
-# localCheckpoint lineage cuts and 1-row convergence collects, and the
-# downstream stages are q210's adjudicated shapes. No reference
-# equivalent (SURVEY.md §2.10 north-star extension).
+# the scan, not the pair endpoints), bitmaps ship instead of text,
+# components converge in O(diameter) rounds of partial-agg min-label
+# propagation with localCheckpoint lineage cuts and 1-row convergence
+# collects, and the downstream stages are q210's adjudicated shapes. No
+# reference equivalent (SURVEY.md §2.10 north-star extension).
 
 _Q214_SQL = _Q212_CTES_SQL.replace("WITH base AS", "WITH RECURSIVE base AS", 1) + f""",
 qkeep AS (
@@ -2445,8 +2314,8 @@ def q214_fuzzy_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tokens, kept_quality, kept_fuzzy, kept_exact, scrub_kept_tokens,
     span_kept_tokens). See the block comment above for the stage-order
     rationale (the cluster keeper is chosen among quality survivors; the
-    exact stage stays load-bearing for cross-lang identical text), the
-    exact->LSH candidate switch, and the 100 TB plan shape."""
+    exact stage stays load-bearing for cross-lang identical text) and the
+    100 TB plan shape."""
     from .text import q212_gopher_quality_filter
 
     # ONE cached bounded doc_id verdict set, exactly q213's adjudicated
@@ -2459,7 +2328,7 @@ def q214_fuzzy_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .cache()
     )
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select("doc_id", "text")
     # stage 1 — fuzzy dedup over the GATED corpus: pair graph (keep= gates
@@ -2600,11 +2469,7 @@ def q216_ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bigrams, avg_neg_logp, tier. See the block comment above for the
     decision-bearing stage order (lang-id and the LM both see scrubbed
     text), the documented CCNet adaptations, and the cached ``langed``
-    relation's 100 TB rationale. Inherits q215's ``SPARK_GRAFT_TIER_CUT``
-    mode contract: under ``prefix2`` the tier stage runs an EAGER driver
-    job (the bounded offsets collect) at DataFrame-construction time, and
-    the env var is read at plan-build time — see
-    :func:`..text2.q215_ccnet_perplexity_tiers`."""
+    relation's 100 TB rationale."""
     from .text import lang_id_from_toks
     from .text2 import _lm_tier_df
 
@@ -2694,9 +2559,8 @@ def q216_ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the semi-join projection); the redacted relation is cache()d because
 # three consumers need it (pair build via neardup_pairs(docs=), the
 # fuzzy-survivor text, the ledger's hits column) — the module's
-# documented cache contract, released by session.release_session_state;
-# candidates stay env-switchable exact->LSH through neardup_pairs. No
-# reference equivalent (SURVEY.md §2.10 north-star extension).
+# documented cache contract, released by session.release_session_state.
+# No reference equivalent (SURVEY.md §2.10 north-star extension).
 
 _Q217_SQL = _Q212_CTES_SQL.replace("WITH base AS", "WITH RECURSIVE base AS", 1) + f""",
 qkeep AS (
@@ -2785,8 +2649,7 @@ def q217_tagged_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     redact_hits, kept_fuzzy, kept_exact, scrub_kept_tokens,
     span_kept_tokens). See the block comment above for the stage-order
     rationale (redaction-unifies-near-dups; the gate sees raw text; the
-    scrub's df counts redacted lines), the exact->LSH candidate switch,
-    and the 100 TB plan shape."""
+    scrub's df counts redacted lines) and the 100 TB plan shape."""
     from .text import q212_gopher_quality_filter
 
     # ONE cached bounded doc_id verdict set (q213/q214's adjudicated
@@ -2799,7 +2662,7 @@ def q217_tagged_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_id")
         .cache()
     )
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
         "doc_id", "lang", "text"
@@ -3080,7 +2943,7 @@ def q218_url_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     provable stage-order rationale, and the 100 TB plan shape."""
     from .text import q212_gopher_quality_filter
 
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
         "doc_id", "lang", "text"
@@ -3201,12 +3064,8 @@ def q218_url_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on one machine instead; the relational form is what shards). The gram
 # group-by ships (gram, doc_id) through Spark's two-stage distinct
 # aggregate (partial-aggregatable — a hot gram ships one row per map
-# task per doc, never per occurrence, the _boiler_set precedent); under
-# SPARK_GRAFT_SUBSTR_KEY=hash the shuffle key becomes xxhash64(gram) —
-# 8 bytes instead of ~K tokens of text — with the exact text key as the
-# default/oracle path and the mode equivalence pinned by test (the
-# q44->q45 / q194 exact->LSH switch precedent; a 64-bit collision would
-# need ~2^32 distinct grams in one corpus to reach even-odds). The
+# task per doc, never per occurrence, the _boiler_set precedent); the
+# shuffle key is the gram text itself, exact by construction. The
 # dup-gram table is the HAVING filter's output (bounded by the shared
 # mass, not the corpus) and joins back to occurrences AQE-decided
 # (broadcast when it fits — the q208 anti-join rationale); the island
@@ -3216,13 +3075,10 @@ def q218_url_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # No pair graph, no crossJoin, no driver state: the only corpus-sized
 # relation after the fan-out is the occurrence set of DUPLICATED grams.
 # That relation (occ) feeds two consumers (hits + island merge), so the
-# fan-out is recomputed ~3x per action in the default plan — a MEASURED
-# tradeoff, not an oversight (r13 ADVICE): caching occ halves the
-# fan-out passes but timed ~2x slower at sf0.1 (materialization + lost
-# pruning beat the recompute at small dup mass), so the default stays
-# uncached and SPARK_GRAFT_SUBSTR_CACHE=1 enables the cache for
-# big-dup-mass corpora where the fan-out dominates (equivalence pinned
-# by test; m-axis measurements in SCALE.md).
+# fan-out is recomputed ~3x per action — a MEASURED tradeoff, not an
+# oversight (r13 ADVICE): caching occ halves the fan-out passes but
+# timed ~2x slower at sf0.1 (materialization + lost pruning beat the
+# recompute at small dup mass).
 # No reference equivalent (SURVEY.md §2.10 north-star extension).
 
 _SUBSTR_K = 8
@@ -3344,24 +3200,18 @@ def q219_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     See the block comment above for the suffix-array -> K-gram-cover
     equivalence proof, the decision pins (cross-document only, keep-first
     keeper, union coverage), and the 100 TB plan shape (two-stage
-    distinct gram agg, SPARK_GRAFT_SUBSTR_KEY=hash 8-byte shuffle-key
-    mode, AQE-decided join-back, one doc_id window for the island merge).
+    distinct gram agg, AQE-decided join-back, one doc_id window for the
+    island merge).
     """
-    import os
-
     from pyspark.sql import Window
 
     k = _SUBSTR_K
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base = d.repartition(n_shuffle, F.col("doc_id")).select(
         "doc_id", tokens_expr("text").alias("toks")
     )
     grams = _substr_grams(base, k)
-    # The 100 TB shuffle-key switch: text key (default, oracle-exact) vs
-    # xxhash64 (8-byte shuffle rows; equivalence pinned by test).
-    if os.environ.get("SPARK_GRAFT_SUBSTR_KEY", "text") == "hash":
-        grams = grams.select("doc_id", "pos", F.xxhash64("gram").alias("gram"))
     # countDistinct + min in ONE aggregate: plans through Spark's expand +
     # two partial-agg stages (the _boiler_set rationale) — a hot gram
     # never ships per-occurrence rows.
@@ -3382,19 +3232,11 @@ def q219_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Recompute-vs-cache (r13 ADVICE, resolved by MEASUREMENT): occ has
     # two consumers (hits + the island merge) and the gram fan-out sits
-    # under both plus the gstats aggregate, so the uncached plan pays
-    # the K x fan-out ~3x per action. Caching occ (the bounded
-    # duplicated-occurrence set — caching grams would pin K x token
-    # mass) halves the fan-out passes BUT measured SLOWER at sf0.1
-    # (warm solo 1.2-2.0 s cached vs 0.5-0.9 uncached: at this sf the
-    # InMemoryRelation materialization + lost column pruning cost more
-    # than the recompute). Default therefore stays the uncached r13
-    # plan; SPARK_GRAFT_SUBSTR_CACHE=1 is the big-dup-mass path where
-    # the fan-out dominates — mode equivalence pinned by test, m-axis
-    # crossover measured in SCALE.md (the SPARK_GRAFT_SUBSTR_KEY
-    # precedent: default oracle-shaped, env switch for scale).
-    if os.environ.get("SPARK_GRAFT_SUBSTR_CACHE", "0") == "1":
-        occ = occ.cache()
+    # under both plus the gstats aggregate, so this plan pays the K x
+    # fan-out ~3x per action. Caching occ halves the fan-out passes BUT
+    # measured SLOWER at sf0.1 (warm solo 1.2-2.0 s cached vs 0.5-0.9
+    # uncached: the InMemoryRelation materialization + lost column
+    # pruning cost more than the recompute), so occ stays uncached.
     hits = occ.groupBy("doc_id").agg(
         F.sum(F.when(F.col("is_keeper"), 1).otherwise(0)).alias("keeper_hits"),
         F.sum(F.when(F.col("is_keeper"), 0).otherwise(1)).alias("dup_hits"),
@@ -3646,7 +3488,7 @@ def q220_snapshot_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     first copy); ``recrawl`` marks exactly the copies on which the two
     policies disagree. See the block comment above for the snapshot
     corpus adapter, the decision pins, and the 100 TB state story."""
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
         "doc_id", "lang", "text", "source"
@@ -3692,7 +3534,6 @@ def q220_snapshot_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-
 def snapshot_fold_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL execution of q220's kept_inc verdict: fold the
     snapshots in crawl order, keeping per-snapshot within-keepers that
@@ -3715,7 +3556,7 @@ def snapshot_fold_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct URL — the same class as the carried state). The only
     collect is the bounded distinct snapshot id set (<= _SNAP_MOD rows —
     the module's bounded-collect class)."""
-    d0 = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
         "doc_id", "lang", "text", "source"
@@ -3802,10 +3643,9 @@ def snapshot_fold_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   doubles anywhere. Overflow headroom: SCALE * kept_tokens <= 1e6 *
 #   n_tokens and substr_w * copy_w <= 1e12, both far inside int64.
 #
-# 100 TB shape: exactly q219's plan (the CTE chain is REUSED verbatim,
-# including the SPARK_GRAFT_SUBSTR_CACHE / _KEY env switches) plus one
-# canonical-fingerprint group-by (two-stage partial agg, q43's plan)
-# and an AQE-decided fp join-back; the weight arithmetic is a codegen
+# 100 TB shape: exactly q219's plan (the CTE chain is REUSED verbatim)
+# plus one canonical-fingerprint group-by (two-stage partial agg, q43's
+# plan) and an AQE-decided fp join-back; the weight arithmetic is a codegen
 # projection. No new shuffle class, no Python stage, no driver state.
 # No reference equivalent (SURVEY.md §2.10 north-star extension).
 
@@ -3863,7 +3703,7 @@ def q221_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact copies) and the 100 TB shape (q219's reused CTE chain + one
     fingerprint group-by; all arithmetic in codegen)."""
     led = q219_substring_dedup(spark, sf_dir)
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     fps = d.select("doc_id", _doc_fp_expr().alias("fp"))
     copies = fps.groupBy("fp").agg(F.count("*").alias("n_copies"))
     # fp join-back left to AQE (the q208/q218 rationale): copies is one

@@ -24,17 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..registry import query
 from ..session import tune
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
 
 
 def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -66,13 +57,15 @@ def assert_symmetrized(edges: DataFrame, src: str, dst: str, sample: int = 256) 
     deterministic pseudo-random draw ACROSS partitions (TakeOrdered: one
     pass, bounded driver state), not ``limit``, which would read only the
     first partition(s) and miss asymmetry produced late in scan order
-    (review-caught, r15)."""
+    (review-caught, r15). Rows with a NULL endpoint are left out of the
+    probe: their reversal can never equi-join, even when present."""
     import os
 
     if os.environ.get("SPARK_GRAFT_DEBUG_SYMMETRY") != "1":
         return
     probe = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
         .orderBy(F.xxhash64("src", "dst"))
         .limit(sample)
     )

@@ -23,23 +23,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 def merge_frames(
@@ -180,12 +164,12 @@ def q115_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.deterministic import dsum
 
     tgt = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey", "c_name", "c_acctbal")
     )
     src = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

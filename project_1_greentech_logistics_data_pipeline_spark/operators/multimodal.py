@@ -23,18 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.deterministic import pos_zero
+from ..registry import query, table
 from ..session import tune
 from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,8 +573,7 @@ def q75_grouped_zscore_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    tune(spark)
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    e = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
 
     schema = T.StructType(
         [

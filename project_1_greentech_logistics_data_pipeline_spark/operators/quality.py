@@ -32,24 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import tune
-from ..sources.readers import load_table
+from ..registry import query, table
 from .text import DOC_FP_SQL, doc_fp_expr, tokens_expr
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -108,7 +92,7 @@ def q130_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     single int/int -> double op, bit-identical on both engines. At 100 TB
     this is the cheapest useful quality gate: no joins wider than doc_id,
     no Python."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
     tc = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("doc_id").orderBy(F.col("c").desc(), "tok")
@@ -193,7 +177,7 @@ def q131_blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     only: regexp in whole-stage codegen, no shuffle, no Python. The
     pattern is a pre-compiled literal on both engines (Java regex and RE2
     agree on this alternation subset)."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     scrubbed = F.regexp_replace("text", _SCRUB_PATTERN, "[REDACTED]")
     return (
         d.filter(F.col("text").rlike(_SCRUB_PATTERN))
@@ -244,7 +228,7 @@ def q134_ngram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by doc_id. Exact-match n-grams, no normalization beyond the
     engine-wide tokenizer — deliberately conservative (oracle-exact);
     q109 is the fingerprint variant for whole-doc containment."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     t = tokens_expr("text")
     ngrams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(t) - (_NGRAM - 1), F.lit(0))),
@@ -291,7 +275,7 @@ def q133_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scan of raw data. That re-aggregatability is exactly what exact
     count_distinct lacks at 100 TB. Estimates are deterministic for a
     given input (pytest pins tolerance vs exact)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts").alias("day")
     per_day = (
         e.select(F.col("event_type"), day, F.col("user_id"))
@@ -401,7 +385,7 @@ def q132_semantic_dedup_clustered(
 
     if threshold is None:
         threshold = COSINE_DUP_THRESHOLD  # q47's exact baseline threshold
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     assigned = kmeans_assign(emb, probe=2).localCheckpoint(eager=False)
     # multi-probe candidates: a pair is a candidate if ANY of each side's
     # top-2 clusters coincide — explode to (cluster, vec) postings, then
@@ -478,7 +462,7 @@ def q137_source_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistent across reruns — a doc's fate never changes, which is what
     incremental pipeline re-runs need. Narrow ops only: no shuffle, no
     UDF, fully pushdown-friendly."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     rate = F.lit(_MIX_DEFAULT)
     for s, r in reversed(_MIX_RATES.items()):
         rate = F.when(F.col("source") == s, F.lit(r)).otherwise(rate)
@@ -532,7 +516,7 @@ def q143_substring_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the explode (the naive shape) multiplies the shuffle by
     the document length — ~100x more bytes at this corpus's ~500-char
     mean."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     n = F.length("text")
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(n - (_CONTAIN_K - 1), F.lit(1))),
@@ -617,7 +601,7 @@ def q146_corpus_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares the shuffle key); fingerprints are computed inside the
     aggregate, never materialized per-doc downstream. The mean is
     int-sum / count in one double op — oracle-exact."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     base = d.select(
         "source",
         "lang",
@@ -669,7 +653,7 @@ def q155_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition top-k then a k-row merge, no global sort, no shuffle
     of the corpus. ln() of identical doubles agrees bit-for-bit across
     engines (both call the platform libm on the same value)."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     u = (((F.col("doc_id") * _KNUTH) % _MOD) + 1.0) / (_MOD + 1.0)
     es_key = -F.log(u) / F.col("n_chars")
     return (
@@ -724,7 +708,7 @@ def q157_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     hides, which is why this is declared as one query and not just its
     parts. Plan: the repetition aggregate and the containment anti-join
     are the only shuffles; the mixture filter is free at scan time."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
     rep = (
         toks.groupBy("doc_id", "tok")
@@ -772,7 +756,7 @@ def q158_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW_NUMBER is the one range-partitioned sort; at 100 TB you keep the
     shuffle_key and skip the materialized rank (readers sort-merge on
     the key), which is why both columns are emitted."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     key = (F.col("doc_id") * _KNUTH) % _MOD
     w = Window.orderBy(key.asc(), F.col("doc_id").asc())
     return (
@@ -798,7 +782,7 @@ def q166_hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-type sketch build; the pair grid is a self-join of 5 sketch
     rows. Estimates carry HLL error (~2%); pytest pins tolerance vs the
     exact intersection counts."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     sketches = e.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id").alias("sk"),
         F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("est_users"),
@@ -862,7 +846,7 @@ def q175_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd explode + two hash aggregates despite the ~1-row-per-char
     shuffle amplification. Keep the explode shape; at 100 TB the
     doc_id-keyed shuffles are embarrassingly parallel and AQE-coalesced."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     chars = d.select(
         "doc_id", F.explode(F.split("text", "")).alias("ch")
     ).filter(F.length("ch") > 0)
@@ -920,7 +904,7 @@ def q200_corpus_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-source breakdown (q146). ONE aggregate over one scan;
     fingerprints live only inside the aggregate. Declared as q200, the
     round-number capstone of the declared surface."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     n_tok = F.size(tokens_expr("text"))
     return d.select(
         doc_fp_expr().alias("fingerprint"), n_tok.alias("n_tokens"), "lang", "source"

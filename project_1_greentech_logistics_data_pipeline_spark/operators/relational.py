@@ -28,24 +28,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum
+from ..registry import query, table
 from ..session import tune
-from ..sources.readers import load_table
-
-# name -> (fn, oracle_sql | None); assembled by registry.py
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +58,7 @@ ORDER BY l_returnflag, l_linestatus
 
 @query("q01_pricing_summary", _Q1_SQL)
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -114,7 +98,7 @@ WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-12-31'
 
 @query("q02_filter_project", _Q02_SQL)
 def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             F.col("l_shipdate").between("1996-01-01", "1996-12-31")
@@ -153,7 +137,7 @@ FROM lineitem
 
 @query("q03_predicates", _Q03_SQL)
 def q03_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
 
     def cif(cond):
         return F.count(F.when(cond, 1))
@@ -193,10 +177,10 @@ def q04_join_multiway_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-dims star join. customer/nation/region are broadcast — the
     orders side never shuffles (at 100 TB the fact scan streams through
     three broadcast hash joins in one stage)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "1997-01-01")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "1997-01-01")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region")
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -224,8 +208,8 @@ GROUP BY c.c_custkey, c.c_name
 
 @query("q05_join_left_outer", _Q05_SQL)
 def q05_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
     return (
         c.join(o, o.o_custkey == c.c_custkey, "left")
         .groupBy("c_custkey", "c_name")
@@ -250,8 +234,8 @@ WHERE EXISTS (
 
 @query("q06_join_semi", _Q06_SQL)
 def q06_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -271,8 +255,8 @@ WHERE NOT EXISTS (
 def q07_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no big-ticket order (non-empty at every sf, so the
     oracle check is not vacuous)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
@@ -292,9 +276,9 @@ ORDER BY n.n_name
 def q08_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-key + theta residual: Spark plans the equi part as a hash/SMJ join
     and applies the inequality as a post-join filter — never a cartesian."""
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    s = table(spark, sf_dir, "supplier")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
     return (
         s.join(c, (s.s_nationkey == c.c_nationkey) & (s.s_acctbal > c.c_acctbal))
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -314,8 +298,8 @@ ORDER BY r.r_name, n.n_name
 
 @query("q08b_join_cross", _Q08B_SQL)
 def q08b_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region")
+    n = table(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name").orderBy("r_name", "n_name")
 
 
@@ -339,7 +323,7 @@ ORDER BY o_orderpriority
 
 @query("q09_agg_basic", _Q09_SQL)
 def q09_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -367,7 +351,7 @@ ORDER BY o_orderstatus
 
 @query("q10_agg_distinct", _Q10_SQL)
 def q10_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")
         .agg(
@@ -394,7 +378,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 @query("q11_agg_rollup", _Q11_SQL)
 def q11_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n_rows")
     )
@@ -413,7 +397,7 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 @query("q12_agg_cube", _Q12_SQL)
 def q12_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"), dsum("o_totalprice").alias("sum_price")
     )
@@ -441,7 +425,7 @@ WHERE rk <= 3
 def q13_window_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer. Partitioned window (one shuffle on the
     key); deterministic tiebreak on o_orderkey so oracle rows match."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), "o_orderkey")
     return (
         o.select(
@@ -467,7 +451,7 @@ FROM events
 
 @query("q14_window_lag_lead_rank", _Q14_SQL)
 def q14_window_lag_lead_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     wt = W.partitionBy("user_id").orderBy("event_type")
     return e.select(
@@ -498,7 +482,7 @@ FROM events
 
 @query("q15_window_running_frames", _Q15_SQL)
 def q15_window_running_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     order = [F.col("ts"), F.col("event_id")]
     w_run = (
         W.partitionBy("user_id")
@@ -534,7 +518,7 @@ def q16_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans orderBy+limit as TakeOrderedAndProject —
     per-partition top-k then a k-row merge on the driver, never a full sort
     of 100 TB. Deterministic tiebreak on o_orderkey."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
@@ -563,7 +547,7 @@ SELECT 'both' AS side, o_custkey FROM (SELECT o_custkey FROM pre INTERSECT SELEC
 
 @query("q17_set_ops", _Q17_SQL)
 def q17_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     pre = o.filter(F.col("o_orderdate") < "1996-01-01").select("o_custkey").distinct()
     post = o.filter(F.col("o_orderdate") >= "2000-01-01").select("o_custkey").distinct()
     return (
@@ -582,7 +566,7 @@ SELECT o_custkey, o_orderkey FROM orders WHERE o_totalprice > 100000
 
 @query("q17b_union_distinct", _Q17B_SQL)
 def q17b_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "F").select("o_custkey", "o_orderkey")
     b = o.filter(F.col("o_totalprice") > 100000).select("o_custkey", "o_orderkey")
     return a.union(b).distinct()
@@ -602,8 +586,7 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linesta
 @query("q18_grouping_sets", _Q18_SQL)
 def q18_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL entry point: same engine, spark.sql() instead of the DataFrame API."""
-    tune(spark)
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_Q18_SQL)
 
 
@@ -639,7 +622,7 @@ def q104_window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the partition key serves all five window expressions."""
     from pyspark.sql import Window as W
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     ordered = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     full = ordered.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     return (
@@ -689,7 +672,7 @@ def q105_mode_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass aggregates where the oracle needs windowed row_number
     reconstructions. At scale these are partial-aggregatable (mode merges
     count maps; min_by merges a single struct) — no second shuffle."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     return (
         c.groupBy("c_mktsegment")
         .agg(
@@ -722,7 +705,7 @@ def q107_union_by_name_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's one multi-input operator (rejected ∪ GE-failed,
     Glue_job.py:116) as a checked query. Positional UNION would silently
     misalign here: the two sides share only a column-name prefix."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     left = o.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -758,7 +741,7 @@ def q108_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline's coalesce(flag,false) correction (SURVEY §4 fix 1). Still a
     hash-joinable equality (NULL hashes like any value under <=>), so the
     plan is a normal equi join, not a nested loop."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     k = F.nullif("o_orderpriority", F.lit("5-LOW"))
     a = o.groupBy(k.alias("k")).agg(F.count("*").alias("n_orders"))
     b = o.groupBy(k.alias("k")).agg(
@@ -798,7 +781,7 @@ def q147_bitwise_stringagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible and oracle-comparable). One shuffle on event_type;
     everything partial-aggregatable except the bounded per-group
     day set."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     day = F.date_format(F.to_date("ts"), "yyyy-MM-dd")
     return (
         e.select("event_type", "user_id", day.alias("day"))
@@ -840,7 +823,7 @@ def q148_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL — multiplicity arithmetic, not membership (q17 covers the
     distinct forms). Spark plans both as hash aggregates over
     (value, count) pairs — same single-shuffle shape as the oracle."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select("user_id")
     views = e.filter(F.col("event_type") == "view").select("user_id")
     return (
@@ -945,8 +928,8 @@ def q159_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
     100 TB each edge is one child pass with a broadcast parent — no
     fact-fact shuffle."""
     def edge(label: str, child: str, ck: str, parent: str, pk: str) -> DataFrame:
-        c = _t(spark, sf_dir, child)
-        p_keys = _t(spark, sf_dir, parent).select(pk).distinct()
+        c = table(spark, sf_dir, child)
+        p_keys = table(spark, sf_dir, parent).select(pk).distinct()
         return (
             c.join(F.broadcast(p_keys), c[ck] == F.col(pk), "left")
             .agg(
@@ -991,7 +974,7 @@ def q162_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS, decorrelated here to one distinct-count aggregate compared
     against a 1-row broadcast divisor cardinality. One shuffle on
     user_id; the divisor count is a 5-row aggregate."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     n_types = e.agg(F.countDistinct("event_type").alias("n"))
     return (
         e.groupBy("user_id")
@@ -1030,7 +1013,7 @@ def q180_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     materially different answers whenever the measure is coarse (here:
     rounded balances force ties). Same single window shuffle; the only
     cost delta is output cardinality."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     rounded = F.round("c_acctbal", 0)
     w = W.partitionBy("c_nationkey").orderBy(rounded.desc())
     return (

@@ -20,24 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 _Q20_SQL = """
@@ -59,7 +42,7 @@ FROM part
 
 @query("q20_string_funcs", _Q20_SQL)
 def q20_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
@@ -92,7 +75,7 @@ FROM orders
 
 @query("q21_date_funcs", _Q21_SQL)
 def q21_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").cast("int").alias("order_year"),
@@ -132,7 +115,7 @@ FROM lineitem
 
 @query("q22_math_funcs", _Q22_SQL)
 def q22_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -165,7 +148,7 @@ FROM documents
 
 @query("q23_array_funcs", _Q23_SQL)
 def q23_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     uniq = F.array_distinct(toks)
     return d.select(
@@ -198,7 +181,7 @@ def q24_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction over the events.props string column — the
     engine-side twin of the Snowpipe $1:field::TYPE projection
     (Curated_pipe.sql:7-15)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return (
         e.select("event_type", k.alias("k"))
@@ -230,7 +213,7 @@ FROM orders
 
 @query("q25_conditional", _Q25_SQL)
 def q25_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.when(F.col("o_totalprice") > 200000, "high")
@@ -266,7 +249,7 @@ def q26_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType surface: build a map per group, then derive scalar outputs
     (map_keys/map_values/element_at) so the oracle comparison stays on
     scalars — DuckDB has no MAP hash-compatible representation."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     grouped = (
         o.groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("cnt"))
@@ -311,7 +294,7 @@ def q76_decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse uses for currency. Output as a full-scale decimal STRING
     (no rounding step, so no rounding-mode divergence between engines)
     plus a double cast."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(12,2)")
     one = F.lit(1).cast("decimal(3,2)")
     tax = F.col("l_tax").cast("decimal(12,2)")
@@ -340,7 +323,7 @@ def q77_json_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
     message values (sources/kafka.py). Field order is the struct order in
     both engines; only non-null columns are used (Spark's to_json omits
     null fields, DuckDB emits them)."""
-    n = _t(spark, sf_dir, "nation")
+    n = table(spark, sf_dir, "nation")
     return n.select(
         "n_nationkey",
         F.to_json(F.struct("n_name", "n_regionkey")).alias("payload"),
@@ -372,7 +355,7 @@ def q100_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrades to NULL and flows to the rejected branch instead of failing a
     100 TB job at row 10^12). Oracle encodes the same semantics with the
     portable forms (x / NULLIF(y,0), TRY_CAST, out-of-bounds list index)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -417,7 +400,7 @@ def q101_map_transformations(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalarized to sorted 'k=v' strings so the DuckDB oracle (which has no
     comparable MAP) can reproduce the values relationally. All lambdas
     execute JVM-side inside codegen."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     m = (
         o.groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("cnt"))
@@ -475,8 +458,7 @@ def q113_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the parser, never string-spliced, and Catalyst constant-folds them so
     pushdown/pruning work exactly as with inline literals. The oracle
     inlines the same values."""
-    tune(spark)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q113_orders")
+    table(spark, sf_dir, "orders").createOrReplaceTempView("q113_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -515,8 +497,7 @@ def q114_lateral_alias_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine inlines it, so the plan is identical to the written-out form (the
     oracle's). Joined against an inline VALUES relation (broadcast, the
     tiny-dim literal table pattern)."""
-    tune(spark)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q114_orders")
+    table(spark, sf_dir, "orders").createOrReplaceTempView("q114_orders")
     return spark.sql(
         """
         SELECT o.o_orderkey,
@@ -571,7 +552,7 @@ def q150_nested_struct_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields and you touch one), read through dotted paths. Output is
     scalarized (struct cells don't hash-compare across engines). All
     narrow ops in codegen; the filter pushes to the scan."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
+    o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     built = o.select(
         "o_orderkey",
         F.struct(
@@ -625,7 +606,7 @@ def q151b_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics plain explode silently breaks (inner-join behavior drops
     the row, the same class of silent loss as the reference's 3VL split
     bug). Narrow generator op, no shuffle."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 200)
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 200)
     parts = F.when(
         F.col("o_orderstatus") == "O", F.split("o_orderpriority", "-")
     ).otherwise(F.array().cast("array<string>"))

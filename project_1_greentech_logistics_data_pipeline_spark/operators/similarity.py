@@ -26,18 +26,7 @@ from ..functions.deterministic import (
     pos_zero,
     pos_zero_col,
 )
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
+from ..registry import query, table
 
 
 TOP_K = 5
@@ -70,8 +59,7 @@ def q48_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries against the corpus scan (no shuffle of the corpus), then a
     per-query top-k window. This is the correct baseline and the oracle
     anchor for the approximate variant."""
-    tune(spark)
-    e = load_table(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -150,8 +138,7 @@ def q49_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle by bucket instead of a full cross product. Recall vs the exact
     q48 baseline is asserted in tests/test_similarity.py.
     """
-    tune(spark)
-    e = load_table(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     dim = 64  # testdata embedding dimension (FIXTURES.md §B)
     planes = _hyperplanes(dim, N_PLANES)
 
@@ -274,8 +261,7 @@ def q49b_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     band on label), so it hash-partitions instead of nested-looping; cost
     is O(|labels|^2 * dim) on centroid rows only, independent of corpus
     size."""
-    tune(spark)
-    e = load_table(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     comp = e.select(
         "label",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
@@ -395,8 +381,7 @@ def q74_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst case, so recall ~= coverage; clustered real embeddings are what
     the locality assumption is for. Recall floor asserted in
     tests/test_extensions.py."""
-    tune(spark)
-    e = load_table(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     centroids = train_ivf_centroids(e)
 
     # corpus -> inverted lists: one Arrow pass, normalize + argmax-dot as a
@@ -513,8 +498,7 @@ def q96_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the output contract is scalar columns only — the driver
     canonicalizer cannot sort array cells; the typed int8 semantics stay
     pinned by the roundtrip test in tests/test_extensions.py."""
-    tune(spark)
-    e = load_table(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     emb_d = F.transform("embedding", lambda x: x.cast("double"))
     maxabs = F.array_max(F.transform(emb_d, F.abs))
     scale = F.lit(127.0) / F.nullif(maxabs, F.lit(0.0))
@@ -591,8 +575,7 @@ def q153_pca_project(spark: SparkSession, sf_dir: str, k: int = 4) -> DataFrame:
     partition (see pca_components); the projection itself is k JVM dot
     products against broadcast literal vectors over the centered
     embedding — no Python in the row path, no shuffle."""
-    tune(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     comps, _evs, mean = pca_components(emb, k=k)
     mean_lit = F.array(*[F.lit(x) for x in mean])
     centered = F.zip_with(

@@ -12,18 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
+from ..registry import query, table
 
 
 def salted_join(
@@ -49,11 +38,6 @@ def salted_join(
     salted_right = right.withColumn("_salt", salts)
     out = salted_left.join(salted_right, on=[key, "_salt"], how=how)
     return out.drop("_salt")
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -94,7 +78,7 @@ def q116_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     insurance for the streaming/non-AQE paths this helper exists for.
     Semantics-preserving vs the unsalted plan by construction
     (oracle = plain join)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     dim = (
         ev.select("event_type")
         .distinct()
@@ -155,7 +139,7 @@ def q204_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The hot-key predicate is evaluated with exact integer cross
     multiplication (key_rows * n_keys > 4 * n_rows), not a float mean, so
     the count is bit-deterministic against the oracle."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     # localCheckpoint: the histogram feeds both the totals and the hot-key
     # count; unmaterialized, each branch would rescan and re-aggregate the
     # fact table. Checkpoint blocks are reclaimed by the ContextCleaner when
@@ -232,8 +216,8 @@ def q205_join_size_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     All arithmetic is exact integer (BIGINT sums of products), so the
     forecast is bit-deterministic against the oracle AND against the
     real join's count."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     # localCheckpoint both histograms: each feeds its per-side total AND
     # the histogram join; unmaterialized, orders/customer would be scanned
     # twice. ContextCleaner reclaims the blocks (cache() would pin them).

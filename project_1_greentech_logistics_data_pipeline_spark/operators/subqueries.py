@@ -21,23 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import DEC, davg, dsum
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 # ---------------------------------------------------------------------------
@@ -64,9 +48,9 @@ def q62_correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFram
     filter broadcasts into the lineitem scan first, so both the threshold agg
     and the probe run over the pruned fact subset — lineitem is scanned once
     and shuffled once (by l_partkey), never self-joined at full width."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23").select("p_partkey")
+    p = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23").select("p_partkey")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_partkey", "l_quantity", "l_extendedprice")
     )
@@ -107,14 +91,14 @@ def q63_having_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFram
     + one shuffle on l_orderkey), the HAVING filter shrinks it to a tiny
     survivor set, and only that survivor set joins to orders/customer — at
     100 TB the survivors broadcast, so the dims are never shuffled."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(dsum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 300.0)
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     return (
         o.join(F.broadcast(big), o.o_orderkey == big.l_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -162,9 +146,9 @@ def q64_scalar_subquery_threshold(spark: SparkSession, sf_dir: str) -> DataFrame
     vacuous at sf0.1, where the law of large numbers concentrates every
     share toward 4% (max observed share 4.33%) — caught by
     test_no_vacuous_results, the q87 drift-guard class."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nat_rev = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -200,9 +184,9 @@ def q65_notin_anti_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast too, so the only shuffle is the final distinct-count on
     (brand, type). With a nullable subquery column NOT IN would be
     three-valued — documented, and the exclusion key here is never null."""
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_type")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    bad = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_type")
+    li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -234,8 +218,8 @@ def q66_conditional_agg_promo_share(spark: SparkSession, sf_dir: str) -> DataFra
     """TPC-H Q14 shape: sum(CASE WHEN …)/sum(…) in a single aggregate pass —
     the standard pattern for rate/share metrics without two scans. Date
     filter pushes to the parquet scan; part broadcasts."""
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
@@ -274,10 +258,10 @@ def q67_exists_group_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. Differs from the bare semi join (q06) by the aggregation after the
     semi — the semi output keeps orders' partitioning, and the tiny
     5-priority group-by coalesces under AQE."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45).select("l_orderkey")
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45).select("l_orderkey")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -313,7 +297,7 @@ def q68_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))
         .rangeBetween(-1_800_000_000, Window.currentRow)
     )
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         "user_id",
@@ -346,7 +330,7 @@ def q69_collect_sorted_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract is scalar columns only — the driver canonicalizer sorts rows
     pandas-side and array cells are unsortable there (q10 pattern,
     relational.py)."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     return c.groupBy("c_nationkey").agg(
         F.concat_ws(",", F.array_sort(F.collect_set("c_mktsegment"))).alias("segments"),
         F.concat_ws(",", F.array_sort(F.collect_list("c_mktsegment"))).alias(
@@ -378,7 +362,7 @@ def q70_groupmin_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number top-1 of q13, which breaks them). MIN over doubles is exact,
     so the equality join-back is FP-safe. Both sides shuffle on l_partkey —
     one exchange each, reused by AQE."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice")
+    li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice")
     m = li.groupBy(F.col("l_partkey").alias("m_partkey")).agg(
         F.min("l_extendedprice").alias("min_price")
     )
@@ -417,7 +401,7 @@ def q71_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     width/slide = 2 windows. Spark's F.window generates both assignments
     before the single shuffle; the oracle materializes the same two
     assignments as a UNION ALL of shifted tumbling buckets."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
@@ -453,8 +437,8 @@ def q72_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both inputs are pre-aggregated before the join, so the full-outer runs
     on two already-small keyed sides — the 100 TB-safe order of operations
     (aggregate first, outer-join the rollups)."""
-    e = _t(spark, sf_dir, "events")
-    o = _t(spark, sf_dir, "orders")
+    e = table(spark, sf_dir, "events")
+    o = table(spark, sf_dir, "orders")
     ue = e.groupBy(F.col("user_id").alias("uid")).agg(F.count("*").alias("n_events"))
     co = o.groupBy(F.col("o_custkey").alias("oid")).agg(F.count("*").alias("n_orders"))
     return (
@@ -488,8 +472,8 @@ def q80_join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Catalyst plans it as the mirrored left-outer with the dim broadcast —
     the preserved side can't be the build side of a broadcast join, so the
     planner flips it)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000)
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000)
     return (
         o.join(c, o.o_custkey == c.c_custkey, "right")
         .groupBy("c_custkey")
@@ -518,7 +502,7 @@ def q81_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     percent_rank, cume_dist per status. The o_orderkey tiebreaker makes the
     ordering total, so every rank-derived value is deterministic on both
     engines."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     return o.select(
         "o_orderkey",

@@ -10,28 +10,12 @@ streaming forms with watermarks live in streaming/.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 # ---------------------------------------------------------------------------
@@ -102,8 +86,8 @@ def q30_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For each event: the customer's most recent order at event time.
     Right side deduped per (custkey, orderdate) first — the testdata has
     duplicate dates per customer, which would make ASOF nondeterministic."""
-    e = _t(spark, sf_dir, "events")
-    o = _t(spark, sf_dir, "orders")
+    e = table(spark, sf_dir, "events")
+    o = table(spark, sf_dir, "orders")
     r = (
         o.groupBy("o_custkey", "o_orderdate")
         .agg(F.max("o_orderkey").alias("o_orderkey"))
@@ -155,7 +139,7 @@ def q31_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banding via broadcast range join: the only sane plan at scale is
     BroadcastNestedLoopJoin with the tiny band table broadcast — the fact
     side streams through unshuffled."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     return (
         e.join(
@@ -187,7 +171,7 @@ GROUP BY 1, 2
 def q32_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-minute tumbling windows via F.window — identical semantics to the
     Structured Streaming version in streaming/jobs.py, run in batch."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
@@ -234,7 +218,7 @@ def q33_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands sessionization: one shuffle on user_id, two window
     passes over the same partitioning (Catalyst reuses the sort). The
     streaming twin is session_window() in streaming/jobs.py."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     # ntz has no direct long cast; go through ltz (session tz is UTC)
@@ -289,7 +273,7 @@ def q34_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by latest-reading-per-key: a partial-aggregatable alternative to
     the row_number top-1 pattern — no window sort, map-side combine works.
     (ts is unique per user in the testdata, so arg_max is deterministic.)"""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return e.groupBy("user_id").agg(
         F.max_by("event_id", "ts").alias("last_event_id"),
         F.max_by("event_type", "ts").alias("last_event_type"),
@@ -335,7 +319,7 @@ def q94_hierarchical_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hypertable — as a single query, Expand wins. Sums stay DECIMAL(38,6)
     until the final projection, so the oracle's rollup-from-hourly plan is
     value-identical (decimal addition is associative; double's is not)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     keyed = e.select(
         F.date_trunc("hour", "ts").alias("h"),
         F.date_trunc("day", "ts").alias("d"),
@@ -432,7 +416,7 @@ def q97_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream interval join, and the plan that survives 100 TB where
     the naive range-only join (the oracle's form) degenerates to a
     nested-loop cartesian."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     err = e.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("e_id"), F.col("ts").alias("e_ts")
     )
@@ -485,7 +469,7 @@ def q111_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded in via earlier-stage minimums) — a single shuffle on user_id,
     then three scalar counts. At 100 TB the per-user pass is the whole
     cost; the funnel itself is a 3-row driver-side reduction."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id")
     # three stacked window projections over ONE partitioning: a single
     # shuffle on user_id serves all stages (a staged join formulation was
@@ -557,7 +541,7 @@ def q112_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cohort dim joins back via broadcast since distinct users << events.
     The week offset is day-difference/7 against the cohort week, identical
     integer arithmetic on both engines."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     week = F.date_trunc("week", F.col("ts"))
     first_week = e.groupBy("user_id").agg(F.min(week).alias("cohort_week"))
     activity = (
@@ -614,7 +598,7 @@ def q176_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded funnel credits conversions that happen weeks later. Same
     single-shuffle formulation: three stacked conditional window minimums
     over ONE user_id partitioning, deadlines folded into the conditions."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id")
     staged = (
         e.select("user_id", "event_type", "ts")
@@ -703,7 +687,7 @@ def q181_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (ts, event_id, type) structs, never bare collect_list; the path
     space collapses map-side before the global top-25
     TakeOrderedAndProject."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     marked = e.select("user_id", "event_id", "ts", "event_type").withColumn(
         "is_new",
@@ -789,7 +773,7 @@ def q202_first_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame
     lifetime conversion rate (q111) hides, since later sessions carry
     accumulated intent. Same one-shuffle sessionization; the first
     session filters by running session_id = 1 before any aggregation."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     marked = e.select("user_id", "event_id", "ts", "event_type").withColumn(
         "is_new",

@@ -13,23 +13,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import pos_zero, pos_zero_col
-from ..session import tune
-from ..sources.readers import load_table
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..registry import query, table
 
 
 # Function-word markers per language (public-knowledge stopword heads).
@@ -139,7 +123,7 @@ FROM t
 def q40_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + quality signals (length, TTR, stopword ratio) — the
     quality-scoring pass of an LLM data pipeline, one narrow projection."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = tokens_expr("text")
     n = F.size(toks)
     uniq = F.size(F.array_distinct(toks))
@@ -174,7 +158,7 @@ def q41_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-form document fingerprint (whitespace-collapse + lowercase
     + md5). The fingerprint doubles as an exact-dedup key and its prefix as
     a shard/bucket key at scale."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     norm = doc_norm_expr()
     fp = doc_fp_expr()
     return d.select(
@@ -266,7 +250,7 @@ def q42_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary across lang labels, so prediction accuracy is exercised in
     tests/test_text.py on planted multilingual sentences; this query checks
     the distributed argmax logic end-to-end.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -357,7 +341,7 @@ def q79_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc ids, so it is reproducible across engines and partitionings (which
     is also what makes an exact DuckDB oracle possible). Strata not in the
     fraction map are excluded, matching sampleBy semantics."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     thresh = F.lit("0" * 15)
     for lang, frac in STRATA_FRACTIONS.items():
         thresh = (
@@ -406,7 +390,7 @@ def q79b_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the assignment is the portable md5-prefix function of doc_id (pytest
     additionally checks disjointness, conservation, fraction tolerance,
     and key-stability under repartitioning)."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     train, val = train_val_split(d, "doc_id", val_fraction=0.1)
     t = train.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_train"))
     v = val.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_val"))
@@ -454,7 +438,7 @@ def q91_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion factor used to budget training-token counts from raw text.
     Pure regexp_extract_all inside codegen — one narrow pass at 100 TB, no
     Python."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     bpe = F.regexp_extract_all(F.lower("text"), F.lit(_BPE_PAT), 0)
     ws = tokens_expr("text")
     return d.select(
@@ -514,7 +498,7 @@ def q92_rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits int64 with no modulus (127 * 31^7 * 8 < 2^45). Embarrassingly
     parallel, no shuffle: the scale path at 100 TB. Docs shorter than k get
     NULL/0 — same 3VL on both engines."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "doc_id", doc_norm_expr().alias("norm")
     )
 
@@ -588,7 +572,7 @@ def q93_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical tiny-dim broadcast (bytes vs a 100 TB corpus: the join is a
     map-side hash probe, zero shuffle before the per-doc group-by). Integer
     scores keep the aggregation exact."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     lex = spark.createDataFrame(SENTIMENT_LEXICON, "word string, score int")
     toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
     ssum = F.sum("score")
@@ -641,7 +625,7 @@ def q102_document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode-style explode fans out, slice() takes each window — all
     JVM-side; rows fan out ~len/stride x, which is the intended output
     volume, not overhead."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = tokens_expr("text")
     n_chunks = F.greatest(
         F.ceil((F.size(toks) - _CHUNK) / F.lit(float(_STRIDE))).cast("bigint") + 1,
@@ -705,7 +689,7 @@ def q103_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     across runs and engines (greedy bin packing is order-dependent, so the
     order IS the spec). The per-lang window shuffle is the same partitioning
     the downstream per-pack aggregation needs — one exchange, reused."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = tokens_expr("text")
     t = d.select("doc_id", "lang", F.size(toks).cast("bigint").alias("n_tokens"))
     w = W.partitionBy("lang").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
@@ -756,8 +740,7 @@ def q110_fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     levenshtein evaluations) into an equi join + ~1 distance check per
     corpus row (0.5s). The oracle keeps the unblocked theta-join form,
     which doubles as the losslessness check."""
-    tune(spark)
-    c = load_table(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     probes = c.filter(F.col("c_custkey") % 97 == 0).select(
         F.col("c_custkey").alias("probe_id"),
         F.regexp_replace("c_name", "Customer", "Custmer").alias("probe_name"),
@@ -885,7 +868,7 @@ def q206_repetition_signals(
     d = (
         docs
         if docs is not None
-        else _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+        else table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
     # The doc_id hash exchange the window requires is placed BEFORE the
     # posexplode: EnsureRequirements then adds no second shuffle, and the
@@ -1080,7 +1063,7 @@ def q212_gopher_quality_filter(
     d = (
         docs
         if docs is not None
-        else _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+        else table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
     toks = tokens_expr("text")
     # accumulator zero is LONG: an int zero would make F.aggregate sum in

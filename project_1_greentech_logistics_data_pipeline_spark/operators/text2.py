@@ -17,29 +17,11 @@ in one double op, identically shaped on both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import tune
-from ..sources.readers import load_table
+from ..registry import query, table
 from .text import tokens_expr
-
-QUERIES: dict = {}
-
-
-def query(name: str, sql: str | None):
-    def deco(fn):
-        QUERIES[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
 
 
 _TOKS_SQL = """
@@ -83,7 +65,7 @@ def q119_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-partitioned frame — shuffles on (doc,tok) and tok only, never on
     the raw text. At 100 TB the vocab-side stays broadcastable after a
     mincount cut; tf dominates and is map-side combinable."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
@@ -131,7 +113,7 @@ def q124_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle until the (map-side combinable) count, then a global top-25
     TakeOrderedAndProject. The n-gram generalization of q27; at 100 TB
     the only shuffle is |bigram-vocab| partial counts."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = tokens_expr("text")
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -187,7 +169,7 @@ def q125_token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny) broadcast into the token stream; per-doc sums are exact ints,
     divided once. Identical shape at 100 TB: vocab stays O(k), the
     groupBy(doc_id) shuffle is the only large one."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     w = Window.orderBy(F.col("n").desc(), "tok")
@@ -269,7 +251,7 @@ def q161_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pruned the same way). Determinism: each ln() rounds to
     decimal(38,18) BEFORE the per-doc sum, so the mean is
     order-independent and bit-identical on both engines."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     t = tokens_expr("text")
     bi = d.select(
         "doc_id",
@@ -338,18 +320,13 @@ def q161_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB (~1e9 skinny rows per major language) two replacements exist:
 # (a) broadcast thresholds from a mergeable weighted-quantile sketch
 # (approx_percentile over (score, mass) — CCNet's practical cut, within
-# sketch tolerance), or (b) an exact two-pass distributed prefix sum —
-# IMPLEMENTED here as ``SPARK_GRAFT_TIER_CUT=prefix2``
-# (:func:`_tier_prefix2`): repartitionByRange((lang, round(score,9),
-# doc_id)) materialized once, per-(lang, partition) mass offsets via a
-# bounded driver collect, then partition-bounded prefix windows. Output
-# is bit-identical to the window mode (parity-pinned at sf and on an
-# analytic-ties corpus); the window stays the default because at
-# doc-count-bounded test scale it is the cheaper plan (prefix2 pays an
-# extra exchange + cache + driver roundtrip — measured ~1s more at
-# sf0.1). The probe in scripts/scale_probe.py measures the m-axis growth
-# of this stage. No reference equivalent (SURVEY.md §2.10 north-star
-# extension).
+# sketch tolerance), or (b) an exact two-pass distributed prefix sum
+# (range-partition by (lang, round(score,9), doc_id), per-partition mass
+# offsets, partition-bounded prefix windows). A two-pass prefix sum was
+# measured slower than the window at every probed scale (SCALE.md), so
+# the window is the only plan. The probe in scripts/scale_probe.py
+# measures the m-axis growth of this stage. No reference equivalent
+# (SURVEY.md §2.10 north-star extension).
 
 
 def _bi_pairs(src: DataFrame, keys: list[str]) -> DataFrame:
@@ -424,81 +401,6 @@ tiered AS (
 )"""
 
 
-def _tier_prefix2(j: DataFrame, n_shuffle: int) -> DataFrame:
-    """The 100 TB tier-cut path (``SPARK_GRAFT_TIER_CUT=prefix2``): an
-    EXACT two-pass distributed prefix sum replacing the window mode's
-    one-sorted-task-per-language execution — same output bit-for-bit
-    (parity-pinned by test), different physical plan.
-
-    Pass 1 range-partitions the scored rows by the total order
-    ``(lang, round(score,9), doc_id)`` and MATERIALIZES the partitioning
-    (cache — RangePartitioning's sampled boundaries are re-drawn per
-    execution, so the partials aggregation and the final window MUST read
-    one materialization or their partition ids could disagree;
-    review-this-first note for any future edit). cache() is sufficient at
-    single-process scale, but on a real cluster it is NOT durable: an
-    executor/node failure that loses both the cached blocks AND the
-    shuffle output forces a recompute that RE-SAMPLES the range
-    boundaries, so recomputed pid assignments can diverge from the
-    already-collected offsets and silently mis-tier rows. At that scale,
-    replace the cache with ``localCheckpoint(eager=True)`` / a reliable
-    ``checkpoint()``, or persist the pid-stamped rows to durable storage
-    before the offsets collect. One (lang, pid) mass row
-    per physical partition is collected to the driver — a BOUNDED collect
-    (<= shuffle partitions x languages-spanning-a-boundary rows), the
-    repo's documented bounded-collect class — and turned into per-(lang,
-    pid) offsets plus per-lang totals.
-
-    Pass 2 broadcasts the offsets back and computes the within-partition
-    prefix with a window partitioned by ``(lang, pid)``: every window
-    group is PARTITION-bounded, never language-bounded, so no task sorts
-    more than one shuffle partition's rows. offset + within-prefix equals
-    the global per-language prefix WHEREVER the sampled boundaries fall
-    (range partitions are assigned to ascending pids in key order), so
-    the output is deterministic even though the partitioning is not.
-    The cached relation is skinny (5 scalar columns per document) and is
-    released by session.release_session_state."""
-    part = (
-        j.withColumn("skey", F.round("avg_neg_logp", 9))
-        .repartitionByRange(n_shuffle, "lang", "skey", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    partials = part.groupBy("lang", "pid").agg(F.sum("mass").alias("pm")).collect()
-    partials.sort(key=lambda r: (r["lang"], r["pid"]))
-    offsets, totals, run = [], {}, {}
-    for r in partials:
-        offsets.append((r["lang"], r["pid"], run.get(r["lang"], 0)))
-        run[r["lang"]] = run.get(r["lang"], 0) + r["pm"]
-    totals = run
-    spark = j.sparkSession
-    off_df = spark.createDataFrame(
-        [(l, p, o, totals[l]) for (l, p, o) in offsets],
-        "lang string, pid int, offset long, lang_mass long",
-    )
-    w = (
-        Window.partitionBy("lang", "pid")
-        .orderBy("skey", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.col("offset") + F.sum("mass").over(w)
-    tier = (
-        F.when(F.lit(3) * cum <= F.col("lang_mass"), F.lit("head"))
-        .when(F.lit(3) * cum <= F.lit(2) * F.col("lang_mass"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-    )
-    return part.join(F.broadcast(off_df), ["lang", "pid"]).select(
-        "doc_id",
-        "lang",
-        F.col("mass").cast("bigint").alias("mass"),
-        F.col("n_bigrams").cast("bigint").alias("n_bigrams"),
-        "avg_neg_logp",
-        cum.cast("bigint").alias("cum_mass"),
-        F.col("lang_mass").cast("bigint").alias("lang_mass"),
-        tier.alias("tier"),
-    )
-
-
 def _lm_tier_df(src: DataFrame) -> DataFrame:
     """Spark twin of :func:`_lm_tier_sql` over a ``(doc_id, lang, toks,
     mass)`` relation: per-language add-k bigram LM (q161's decimal-pinned
@@ -506,10 +408,7 @@ def _lm_tier_df(src: DataFrame) -> DataFrame:
     head/middle/tail cut by cumulative mass (all-integer rule, doc_id
     tie-break). Returns ``(doc_id, lang, mass, n_bigrams, avg_neg_logp,
     cum_mass, lang_mass, tier)``. See the q215 block comment for the
-    100 TB adjudication of the per-lang prefix window; set
-    ``SPARK_GRAFT_TIER_CUT=prefix2`` for the distributed two-pass prefix
-    sum (:func:`_tier_prefix2` — identical output, parity-pinned, no
-    language-sized sort task)."""
+    100 TB adjudication of the per-lang prefix window."""
     bi = _bi_pairs(src.select("doc_id", "lang", "toks"), ["doc_id", "lang"])
     big_c = bi.groupBy("lang", "a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
     uni_c = bi.groupBy("lang", "a").agg(F.count(F.lit(1)).alias("c_a"))
@@ -537,11 +436,6 @@ def _lm_tier_df(src: DataFrame) -> DataFrame:
         )
     )
     j = scored.join(src.select("doc_id", "mass"), "doc_id")
-    if os.environ.get("SPARK_GRAFT_TIER_CUT", "window") == "prefix2":
-        n_shuffle = int(
-            src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        return _tier_prefix2(j, n_shuffle)
     # The sort key is the mean ROUNDED TO THE DRIVER'S 9-DECIMAL GRAIN,
     # not the raw double: the decimal logp sum is exact, but the final
     # decimal->double cast and the /n division can land 1 ulp apart PER
@@ -610,18 +504,8 @@ def q215_ccnet_perplexity_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_neg_logp, cum/lang token masses, tier. See the block comment above
     for the all-integer cut rule and the 100 TB adjudication of the
     per-language prefix window (sketch thresholds or a two-pass
-    distributed prefix sum at scale).
-
-    Mode contract (``SPARK_GRAFT_TIER_CUT``, read at PLAN-BUILD time like
-    q214's ``SPARK_GRAFT_NEARDUP_CANDIDATES``): the default ``window``
-    mode is fully lazy; ``prefix2`` runs an EAGER driver job during
-    DataFrame CONSTRUCTION (the bounded per-(lang, pid) offsets collect in
-    :func:`_tier_prefix2`), so merely calling this function executes
-    Spark jobs before the caller acts on the result. Because the env var
-    is read when the plan is built, building under one value and
-    collecting under another keeps the build-time mode — set the switch
-    before calling, not before collecting."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    distributed prefix sum at scale)."""
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # explicit doc_id exchange before the pair fan-out — the q206 lesson:
     # a single-file scan would otherwise run the explode in one task
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -679,7 +563,7 @@ def q165_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one comma-joined string column (oracle: ordered STRING_AGG) — the
     output contract is scalar columns only, since the driver canonicalizer
     cannot sort array cells (q10 pattern)."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.posexplode(tokens_expr("text")).alias("pos", "tok")
     )
@@ -752,7 +636,7 @@ def q177_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus length squared — then a mincount cut before the (vocab-sized,
     broadcast) df joins and the single-ln score: one float op per
     surviving pair, no summation, so no decimal dance is needed."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     dt = d.select(
         "doc_id", F.explode(F.array_distinct(tokens_expr("text"))).alias("tok")
     ).distinct()
@@ -820,7 +704,7 @@ def q193_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, one |vocab|-row rank window, least squares from decimal-exact
     component sums (q178's discipline). Each ln() is a single float op
     on identical inputs; ONLY the sums need the decimal rounding."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(tokens_expr("text")).alias("tok"))
         .groupBy("tok")

@@ -1,6 +1,8 @@
 """Central query registry: name -> (spark_fn, oracle_sql | None).
 
-Assembles the per-module QUERIES dicts into the driver contract surface
+Operator modules register their queries with the :func:`query` decorator
+and read tables through :func:`table`; :func:`_collect` imports the modules
+in :data:`MODULES` and assembles the driver contract surface
 (__spark_entry__.py::queries/oracle_sql). Registry order is the display order
 in CORRECTNESS reports, and the driver verifies the FIRST 50 oracle-backed
 queries only — so ordering rotates per round to get every oracle query a
@@ -18,8 +20,12 @@ import json
 import os
 import re
 from collections.abc import Callable
+from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import tune
+from .sources.readers import load_table
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -80,24 +86,50 @@ def _priority(name: str, sql: str | None) -> tuple[int, int]:
     return (2, _LAST_ROUND.get(name, 0))
 
 
-def _collect() -> dict[str, tuple[Callable, str | None]]:
-    out: dict[str, tuple[Callable, str | None]] = {}
-    from .operators import relational
+# Every operator module that registers queries, in registry order. A module
+# missing here fails _collect loudly; an import error propagates.
+MODULES = (
+    "relational", "scalar", "temporal", "classics", "classics2", "classics3",
+    "quality", "subqueries", "dedup", "similarity", "text", "multimodal",
+    "merge", "skew", "analytics", "text2", "bpe", "graph",
+)
 
-    modules = [relational]
-    for modname in ("scalar", "temporal", "classics", "classics2", "classics3", "quality", "subqueries", "dedup", "similarity", "text", "multimodal", "pipeline_queries", "merge", "skew", "analytics", "text2", "bpe", "graph"):
-        try:
-            mod = __import__(f"{__package__}.operators.{modname}", fromlist=[modname])
-            modules.append(mod)
-        except ImportError:
-            continue
-    for mod in modules:
-        for name, pair in getattr(mod, "QUERIES", {}).items():
-            if name in out:
-                raise ValueError(f"duplicate query name: {name}")
-            out[name] = pair
+_QUERIES: dict[str, tuple[Callable, str | None]] = {}
+
+
+def query(name: str, sql: str | None):
+    """Register the decorated ``fn(spark, sf_dir) -> DataFrame`` as query
+    ``name`` with its DuckDB oracle ``sql`` (None = rows-only). Returns
+    ``fn`` itself, so ``fn.__module__`` names the defining module."""
+
+    def deco(fn):
+        if name in _QUERIES:
+            raise ValueError(f"duplicate query name: {name}")
+        _QUERIES[name] = (fn, sql)
+        return fn
+
+    return deco
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Tune the session, then load testdata table ``name`` from ``sf_dir``."""
+    tune(spark)
+    return load_table(spark, sf_dir, name)
+
+
+def _collect() -> dict[str, tuple[Callable, str | None]]:
+    prefix = f"{__package__}.operators."
+    for mod in MODULES:
+        import_module(prefix + mod)
+    order = {prefix + mod: i for i, mod in enumerate(MODULES)}
+    unlisted = {fn.__module__ for fn, _ in _QUERIES.values()} - order.keys()
+    if unlisted:
+        raise ValueError(f"query modules missing from registry.MODULES: {sorted(unlisted)}")
+    # module order first, then definition order (sorted is stable): a module
+    # that imports another at top level must not move that module's queries
+    grouped = sorted(_QUERIES.items(), key=lambda kv: order[kv[1][0].__module__])
     ranked = sorted(
-        enumerate(out.items()), key=lambda t: (_priority(t[1][0], t[1][1][1]), t[0])
+        enumerate(grouped), key=lambda t: (_priority(t[1][0], t[1][1][1]), t[0])
     )
     return {name: pair for _, (name, pair) in ranked}
 

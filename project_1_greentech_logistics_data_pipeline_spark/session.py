@@ -16,6 +16,7 @@ the settings that matter at scale turned on explicitly:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -67,6 +68,9 @@ def get_spark(app_name: str = "p1gl-spark", master: str | None = None) -> SparkS
     return tune(spark)
 
 
+_release_warned = False
+
+
 def release_local_checkpoint(df) -> None:
     """Best-effort release of the RDD blocks behind a localCheckpoint()ed
     DataFrame once no future plan can reference it (the iterative
@@ -82,11 +86,21 @@ def release_local_checkpoint(df) -> None:
     localCheckpoint truncates lineage, so a post-release recompute would
     raise. Best-effort (broad except): the py4j plan walk touches Spark
     internals, and a failed release only means the pre-r15 accumulation
-    behavior, never a wrong result."""
+    behavior, never a wrong result. The first failure in a process emits
+    one RuntimeWarning so the fallback is visible."""
+    global _release_warned
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass
+    except Exception as e:
+        if not _release_warned:
+            _release_warned = True
+            warnings.warn(
+                "release_local_checkpoint could not release checkpoint blocks "
+                f"({type(e).__name__}); they stay resident until "
+                "release_session_state",
+                RuntimeWarning,
+                stacklevel=2,
+            )
 
 
 def release_session_state(spark: SparkSession) -> None:

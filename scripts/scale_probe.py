@@ -102,7 +102,7 @@ DEFAULT_PROBES = {
 def build_corpus(spark, m: int, with_embeddings: bool = True) -> str:
     """Materialize the m-fold corpus under WORK/x{m}; idempotent per run.
     ``with_embeddings=False`` skips the embedding transform for
-    documents-only probes (q194); a cached full build still satisfies a
+    documents-only probes (q214/q215/q217/q219); a cached full build still satisfies a
     documents-only request, but not vice versa."""
     from pyspark.sql import functions as F
 
@@ -119,7 +119,7 @@ def build_corpus(spark, m: int, with_embeddings: bool = True) -> str:
     doc_src = str(os.stat(os.path.join(BASE, "documents.parquet")).st_mtime_ns)
     if with_embeddings:
         # lineitem + embeddings are built (and stamped) on full builds
-        # only — the docs-only q194 mode probe reads neither, so their
+        # only — the docs-only probes read neither, so their
         # mtimes must not invalidate (or slow down) a docs-only build.
         # li_src in the stamp also invalidates any full dir cached by the
         # pre-q29 script revision, which never built a lineitem table.
@@ -214,7 +214,7 @@ def build_corpus(spark, m: int, with_embeddings: bool = True) -> str:
         return out_dir
 
     # lineitem x m for the q29 key-stable sample probe (full builds only —
-    # the docs-only q194 mode probe never reads lineitem): copy k offsets
+    # the docs-only probes never read lineitem): copy k offsets
     # l_orderkey so every copy carries FRESH (l_orderkey, l_linenumber)
     # PKs — the md5-prefix filter then keeps an independent ~10% slice per
     # copy (_Q29_FRAC = 0.1), and the probe measures the pure filter-scan
@@ -359,54 +359,6 @@ def vocab_probe(spark, sizes=(31, 1000, 10000)) -> list[dict]:
         }
         out.append(rec)
         print(json.dumps(rec), flush=True)
-    return out
-
-
-def q194_mode_probe(spark, scales=(1, 2, 4), vocab_docs=()) -> list[dict]:
-    """q194 exact vs LSH-assisted mode, on two corpus axes:
-
-    - m-axis (``scales``): the driver-derived m-fold corpus. This is the
-      ADVERSARIAL case for the LSH assist — the 0.63 background Jaccard
-      puts ~42% of all pairs through the bands (SCALE.md vocab probe), so
-      the assist's pre-verify sampling win on the negative band is offset
-      by running the band-candidate machinery on a near-quadratic mass.
-      Expect no LSH advantage here; that is the finding, not a bug.
-    - vocab-axis (``vocab_docs``): V=1000 synthetic corpora with GROWING
-      document count and constant duplicate density — the realistic
-      regime, where positives are exactly the injected near-dups and the
-      exact mode's single quadratic scoring pass is the dominant mass the
-      lsh mode's pre-verify Knuth sample cuts ~10x.
-
-    Row counts are recorded per mode. They are NOT expected to be equal:
-    the lsh mode's positive recall is the documented 1-(1-s^8)^4 S-curve
-    (~0.987 at the 0.95 threshold, ~0.997 at the injected-dup 0.967), so
-    a small per-corpus deficit vs exact is the honest cost of the 100 TB
-    shape. Exact equality IS pinned at sf0.01 (test_dedup_properties.py),
-    where every true pair sits far enough above threshold."""
-    import __spark_entry__ as em
-
-    fn = em.queries()["q194_dedup_training_pairs"]
-    corpora = [
-        (f"x{m}", build_corpus(spark, m, with_embeddings=False)) for m in scales
-    ]
-    corpora += [
-        (f"v1000_n{n}", build_vocab_corpus(spark, 1000, n_docs=n))
-        for n in vocab_docs
-    ]
-    out = []
-    for label, d in corpora:
-        for mode in ("exact", "lsh"):
-            os.environ["SPARK_GRAFT_Q194_MODE"] = mode
-            try:
-                release(spark)
-                t0 = time.perf_counter()
-                n = fn(spark, d).count()
-                sec = round(time.perf_counter() - t0, 2)
-            finally:
-                os.environ.pop("SPARK_GRAFT_Q194_MODE", None)
-            rec = {"query": "q194", "mode": mode, "corpus": label, "sec": sec, "rows": int(n)}
-            out.append(rec)
-            print(json.dumps(rec), flush=True)
     return out
 
 
@@ -775,11 +727,11 @@ def _order_free_set_digest(df):
 
 
 def _timed_summary(spark, fn, d, summary):
-    """Shared cold/warm timed-run mechanics for the ledger-axis probes
-    (q212, q218): two runs of summary(fn(spark, d)) with release()
-    between, returning (summary_row, cold_sec, warm_sec). One definition
-    so a timing-protocol change (extra warm run, new hygiene step)
-    cannot silently diverge across probes (review-caught — the probe
+    """Shared cold/warm timed-run mechanics for the ledger-axis probes:
+    two runs of summary(fn(spark, d)) with release() between, returning
+    (summary_row, cold_sec, warm_sec). One definition so a
+    timing-protocol change (extra warm run, new hygiene step) cannot
+    silently diverge across probes (review-caught — the probe
     bodies were accreting hand-copies of this block the same way main()
     accreted dispatch blocks before the r11-advice table)."""
     row = None
@@ -806,18 +758,14 @@ def _agg_scalar(v):
     return round(float(v), 6) if isinstance(v, float) else int(v)
 
 
-def _candidate_mode_probe(
+def _ledger_probe(
     spark, scales, *, query: str, probe_tag: str, named_cols: list[str],
-    sum_cols: list[str], env_var: str = "SPARK_GRAFT_NEARDUP_CANDIDATES",
-    modes: tuple = ("exact", "lsh"),
+    sum_cols: list[str],
 ) -> list[dict]:
-    """Shared m-axis probe body for the mode-switched compositions
-    (q214/q217 exact-vs-lsh candidates, q219 text-vs-hash shuffle keys):
-    both ``env_var`` ``modes`` per m, warm 2nd-run timings, order-free
-    set digest per mode, a parity record per
-    m. ONE implementation so a protocol fix (digest-on-warm-caches, env
-    save/restore, timing) cannot silently diverge the two measurements —
-    the review-caught duplication class the operator factorings closed.
+    """Shared m-axis probe body for the ledger compositions (q214, q217,
+    q219): cold and warm timings per m plus the order-free set digest of
+    the ledger. ONE implementation so a protocol fix (digest-on-warm-
+    caches, timing) cannot silently diverge the measurements.
     ``named_cols`` become named integer keys in each record (after
     ``rows``); ``sum_cols`` land in ``ledger_sums``. Aggregates are
     None-safe: an empty ledger records nulls instead of crashing AFTER
@@ -835,77 +783,42 @@ def _candidate_mode_probe(
             *[F.sum(c) for c in sum_cols],
         )
 
-    saved_mode = os.environ.get(env_var)
-    try:
-        for m in scales:
-            d = build_corpus(spark, m, with_embeddings=False)
-            digests = {}
-            for mode in modes:
-                os.environ[env_var] = mode
-                secs = []
-                for _ in range(2):
-                    release(spark)
-                    t0 = time.perf_counter()
-                    row = summary(fn(spark, d)).collect()[0]
-                    secs.append(round(time.perf_counter() - t0, 2))
-                # digest pass runs on the 2nd run's still-warm caches —
-                # releasing first would re-execute the heaviest query on
-                # the surface from scratch just to hash it (review-caught)
-                digests[mode] = _order_free_set_digest(fn(spark, d))
-                release(spark)
-                rec = {
-                    "probe": probe_tag,
-                    "query": query,
-                    "mode": mode,
-                    "m": m,
-                    "rows": int(row[0]),
-                    **{
-                        c: _agg_scalar(row[1 + i]) for i, c in enumerate(named_cols)
-                    },
-                    "ledger_sums": [
-                        _agg_scalar(v) for v in row[1 + len(named_cols):]
-                    ],
-                    "ledger_digest": digests[mode],
-                    "cold_sec": secs[0],
-                    "warm_sec": secs[1],
-                }
-                out.append(rec)
-                print(json.dumps(rec), flush=True)
-            parity = {
-                # parity tag keyed on the query's stable qNN prefix, not
-                # on probe_tag's spelling (review-caught hidden coupling)
-                "probe": f"{query.split('_')[0]}_mode_parity",
-                "m": m,
-                # all-pairs identity, not just the first two — a third
-                # mode silently diverging must flip this (review-caught)
-                "ledger_identical": len(set(digests.values())) == 1,
-            }
-            out.append(parity)
-            print(json.dumps(parity), flush=True)
-    finally:
-        if saved_mode is None:
-            os.environ.pop(env_var, None)
-        else:
-            os.environ[env_var] = saved_mode
+    for m in scales:
+        d = build_corpus(spark, m, with_embeddings=False)
+        row, cold, warm = _timed_summary(spark, fn, d, summary)
+        # digest pass runs on the 2nd run's still-warm caches — releasing
+        # first would re-execute the heaviest query on the surface from
+        # scratch just to hash it (review-caught)
+        digest = _order_free_set_digest(fn(spark, d))
+        release(spark)
+        rec = {
+            "probe": probe_tag,
+            "query": query,
+            "m": m,
+            "rows": int(row[0]),
+            **{c: _agg_scalar(row[1 + i]) for i, c in enumerate(named_cols)},
+            "ledger_sums": [_agg_scalar(v) for v in row[1 + len(named_cols):]],
+            "ledger_digest": digest,
+            "cold_sec": cold,
+            "warm_sec": warm,
+        }
+        out.append(rec)
+        print(json.dumps(rec), flush=True)
     return out
 
 
 def q214_fuzzy_probe(spark, scales=(1, 2, 4)) -> list[dict]:
     """The q214 order-sheet probe: m-axis clock for the fuzzy curation
-    composition under BOTH candidate modes — exact (q44's within-lang
-    all-pairs, the oracle default, quadratic per lang block) and lsh
-    (banded MinHash, the 100 TB path, ~linear candidate mass). The copies
-    are affine vocabulary permutations, so each m-fold corpus carries m
-    copies of the natural within-lang near-dup structure while cross-copy
-    overlap stays at background — true pairs grow ~m, but exact-mode
-    PREDICATE EVALUATIONS grow ~m^2 within each lang block. The probe
-    exists to measure that divergence, and to check the two modes'
-    ledgers stay IDENTICAL as the corpus grows (LSH precision is 1.0 by
-    construction, so any divergence is a recall miss). Ledger digest is
-    the literal order-free set hash (sort-collect full per-row md5s,
-    hash the concatenation). Warm 2nd-run timings; the summary references
-    EVERY output column (the r9 probe-validity rule)."""
-    return _candidate_mode_probe(
+    composition, whose candidate pairs are q44's within-lang all-pairs
+    (quadratic per lang block). The copies are affine vocabulary
+    permutations, so each m-fold corpus carries m copies of the natural
+    within-lang near-dup structure while cross-copy overlap stays at
+    background — true pairs grow ~m, but PREDICATE EVALUATIONS grow ~m^2
+    within each lang block. Ledger digest is the literal order-free set
+    hash (sort-collect full per-row md5s, hash the concatenation). Warm
+    2nd-run timings; the summary references EVERY output column (the r9
+    probe-validity rule)."""
+    return _ledger_probe(
         spark,
         scales,
         query="q214_fuzzy_curation_pipeline",
@@ -917,16 +830,15 @@ def q214_fuzzy_probe(spark, scales=(1, 2, 4)) -> list[dict]:
 
 def q217_tagged_probe(spark, scales=(1, 2, 4)) -> list[dict]:
     """The q217 m-axis probe: the tagged (filter -> redact -> fuzzy ->
-    exact -> scrub -> span) composition under BOTH candidate modes —
-    q214's probe shape with the redaction stage in the measured path and
-    redact_hits in the summary (every output column referenced — the
-    standing probe-validity rule; dropping it would let ColumnPruning
-    delete the regexp_count branch). The m-fold corpus's affine vocab
+    exact -> scrub -> span) composition — q214's probe shape with the
+    redaction stage in the measured path and redact_hits in the summary
+    (every output column referenced — the standing probe-validity rule;
+    dropping it would let ColumnPruning delete the regexp_count branch). The m-fold corpus's affine vocab
     permutation does not touch the blocklist terms, so redaction mass
-    grows ~m while the exact-mode predicate evaluations grow ~m^2 —
-    the same divergence q214's probe measures, now over rewritten
-    text. Mode-parity digest per m (order-free set hash)."""
-    return _candidate_mode_probe(
+    grows ~m while the pair predicate evaluations grow ~m^2 — the same
+    divergence q214's probe measures, now over rewritten text. Ledger
+    digest per m (order-free set hash)."""
+    return _ledger_probe(
         spark,
         scales,
         query="q217_tagged_curation_pipeline",
@@ -997,61 +909,28 @@ def q218_url_probe(spark, scales=(1, 2, 4, 8)) -> list[dict]:
 
 
 def q219_substr_probe(spark, scales=(1, 2, 4, 8)) -> list[dict]:
-    """The q219 m-axis probe: the ExactSubstr substring-dedup ledger
-    under BOTH shuffle-key modes — text (the gram string itself, the
-    oracle default) and hash (xxhash64, the 100 TB 8-byte-key path) —
-    at each corpus multiple. The affine vocab permutation preserves
+    """The q219 m-axis probe: the ExactSubstr substring-dedup ledger at
+    each corpus multiple. The affine vocab permutation preserves
     within-copy token equality, so each copy carries the base corpus's
     cross-document shared-run structure under renamed tokens while
     cross-copy gram collisions stay at background: MEASURED at
     m=1/2/4/8 the duplicated-occurrence mass is 11010/22020/44041/88083
     (exactly ~m; the 3 extra hits at m=8 are the cross-copy background)
     and every other ledger sum scales the same way, while the warm
-    clock reads 1.75/1.70/1.97/2.80 s (text mode) — fixed-overhead
-    dominated at this scale; the m=1 text cold run (10.73 s) carries
-    first-run JIT, recorded rather than smoothed (the q218 note's
-    precedent). NO pair graph exists anywhere in the query, so there is
-    no quadratic regime to report (the q218 precedent's wording). The
-    hash mode (8-byte xxhash64 shuffle keys) reads faster at every m
-    (warm 1.38/1.51/1.83/2.33) and its ledger digest is IDENTICAL to
-    text mode at all four scales — a divergence would be a 64-bit
-    gram-hash collision. The summary references EVERY ledger column
-    (the r9 probe-validity rule — a bare count would let ColumnPruning
-    delete the island-merge window branch)."""
-    return _candidate_mode_probe(
+    clock reads 1.75/1.70/1.97/2.80 s — fixed-overhead dominated at this
+    scale; the m=1 cold run (10.73 s) carries first-run JIT, recorded
+    rather than smoothed (the q218 note's precedent). NO pair graph
+    exists anywhere in the query, so there is no quadratic regime to
+    report (the q218 precedent's wording). The summary references EVERY
+    ledger column (the r9 probe-validity rule — a bare count would let
+    ColumnPruning delete the island-merge window branch)."""
+    return _ledger_probe(
         spark,
         scales,
         query="q219_substring_dedup",
         probe_tag="q219_substr",
         named_cols=["dup_hits", "n_islands", "dup_tokens"],
         sum_cols=["n_tokens", "n_grams", "keeper_hits", "kept_tokens"],
-        env_var="SPARK_GRAFT_SUBSTR_KEY",
-        modes=("text", "hash"),
-    )
-
-
-def q219_cache_probe(spark, scales=(1, 2, 4, 8)) -> list[dict]:
-    """The q219 recompute-vs-cache probe (r13 ADVICE, resolved by
-    measurement): the identical ledger under SPARK_GRAFT_SUBSTR_CACHE=0
-    (default — the fan-out recomputed under gstats, hits, and the
-    island merge) and =1 (occ, the bounded duplicated-occurrence set,
-    cached so hits + island merge share one materialization). Same
-    m-axis corpus as the shuffle-key probe; warm 2nd-run timings;
-    parity digest per m. The summary references EVERY ledger column
-    (the r9 probe-validity rule). MEASURED numbers live in SCALE.md
-    §Round-14 — at sf-probe scale the cached mode loses (the
-    materialization + lost pruning cost more than the recomputed
-    fan-out saves at this dup mass), which is exactly why the default
-    stays uncached with the cache as the big-dup-mass env path."""
-    return _candidate_mode_probe(
-        spark,
-        scales,
-        query="q219_substring_dedup",
-        probe_tag="q219_cache",
-        named_cols=["dup_hits", "n_islands", "dup_tokens"],
-        sum_cols=["n_tokens", "n_grams", "keeper_hits", "kept_tokens"],
-        env_var="SPARK_GRAFT_SUBSTR_CACHE",
-        modes=("0", "1"),
     )
 
 
@@ -1237,28 +1116,8 @@ def q215_tier_probe(spark, scales=(1, 2, 4, 8)) -> list[dict]:
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        # the window mode (default) for both queries, plus BOTH queries
-        # under SPARK_GRAFT_TIER_CUT=prefix2 — the implemented 100 TB cut
-        # path must be MEASURED on the same axis, not just parity-tested
-        # (and through the composition, whose cached langed relation feeds
-        # the prefix2 eager collect)
-        runs = [(name, fn, None) for name, fn in fns.items()]
-        runs.extend(
-            (f"{name}[prefix2]", fn, "prefix2") for name, fn in fns.items()
-        )
-        for name, fn, mode in runs:
-            base_name = name.split("[")[0]
-            secs = []
-            for _ in range(2):
-                release(spark)
-                if mode:
-                    os.environ["SPARK_GRAFT_TIER_CUT"] = mode
-                try:
-                    t0 = time.perf_counter()
-                    row = summaries[base_name](fn(spark, d)).collect()[0]
-                    secs.append(round(time.perf_counter() - t0, 2))
-                finally:
-                    os.environ.pop("SPARK_GRAFT_TIER_CUT", None)
+        for name, fn in fns.items():
+            row, cold, warm = _timed_summary(spark, fn, d, summaries[name])
             rec = {
                 "probe": "q215_tier",
                 "query": name,
@@ -1269,8 +1128,8 @@ def q215_tier_probe(spark, scales=(1, 2, 4, 8)) -> list[dict]:
                 # super-linear bend must be attributable from this JSON
                 "lang_docs": dict(sorted(lang_sizes.items())),
                 "max_lang_docs": max(lang_sizes.values()),
-                "cold_sec": secs[0],
-                "warm_sec": secs[1],
+                "cold_sec": cold,
+                "warm_sec": warm,
             }
             out.append(rec)
             print(json.dumps(rec), flush=True)
@@ -1298,18 +1157,6 @@ def main() -> None:
         "e.g. 31,1000,10000)",
     )
     ap.add_argument(
-        "--q194-modes",
-        default=None,
-        help="run the q194 exact-vs-lsh mode probe instead (comma list of "
-        "corpus multiples, e.g. 1,2,4; may be empty with --q194-vocab-docs)",
-    )
-    ap.add_argument(
-        "--q194-vocab-docs",
-        default=None,
-        help="vocab-axis corpora for the q194 mode probe (comma list of "
-        "document counts at V=1000, e.g. 5000,10000,20000)",
-    )
-    ap.add_argument(
         "--q209-norm",
         default=None,
         help="run the q209 normalization-widening probe (document count, "
@@ -1330,8 +1177,8 @@ def main() -> None:
     ap.add_argument(
         "--q214-scales",
         default=None,
-        help="run the q214 fuzzy-curation m-axis probe, both candidate "
-        "modes (comma list of corpus multiples, e.g. 1,2,4)",
+        help="run the q214 fuzzy-curation m-axis probe (comma list of "
+        "corpus multiples, e.g. 1,2,4)",
     )
     ap.add_argument(
         "--q215-scales",
@@ -1342,8 +1189,8 @@ def main() -> None:
     ap.add_argument(
         "--q217-scales",
         default=None,
-        help="run the q217 tagged-curation m-axis probe, both candidate "
-        "modes (comma list of corpus multiples, e.g. 1,2,4)",
+        help="run the q217 tagged-curation m-axis probe (comma list of "
+        "corpus multiples, e.g. 1,2,4)",
     )
     ap.add_argument(
         "--q218-scales",
@@ -1354,13 +1201,7 @@ def main() -> None:
     ap.add_argument(
         "--q219-scales",
         default=None,
-        help="run the q219 substring-dedup m-axis probe, both shuffle-key "
-        "modes (comma list of corpus multiples, e.g. 1,2,4,8)",
-    )
-    ap.add_argument(
-        "--q219-cache-scales",
-        default=None,
-        help="run the q219 recompute-vs-cache mode probe (comma list of "
+        help="run the q219 substring-dedup m-axis probe (comma list of "
         "corpus multiples, e.g. 1,2,4,8)",
     )
     ap.add_argument(
@@ -1380,23 +1221,6 @@ def main() -> None:
     def _ints(csv: str) -> tuple:
         return tuple(int(x) for x in csv.split(","))
 
-    # q194's two flags parse (and empty-pair-error) BEFORE any Spark
-    # startup — the pre-refactor behavior (review-caught: validating
-    # inside the runner spun up a JVM only to ap.error past its stop()).
-    q194_selected = args.q194_modes is not None or args.q194_vocab_docs is not None
-    if q194_selected:
-        q194_scales = tuple(
-            int(m) for m in (args.q194_modes or "").split(",") if m.strip()
-        )
-        q194_vdocs = tuple(
-            int(n) for n in (args.q194_vocab_docs or "").split(",") if n.strip()
-        )
-        if not q194_scales and not q194_vdocs:
-            ap.error("--q194-modes/--q194-vocab-docs given but both empty")
-
-    def _run_q194(spark):
-        return q194_mode_probe(spark, q194_scales, q194_vdocs)
-
     # Special-probe dispatch table (ADVICE r11): one shared spark-setup/
     # run/json-dump block, and more than one probe flag is an explicit
     # argparse error instead of silent first-match precedence. Rows:
@@ -1407,9 +1231,6 @@ def main() -> None:
         ("q221-scales", args.q221_scales is not None,
          lambda sp: q221_weight_probe(sp, _ints(args.q221_scales)),
          "q221_weight_probe_results.json"),
-        ("q219-cache-scales", args.q219_cache_scales is not None,
-         lambda sp: q219_cache_probe(sp, _ints(args.q219_cache_scales)),
-         "q219_cache_probe_results.json"),
         ("q220-scales", args.q220_scales is not None,
          lambda sp: q220_snapshot_probe(sp, _ints(args.q220_scales)),
          "q220_snapshot_probe_results.json"),
@@ -1437,8 +1258,6 @@ def main() -> None:
         ("q209-norm", args.q209_norm is not None,
          lambda sp: q209_norm_probe(sp, int(args.q209_norm)),
          "q209_norm_probe_results.json"),
-        ("q194-modes/--q194-vocab-docs", q194_selected,
-         _run_q194, "q194_mode_probe_results.json"),
         ("vocab", bool(args.vocab),
          lambda sp: vocab_probe(sp, _ints(args.vocab)),
          "vocab_probe_results.json"),

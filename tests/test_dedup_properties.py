@@ -227,6 +227,39 @@ def test_symmetrized_debug_check_catches_one_directional_edges(spark, monkeypatc
     assert got2  # flag off: no check, documented caller-owned contract
 
 
+def test_symmetrized_debug_check_ignores_null_endpoints(spark, monkeypatch):
+    """A symmetric edge list with a NULL endpoint passes the debug check:
+    NULL never equi-joins, so a probed (x, NULL) row would otherwise
+    report its present reversal (NULL, x) as missing."""
+    from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
+        assert_symmetrized,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (3, None), (None, 3)], "src long, dst long"
+    )
+    monkeypatch.setenv("SPARK_GRAFT_DEBUG_SYMMETRY", "1")
+    assert_symmetrized(edges, "src", "dst")
+
+
+def test_release_local_checkpoint_warns_once(spark, monkeypatch):
+    """A failed checkpoint release is visible: the first failure emits one
+    RuntimeWarning, later failures stay quiet, and nothing raises."""
+    import warnings
+
+    from project_1_greentech_logistics_data_pipeline_spark import session
+
+    monkeypatch.setattr(session, "_release_warned", False)
+    df = spark.range(3)  # not checkpointed: its plan has no RDD to release
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        session.release_local_checkpoint(df)
+        session.release_local_checkpoint(df)
+    released = [w for w in caught if "release_local_checkpoint" in str(w.message)]
+    assert len(released) == 1
+    assert released[0].category is RuntimeWarning
+
+
 def test_lsh_candidates_are_same_lang_only(spark):
     """Regression for the cross-lang candidate gap: q45's verified pairs
     must all be within-lang (the verify bitmaps are dictionary-encoded per
@@ -252,7 +285,7 @@ def test_lsh_pairs_match_exact_pairs(spark):
     """On the testdata corpus the LSH path (q45) must find exactly the
     pair set of the exact baseline (q44) — precision 1.0 by construction,
     and recall 1.0 here because near-dup pairs sit far above the 0.95
-    S-curve knee. Pins the q73/q78 lsh-flag path to oracle semantics."""
+    S-curve knee."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
         q44_ngram_jaccard_neardup,
         q45_minhash_lsh_neardup,
@@ -269,60 +302,14 @@ def test_lsh_pairs_match_exact_pairs(spark):
     assert lsh == exact
 
 
-def test_q73_lsh_flag_matches_exact_path(spark, monkeypatch):
-    """q73 with SPARK_GRAFT_NEARDUP_CANDIDATES=lsh must produce the same
-    clustering as the default exact path."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q73_neardup_clusters,
-    )
-
-    base = {
-        (r["doc_id"], r["cluster_id"])
-        for r in q73_neardup_clusters(spark, SF).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_CANDIDATES", "lsh")
-    via_lsh = {
-        (r["doc_id"], r["cluster_id"])
-        for r in q73_neardup_clusters(spark, SF).collect()
-    }
-    assert via_lsh == base
-
-
-def test_q194_lsh_mode_matches_exact_path(spark, monkeypatch):
-    """q194 with SPARK_GRAFT_Q194_MODE=lsh (LSH positives + pre-verify-
-    sampled quadratic negatives) must produce the identical labeled pair
-    set as the default single-pass exact path — pinned at sf0.01 per the
-    round-3 verdict (LSH recall at the 0.95 threshold is 1.0 on this
-    corpus, so the equivalence is exact, not approximate)."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q194_dedup_training_pairs,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    base = {
-        (r["doc_a"], r["doc_b"], r["jaccard"], r["is_duplicate"])
-        for r in q194_dedup_training_pairs(spark, sf).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_Q194_MODE", "lsh")
-    via_lsh = {
-        (r["doc_a"], r["doc_b"], r["jaccard"], r["is_duplicate"])
-        for r in q194_dedup_training_pairs(spark, sf).collect()
-    }
-    assert base  # non-vacuous: the corpus must actually contain both labels
-    assert {t[3] for t in base} == {True, False}
-    assert via_lsh == base
-
-
-def test_neardup_pairs_docs_override_composes_with_keep(spark, tmp_path, monkeypatch):
+def test_neardup_pairs_docs_override_composes_with_keep(spark, tmp_path):
     """The docs= relation override and the keep= doc_id gate COMPOSE:
-    keep SEMI-gates the provided relation before the signature build, in
-    BOTH candidate modes — the contract q217 relies on half of (docs=
-    alone) and future compositions may rely on jointly. Corpus: three
-    mutual near-dup docs (identical text) plus an unrelated doc; keep
-    excludes one member of the trio, so the gated graph must contain
-    exactly the one surviving pair and never touch the excluded id."""
-    import os
-
+    keep SEMI-gates the provided relation before the bitmap build — the
+    contract q217 relies on half of (docs= alone) and future compositions
+    may rely on jointly. Corpus: three mutual near-dup docs (identical
+    text) plus an unrelated doc; keep excludes one member of the trio, so
+    the gated graph must contain exactly the one surviving pair and never
+    touch the excluded id."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
         neardup_pairs,
     )
@@ -335,17 +322,13 @@ def test_neardup_pairs_docs_override_composes_with_keep(spark, tmp_path, monkeyp
     ]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     keep = spark.createDataFrame([(1,), (2,), (4,)], "doc_id long")
-    for mode in ("exact", "lsh"):
-        monkeypatch.setenv("SPARK_GRAFT_NEARDUP_CANDIDATES", mode)
-        full = {
-            (r["doc_a"], r["doc_b"])
-            for r in neardup_pairs(spark, "unused-sf-dir", docs=docs).collect()
-        }
-        gated = {
-            (r["doc_a"], r["doc_b"])
-            for r in neardup_pairs(
-                spark, "unused-sf-dir", keep=keep, docs=docs
-            ).collect()
-        }
-        assert full == {(1, 2), (1, 3), (2, 3)}, mode
-        assert gated == {(1, 2)}, mode
+    full = {
+        (r["doc_a"], r["doc_b"])
+        for r in neardup_pairs(spark, "unused-sf-dir", docs=docs).collect()
+    }
+    gated = {
+        (r["doc_a"], r["doc_b"])
+        for r in neardup_pairs(spark, "unused-sf-dir", keep=keep, docs=docs).collect()
+    }
+    assert full == {(1, 2), (1, 3), (2, 3)}
+    assert gated == {(1, 2)}

@@ -945,6 +945,40 @@ def test_registry_round_parse_tolerates_odd_report_names(tmp_path, monkeypatch):
     assert "q_z" not in red and "q_z" in green
 
 
+def test_registry_query_rejects_duplicate_name(monkeypatch):
+    """A second @query with a taken name raises when it is applied, so a
+    copy-pasted decorator cannot silently replace an earlier query; the
+    decorator hands back the function itself."""
+    from project_1_greentech_logistics_data_pipeline_spark import registry
+
+    monkeypatch.setattr(registry, "_QUERIES", {})
+
+    def fn(spark, sf_dir):
+        return None
+
+    assert registry.query("q_dup", None)(fn) is fn
+    with pytest.raises(ValueError, match="duplicate query name: q_dup"):
+        registry.query("q_dup", "SELECT 1")(fn)
+
+
+def test_registry_modules_cover_every_query_module():
+    """registry.MODULES names exactly the operator modules that register
+    queries: import every operators/*.py and compare, so a new query
+    module cannot be left out of the driver surface."""
+    import importlib
+    import pkgutil
+
+    from project_1_greentech_logistics_data_pipeline_spark import operators, registry
+
+    for m in pkgutil.iter_modules(operators.__path__):
+        importlib.import_module(f"{operators.__name__}.{m.name}")
+    registering = {
+        fn.__module__.rsplit(".", 1)[-1] for fn, _ in registry._QUERIES.values()
+    }
+    assert registering == set(registry.MODULES)
+    assert len(registry.MODULES) == len(registering)
+
+
 def test_md5_split_matches_independent_hashlib_implementation(spark):
     """Triple-engine check of the portable split primitive: the Spark
     assignment (and, transitively via the q79b oracle test, DuckDB's)
@@ -2206,38 +2240,6 @@ def test_q214_consistency_sf(spark):
     assert dropped <= touched
 
 
-def test_q214_lsh_mode_matches_exact_mode(spark, monkeypatch):
-    """q214 with SPARK_GRAFT_NEARDUP_CANDIDATES=lsh must produce the
-    identical ledger on the testdata corpus — LSH verified pairs are
-    exact (precision 1.0), so any divergence is a recall miss, and this
-    corpus's near-dup pairs sit far enough above the threshold that the
-    S-curve gives recall 1 (the q73 parity precedent)."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q214_fuzzy_curation_pipeline,
-    )
-
-    exact = sorted(tuple(r) for r in q214_fuzzy_curation_pipeline(spark, SF).collect())
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_CANDIDATES", "lsh")
-    lsh = sorted(tuple(r) for r in q214_fuzzy_curation_pipeline(spark, SF).collect())
-    assert exact == lsh
-
-
-def test_q217_lsh_mode_matches_exact_mode(spark, monkeypatch):
-    """q217 under SPARK_GRAFT_NEARDUP_CANDIDATES=lsh: the docs= override
-    must thread through the LSH path too (minhash signatures, band join
-    and verify bitmaps all built over the REDACTED relation) and produce
-    the identical ledger — the q214 parity argument over rewritten
-    text."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q217_tagged_curation_pipeline,
-    )
-
-    exact = sorted(tuple(r) for r in q217_tagged_curation_pipeline(spark, SF).collect())
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_CANDIDATES", "lsh")
-    lsh = sorted(tuple(r) for r in q217_tagged_curation_pipeline(spark, SF).collect())
-    assert exact == lsh
-
-
 def test_q217_properties_random_corpora(spark, tmp_path):
     """q217 invariants on random corpora (hypothesis): scope is exactly
     the non-null docs; kept_quality re-derives from q212's verdict;
@@ -2828,42 +2830,11 @@ def test_q216_consistency_sf(spark):
     assert any(v["tier"] == "head" for v in r216.values())
 
 
-def test_q215_q216_prefix2_mode_matches_window_mode(spark, monkeypatch):
-    """SPARK_GRAFT_TIER_CUT=prefix2 (the 100 TB two-pass distributed
-    prefix sum — range partition + bounded offset collect + partition-
-    bounded windows) must produce the IDENTICAL rows as the default
-    per-language window on both queries, at sf AND on the analytic-ties
-    hand corpus whose equal round-9 keys exercise tie placement across
-    sampled range boundaries. Boundary-invariance is the load-bearing
-    claim: offset + within-partition prefix equals the global prefix
-    wherever RangePartitioning's sampled boundaries fall."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q216_ccnet_pipeline,
-    )
-    from project_1_greentech_logistics_data_pipeline_spark.operators.text2 import (
-        q215_ccnet_perplexity_tiers,
-    )
-    from project_1_greentech_logistics_data_pipeline_spark.session import (
-        release_session_state,
-    )
-
-    for fn in (q215_ccnet_perplexity_tiers, q216_ccnet_pipeline):
-        monkeypatch.delenv("SPARK_GRAFT_TIER_CUT", raising=False)
-        base = sorted(tuple(r) for r in fn(spark, SF).collect())
-        release_session_state(spark)
-        monkeypatch.setenv("SPARK_GRAFT_TIER_CUT", "prefix2")
-        alt = sorted(tuple(r) for r in fn(spark, SF).collect())
-        release_session_state(spark)
-        monkeypatch.delenv("SPARK_GRAFT_TIER_CUT", raising=False)
-        assert base == alt and len(base) > 0, fn.__name__
-
-
-def test_q215_prefix2_analytic_ties(spark, tmp_path, monkeypatch):
-    """prefix2 on the corpus class that motivated the round-9 sort key:
-    several equal-key (analytically tied) docs per language, more
-    shuffle partitions than rows — every partition boundary falls inside
-    a tie run. The doc_id component of the range key keeps the total
-    order; the modes must agree row-for-row."""
+def test_q215_prefix2_analytic_ties(spark, tmp_path):
+    """q215 on the corpus class that motivated the round-9 sort key:
+    several equal-key (analytically tied) docs per language. The doc_id
+    tie-break keeps the total order, so a tie run's cumulative mass
+    climbs in doc_id order."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.text2 import (
         q215_ccnet_perplexity_tiers,
     )
@@ -2876,23 +2847,21 @@ def test_q215_prefix2_analytic_ties(spark, tmp_path, monkeypatch):
     docs += [(i, "bb", diverse) for i in range(21, 27)]  # exact analytic ties
     d = _write_docs(spark, tmp_path, docs)
 
-    monkeypatch.delenv("SPARK_GRAFT_TIER_CUT", raising=False)
-    base = sorted(tuple(r) for r in q215_ccnet_perplexity_tiers(spark, d).collect())
+    rows = [r.asDict() for r in q215_ccnet_perplexity_tiers(spark, d).collect()]
     release_session_state(spark)
-    monkeypatch.setenv("SPARK_GRAFT_TIER_CUT", "prefix2")
-    alt = sorted(tuple(r) for r in q215_ccnet_perplexity_tiers(spark, d).collect())
-    release_session_state(spark)
-    assert base == alt and len(base) == 18
+    assert len(rows) == 18
+    ties = sorted((r for r in rows if r["lang"] == "bb"), key=lambda r: r["doc_id"])
+    assert len({round(r["avg_neg_logp"], 9) for r in ties}) == 1
+    cums = [r["cum_tokens"] for r in ties]
+    assert cums == sorted(cums) and len(set(cums)) == len(cums)
 
 
-def test_q216_prefix2_analytic_ties(spark, tmp_path, monkeypatch):
-    """q216 under prefix2 on an analytic-ties corpus (the q215 test's
-    boundary-invariance claim, through the composition): the predicted-
-    lang groups ADD the 'und' group to the tie structure — a scored
-    marker-free tie run lands in 'und' NEXT TO the exact-duplicate docs
-    the scrub empties (unscored, outside every LM group), so range
-    boundaries fall inside tie runs of two different predicted groups.
-    Modes must agree row-for-row."""
+def test_q216_prefix2_analytic_ties(spark, tmp_path):
+    """q216 on an analytic-ties corpus (the q215 test's tie structure,
+    through the composition): the predicted-lang groups ADD the 'und'
+    group to the tie structure — a scored marker-free tie run lands in
+    'und' NEXT TO the exact-duplicate docs the scrub empties (unscored,
+    outside every LM group)."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
         q216_ccnet_pipeline,
     )
@@ -2919,15 +2888,9 @@ def test_q216_prefix2_analytic_ties(spark, tmp_path, monkeypatch):
     docs += [(i, "xx", "menu home about contact links") for i in range(31, 34)]
     d = _write_docs(spark, tmp_path, docs)
 
-    monkeypatch.delenv("SPARK_GRAFT_TIER_CUT", raising=False)
-    base = sorted(tuple(r) for r in q216_ccnet_pipeline(spark, d).collect())
-    release_session_state(spark)
-    monkeypatch.setenv("SPARK_GRAFT_TIER_CUT", "prefix2")
-    alt = sorted(tuple(r) for r in q216_ccnet_pipeline(spark, d).collect())
-    release_session_state(spark)
-    assert base == alt and len(base) == 21
     by = {r[0]: r.asDict() for r in q216_ccnet_pipeline(spark, d).collect()}
     release_session_state(spark)
+    assert len(by) == 21
     assert {by[i]["predicted_lang"] for i in range(1, 13)} == {"en"}
     assert {by[i]["predicted_lang"] for i in range(21, 27)} == {"und"}
     for i in range(31, 34):  # scrubbed empty: und + unscored
@@ -3016,9 +2979,8 @@ def test_lm_tier_properties_random_corpora(spark, tmp_path):
     """LM-tier invariants on random corpora (hypothesis): scope is
     exactly the >= 2-token docs; n_bigrams == n_tokens - 1 per row;
     per-language mass bookkeeping and the integer tier rule re-derive
-    from the outputs; and prefix2 mode returns the IDENTICAL rows —
-    boundary-invariance under arbitrary duplicate/tie structure, not
-    just the two pinned corpora."""
+    from the outputs under arbitrary duplicate/tie structure, not just
+    the two pinned corpora."""
     from hypothesis import given, settings, strategies as st
 
     from project_1_greentech_logistics_data_pipeline_spark.operators.text2 import (
@@ -3083,28 +3045,15 @@ def test_lm_tier_properties_random_corpora(spark, tmp_path):
                         else ("middle" if 3 * cum <= 2 * total else "tail")
                     )
                     assert m["tier"] == want
-            # prefix2 parity on the same corpus
-            _os.environ["SPARK_GRAFT_TIER_CUT"] = "prefix2"
-            try:
-                alt = [
-                    r.asDict()
-                    for r in q215_ccnet_perplexity_tiers(spark, tmpdir).collect()
-                ]
-            finally:
-                _os.environ.pop("SPARK_GRAFT_TIER_CUT", None)
-            release_session_state(spark)
-            k = lambda r: r["doc_id"]
-            assert sorted(alt, key=k) == sorted(out, key=k)
         finally:
             shutil.rmtree(tmpdir, ignore_errors=True)
 
     prop()
 
 
-def test_q215_degenerate_corpus_both_modes(spark, tmp_path, monkeypatch):
+def test_q215_degenerate_corpus_both_modes(spark, tmp_path):
     """A corpus with NO scoreable document (all single-token or NULL
-    text) returns zero rows in BOTH tier-cut modes — prefix2's empty
-    offset relation (createDataFrame([], schema)) must not throw."""
+    text) returns zero rows."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.text2 import (
         q215_ccnet_perplexity_tiers,
     )
@@ -3112,9 +3061,6 @@ def test_q215_degenerate_corpus_both_modes(spark, tmp_path, monkeypatch):
     d = _write_docs(
         spark, tmp_path, [(1, "aa", "solo"), (2, "bb", ""), (3, "aa", None)]
     )
-    monkeypatch.delenv("SPARK_GRAFT_TIER_CUT", raising=False)
-    assert q215_ccnet_perplexity_tiers(spark, d).count() == 0
-    monkeypatch.setenv("SPARK_GRAFT_TIER_CUT", "prefix2")
     assert q215_ccnet_perplexity_tiers(spark, d).count() == 0
 
 
@@ -3774,42 +3720,6 @@ def test_q219_alignment_free_vs_q207(spark, tmp_path):
         and r219[2]["dup_tokens"] == 8
         and r219[2]["kept_tokens"] == 3
     )
-
-
-def test_q219_hash_mode_matches_text_mode(spark, monkeypatch):
-    """SPARK_GRAFT_SUBSTR_KEY=hash (xxhash64 shuffle keys — the 100 TB
-    8-byte-key path) must produce the identical ledger on the testdata
-    corpus: a divergence would need a 64-bit gram-hash collision (the
-    q214/q217 exact-vs-LSH mode-parity precedent)."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q219_substring_dedup,
-    )
-
-    text = sorted(tuple(r) for r in q219_substring_dedup(spark, SF).collect())
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_KEY", "hash")
-    hashed = sorted(tuple(r) for r in q219_substring_dedup(spark, SF).collect())
-    assert text == hashed
-
-
-def test_q219_cache_mode_matches_default(spark, monkeypatch):
-    """SPARK_GRAFT_SUBSTR_CACHE=1 (cache the duplicated-occurrence set
-    so hits + island merge share one materialization — the
-    big-dup-mass path; measured slower at sf0.1, see the q219 comment)
-    must produce the identical ledger: the cache changes WHERE the
-    fan-out is paid, never a value."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
-        q219_substring_dedup,
-    )
-
-    default = sorted(tuple(r) for r in q219_substring_dedup(spark, SF).collect())
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_CACHE", "1")
-    try:
-        cached = sorted(
-            tuple(r) for r in q219_substring_dedup(spark, SF).collect()
-        )
-    finally:
-        spark.catalog.clearCache()
-    assert default == cached
 
 
 def test_q219_consistency_sf(spark):
