@@ -1,5 +1,7 @@
-"""Reference-parity batch pipeline: parse -> normalize -> validate -> split ->
-quality gate -> write -> lineage.
+"""Reference-parity telemetry pipeline: parse -> normalize -> validate ->
+split -> quality gate -> write -> lineage. ``route_and_write`` is the one ETL
+body: ``run_batch`` calls it once per raw directory and the streaming job
+(streaming/jobs.py) once per micro-batch.
 
 Re-expresses /root/reference/Glue/Glue_job.py (the reference's core engine)
 idiomatically in Spark, with the four deliberate semantics corrections from
@@ -248,68 +250,79 @@ class PipelineResult:
     gate: QualityReport
 
 
-def run_batch(
+def route_and_write(
     spark: SparkSession,
-    raw_dir: str,
+    parsed: DataFrame,
     out_dir: str,
     fmt: str = "parquet",
-    gate_enabled: bool = True,
+    batch_id: int | None = None,
 ) -> PipelineResult:
-    """The full reference pipeline over a raw batch directory.
+    """Normalize, validate, split, gate, write and record lineage for one
+    parsed batch — the only ETL body; ``run_batch`` and every streaming
+    micro-batch call it.
 
-    Write layout mirrors the reference's lake (curated/ rejected/ validated/
-    — Glue_job.py:124-142) with two scale fixes: curated is partitioned by
-    processing date (the reference writes unpartitioned), and lineage counts
-    come from Observation metrics on the single pass instead of four extra
-    count() jobs.
+    ``batch_id`` picks the sink layout only. ``None`` is the reference lake
+    (curated/ rejected/ validated/ — Glue_job.py:124-142): curated overwrite
+    (partitioned by processing date, which the reference is not), rejected
+    and lineage append. An id overwrites every layer under
+    ``{layer}/batch_id=N``, so a replayed micro-batch replaces its own
+    output instead of duplicating rows. Lineage counts come from
+    Observation metrics on the write pass instead of extra count() jobs.
     """
-    parsed = read_raw_telemetry(spark, raw_dir)
     # cache before fan-out: the gate aggregate, both branch writes, and the
     # observe pass otherwise each re-execute the full JSON parse (the
     # reference re-runs its DAG ~10x per run — SURVEY §4 CSE row)
     validated = validate(normalize(parsed)).persist()
-    curated, rejected = split(validated)
-
-    if gate_enabled:
+    try:
+        curated, rejected = split(validated)
         report = quality_gate(curated)
         curated, rejected = apply_gate_policy(curated, rejected, report)
-        status = "PASSED" if report.success else "FAILED"
-    else:
-        report = QualityReport(n_rows=-1)
-        status = "SKIPPED"
-        curated = curated.withColumn("ge_validation_status", F.lit(status))
 
-    obs_cur = Observation("curated")
-    obs_rej = Observation("rejected")
-    curated = curated.observe(
-        obs_cur, F.count(F.lit(1)).alias("n")
-    ).withColumn("processing_date", F.to_date("processed_at"))
-    rejected = rejected.observe(
-        obs_rej,
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.col("_corrupt_record")).alias("n_corrupt"),
-    )
+        obs_cur = Observation("curated")
+        obs_rej = Observation("rejected")
+        curated = curated.observe(
+            obs_cur, F.count(F.lit(1)).alias("n")
+        ).withColumn("processing_date", F.to_date("processed_at"))
+        rejected = rejected.observe(
+            obs_rej,
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.col("_corrupt_record")).alias("n_corrupt"),
+        )
 
-    write_table(curated, f"{out_dir}/curated", mode="overwrite", fmt=fmt,
-                partition_by=["processing_date"])
-    write_table(rejected, f"{out_dir}/rejected", mode="append", fmt=fmt)
+        if batch_id is None:
+            sub, append = "", "append"
+        else:
+            sub, append = f"/batch_id={batch_id}", "overwrite"
+        write_table(curated, f"{out_dir}/curated{sub}", mode="overwrite", fmt=fmt,
+                    partition_by=["processing_date"])
+        write_table(rejected, f"{out_dir}/rejected{sub}", mode=append, fmt=fmt)
 
-    cur_n = int(obs_cur.get["n"])
-    rej_n = int(obs_rej.get["n"])
-    corrupt_n = int(obs_rej.get["n_corrupt"])
+        cur_n = int(obs_cur.get["n"])
+        rej_n = int(obs_rej.get["n"])
+        corrupt_n = int(obs_rej.get["n_corrupt"])
 
-    lineage = spark.createDataFrame(
-        [
-            ("raw", cur_n + rej_n, PIPELINE_NAME, _now()),
-            ("curated", cur_n, PIPELINE_NAME, _now()),
-            ("rejected", rej_n, PIPELINE_NAME, _now()),
-            ("corrupt", corrupt_n, PIPELINE_NAME, _now()),
-        ],
-        "layer string, record_count long, pipeline_name string, run_timestamp timestamp",
-    )
-    write_table(lineage, f"{out_dir}/validated", mode="append", fmt=fmt)
-    validated.unpersist()
+        now = _now()
+        lineage = spark.createDataFrame(
+            [
+                ("raw", cur_n + rej_n, PIPELINE_NAME, now),
+                ("curated", cur_n, PIPELINE_NAME, now),
+                ("rejected", rej_n, PIPELINE_NAME, now),
+                ("corrupt", corrupt_n, PIPELINE_NAME, now),
+            ],
+            "layer string, record_count long, pipeline_name string, run_timestamp timestamp",
+        )
+        write_table(lineage, f"{out_dir}/validated{sub}", mode=append, fmt=fmt)
+    finally:
+        # a long-lived stream must not keep a failed batch's cache pinned
+        validated.unpersist()
     return PipelineResult(cur_n, rej_n, corrupt_n, lineage, report)
+
+
+def run_batch(
+    spark: SparkSession, raw_dir: str, out_dir: str, fmt: str = "parquet"
+) -> PipelineResult:
+    """The full reference pipeline over a raw batch directory."""
+    return route_and_write(spark, read_raw_telemetry(spark, raw_dir), out_dir, fmt=fmt)
 
 
 def _now() -> _dt.datetime:

@@ -7,9 +7,10 @@ equivalents are the kafka DataSource read/write options below.
 
 This environment has no Kafka broker or spark-sql-kafka package, so these
 builders only CONSTRUCT readers/writers (options + schema projection); the
-streaming tests exercise the same downstream pipeline through the file
-source, which shares every transformation. On a cluster, adding the
-spark-sql-kafka-0-10 package makes these functional unchanged.
+streaming tests exercise the downstream pipeline through the file source,
+whose micro-batches run readers.parse_raw_lines + pipeline.route_and_write.
+On a cluster, adding the spark-sql-kafka-0-10 package makes these
+functional unchanged.
 """
 
 from __future__ import annotations

@@ -3,12 +3,12 @@
 - ``load_table``: schema-declared parquet scan of a driver testdata table.
   Declaring the schema (instead of relying on footer inference per query)
   keeps planning cheap and makes pushdown/pruning deterministic.
-- ``read_raw_telemetry``: the reference's raw layer is one *JSON array of
-  event objects per file* (consumer_etl.py:63-67). The reference parses this
-  in two passes (from_json array<string> -> explode -> from_json struct,
-  Glue_job.py:32-48); we parse once with the full ``array<struct>`` schema —
-  half the JSON CPU, same rows (SURVEY §4 "codegen" row). Corrupt file lines
-  are captured, not silently nulled.
+- ``parse_raw_lines`` / ``read_raw_telemetry``: the reference's raw layer is
+  one *JSON array of event objects per file* (consumer_etl.py:63-67). The
+  reference parses this in two passes (from_json array<string> -> explode ->
+  from_json struct, Glue_job.py:32-48); we parse once with the full
+  ``array<struct>`` schema — half the JSON CPU, same rows (SURVEY §4
+  "codegen" row). Corrupt file lines are captured, not silently nulled.
 """
 
 from __future__ import annotations
@@ -54,8 +54,6 @@ def _ns_ts_cols(path: str, name: str) -> tuple:
     cached = _NS_TS_COLS.get(path)
     cols = cached[1] if cached is not None and cached[0] == mtime else None
     if cols is None:
-        from pyspark.sql import types as T
-
         ts_fields = [
             f.name
             for f in TESTDATA_SCHEMAS[name].fields
@@ -83,8 +81,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # parquet TIMESTAMP(NANOS) -> scan those columns as long
         # (nanosAsLong conf, set by tune()), then exact integer ns->us
         # conversion to the declared timestamp type.
-        from pyspark.sql import types as T
-
         tune(spark)
         # Always derived from the sniffed ns_cols — a static per-table
         # physical schema (the round-2 shape, PHYSICAL_SCHEMAS["events"])
@@ -121,20 +117,19 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def read_raw_telemetry(
-    spark: SparkSession,
-    raw_dir: str,
-    schema: T.StructType = TELEMETRY_SCHEMA,
+def parse_raw_lines(
+    raw: DataFrame, schema: T.StructType = TELEMETRY_SCHEMA
 ) -> DataFrame:
-    """Parse raw array-of-JSON batch files into typed telemetry rows.
+    """Parse a ``value`` column of raw array-of-JSON lines into typed
+    telemetry rows — the one parse shared by the batch reader and the
+    streaming micro-batch.
 
     One pass: from_json with array<struct<...>> + explode. A line that fails
     to parse as a JSON array yields a row with ``_corrupt_record`` set and all
     telemetry columns NULL, so corrupt input is observable downstream
     (SURVEY §4 correction 4). Scales: narrow ops only, no shuffle, no
-    driver-side collect; file parallelism = input splits.
+    driver-side collect.
     """
-    raw = spark.read.text(raw_dir)
     arr = F.from_json(F.col("value"), T.ArrayType(schema))
     # Compute _corrupt_record BEFORE exploding: carrying the raw line through
     # the explode duplicates the whole multi-hundred-KB array string onto
@@ -144,7 +139,7 @@ def read_raw_telemetry(
         arr.alias("_events"),
         F.when(arr.isNull(), F.col("value")).alias("_corrupt_record"),
     )
-    exploded = (
+    return (
         pre.select(F.explode_outer("_events").alias("event"), "_corrupt_record")
         # explode_outer keeps one NULL row per unparseable line (wanted: that
         # is the corrupt record) but also one per EMPTY array (unwanted
@@ -153,7 +148,12 @@ def read_raw_telemetry(
         .filter(F.col("_corrupt_record").isNotNull() | F.col("event").isNotNull())
         .select("event.*", "_corrupt_record")
     )
-    return exploded
+
+
+def read_raw_telemetry(spark: SparkSession, raw_dir: str) -> DataFrame:
+    """Raw batch files -> typed telemetry rows (file parallelism = input
+    splits)."""
+    return parse_raw_lines(spark.read.text(raw_dir))
 
 
 def read_csv(

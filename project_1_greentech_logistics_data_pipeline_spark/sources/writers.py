@@ -10,7 +10,12 @@ the curated layer — the reference writes unpartitioned (SURVEY §4), which at
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def write_table(
@@ -19,14 +24,53 @@ def write_table(
     mode: str = "append",
     fmt: str = "parquet",
     partition_by: list[str] | None = None,
-    merge_schema: bool = True,
 ) -> None:
     writer = df.write.mode(mode).format(fmt)
-    if fmt == "delta" and merge_schema:
+    if fmt == "delta":
         writer = writer.option("mergeSchema", "true")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
+
+
+# --- staged-rename swap -----------------------------------------------------
+# A plain-file table is replaced by writing the new version to a sibling
+# staging dir, renaming the target to a backup, renaming staging into place,
+# and deleting the backup. A failed write leaves the target untouched; a crash
+# between the two renames leaves only the backup, which the next call
+# restores before it reads the table.
+
+
+def _backup(path: str) -> str:
+    return path.rstrip("/") + "._old"
+
+
+def restore_interrupted_swap(path: str) -> None:
+    """Rename the backup back if a swap stopped between its two renames
+    (target missing, backup present)."""
+    if not os.path.exists(path) and os.path.exists(_backup(path)):
+        os.rename(_backup(path), path)
+
+
+def _read_committed(spark, path: str, fmt: str) -> DataFrame | None:
+    """The table's last committed version, or None if it was never written."""
+    restore_interrupted_swap(path)
+    return spark.read.format(fmt).load(path) if os.path.exists(path) else None
+
+
+def _swap_in(df: DataFrame, path: str, fmt: str) -> None:
+    """Write ``df`` to staging, then swap it in as ``path``."""
+    staging, backup = path.rstrip("/") + "._staging", _backup(path)
+    df.write.mode("overwrite").format(fmt).save(staging)
+    # the target exists here (or never did), so any backup is a stale
+    # leftover of a swap that completed both renames
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
+    if os.path.exists(path):
+        os.rename(path, backup)
+    os.rename(staging, path)
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
 
 
 def compact_table(
@@ -43,28 +87,20 @@ def compact_table(
     is the maintenance op Delta calls OPTIMIZE, expressed on plain files:
     size the output file count from the actual on-disk bytes, rewrite with
     coalesce (no shuffle — merging files does not need a repartition), and
-    atomically swap via a staging directory. Returns the output file count.
+    swap in via a staging directory. Returns the output file count.
 
     At real scale run this per partition directory (date=...) so the
     rewrite is bounded and partition pruning is preserved."""
-    import glob as _glob
-    import os
-    import shutil
-
+    restore_interrupted_swap(path)
+    df = spark.read.format(fmt).load(path)
     data_files = [
         f
-        for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
+        for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
         if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
     ]
     total = sum(os.path.getsize(f) for f in data_files)
     n_out = max(1, -(-total // target_file_bytes))  # ceil
-    staging = path.rstrip("/") + "__compact_staging"
-    df = spark.read.format(fmt).load(path)
-    df.coalesce(n_out).write.mode("overwrite").format(fmt).save(staging)
-    backup = path.rstrip("/") + "__compact_backup"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    _swap_in(df.coalesce(n_out), path, fmt)
     return n_out
 
 
@@ -77,7 +113,7 @@ def upsert_by_key(
 ) -> None:
     """Key-based upsert (MERGE .. WHEN MATCHED UPDATE / NOT MATCHED INSERT)
     on a plain-file table: survivors = target anti-join updates on the keys,
-    result = survivors ∪ updates, atomically swapped in via a staging dir.
+    result = survivors ∪ updates, swapped in via a staging dir.
 
     This is the copy-on-write merge Delta/Iceberg implement per-file; without
     a transaction log the rewrite unit is the whole table, so at scale call
@@ -90,27 +126,15 @@ def upsert_by_key(
     degenerate upsert where every key matches; this generalizes it to
     incremental loads the reference re-runs from scratch.
     """
-    import os
-    import shutil
-
-    if os.path.exists(target_path):
-        target = spark.read.format(fmt).load(target_path)
+    target = _read_committed(spark, target_path, fmt)
+    if target is not None:
         survivors = target.join(
             updates.select(*keys).dropDuplicates(keys), on=keys, how="left_anti"
         )
         merged = survivors.unionByName(updates, allowMissingColumns=True)
     else:
         merged = updates
-    staging = target_path.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    backup = target_path.rstrip("/") + "._old"
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    if os.path.exists(target_path):
-        os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    _swap_in(merged, target_path, fmt)
 
 
 def incremental_agg(
@@ -128,23 +152,19 @@ def incremental_agg(
     incoming data only), unioned with the previous state, and re-merged:
     count and decimal-sum are associative/commutative, so fold(state,
     batch) == full recompute — the equivalence test pins that. The state
-    swap reuses the staged-rename pattern (upsert_by_key), so a failed
+    swap is the staged-rename pattern (``_swap_in``), so a failed
     update leaves the previous state intact. Algebraic aggregates (avg =
     total/cnt) derive at read time; holistic ones (exact median) need the
     raw data and are out of scope by design — use sketches (q95's
     approx_percentile is mergeable and could be folded the same way).
 
     Returns the new state DataFrame (keys, cnt bigint, total decimal)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     partial = batch.groupBy(*keys).agg(
         F.count("*").alias("cnt"),
         F.sum(F.col(value_col).cast("decimal(38,6)")).alias("total"),
     )
-    if os.path.exists(state_path):
-        prev = spark.read.parquet(state_path)
+    prev = _read_committed(spark, state_path, "parquet")
+    if prev is not None:
         merged = (
             prev.unionByName(partial)
             .groupBy(*keys)
@@ -152,16 +172,5 @@ def incremental_agg(
         )
     else:
         merged = partial
-    staging = state_path.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").parquet(staging)
-    backup = state_path.rstrip("/") + "._old"
-    import shutil
-
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    if os.path.exists(state_path):
-        os.rename(state_path, backup)
-    os.rename(staging, state_path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    _swap_in(merged, state_path, "parquet")
     return spark.read.parquet(state_path)

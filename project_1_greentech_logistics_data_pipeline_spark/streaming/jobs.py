@@ -14,37 +14,30 @@ Reference behavior -> Spark primitive:
 - no event time at all (Glue_job.py:45,81) -> watermarks + tumbling/session
                                              windows over events
 
-The per-batch transformation is EXACTLY the batch pipeline's (parse ->
-normalize -> validate -> split) — one code path for both modes, which is the
-point of Structured Streaming's incremental-query model.
+Each micro-batch runs the batch pipeline's own code (readers.parse_raw_lines
++ pipeline.route_and_write: parse -> normalize -> validate -> split -> gate ->
+write -> lineage) — one code path for both modes, which is the point of
+Structured Streaming's incremental-query model.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..pipeline import normalize, split, validate
-from ..schemas import PIPELINE_NAME
-
-# the raw layer is one JSON array per file (consumer_etl.py:63-67); the file
-# stream reads lines, so parsing is the same from_json as the batch reader
-from ..sources.readers import TELEMETRY_SCHEMA
+from ..pipeline import route_and_write
+from ..sources.readers import parse_raw_lines
+from ..sources.writers import restore_interrupted_swap, upsert_by_key
 
 
-def _parse_stream(raw: DataFrame) -> DataFrame:
-    # same corrupt-before-explode structure as sources/readers.py (avoids
-    # duplicating the raw array string onto every exploded row)
-    arr = F.from_json(F.col("value"), T.ArrayType(TELEMETRY_SCHEMA))
-    pre = raw.select(
-        arr.alias("_events"),
-        F.when(arr.isNull(), F.col("value")).alias("_corrupt_record"),
-    )
+def _start_available_now(stream: DataFrame, process, checkpoint_dir: str):
+    """foreachBatch ``process`` over ``stream`` with a checkpoint, draining
+    what is there now (AvailableNow) and then stopping."""
     return (
-        pre.select(F.explode_outer("_events").alias("event"), "_corrupt_record")
-        .filter(F.col("_corrupt_record").isNotNull() | F.col("event").isNotNull())
-        .select("event.*", "_corrupt_record")
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -56,11 +49,15 @@ def run_stream_pipeline(
     max_files_per_trigger: int | None = None,
 ) -> dict:
     """File-source streaming pipeline with AvailableNow: process every raw
-    batch file exactly once (across restarts, via the checkpoint WAL), route
-    curated/rejected, append per-batch lineage.
+    batch file exactly once (across restarts, via the checkpoint WAL)
+    through the batch pipeline, each micro-batch writing its own
+    ``{layer}/batch_id=N`` directories (a replay overwrites, never
+    duplicates).
 
     Returns {'batches': n} after the query drains and stops.
     """
+    # the raw layer is one JSON array per file (consumer_etl.py:63-67); the
+    # file stream reads lines, exactly like the batch reader
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -70,37 +67,11 @@ def run_stream_pipeline(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batches_seen.append(batch_id)
-        validated = validate(normalize(_parse_stream(batch_df)))
-        curated, rejected = split(validated)
-        curated = curated.withColumn("processing_date", F.to_date("processed_at"))
-        # idempotent-append layout: one subdir per batch; a replayed batch
-        # overwrites its own directory instead of duplicating rows
-        (
-            curated.write.mode("overwrite")
-            .partitionBy("processing_date")
-            .parquet(f"{out_dir}/curated/batch_id={batch_id}")
-        )
-        rejected.write.mode("overwrite").parquet(
-            f"{out_dir}/rejected/batch_id={batch_id}"
-        )
-        lineage = batch_df.sparkSession.createDataFrame(
-            [
-                ("curated", curated.count(), PIPELINE_NAME, batch_id),
-                ("rejected", rejected.count(), PIPELINE_NAME, batch_id),
-            ],
-            "layer string, record_count long, pipeline_name string, batch_id long",
-        )
-        lineage.write.mode("overwrite").parquet(
-            f"{out_dir}/validated/batch_id={batch_id}"
+        route_and_write(
+            batch_df.sparkSession, parse_raw_lines(batch_df), out_dir, batch_id=batch_id
         )
 
-    query = (
-        raw.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _start_available_now(raw, _process, checkpoint_dir).awaitTermination()
     return {"batches": len(batches_seen)}
 
 
@@ -223,8 +194,6 @@ def enrich_stream_with_dim(
     standard shape for attaching slowly-changing reference data to a
     stream; for fast-changing dims, swap the static side for a Delta table
     (re-read each micro-batch picks up updates)."""
-    from pyspark.sql import functions as F  # noqa: F811  (local: module import order)
-
     return stream.join(F.broadcast(dim), stream[stream_key] == dim[dim_key], how)
 
 
@@ -250,10 +219,6 @@ def run_upsert_stream(
     never per-column maxima, which could stitch fields from different source
     rows into a record that never existed.
     """
-    from pyspark.sql import functions as F
-
-    from ..sources.writers import upsert_by_key
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
@@ -274,12 +239,7 @@ def run_upsert_stream(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(input_dir)
     )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream, _process, checkpoint_dir)
 
 
 def run_incremental_dedup_stream(
@@ -309,10 +269,6 @@ def run_incremental_dedup_stream(
     At scale the state store is a fingerprint-partitioned table and the
     anti-join prunes to the partitions the batch touches; the per-batch
     work is O(batch) + one broadcast-able lookup, never O(corpus)."""
-    from pyspark.sql import functions as F
-
-    from ..sources.writers import upsert_by_key
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
@@ -336,6 +292,9 @@ def run_incremental_dedup_stream(
             .agg(F.min(F.struct("doc_id", *rest)).alias("_row"))
             .select("fingerprint", *[F.col(f"_row.{c}").alias(c) for c in other])
         )
+        # a crash between the state swap's two renames leaves only the
+        # backup; restore it first, or the missing table reads as "no state"
+        restore_interrupted_swap(state_path)
         # Only treat a MISSING state store as "first batch". Any other
         # read failure (corrupt files, transient IO) must fail the batch
         # so the checkpoint retries — silently assuming no state would
@@ -366,9 +325,4 @@ def run_incremental_dedup_stream(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(input_dir)
     )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream, _process, checkpoint_dir)

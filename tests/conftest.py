@@ -58,6 +58,18 @@ class SurfaceCache:
         self._spark = spark
         self._memo: dict = {}
         self._since_release = 0
+        # the confs a fresh session of this SparkContext starts with
+        # (SparkSession.builder confs included): every cold fill runs under
+        # exactly these, so a conf a test leaked cannot poison a baseline
+        self._defaults = spark.newSession().conf.getAll
+
+    def _set_confs(self, confs: dict) -> None:
+        current = self._spark.conf.getAll
+        for k in current.keys() - confs.keys():
+            self._spark.conf.unset(k)
+        for k, v in confs.items():
+            if current.get(k) != v:
+                self._spark.conf.set(k, v)
 
     def entry(self, sf_dir: str, name: str):
         key = (sf_dir, name)
@@ -68,8 +80,13 @@ class SurfaceCache:
                 release_session_state,
             )
 
-            df = entrymod.queries()[name](self._spark, sf_dir)
-            rows = [tuple(r) for r in df.collect()]
+            before = self._spark.conf.getAll
+            self._set_confs(self._defaults)
+            try:
+                df = entrymod.queries()[name](self._spark, sf_dir)
+                rows = [tuple(r) for r in df.collect()]
+            finally:
+                self._set_confs(before)
             self._memo[key] = (list(df.columns), df.schema, rows)
             # unpin cache/localCheckpoint blocks the iterative family
             # leaves behind (the negzero test's every-25 cadence)

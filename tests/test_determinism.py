@@ -102,3 +102,29 @@ def test_results_independent_of_shuffle_partitions(spark, surface_cache):
                 f"{b[first] if first < len(b) else '<none>'}"
             )
     assert not diffs, "partition-dependent results:\n" + "\n".join(diffs)
+
+
+def test_surface_cache_fill_ignores_leaked_conf(spark, surface_cache, monkeypatch):
+    """A conf a test leaks must not reach a cached baseline: a cold fill runs
+    under the session defaults and the leaked value is back afterwards."""
+    import __spark_entry__ as entrymod
+
+    aqe = "spark.sql.adaptive.enabled"
+    seen = []
+
+    def probe(s, sf_dir):
+        seen.append(s.conf.get(aqe))
+        return s.range(1)
+
+    monkeypatch.setattr(entrymod, "queries", lambda: {"probe": probe})
+    cache = type(surface_cache)(spark)  # fresh memo: the fill must be cold
+    default, prev = spark.newSession().conf.get(aqe), spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        cache.entry(SF_DIR, "probe")
+        after = spark.conf.get(aqe)
+    finally:
+        spark.conf.set(aqe, prev)
+    assert default == "true"
+    assert seen == [default]
+    assert after == "false"

@@ -144,6 +144,35 @@ def test_upsert_by_key(spark, tmp_path):
     assert rows2 == rows
 
 
+def test_upsert_and_compact_recover_interrupted_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves only the backup; the
+    next upsert restores it instead of treating the table as new, and a
+    stale backup left after a completed swap does not block compaction."""
+    import os
+
+    from project_1_greentech_logistics_data_pipeline_spark.sources.writers import (
+        compact_table,
+        upsert_by_key,
+    )
+
+    target = str(tmp_path / "tbl")
+    base = spark.createDataFrame([(i, float(i)) for i in range(5)], "id long, v double")
+    upsert_by_key(spark, target, base, keys=["id"])
+    os.rename(target, target + "._old")  # the interrupted swap
+
+    upsert_by_key(
+        spark, target, spark.createDataFrame([(9, 9.0)], "id long, v double"), keys=["id"]
+    )
+    assert sorted(r["id"] for r in spark.read.parquet(target).collect()) == [0, 1, 2, 3, 4, 9]
+    assert not os.path.exists(target + "._old")
+
+    os.makedirs(target + "._old")  # stale backup of a completed swap
+    open(os.path.join(target + "._old", "part-0.parquet"), "w").close()
+    compact_table(spark, target)
+    assert spark.read.parquet(target).count() == 6
+    assert not os.path.exists(target + "._old")
+
+
 def test_python_datasource_telemetry_gen(spark):
     """Spark-4 Python Data Source: distributed deterministic telemetry
     generator — partition-parallel, reproducible, ~15% anomaly mix."""

@@ -46,10 +46,54 @@ def test_stream_pipeline_exactly_once_resume(spark, tmp_path):
         spark.read.parquet(f"{out}/rejected").count()
         == exp1["rejected"] + exp_extra["rejected"]
     )
-    # lineage written per batch with conservation
-    lin = spark.read.parquet(f"{out}/validated")
-    tot = {r["layer"]: r["s"] for r in lin.groupBy("layer").agg(F.sum("record_count").alias("s")).collect()}
+    # lineage written per batch with conservation, same layers as run_batch
+    tot = _lineage_totals(spark, out)
     assert tot["curated"] + tot["rejected"] == exp1["n_events"] + exp_extra["n_events"]
+    assert tot["raw"] == tot["curated"] + tot["rejected"]
+    assert tot["corrupt"] == 0
+    lin = spark.read.parquet(f"{out}/validated")
+    assert lin.filter(F.col("run_timestamp").isNull()).count() == 0
+
+
+def _lineage_totals(spark, out):
+    lin = spark.read.parquet(f"{out}/validated")
+    return {
+        r["layer"]: r["s"]
+        for r in lin.groupBy("layer").agg(F.sum("record_count").alias("s")).collect()
+    }
+
+
+def test_stream_matches_batch(spark, tmp_path):
+    """The stream's micro-batches run the batch pipeline: same curated and
+    rejected rows, same lineage totals, and the quality gate stamps the
+    stream's curated rows too."""
+    from project_1_greentech_logistics_data_pipeline_spark.pipeline import run_batch
+
+    raw = tmp_path / "raw"
+    exp = testing.write_raw_batches(raw, n_events=120, n_files=3, seed=1)
+    batch_out, stream_out = str(tmp_path / "batch"), str(tmp_path / "stream")
+    run_batch(spark, str(raw), batch_out)
+    res = run_stream_pipeline(
+        spark, str(raw), stream_out, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    assert res["batches"] == len(list(raw.iterdir()))
+
+    def rows(out, layer):
+        df = spark.read.parquet(f"{out}/{layer}").drop(
+            "processed_at", "processing_date", "batch_id"
+        )
+        return sorted(map(repr, df.select(sorted(df.columns)).collect()))
+
+    for layer in ("curated", "rejected"):
+        assert rows(stream_out, layer) == rows(batch_out, layer), layer
+
+    lin_s = _lineage_totals(spark, stream_out)
+    assert lin_s == _lineage_totals(spark, batch_out)
+    assert lin_s["raw"] == lin_s["curated"] + lin_s["rejected"]
+    assert lin_s["corrupt"] == exp["n_corrupt_lines"]
+
+    statuses = spark.read.parquet(f"{stream_out}/curated").select("ge_validation_status").distinct()
+    assert [r[0] for r in statuses.collect()] == ["PASSED"]
 
 
 def _event_stream(spark, tmp_path, rows):
@@ -346,8 +390,12 @@ def test_streaming_incremental_dedup(spark, tmp_path):
         {"doc_id": 7, "text": "kappa lambda mu"},
     ]
     (d / "c3.json").write_text("\n".join(_json.dumps(r) for r in f3))
+    # ...after a state swap stopped between its two renames: the backup is
+    # restored, so the old text still counts as seen
+    os.rename(state, state + "._old")
     run()
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 5, 7}
+    assert spark.read.parquet(state).count() == 4
 
 
 def test_watermark_drops_late_rows_with_metric_evidence(spark, tmp_path):
