@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum, pos_zero_col
 from ..registry import query, table
-from ..session import tune
-from ..sources.readers import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -591,7 +589,6 @@ def q90_udtf_leading_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (q27); the UDTF exists for logic explode cannot express
     (stateful per-row expansion, external lookups, non-1NF parses).
     """
-    tune(spark)
     from pyspark.sql.functions import udtf
 
     class LeadingTokens:
@@ -613,7 +610,7 @@ def q90_udtf_leading_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         LeadingTokens = udtf(LeadingTokens, returnType="pos int, tok string")
 
     spark.udtf.register("leading_tokens", LeadingTokens)
-    d = load_table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     d.createOrReplaceTempView("q90_documents")
     return spark.sql(
         """

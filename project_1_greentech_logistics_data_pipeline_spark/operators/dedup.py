@@ -25,12 +25,11 @@ bench.py does between queries.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query, table
-from ..session import tune
-from ..sources.readers import load_table
+from ..session import release_local_checkpoint
 
 # The canonical document fingerprint has ONE definition, next to
 # tokens_expr in operators/text.py, shared by every consumer on both
@@ -41,9 +40,10 @@ from .quality import _SCRUB_PATTERN as _REDACT_PATTERN
 from .text import DOC_FP_SQL as _DOC_FP_SQL
 from .text import _Q212_CTES as _Q212_CTES_SQL
 from .text import doc_fp_expr as _doc_fp_expr
+from .text import exchanged_docs, lang_id_from_toks, q212_gopher_quality_filter
 from .text import lang_stage_cte_sql as _lang_stage_cte_sql
 from .text import tokens_expr
-from .text2 import _lm_tier_sql
+from .text2 import _lm_tier_df, _lm_tier_sql
 
 
 # ---------------------------------------------------------------------------
@@ -93,11 +93,14 @@ def q43b_dedup_exact_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 JACCARD_THRESHOLD = 0.95
 
-_Q44_SQL = f"""
-WITH d AS (
+# The per-document distinct token set every Jaccard oracle pairs up.
+_TOKSET_CTE_SQL = """d AS (
   SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
   FROM documents
-)
+)"""
+
+_Q44_SQL = f"""
+WITH {_TOKSET_CTE_SQL}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
   CAST(ROUND(
     LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
@@ -157,14 +160,12 @@ def bitmask_token_sets(
     dwarf the sparse array — keep hashed_token_sets for that regime. The
     same dictionary-encode-then-bitmap idea underlies bitmap indexes and
     roaring bitmaps; this is the flat fixed-width variant."""
-    d = docs if docs is not None else load_table(spark, sf_dir, "documents")
+    d = docs if docs is not None else table(spark, sf_dir, "documents")
     if keep is not None:
         d = d.join(keep.select("doc_id"), "doc_id", "semi")
     toks = d.select(
         "doc_id", "lang", F.explode(F.array_distinct(tokens_expr("text"))).alias("tok")
     )
-    from pyspark.sql import Window
-
     vocab = (
         toks.select("lang", "tok")
         .distinct()
@@ -221,7 +222,7 @@ def hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs. Set ops on long arrays are far cheaper than on string arrays
     (no UTF8 compares, 8-byte elements through joins); a 64-bit collision
     changing a Jaccard count is astronomically unlikely."""
-    d = load_table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     hset = F.array_sort(
         F.array_distinct(F.transform(tokens_expr("text"), lambda t: F.xxhash64(t)))
     )
@@ -233,6 +234,37 @@ def hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAIR_SALT = 32  # fan the per-lang-block pair enumeration across this many tasks
 
 
+def _salted_pairs(packed: DataFrame, band: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard_raw) for every same-lang pair of a packed
+    bitmap relation (:func:`bitmask_token_sets`) whose set sizes pass
+    :func:`_size_band` at ``band``. ``packed`` is cached: its build (2
+    small shuffles) feeds both join sides. The self-join is salted: the
+    natural equi-key (lang) has only ~5 distinct values, so an unsalted
+    plan enumerates each language block's O(n^2) pairs on a single task.
+    Salting one side on hash(doc_id) mod _PAIR_SALT and replicating the
+    other _PAIR_SALT ways keeps each unordered pair matched exactly once
+    while spreading enumeration across lang x _PAIR_SALT tasks. Callers
+    own the threshold filter and its order against the 6-dp round."""
+    packed = packed.cache()
+    a = packed.withColumn("part", F.pmod(F.xxhash64("doc_id"), F.lit(_PAIR_SALT))).alias("a")
+    b = packed.withColumn(
+        "part", F.explode(F.array(*[F.lit(i) for i in range(_PAIR_SALT)]))
+    ).alias("b")
+    return a.join(
+        b,
+        (F.col("a.lang") == F.col("b.lang"))
+        & (F.col("a.part") == F.col("b.part"))
+        & (F.col("a.doc_id") < F.col("b.doc_id"))
+        & _size_band(F.col("a.sz"), F.col("b.sz"), band),
+    ).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        _jaccard_mask_expr(
+            F.col("a.mask"), F.col("b.mask"), F.col("a.sz"), F.col("b.sz")
+        ).alias("jaccard_raw"),
+    )
+
+
 @query("q44_ngram_jaccard_neardup", _Q44_SQL)
 def q44_ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force token-set Jaccard within lang blocks (the oracle-checkable
@@ -240,12 +272,8 @@ def q44_ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor cuts vs the naive form: the provably-sound size-band join
     predicate, dictionary-encoded BITMAP token sets (popcount intersection
     instead of per-pair array_intersect hash sets — this corpus is dense in
-    its vocabulary, see bitmask_token_sets), and a salted self-join — the
-    natural equi-key (lang) has only ~5 distinct values, so an unsalted
-    plan enumerates each language block's O(n^2) pairs on a single task.
-    Salting one side on hash(doc_id) mod B and replicating the other B ways
-    keeps each unordered pair matched exactly once while spreading
-    enumeration across lang x B tasks."""
+    its vocabulary, see bitmask_token_sets), and a salted self-join
+    (:func:`_salted_pairs`)."""
     return _exact_pairs(spark, sf_dir)
 
 
@@ -260,28 +288,8 @@ def _exact_pairs(
     q214 composition can enumerate pairs over quality survivors only, and
     an optional ``docs`` relation override (q217's redacted survivors).
     With both defaults this IS q44's plan, expression for expression."""
-    tune(spark)
-    # cache: the packed-set build (2 small shuffles) feeds both join sides
-    packed = bitmask_token_sets(spark, sf_dir, keep, docs).cache()
-    a = packed.withColumn("part", F.pmod(F.xxhash64("doc_id"), F.lit(_PAIR_SALT))).alias("a")
-    b = packed.withColumn(
-        "part", F.explode(F.array(*[F.lit(i) for i in range(_PAIR_SALT)]))
-    ).alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & _size_band(F.col("a.sz"), F.col("b.sz"), JACCARD_THRESHOLD),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            _jaccard_mask_expr(
-                F.col("a.mask"), F.col("b.mask"), F.col("a.sz"), F.col("b.sz")
-            ).alias("jaccard_raw"),
-        )
+        _salted_pairs(bitmask_token_sets(spark, sf_dir, keep, docs), JACCARD_THRESHOLD)
         .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select(
             "doc_a", "doc_b", F.round("jaccard_raw", 6).cast("double").alias("jaccard")
@@ -334,7 +342,6 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     q45's pre-verify stage, exposed separately so the scale probe can
     measure candidate mass (the quantity the S-curve actually governs)
     independent of verify cost."""
-    tune(spark)
     docs = minhash_docs(spark, sf_dir).cache()
     # lang rides along: the exact-verify bitmaps are dictionary-encoded PER
     # LANG, so a cross-lang candidate pair would popcount meaningless bit
@@ -450,7 +457,6 @@ def q46_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup: hamming(simhash_a, simhash_b) <= 6, candidates from
     16-bit chunk equality (pigeonhole: <=6 flipped bits over 4 chunks leaves
     at least one chunk intact). bit_count(xor) does the verify JVM-side."""
-    tune(spark)
     docs = simhash_docs(spark, sf_dir).cache()
     chunks = docs.select(
         "doc_id",
@@ -692,8 +698,6 @@ def connected_components(
         # and without cutting its lineage each round re-executes the
         # upstream pair-finding plan (measured 20s -> 6s on q73 at sf0.1).
         sym = _sym_edges(edges, src, dst)
-    from ..session import release_local_checkpoint
-
     labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
         "comp", F.col("node")
     )
@@ -860,14 +864,17 @@ def connected_components_star(
     )
 
 
-_Q73_SQL = f"""
-WITH RECURSIVE d AS (
-  SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM documents
-),
-pairs AS (
+def _closure_ctes_sql(src: str) -> str:
+    """Oracle twin of :func:`neardup_pairs` + :func:`connected_components`
+    over a ``(doc_id, lang, toks)`` CTE named ``src``: the within-lang
+    Jaccard ``pairs``, their symmetric ``edges`` and the recursive
+    ``reach(node, root)`` transitive closure (the enclosing WITH must be
+    RECURSIVE). A node's cluster is its min reachable root
+    (:data:`_CLUSTERS_SQL`), the min-label fixpoint the Spark side
+    computes, so the iterative algorithm is exactly checked."""
+    return f"""pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM d a JOIN d b ON a.lang = b.lang AND a.doc_id < b.doc_id
+  FROM {src} a JOIN {src} b ON a.lang = b.lang AND a.doc_id < b.doc_id
   WHERE LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
         / LEN(LIST_DISTINCT(LIST_CONCAT(a.toks, b.toks))) >= {JACCARD_THRESHOLD}
 ),
@@ -879,8 +886,15 @@ reach(node, root) AS (
   SELECT src, src FROM edges
   UNION
   SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
+)"""
+
+
+_CLUSTERS_SQL = "SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node"
+
+_Q73_SQL = f"""
+WITH RECURSIVE {_TOKSET_CTE_SQL},
+{_closure_ctes_sql("d")}
+{_CLUSTERS_SQL}
 """
 
 
@@ -928,27 +942,10 @@ def neardup_pairs(
 # ---------------------------------------------------------------------------
 
 _Q78_SQL = f"""
-WITH RECURSIVE d AS (
-  SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM documents
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM d a JOIN d b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
-        / LEN(LIST_DISTINCT(LIST_CONCAT(a.toks, b.toks))) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, root) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
+WITH RECURSIVE {_TOKSET_CTE_SQL},
+{_closure_ctes_sql("d")},
 clusters AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
+  {_CLUSTERS_SQL}
 ),
 fp AS (
   SELECT doc_id,
@@ -986,18 +983,13 @@ def q78_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each one narrow or already analyzed above), so the pass is one scan
     plus the pair-graph machinery — no sequential multi-pass rewrite of
     the corpus. Output: the surviving documents with their token counts."""
-    from .text import tokens_expr as _tokens
-
-    tune(spark)
     d = table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
     keeper = F.min("doc_id").over(Window.partitionBy(_doc_fp_expr()))
     stats = d.select(
         "doc_id",
         "lang",
         "n_chars",
-        F.size(_tokens("text")).alias("n_tokens"),
+        F.size(tokens_expr("text")).alias("n_tokens"),
         keeper.alias("keeper"),
     )
     clusters = q73_neardup_clusters(spark, sf_dir).withColumnRenamed(
@@ -1065,27 +1057,10 @@ def q109_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q187_SQL = f"""
-WITH RECURSIVE d AS (
-  SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM documents
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM d a JOIN d b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
-        / LEN(LIST_DISTINCT(LIST_CONCAT(a.toks, b.toks))) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, root) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
+WITH RECURSIVE {_TOKSET_CTE_SQL},
+{_closure_ctes_sql("d")},
 clusters AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
+  {_CLUSTERS_SQL}
 ),
 sizes AS (
   SELECT cluster_id, COUNT(*) AS cluster_size FROM clusters GROUP BY cluster_id
@@ -1128,10 +1103,7 @@ def q187_dedup_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q192_SQL = f"""
-WITH d AS (
-  SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM documents
-)
+WITH {_TOKSET_CTE_SQL}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x))) AS BIGINT)
          AS n_shared,
@@ -1159,10 +1131,8 @@ def q192_neardup_explanations(spark: SparkSession, sf_dir: str) -> DataFrame:
     reviews before a doc is dropped. Reuses q44's candidate machinery
     for the pairs; the diffs are JVM array_except + sort (deterministic
     stringification — unsorted diffs would be partition-dependent)."""
-    from .text import tokens_expr as _tok
-
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.array_distinct(_tok("text")).alias("toks")
+        "doc_id", "lang", F.array_distinct(tokens_expr("text")).alias("toks")
     )
     pairs = q44_ngram_jaccard_neardup(spark, sf_dir).select("doc_a", "doc_b")
     a = d.select(
@@ -1231,32 +1201,12 @@ def _ngram_jaccard_scored(
     """(doc_a, doc_b, jaccard) for every same-lang pair with Jaccard >=
     ``min_score`` — q44's salted bitmap machinery with the size-band
     prune relaxed to the lower bound (sound: the band predicate is
-    monotone in the threshold), no final dup-threshold filter."""
-    tune(spark)
-    docs = bitmask_token_sets(spark, sf_dir).cache()
-    a = docs.withColumn("part", F.pmod(F.xxhash64("doc_id"), F.lit(_PAIR_SALT))).alias("a")
-    b = docs.withColumn(
-        "part", F.explode(F.array(*[F.lit(i) for i in range(_PAIR_SALT)]))
-    ).alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.part") == F.col("b.part"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        # Slack the band bound below min_score so a pair whose RAW
-        # score sits just under the threshold but ROUNDS up to it
-        # (e.g. 0.3999995 -> 0.40) is still generated as a candidate —
-        # the final filter below is on the rounded value.
-        & _size_band(F.col("a.sz"), F.col("b.sz"), max(min_score - 1e-6, 0.0)),
-    )
+    monotone in the threshold), no final dup-threshold filter. The band
+    is slacked below min_score so a pair whose RAW score sits just under
+    the threshold but ROUNDS up to it (e.g. 0.3999995 -> 0.40) is still
+    generated as a candidate: the final filter is on the rounded value."""
     return (
-        joined.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            _jaccard_mask_expr(
-                F.col("a.mask"), F.col("b.mask"), F.col("a.sz"), F.col("b.sz")
-            ).alias("jaccard_raw"),
-        )
+        _salted_pairs(bitmask_token_sets(spark, sf_dir), max(min_score - 1e-6, 0.0))
         # ROUND first, then filter — matching the oracle's ROUND-then-WHERE
         # order, so the 6-dp boundary (raw in [t-5e-7, t)) lands on the
         # same side in both engines.
@@ -1268,10 +1218,7 @@ def _ngram_jaccard_scored(
 
 
 _Q194_SQL = f"""
-WITH d AS (
-  SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM documents
-),
+WITH {_TOKSET_CTE_SQL},
 scored AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          ROUND(LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
@@ -1363,20 +1310,16 @@ def _doc_unit_fanout(
     window — (doc_id, {prefix}_id, {prefix}_text, {prefix}_len) — and
     totals is one row per document (doc_id, n_units, n_tokens).
 
-    Plan notes shared by every consumer: ONE explicit doc_id exchange
-    both parallelizes the sequence/slice generate on a few-split scan
-    (the q206 lesson: explicit count, because AQE sizes the PRE-fan-out
-    input) and pre-positions rows for the per-doc aggregations and final
-    join. Window construction is sequence+slice inside whole-stage
-    codegen — no higher-order lambdas on the fan-out path. Disjoint
+    Plan notes shared by every consumer: ONE doc_id exchange
+    (:func:`exchanged_docs`) in front of the generate. Window
+    construction is sequence+slice inside whole-stage codegen — no
+    higher-order lambdas on the fan-out path. Disjoint
     windows cover the token array exactly, so ``totals`` is a pure
     projection of the tokenized base: no second fan-out, no aggregation,
     already hash-partitioned by doc_id. (The oracles derive the same
     totals from the exploded units, which doubles as a disjoint-cover
     check.)"""
-    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base = d.repartition(n_shuffle, F.col("doc_id")).select(
+    base = exchanged_docs(spark, sf_dir).select(
         "doc_id", tokens_expr("text").alias("toks")
     )
     units = _unit_fanout_from(base, width, prefix)
@@ -1826,19 +1769,40 @@ def q209_normalized_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (no exchange before the explode); the ledger joins run on doc_id. No
 # reference equivalent (SURVEY.md §2.10 north-star extension).
 
-def _curation_stage_sql(units: str, df: str, src: str) -> str:
-    """Oracle twin of the dedup->scrub->span stage chain shared by the
-    curation compositions (q210 over all non-null docs, q213 over the
-    quality-gated set): the line fan-out + df table + scrub + re-window +
-    span keep-first CTEs, emitting ``kept_lines``/``scrubbed``/``sp``.
-    ONE definition so the two compositions cannot drift (review-caught —
-    q213's first cut hand-copied the chain); generating q210's SQL
-    through it is byte-identical to the r8 literal (sha256-pinned in
-    test_scrub_and_rep_sql_generators_pin), so q210's driver-stamped
-    oracle hash is unchanged by construction. CTE names are parameters
-    only because q213's WITH already binds 'base' (from _REP_CTES)."""
-    return f"""{units} AS (
-{_unit_body_sql(_LINE, "line", src)}
+# Reassembly of a document's kept lines (a ``kept_lines`` CTE) into its
+# scrubbed text and kept-token count.
+_SCRUBBED_CTE_SQL = """scrubbed AS (
+  SELECT doc_id, SUM(line_len) AS scrub_kept_tokens,
+         STRING_AGG(line_text, ' ' ORDER BY line_id) AS clean_text
+  FROM kept_lines GROUP BY doc_id
+)"""
+
+
+def _curation_chain_sql(docs: str, body: str, sfx: str) -> str:
+    """Oracle twin of :func:`_curation_stages`: the exact-dedup -> line
+    scrub -> span keep-first CTE chain every curation composition
+    (q210/q213/q214/q217/q218) runs over its survivors. ``{docs}`` is
+    ``body``, the survivors' (doc_id, text, fp); the chain emits
+    ``keep_ids`` (min doc_id per fingerprint), ``scrubbed`` and ``sp``,
+    which :func:`_yield_ledger_sql` reads. ``sfx`` suffixes the base/
+    units/df CTE names, because the q212 flag stack the gated
+    compositions build on already binds ``base``. ONE definition so the
+    compositions cannot drift; every oracle it generates is byte-identical
+    to its introduction string (sha256-pinned in
+    test_scrub_and_rep_sql_generators_pin), so no oracle hash moves."""
+    base, units, df = f"base{sfx}", f"units{sfx}", f"df{sfx}"
+    return f"""{docs} AS (
+  {body}
+),
+keep_ids AS (
+  SELECT MIN(doc_id) AS doc_id FROM {docs} GROUP BY fp
+),
+{base} AS (
+  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
+  FROM {docs} d JOIN keep_ids k ON d.doc_id = k.doc_id
+),
+{units} AS (
+{_unit_body_sql(_LINE, "line", base)}
 ),
 {df} AS (
   SELECT s.line_text AS line_text, COUNT(DISTINCT doc_id) AS df
@@ -1850,11 +1814,7 @@ kept_lines AS (
   FROM {units} l JOIN {df} d ON l.s.line_text = d.line_text
   WHERE d.df < {_BOILER_DF}
 ),
-scrubbed AS (
-  SELECT doc_id, SUM(line_len) AS scrub_kept_tokens,
-         STRING_AGG(line_text, ' ' ORDER BY line_id) AS clean_text
-  FROM kept_lines GROUP BY doc_id
-),
+{_SCRUBBED_CTE_SQL},
 base2 AS (
   SELECT doc_id, STRING_SPLIT_REGEX(clean_text, '[\\s\\x0b]+') AS toks
   FROM scrubbed
@@ -1875,46 +1835,84 @@ sp AS (
 )"""
 
 
-_Q210_SQL = f"""WITH docs AS (
-  SELECT doc_id, text, {_DOC_FP_SQL} AS fp
-  FROM documents WHERE text IS NOT NULL
-),
-keep_ids AS (
-  SELECT MIN(doc_id) AS doc_id FROM docs GROUP BY fp
-),
-base AS (
-  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
-  FROM docs d JOIN keep_ids k ON d.doc_id = k.doc_id
-),
-""" + _curation_stage_sql("units", "df", "base") + f""",
+def _gated_docs_sql(gate: str) -> str:
+    """:func:`_curation_chain_sql` input of the gated compositions: the
+    non-null documents whose doc_id is in the CTE ``gate``, with their
+    fingerprint."""
+    return f"""SELECT d.doc_id AS doc_id, d.text AS text, {_DOC_FP_SQL} AS fp
+  FROM documents d JOIN {gate} q ON d.doc_id = q.doc_id
+  WHERE d.text IS NOT NULL"""
+
+
+def _yield_ledger_sql(spine: str, stages: list[tuple[str, str, str]]) -> str:
+    """Oracle twin of :func:`_yield_ledger`: the final SELECT that
+    LEFT-joins each stage CTE onto ``spine`` (``"<cte> <alias>"``, one
+    row per document with doc_id and n_tokens) in stage order. A stage
+    is (column, cte, alias): a ``kept_*`` column is the 0/1 membership
+    flag of its doc_id CTE, any other column is the CTE's value of that
+    name, 0 when absent."""
+    s = spine.split()[1]
+    cols = [f"CAST({s}.n_tokens AS BIGINT) AS n_tokens"]
+    joins = ""
+    for col, cte, a in stages:
+        if col.startswith("kept_"):
+            value = f"CASE WHEN {a}.doc_id IS NULL THEN 0 ELSE 1 END"
+        else:
+            value = f"COALESCE({a}.{col}, 0)"
+        cols.append(f"CAST({value} AS BIGINT) AS {col}")
+        joins += f"LEFT JOIN {cte} {a} ON {s}.doc_id = {a}.doc_id\n"
+    return f"SELECT {s}.doc_id AS doc_id,\n  " + ",\n  ".join(cols) + f"\nFROM {spine}\n" + joins
+
+
+# the ledger stages :func:`_curation_chain_sql` emits, in stage order
+_CHAIN_LEDGER_SQL = [
+    ("kept_exact", "keep_ids", "k"),
+    ("scrub_kept_tokens", "scrubbed", "b"),
+    ("span_kept_tokens", "sp", "v"),
+]
+
+_Q210_SQL = (
+    "WITH "
+    + _curation_chain_sql(
+        "docs",
+        f"""SELECT doc_id, text, {_DOC_FP_SQL} AS fp
+  FROM documents WHERE text IS NOT NULL""",
+        "",
+    )
+    + """,
 totals AS (
   SELECT doc_id, LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS n_tokens
   FROM docs
 )
-SELECT t.doc_id AS doc_id,
-  CAST(t.n_tokens AS BIGINT) AS n_tokens,
-  CAST(CASE WHEN k.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_exact,
-  CAST(COALESCE(b.scrub_kept_tokens, 0) AS BIGINT) AS scrub_kept_tokens,
-  CAST(COALESCE(v.span_kept_tokens, 0) AS BIGINT) AS span_kept_tokens
-FROM totals t
-LEFT JOIN keep_ids k ON t.doc_id = k.doc_id
-LEFT JOIN scrubbed b ON t.doc_id = b.doc_id
-LEFT JOIN sp v ON t.doc_id = v.doc_id
 """
+    + _yield_ledger_sql("totals t", _CHAIN_LEDGER_SQL)
+)
 
 
-def _curation_stages(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Spark twin of :func:`_curation_stage_sql`, shared by q210/q213 over
-    an arbitrary ``(doc_id, text)`` relation already hash-partitioned by
-    doc_id: stage 1 exact fingerprint dedup (argmin doc_id; survivors by
-    doc_id SEMI join so text never crosses the fp shuffle — only 32-byte
-    (fp, doc_id) pairs do), stage 2 line scrub (df over THIS relation),
-    stage 3 span keep-first on post-scrub tokens (counts only, no
-    reassembly text). Returns ``(keep_ids, scrubbed, span_kept)``. Same
-    expression tree q210 always built — the factoring changes no plan
-    (review-caught duplication: q213's first cut hand-copied the chain,
-    which is exactly how the two compositions' vacuous-gate equivalence
-    would eventually drift)."""
+def _kept_line_toks() -> Column:
+    """Aggregate over a document's kept lines: its post-scrub token
+    sequence, the lines' tokens flattened in position order (one post-agg
+    transform, never on the fan-out path). The oracles re-split the
+    STRING_AGG'd clean text instead; see the q210 block comment for why
+    the two agree."""
+    return F.flatten(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("line_id", "line_text"))),
+            lambda s: F.split(s["line_text"], " "),
+        )
+    )
+
+
+def _curation_stages(base: DataFrame) -> list[tuple[str, DataFrame]]:
+    """Spark twin of :func:`_curation_chain_sql`, shared by every curation
+    composition over an arbitrary ``(doc_id, text)`` relation already
+    hash-partitioned by doc_id: stage 1 exact fingerprint dedup (argmin
+    doc_id; survivors by doc_id SEMI join so text never crosses the fp
+    shuffle — only 32-byte (fp, doc_id) pairs do), stage 2 line scrub
+    (df over THIS relation), stage 3 span keep-first on post-scrub tokens
+    (counts only, no reassembly text). Returns the chain's
+    :func:`_yield_ledger` stages: kept_exact, scrub_kept_tokens,
+    span_kept_tokens."""
     fp = base.select("doc_id", _doc_fp_expr().alias("fp"))
     keep_ids = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     survivors = base.join(keep_ids, "doc_id", "semi").select(
@@ -1924,12 +1922,7 @@ def _curation_stages(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     kept_lines = lines.join(_boiler_set(lines, "line_text"), "line_text", "left_anti")
     scrubbed = kept_lines.groupBy("doc_id").agg(
         F.sum("line_len").alias("scrub_kept_tokens"),
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("line_id", "line_text"))),
-                lambda s: F.split(s["line_text"], " "),
-            )
-        ).alias("toks"),
+        _kept_line_toks().alias("toks"),
     )
     spans = _unit_fanout_from(scrubbed.select("doc_id", "toks"), _SPAN, "span")
     span_kept = (
@@ -1942,31 +1935,33 @@ def _curation_stages(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         .groupBy("doc_id")
         .agg(F.sum("span_len").alias("span_kept_tokens"))
     )
-    return keep_ids, scrubbed, span_kept
+    return [
+        ("kept_exact", keep_ids),
+        ("scrub_kept_tokens", scrubbed.select("doc_id", "scrub_kept_tokens")),
+        ("span_kept_tokens", span_kept),
+    ]
 
 
-def _yield_ledger(
-    totals: DataFrame, stage_cols: list[tuple[str, DataFrame]]
-) -> DataFrame:
-    """The curation compositions' shared ledger assembly: LEFT-join each
-    stage relation (already shaped ``(doc_id, <col>)``) onto the cheap
-    base-scan spine ``totals (doc_id, n_tokens)`` in stage order, then
-    COALESCE every stage column to 0 as bigint. ONE definition so the
-    three compositions' ledgers cannot drift (review-caught — q210/q213/
-    q214 each hand-copied this block, the same failure mode the
-    _curation_stages factoring closed for the stage chain). Builds the
-    exact expression tree the hand-written blocks built: same join
-    order, same coalesce/cast/alias chain — no plan moves."""
-    out = totals
-    for _, rel in stage_cols:
+def _yield_ledger(base: DataFrame, stages: list[tuple[str, DataFrame]]) -> DataFrame:
+    """The curation compositions' shared ledger: LEFT-join each stage onto
+    the cheap base-scan spine (doc_id, n_tokens of ``base``'s text) in
+    stage order, then COALESCE every stage column to 0 as bigint. A stage
+    is (column, relation): a ``kept_*`` relation is a doc_id set whose
+    members get 1, any other is shaped ``(doc_id, <column>)``. ONE
+    definition so the compositions' ledgers cannot drift
+    (:func:`_yield_ledger_sql` is the oracle twin); all joins on
+    doc_id."""
+    out = base.select(
+        "doc_id", F.size(tokens_expr("text")).cast("bigint").alias("n_tokens")
+    )
+    for name, rel in stages:
+        if name.startswith("kept_"):
+            rel = rel.select("doc_id", F.lit(1).alias(name))
         out = out.join(rel, "doc_id", "left")
     return out.select(
         "doc_id",
         "n_tokens",
-        *[
-            F.coalesce(name, F.lit(0)).cast("bigint").alias(name)
-            for name, _ in stage_cols
-        ],
+        *[F.coalesce(name, F.lit(0)).cast("bigint").alias(name) for name, _ in stages],
     )
 
 
@@ -1980,22 +1975,8 @@ def q210_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment above for the provable stage-order rationale (dedup-last is
     vacuous after a global span keeper), the Spark-vs-oracle token-
     rebuild equivalence, and the 100 TB plan shape."""
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select("doc_id", "text")
-    keep_ids, scrubbed, span_kept = _curation_stages(base0)
-    # ledger — all joins on doc_id
-    totals = base0.select(
-        "doc_id", F.size(tokens_expr("text")).cast("bigint").alias("n_tokens")
-    )
-    return _yield_ledger(
-        totals,
-        [
-            ("kept_exact", keep_ids.select("doc_id", F.lit(1).alias("kept_exact"))),
-            ("scrub_kept_tokens", scrubbed.select("doc_id", "scrub_kept_tokens")),
-            ("span_kept_tokens", span_kept),
-        ],
-    )
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "text")
+    return _yield_ledger(base0, _curation_stages(base0))
 
 
 # ---------------------------------------------------------------------------
@@ -2097,37 +2078,46 @@ def q211_paragraph_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFr
 # MIN(STRUCT) span keeper, doc_id-aligned ledger joins. No reference
 # equivalent (SURVEY.md §2.10 north-star extension).
 
-_Q213_SQL = _Q212_CTES_SQL + f""",
-qkeep AS (
+# The five-rule conjunction of q212's flag stack, spelled once for every
+# gated composition's verdict CTE.
+_PASS_ALL_SQL = """WHERE pass_length AND pass_word_len AND pass_alpha AND pass_stopwords
+    AND pass_repetition"""
+
+_QKEEP_CTE_SQL = f"""qkeep AS (
   SELECT doc_id FROM flags
-  WHERE pass_length AND pass_word_len AND pass_alpha AND pass_stopwords
-    AND pass_repetition
-),
-docs AS (
-  SELECT d.doc_id AS doc_id, d.text AS text, {_DOC_FP_SQL} AS fp
-  FROM documents d JOIN qkeep q ON d.doc_id = q.doc_id
-  WHERE d.text IS NOT NULL
-),
-keep_ids AS (
-  SELECT MIN(doc_id) AS doc_id FROM docs GROUP BY fp
-),
-base1 AS (
-  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
-  FROM docs d JOIN keep_ids k ON d.doc_id = k.doc_id
-),
-""" + _curation_stage_sql("units1", "df1", "base1") + f"""
-SELECT f.doc_id AS doc_id,
-  CAST(f.n_tokens AS BIGINT) AS n_tokens,
-  CAST(CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_quality,
-  CAST(CASE WHEN k.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_exact,
-  CAST(COALESCE(b.scrub_kept_tokens, 0) AS BIGINT) AS scrub_kept_tokens,
-  CAST(COALESCE(v.span_kept_tokens, 0) AS BIGINT) AS span_kept_tokens
-FROM flags f
-LEFT JOIN qkeep q ON f.doc_id = q.doc_id
-LEFT JOIN keep_ids k ON f.doc_id = k.doc_id
-LEFT JOIN scrubbed b ON f.doc_id = b.doc_id
-LEFT JOIN sp v ON f.doc_id = v.doc_id
-"""
+  {_PASS_ALL_SQL}
+)"""
+
+_Q213_SQL = (
+    _Q212_CTES_SQL
+    + f",\n{_QKEEP_CTE_SQL},\n"
+    + _curation_chain_sql("docs", _gated_docs_sql("qkeep"), "1")
+    + "\n"
+    + _yield_ledger_sql("flags f", [("kept_quality", "qkeep", "q"), *_CHAIN_LEDGER_SQL])
+)
+
+
+def _quality_keep(
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+) -> DataFrame:
+    """The quality gate's verdict as a cached doc_id set: the documents
+    q212_gopher_quality_filter keeps (over ``docs`` when given, its
+    override). Every gated composition reads the verdict more than once
+    (the stage-0 semi gate and the ledger's kept_quality column, plus
+    the pair-graph gate in q214), and without the cache each consumer
+    re-executes q212's whole signal pipeline — a first cut carried q212
+    as the ledger spine too and re-derived it under every downstream
+    stage (measured 5.6-6.2 s solo at sf0.1, ~2x the sum of the parts;
+    restructured + cached it is the sum of the parts). Cache state is
+    bounded (one bigint per quality-passing document — the verdict,
+    never the signals) and is released by session.release_session_state,
+    the module's cache contract."""
+    return (
+        q212_gopher_quality_filter(spark, sf_dir, docs)
+        .filter(F.col("kept"))
+        .select("doc_id")
+        .cache()
+    )
 
 
 @query("q213_filtered_curation_pipeline", _Q213_SQL)
@@ -2141,48 +2131,14 @@ def q213_filtered_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
     span_kept_tokens). See the block comment above for why filter-first
     is load-bearing (the dedup keeper is chosen among quality survivors —
     pinned by test) and the 100 TB plan shape."""
-    from .text import q212_gopher_quality_filter
-
-    # The gate verdict is materialized ONCE as a cached doc_id set: it has
-    # two consumers (the stage-0 semi gate and the ledger's kept_quality
-    # column), and without the cache each consumer re-executes q212's
-    # whole signal pipeline — a first cut carried q212 as the ledger
-    # spine too and re-derived it under every downstream stage (measured
-    # 5.6-6.2 s solo at sf0.1, ~2x the sum of the parts; restructured +
-    # cached it is the sum of the parts). Cache state is bounded (one
-    # bigint per quality-passing document — the verdict, never the
-    # signals) and is released by session.release_session_state, the
-    # library's documented cleanup contract (the q44-family precedent).
-    qkeep = (
-        q212_gopher_quality_filter(spark, sf_dir)
-        .filter(F.col("kept"))
-        .select("doc_id")
-        .cache()
-    )
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select("doc_id", "text")
+    qkeep = _quality_keep(spark, sf_dir)
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "text")
     # stage 0 — quality gate: only survivor doc_ids ride the join;
     # stages 1-3 are the shared chain over the gated relation (the df
     # table is counted over the filtered, deduplicated corpus)
-    keep_ids, scrubbed, span_kept = _curation_stages(
-        base0.join(qkeep, "doc_id", "semi")
-    )
-    # ledger — the spine is a cheap base-scan projection (doc_id,
-    # n_tokens), NOT q212's output (see the cache note above);
-    # kept_quality is qkeep membership, exactly the oracle's LEFT JOIN
-    # qkeep shape. All joins on doc_id.
-    totals = base0.select(
-        "doc_id", F.size(tokens_expr("text")).cast("bigint").alias("n_tokens")
-    )
     return _yield_ledger(
-        totals,
-        [
-            ("kept_quality", qkeep.select("doc_id", F.lit(1).alias("kept_quality"))),
-            ("kept_exact", keep_ids.select("doc_id", F.lit(1).alias("kept_exact"))),
-            ("scrub_kept_tokens", scrubbed.select("doc_id", "scrub_kept_tokens")),
-            ("span_kept_tokens", span_kept),
-        ],
+        base0,
+        [("kept_quality", qkeep), *_curation_stages(base0.join(qkeep, "doc_id", "semi"))],
     )
 
 
@@ -2232,76 +2188,73 @@ def q213_filtered_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
 # collects, and the downstream stages are q210's adjudicated shapes. No
 # reference equivalent (SURVEY.md §2.10 north-star extension).
 
-_Q214_SQL = _Q212_CTES_SQL.replace("WITH base AS", "WITH RECURSIVE base AS", 1) + f""",
-qkeep AS (
-  SELECT doc_id FROM flags
-  WHERE pass_length AND pass_word_len AND pass_alpha AND pass_stopwords
-    AND pass_repetition
+# The q212 flag stack opened as WITH RECURSIVE, for the compositions whose
+# fuzzy stage needs the closure CTEs. The .replace() must have actually
+# armed the keyword — a silent miss would surface only as a DuckDB parse
+# error when the oracle runs (explicit raise, not assert: -O safe).
+_Q212_RECURSIVE_CTES_SQL = _Q212_CTES_SQL.replace(
+    "WITH base AS", "WITH RECURSIVE base AS", 1
+)
+if not _Q212_RECURSIVE_CTES_SQL.lstrip().startswith("WITH RECURSIVE base AS"):
+    raise ValueError("the q212 flag stack failed to arm its RECURSIVE keyword")
+
+
+def _fuzzy_keep_sql(docs: str) -> str:
+    """Oracle twin of :func:`_fuzzy_keep` over a ``(doc_id, lang, text)``
+    CTE named ``docs``: its token sets ``dt``, the closure CTEs,
+    ``clusters`` and ``fkeep`` (the docs that are their cluster's min
+    doc_id or in no cluster)."""
+    return f"""dt AS (
+  SELECT doc_id, lang,
+         LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
+  FROM {docs}
 ),
+{_closure_ctes_sql("dt")},
+clusters AS (
+  {_CLUSTERS_SQL}
+),
+fkeep AS (
+  SELECT d.doc_id AS doc_id, d.text AS text
+  FROM {docs} d LEFT JOIN clusters c ON c.doc_id = d.doc_id
+  WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
+)"""
+
+
+# :func:`_curation_chain_sql` input of the fuzzy compositions
+_FKEEP_DOCS_SQL = f"SELECT doc_id, text, {_DOC_FP_SQL} AS fp FROM fkeep"
+
+_Q214_SQL = (
+    _Q212_RECURSIVE_CTES_SQL
+    + f""",
+{_QKEEP_CTE_SQL},
 docs AS (
   SELECT d.doc_id AS doc_id, d.text AS text, d.lang AS lang
   FROM documents d JOIN qkeep q ON d.doc_id = q.doc_id
   WHERE d.text IS NOT NULL
 ),
-dt AS (
-  SELECT doc_id, lang,
-         LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM docs
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM dt a JOIN dt b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
-        / LEN(LIST_DISTINCT(LIST_CONCAT(a.toks, b.toks))) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, root) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
-clusters AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-),
-fkeep AS (
-  SELECT d.doc_id AS doc_id, d.text AS text
-  FROM docs d LEFT JOIN clusters c ON c.doc_id = d.doc_id
-  WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
-),
-docs2 AS (
-  SELECT doc_id, text, {_DOC_FP_SQL} AS fp FROM fkeep
-),
-keep_ids AS (
-  SELECT MIN(doc_id) AS doc_id FROM docs2 GROUP BY fp
-),
-base1 AS (
-  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
-  FROM docs2 d JOIN keep_ids k ON d.doc_id = k.doc_id
-),
-""" + _curation_stage_sql("units1", "df1", "base1") + """
-SELECT f.doc_id AS doc_id,
-  CAST(f.n_tokens AS BIGINT) AS n_tokens,
-  CAST(CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_quality,
-  CAST(CASE WHEN fz.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_fuzzy,
-  CAST(CASE WHEN k.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_exact,
-  CAST(COALESCE(b.scrub_kept_tokens, 0) AS BIGINT) AS scrub_kept_tokens,
-  CAST(COALESCE(v.span_kept_tokens, 0) AS BIGINT) AS span_kept_tokens
-FROM flags f
-LEFT JOIN qkeep q ON f.doc_id = q.doc_id
-LEFT JOIN fkeep fz ON f.doc_id = fz.doc_id
-LEFT JOIN keep_ids k ON f.doc_id = k.doc_id
-LEFT JOIN scrubbed b ON f.doc_id = b.doc_id
-LEFT JOIN sp v ON f.doc_id = v.doc_id
+{_fuzzy_keep_sql("docs")},
 """
+    + _curation_chain_sql("docs2", _FKEEP_DOCS_SQL, "1")
+    + "\n"
+    + _yield_ledger_sql(
+        "flags f",
+        [("kept_quality", "qkeep", "q"), ("kept_fuzzy", "fkeep", "fz"), *_CHAIN_LEDGER_SQL],
+    )
+)
 
-# the .replace() above must have actually armed the recursive keyword —
-# a silent miss would surface only as a DuckDB parse error at driver time
-# (explicit raise, not assert, so the guard survives `python -O`)
-if not _Q214_SQL.lstrip().startswith("WITH RECURSIVE base AS"):
-    raise ValueError("q214 oracle failed to arm its RECURSIVE keyword")
+
+def _fuzzy_keep(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The fuzzy-dedup stage: ``docs`` minus every non-keeper of the
+    near-dup pair graph ``pairs`` (doc_a, doc_b) — min-label connected
+    components, one keeper (the min doc_id) per component. ``pairs``
+    must be built over exactly ``docs``'s survivors: components of that
+    induced subgraph can differ from restricting full-corpus components
+    (dropping a junk node may split a cluster)."""
+    clusters = connected_components(pairs, "doc_a", "doc_b")
+    non_keepers = clusters.filter(F.col("comp") != F.col("node")).select(
+        F.col("node").alias("doc_id")
+    )
+    return docs.join(non_keepers, "doc_id", "left_anti")
 
 
 @query("q214_fuzzy_curation_pipeline", _Q214_SQL)
@@ -2316,45 +2269,16 @@ def q214_fuzzy_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rationale (the cluster keeper is chosen among quality survivors; the
     exact stage stays load-bearing for cross-lang identical text) and the
     100 TB plan shape."""
-    from .text import q212_gopher_quality_filter
-
-    # ONE cached bounded doc_id verdict set, exactly q213's adjudicated
-    # structure (three consumers here: the pair-graph gate, the stage-0
-    # semi gate, and the ledger's kept_quality column); released by
-    # session.release_session_state, the documented cleanup contract.
-    qkeep = (
-        q212_gopher_quality_filter(spark, sf_dir)
-        .filter(F.col("kept"))
-        .select("doc_id")
-        .cache()
-    )
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select("doc_id", "text")
-    # stage 1 — fuzzy dedup over the GATED corpus: pair graph (keep= gates
-    # the scan), min-label connected components, drop every non-keeper
-    pairs = neardup_pairs(spark, sf_dir, keep=qkeep)
-    clusters = connected_components(pairs, "doc_a", "doc_b")
-    non_keepers = clusters.filter(F.col("comp") != F.col("node")).select(
-        F.col("node").alias("doc_id")
-    )
-    gated = base0.join(qkeep, "doc_id", "semi")
-    fkeep = gated.join(non_keepers, "doc_id", "left_anti")
-    # stages 2-4 — the shared exact-dedup/scrub/span chain over the fuzzy
-    # survivors (the df table counts the filtered, fuzzy-deduped corpus)
-    keep_ids, scrubbed, span_kept = _curation_stages(fkeep)
-    totals = base0.select(
-        "doc_id", F.size(tokens_expr("text")).cast("bigint").alias("n_tokens")
+    qkeep = _quality_keep(spark, sf_dir)
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "text")
+    # stage 1 — fuzzy dedup over the GATED corpus (keep= gates the pair
+    # scan); stages 2-4 — the shared chain over the fuzzy survivors (the
+    # df table counts the filtered, fuzzy-deduped corpus)
+    fkeep = _fuzzy_keep(
+        base0.join(qkeep, "doc_id", "semi"), neardup_pairs(spark, sf_dir, keep=qkeep)
     )
     return _yield_ledger(
-        totals,
-        [
-            ("kept_quality", qkeep.select("doc_id", F.lit(1).alias("kept_quality"))),
-            ("kept_fuzzy", fkeep.select("doc_id", F.lit(1).alias("kept_fuzzy"))),
-            ("kept_exact", keep_ids.select("doc_id", F.lit(1).alias("kept_exact"))),
-            ("scrub_kept_tokens", scrubbed.select("doc_id", "scrub_kept_tokens")),
-            ("span_kept_tokens", span_kept),
-        ],
+        base0, [("kept_quality", qkeep), ("kept_fuzzy", fkeep), *_curation_stages(fkeep)]
     )
 
 
@@ -2426,11 +2350,9 @@ kept_lines AS (
     + str(_BOILER_DF)
     + """
 ),
-scrubbed AS (
-  SELECT doc_id, SUM(line_len) AS scrub_kept_tokens,
-         STRING_AGG(line_text, ' ' ORDER BY line_id) AS clean_text
-  FROM kept_lines GROUP BY doc_id
-),
+"""
+    + _SCRUBBED_CTE_SQL
+    + """,
 clean_src AS (
   SELECT doc_id, STRING_SPLIT_REGEX(clean_text, '[\\s\\x0b]+') AS toks,
          CAST(scrub_kept_tokens AS BIGINT) AS mass
@@ -2470,20 +2392,12 @@ def q216_ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision-bearing stage order (lang-id and the LM both see scrubbed
     text), the documented CCNet adaptations, and the cached ``langed``
     relation's 100 TB rationale."""
-    from .text import lang_id_from_toks
-    from .text2 import _lm_tier_df
-
     lines, totals = _doc_unit_fanout(spark, sf_dir, _LINE, "line")
     normed = lines.withColumn("norm_key", _norm_line_expr(F.col("line_text")))
     kept = normed.join(_boiler_set(normed, "norm_key"), "norm_key", "left_anti")
     scrubbed = kept.groupBy("doc_id").agg(
         F.sum("line_len").cast("bigint").alias("mass"),
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("line_id", "line_text"))),
-                lambda s: F.split(s["line_text"], " "),
-            )
-        ).alias("toks"),
+        _kept_line_toks().alias("toks"),
     )
     # ONE cached post-scrub relation (module cache contract; released by
     # session.release_session_state) serving all three downstream reads.
@@ -2562,12 +2476,10 @@ def q216_ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # documented cache contract, released by session.release_session_state.
 # No reference equivalent (SURVEY.md §2.10 north-star extension).
 
-_Q217_SQL = _Q212_CTES_SQL.replace("WITH base AS", "WITH RECURSIVE base AS", 1) + f""",
-qkeep AS (
-  SELECT doc_id FROM flags
-  WHERE pass_length AND pass_word_len AND pass_alpha AND pass_stopwords
-    AND pass_repetition
-),
+_Q217_SQL = (
+    _Q212_RECURSIVE_CTES_SQL
+    + f""",
+{_QKEEP_CTE_SQL},
 rdocs AS (
   SELECT d.doc_id AS doc_id,
          REGEXP_REPLACE(d.text, '{_REDACT_PATTERN}', '[REDACTED]', 'g') AS text,
@@ -2577,65 +2489,20 @@ rdocs AS (
   FROM documents d JOIN qkeep q ON d.doc_id = q.doc_id
   WHERE d.text IS NOT NULL
 ),
-dt AS (
-  SELECT doc_id, lang,
-         LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
-  FROM rdocs
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM dt a JOIN dt b ON a.lang = b.lang AND a.doc_id < b.doc_id
-  WHERE LEN(LIST_FILTER(a.toks, x -> LIST_CONTAINS(b.toks, x)))::DOUBLE
-        / LEN(LIST_DISTINCT(LIST_CONCAT(a.toks, b.toks))) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, root) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
-clusters AS (
-  SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY node
-),
-fkeep AS (
-  SELECT d.doc_id AS doc_id, d.text AS text
-  FROM rdocs d LEFT JOIN clusters c ON c.doc_id = d.doc_id
-  WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
-),
-docs2 AS (
-  SELECT doc_id, text, {_DOC_FP_SQL} AS fp FROM fkeep
-),
-keep_ids AS (
-  SELECT MIN(doc_id) AS doc_id FROM docs2 GROUP BY fp
-),
-base1 AS (
-  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
-  FROM docs2 d JOIN keep_ids k ON d.doc_id = k.doc_id
-),
-""" + _curation_stage_sql("units1", "df1", "base1") + """
-SELECT f.doc_id AS doc_id,
-  CAST(f.n_tokens AS BIGINT) AS n_tokens,
-  CAST(CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_quality,
-  CAST(COALESCE(rd.redact_hits, 0) AS BIGINT) AS redact_hits,
-  CAST(CASE WHEN fz.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_fuzzy,
-  CAST(CASE WHEN k.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_exact,
-  CAST(COALESCE(b.scrub_kept_tokens, 0) AS BIGINT) AS scrub_kept_tokens,
-  CAST(COALESCE(v.span_kept_tokens, 0) AS BIGINT) AS span_kept_tokens
-FROM flags f
-LEFT JOIN qkeep q ON f.doc_id = q.doc_id
-LEFT JOIN rdocs rd ON f.doc_id = rd.doc_id
-LEFT JOIN fkeep fz ON f.doc_id = fz.doc_id
-LEFT JOIN keep_ids k ON f.doc_id = k.doc_id
-LEFT JOIN scrubbed b ON f.doc_id = b.doc_id
-LEFT JOIN sp v ON f.doc_id = v.doc_id
+{_fuzzy_keep_sql("rdocs")},
 """
-
-# same silent-miss guard as q214's RECURSIVE arm (explicit raise: -O safe)
-if not _Q217_SQL.lstrip().startswith("WITH RECURSIVE base AS"):
-    raise ValueError("q217 oracle failed to arm its RECURSIVE keyword")
+    + _curation_chain_sql("docs2", _FKEEP_DOCS_SQL, "1")
+    + "\n"
+    + _yield_ledger_sql(
+        "flags f",
+        [
+            ("kept_quality", "qkeep", "q"),
+            ("redact_hits", "rdocs", "rd"),
+            ("kept_fuzzy", "fkeep", "fz"),
+            *_CHAIN_LEDGER_SQL,
+        ],
+    )
+)
 
 
 @query("q217_tagged_curation_pipeline", _Q217_SQL)
@@ -2650,62 +2517,37 @@ def q217_tagged_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     span_kept_tokens). See the block comment above for the stage-order
     rationale (redaction-unifies-near-dups; the gate sees raw text; the
     scrub's df counts redacted lines) and the 100 TB plan shape."""
-    from .text import q212_gopher_quality_filter
-
-    # ONE cached bounded doc_id verdict set (q213/q214's adjudicated
-    # structure; three consumers: the redaction gate, the ledger's
-    # kept_quality column, and — transitively through redacted — the pair
-    # build); released by session.release_session_state.
-    qkeep = (
-        q212_gopher_quality_filter(spark, sf_dir)
-        .filter(F.col("kept"))
-        .select("doc_id")
-        .cache()
-    )
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
-        "doc_id", "lang", "text"
-    )
+    qkeep = _quality_keep(spark, sf_dir)
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "lang", "text")
     # stage 1 — redact the blocklist over the GATED scan (filter-first:
     # the tagger only ever runs on surviving mass). Cached: the pair
     # build, the fuzzy-survivor text, and the ledger all read it.
-    gated = base0.join(qkeep, "doc_id", "semi")
-    redacted = gated.select(
-        "doc_id",
-        "lang",
-        F.regexp_count("text", F.lit(_REDACT_PATTERN))
-        .cast("bigint")
-        .alias("redact_hits"),
-        F.regexp_replace("text", _REDACT_PATTERN, "[REDACTED]").alias("text"),
-    ).cache()
+    redacted = (
+        base0.join(qkeep, "doc_id", "semi")
+        .select(
+            "doc_id",
+            "lang",
+            F.regexp_count("text", F.lit(_REDACT_PATTERN))
+            .cast("bigint")
+            .alias("redact_hits"),
+            F.regexp_replace("text", _REDACT_PATTERN, "[REDACTED]").alias("text"),
+        )
+        .cache()
+    )
     # stage 2 — fuzzy dedup over the REDACTED survivors: pair existence
-    # itself changes under redaction (the docs= override)
-    pairs = neardup_pairs(
-        spark, sf_dir, docs=redacted.select("doc_id", "lang", "text")
-    )
-    clusters = connected_components(pairs, "doc_a", "doc_b")
-    non_keepers = clusters.filter(F.col("comp") != F.col("node")).select(
-        F.col("node").alias("doc_id")
-    )
-    fkeep = redacted.select("doc_id", "text").join(
-        non_keepers, "doc_id", "left_anti"
-    )
-    # stages 3-5 — the shared exact-dedup/scrub/span chain over the
-    # redacted fuzzy survivors
-    keep_ids, scrubbed, span_kept = _curation_stages(fkeep)
-    totals = base0.select(
-        "doc_id", F.size(tokens_expr("text")).cast("bigint").alias("n_tokens")
+    # itself changes under redaction (the docs= override); stages 3-5 —
+    # the shared chain over the redacted fuzzy survivors
+    fkeep = _fuzzy_keep(
+        redacted.select("doc_id", "text"),
+        neardup_pairs(spark, sf_dir, docs=redacted.select("doc_id", "lang", "text")),
     )
     return _yield_ledger(
-        totals,
+        base0,
         [
-            ("kept_quality", qkeep.select("doc_id", F.lit(1).alias("kept_quality"))),
+            ("kept_quality", qkeep),
             ("redact_hits", redacted.select("doc_id", "redact_hits")),
-            ("kept_fuzzy", fkeep.select("doc_id", F.lit(1).alias("kept_fuzzy"))),
-            ("kept_exact", keep_ids.select("doc_id", F.lit(1).alias("kept_exact"))),
-            ("scrub_kept_tokens", scrubbed.select("doc_id", "scrub_kept_tokens")),
-            ("span_kept_tokens", span_kept),
+            ("kept_fuzzy", fkeep),
+            *_curation_stages(fkeep),
         ],
     )
 
@@ -2888,42 +2730,29 @@ usize AS (
 )"""
 
 
-_Q218_SQL = _Q212_CTES_SQL + ",\n" + _url_cte_sql() + f""",
+_Q218_SQL = (
+    _Q212_CTES_SQL
+    + ",\n"
+    + _url_cte_sql()
+    + f""",
 qk AS (
   SELECT f.doc_id AS doc_id
   FROM flags f JOIN ukeep u ON f.doc_id = u.doc_id
-  WHERE pass_length AND pass_word_len AND pass_alpha AND pass_stopwords
-    AND pass_repetition
+  {_PASS_ALL_SQL}
 ),
-docs2 AS (
-  SELECT d.doc_id AS doc_id, d.text AS text, {_DOC_FP_SQL} AS fp
-  FROM documents d JOIN qk q ON d.doc_id = q.doc_id
-  WHERE d.text IS NOT NULL
-),
-keep_ids AS (
-  SELECT MIN(doc_id) AS doc_id FROM docs2 GROUP BY fp
-),
-base1 AS (
-  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
-  FROM docs2 d JOIN keep_ids k ON d.doc_id = k.doc_id
-),
-""" + _curation_stage_sql("units1", "df1", "base1") + """
-SELECT f.doc_id AS doc_id,
-  CAST(f.n_tokens AS BIGINT) AS n_tokens,
-  CAST(CASE WHEN uk.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_url,
-  CAST(COALESCE(us.url_group_size, 0) AS BIGINT) AS url_group_size,
-  CAST(CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_quality,
-  CAST(CASE WHEN k.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS kept_exact,
-  CAST(COALESCE(b.scrub_kept_tokens, 0) AS BIGINT) AS scrub_kept_tokens,
-  CAST(COALESCE(v.span_kept_tokens, 0) AS BIGINT) AS span_kept_tokens
-FROM flags f
-LEFT JOIN ukeep uk ON f.doc_id = uk.doc_id
-LEFT JOIN usize us ON f.doc_id = us.doc_id
-LEFT JOIN qk q ON f.doc_id = q.doc_id
-LEFT JOIN keep_ids k ON f.doc_id = k.doc_id
-LEFT JOIN scrubbed b ON f.doc_id = b.doc_id
-LEFT JOIN sp v ON f.doc_id = v.doc_id
 """
+    + _curation_chain_sql("docs2", _gated_docs_sql("qk"), "1")
+    + "\n"
+    + _yield_ledger_sql(
+        "flags f",
+        [
+            ("kept_url", "ukeep", "uk"),
+            ("url_group_size", "usize", "us"),
+            ("kept_quality", "qk", "q"),
+            *_CHAIN_LEDGER_SQL,
+        ],
+    )
+)
 
 
 @query("q218_url_curation_pipeline", _Q218_SQL)
@@ -2941,13 +2770,7 @@ def q218_url_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     never ran on dropped copies — q217's attribution convention). See
     the block comment above for the URL derivation (corpus adapter), the
     provable stage-order rationale, and the 100 TB plan shape."""
-    from .text import q212_gopher_quality_filter
-
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
-        "doc_id", "lang", "text"
-    )
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "lang", "text")
     # stage 0 — URL dedup: ONE partial-agg group-by over (url_norm,
     # doc_id) pairs; the group table is cached because two consumers read
     # it (the keeper id set and the per-doc group-size join) and it is
@@ -2981,31 +2804,16 @@ def q218_url_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     usurv = base0.join(ukeep, "doc_id", "semi").select("doc_id", "text").cache()
     # stage 1 — the gate runs over URL SURVIVORS only (the docs=
     # override; per-document signals, so the restriction never changes a
-    # verdict — it only skips gate work on dropped copies). Cached
-    # bounded verdict set, two consumers (chain gate + ledger column).
-    qkeep = (
-        q212_gopher_quality_filter(spark, sf_dir, docs=usurv)
-        .filter(F.col("kept"))
-        .select("doc_id")
-        .cache()
-    )
-    # stages 2-4 — the shared exact-dedup/scrub/span chain over the
-    # URL-deduplicated, quality-passing corpus
-    keep_ids, scrubbed, span_kept = _curation_stages(
-        usurv.join(qkeep, "doc_id", "semi")
-    )
-    totals = base0.select(
-        "doc_id", F.size(tokens_expr("text")).cast("bigint").alias("n_tokens")
-    )
+    # verdict — it only skips gate work on dropped copies); stages 2-4 —
+    # the shared chain over the URL-deduplicated, quality-passing corpus
+    qkeep = _quality_keep(spark, sf_dir, usurv)
     return _yield_ledger(
-        totals,
+        base0,
         [
-            ("kept_url", ukeep.select("doc_id", F.lit(1).alias("kept_url"))),
+            ("kept_url", ukeep),
             ("url_group_size", usize),
-            ("kept_quality", qkeep.select("doc_id", F.lit(1).alias("kept_quality"))),
-            ("kept_exact", keep_ids.select("doc_id", F.lit(1).alias("kept_exact"))),
-            ("scrub_kept_tokens", scrubbed.select("doc_id", "scrub_kept_tokens")),
-            ("span_kept_tokens", span_kept),
+            ("kept_quality", qkeep),
+            *_curation_stages(usurv.join(qkeep, "doc_id", "semi")),
         ],
     )
 
@@ -3203,12 +3011,8 @@ def q219_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct gram agg, AQE-decided join-back, one doc_id window for the
     island merge).
     """
-    from pyspark.sql import Window
-
     k = _SUBSTR_K
-    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base = d.repartition(n_shuffle, F.col("doc_id")).select(
+    base = exchanged_docs(spark, sf_dir).select(
         "doc_id", tokens_expr("text").alias("toks")
     )
     grams = _substr_grams(base, k)
@@ -3488,11 +3292,7 @@ def q220_snapshot_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     first copy); ``recrawl`` marks exactly the copies on which the two
     policies disagree. See the block comment above for the snapshot
     corpus adapter, the decision pins, and the 100 TB state story."""
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
-        "doc_id", "lang", "text", "source"
-    )
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "lang", "text", "source")
     snapd = _snap_docs(base0)
     inc_key = F.col("snap").cast("bigint") * _SNAP_KEY_BASE + F.col("doc_id")
     # Both group tables are the bounded outputs (one row per distinct
@@ -3556,11 +3356,7 @@ def snapshot_fold_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct URL — the same class as the carried state). The only
     collect is the bounded distinct snapshot id set (<= _SNAP_MOD rows —
     the module's bounded-collect class)."""
-    d0 = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base0 = d0.repartition(n_shuffle, F.col("doc_id")).select(
-        "doc_id", "lang", "text", "source"
-    )
+    base0 = exchanged_docs(spark, sf_dir).select("doc_id", "lang", "text", "source")
     snapd = _snap_docs(base0).persist()
     snaps = sorted(
         r["snap"] for r in snapd.select("snap").distinct().collect()

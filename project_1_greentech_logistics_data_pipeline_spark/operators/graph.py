@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import tune
 
 
 def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -184,7 +183,6 @@ def q145_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax(rank) per cluster instead of min(doc_id)."""
     from .dedup import connected_components, neardup_pairs
 
-    tune(spark)
     pairs = neardup_pairs(spark, sf_dir).localCheckpoint()
     # ONE symmetrized edge materialization shared by both iterative
     # consumers (r14 optimization pass: pagerank and components each
@@ -298,7 +296,6 @@ def q203_neardup_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     policies that should not merge across weak bridges."""
     from .dedup import neardup_pairs
 
-    tune(spark)
     pairs = neardup_pairs(spark, sf_dir).localCheckpoint()
     comm = label_propagation(pairs, "doc_a", "doc_b")
     sizes = comm.groupBy("community").agg(

@@ -24,8 +24,6 @@ from pyspark.sql import types as T
 
 from ..functions.deterministic import pos_zero
 from ..registry import query, table
-from ..session import tune
-from ..sources.readers import load_table
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,7 +31,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     opaque payload (no codecs in this environment); mime derives from source.
     The column shape is the real contract: content binary, mime string,
     meta map<string,string>."""
-    d = load_table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     return d.select(
         F.col("doc_id").alias("media_id"),
         F.struct(
@@ -60,7 +58,7 @@ def video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     as opaque video payloads. meta carries container-level facts a real
     demuxer would surface without decoding (duration, fps) — derived
     SQL-expressibly from n_chars so frame-sampling has an exact oracle."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     return d.select(
         F.col("doc_id").alias("media_id"),
         F.struct(
@@ -90,7 +88,6 @@ GROUP BY 1
 def q50_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata path over the media column: size, hash, mime rollup — all
     JVM-side on the binary payload, no decode needed."""
-    tune(spark)
     m = media_table(spark, sf_dir)
     return (
         m.select(
@@ -247,7 +244,6 @@ def q51_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes fake_decode's FNV-1a dimension derivation in pure
     SQL (recursive CTE over hex pairs), so the Python decode path is
     exactly cross-checked, not just row-counted."""
-    tune(spark)
     # NULL-payload contract made explicit on both sides: the oracle's base
     # CTE has WHERE text IS NOT NULL; without this twin filter a NULL
     # content would crash the Python worker while the oracle silently
@@ -436,7 +432,6 @@ def q52_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle, so the Arrow round-trip and the Python math are
     exactly checked, not rows-only. Payload BYTES are pinned separately
     in pytest (length == out_bytes, deterministic, cycle structure)."""
-    tune(spark)
     return resize_media(media_table(spark, sf_dir))
 
 
@@ -535,7 +530,6 @@ def q53_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in pytest — top-level binary would also defeat the driver hash). The
     per-frame rows (index, timestamp, per-asset count) computed in Python
     hash-match the UNNEST(GENERATE_SERIES) oracle exactly."""
-    tune(spark)
     return sample_frames(video_table(spark, sf_dir)).select(
         "media_id", "frame_idx", "frame_ts_ms", "n_frames"
     )

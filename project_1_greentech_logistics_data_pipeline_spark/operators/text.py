@@ -34,6 +34,31 @@ def tokens_expr(text: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def doc_id_exchange(d: DataFrame) -> DataFrame:
+    """Hash-exchange ``d`` on doc_id into ``spark.sql.shuffle.partitions``
+    partitions: the one exchange the per-document fan-out stages (token
+    windows, grams, bigram pairs) place in front of their generate. It
+    runs the fan-out at full parallelism when the scan has few input
+    splits (a 5000-doc single-file scan ran q206's generate in ONE task:
+    2.9 s single-threaded vs ~0.9 s repartitioned) and pre-positions rows
+    for the per-doc aggregations, windows and joins downstream, so
+    EnsureRequirements adds no second shuffle; at cluster scale the scan
+    has many splits and this exchange simply relocates theirs. The
+    partition COUNT is explicit: AQE's coalescer targets bytes, and this
+    exchange's input is small BEFORE the fan-out, so a count-less
+    repartition was coalesced back to one task, single-threading the
+    generate again (measured)."""
+    n_shuffle = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return d.repartition(n_shuffle, F.col("doc_id"))
+
+
+def exchanged_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The non-null-text documents, through :func:`doc_id_exchange`."""
+    return doc_id_exchange(
+        table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    )
+
+
 # The canonical document normalization and fingerprint — THE single
 # definition, shared by every consumer on both engines (q41/q43/q78/q92/
 # q109/q146/q200/q210 and the streaming incremental dedup): lowercase +
@@ -870,18 +895,9 @@ def q206_repetition_signals(
         if docs is not None
         else table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
-    # The doc_id hash exchange the window requires is placed BEFORE the
-    # posexplode: EnsureRequirements then adds no second shuffle, and the
-    # token-fan-out generate runs at full parallelism even when the scan
-    # has few input splits (a 5000-doc single-file scan ran the generate
-    # in ONE task: 2.9 s single-threaded vs ~0.9 s repartitioned; at
-    # cluster scale the scan has many splits and this exchange simply
-    # relocates the window's own). The partition COUNT is explicit:
-    # AQE's coalescer targets bytes, and this exchange's input is small
-    # BEFORE the fan-out — a count-less repartition was coalesced back
-    # to one task, single-threading the generate again (measured).
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Materialize the token array ONCE before fanning out: size() and
+    # The doc_id exchange the window requires is placed BEFORE the
+    # posexplode (doc_id_exchange). Materialize the token array ONCE
+    # before fanning out: size() and
     # posexplode() both consume the same `toks` attribute, so the regex
     # split runs once per document. Writing size(tokens_expr(..)) next to
     # posexplode(tokens_expr(..)) in one select planned the size() copy in
@@ -890,7 +906,7 @@ def q206_repetition_signals(
     # confirmed in the executed plan; CollapseProject leaves the two-step
     # projection alone because split is non-cheap and referenced twice).
     base = (
-        d.repartition(n_shuffle, F.col("doc_id"))
+        doc_id_exchange(d)
         .select("doc_id", tokens_expr("text").alias("toks"))
         .select(
             "doc_id",

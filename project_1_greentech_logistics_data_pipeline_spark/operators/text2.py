@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query, table
-from .text import tokens_expr
+from .text import exchanged_docs, tokens_expr
 
 
 _TOKS_SQL = """
@@ -505,12 +505,8 @@ def q215_ccnet_perplexity_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the all-integer cut rule and the 100 TB adjudication of the
     per-language prefix window (sketch thresholds or a two-pass
     distributed prefix sum at scale)."""
-    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    # explicit doc_id exchange before the pair fan-out — the q206 lesson:
-    # a single-file scan would otherwise run the explode in one task
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     src = (
-        d.repartition(n_shuffle, F.col("doc_id"))
+        exchanged_docs(spark, sf_dir)
         .select("doc_id", "lang", tokens_expr("text").alias("toks"))
         .withColumn("mass", F.size("toks").cast("bigint"))
     )

@@ -37,17 +37,28 @@ RUNTIME_CONF = {
 }
 
 
+_tune_warned: set[str] = set()
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply dynamic confs to an existing session (driver-provided or ours).
 
     Every declared query calls this first so behavior does not depend on who
-    constructed the session.
-    """
+    constructed the session. A key the session refuses (non-dynamic in some
+    deployment) is skipped so the remaining keys still apply; the first
+    refusal of each key in a process emits one RuntimeWarning naming it."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-dynamic in some deployment; keep going
+        except Exception as e:
+            if k not in _tune_warned:
+                _tune_warned.add(k)
+                warnings.warn(
+                    f"tune could not set {k}={v} ({type(e).__name__}); the "
+                    "session keeps its own value",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
     return spark
 
 

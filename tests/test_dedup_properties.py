@@ -260,6 +260,43 @@ def test_release_local_checkpoint_warns_once(spark, monkeypatch):
     assert released[0].category is RuntimeWarning
 
 
+def test_tune_warns_once_per_refused_key(monkeypatch):
+    """A conf key the session refuses is visible: tune() emits one
+    RuntimeWarning naming the key per process, and every other key is
+    still set."""
+    import warnings
+
+    from project_1_greentech_logistics_data_pipeline_spark import session
+
+    bad = "spark.sql.shuffle.partitions"
+
+    class _Conf:
+        def __init__(self):
+            self.values = {}
+
+        def set(self, k, v):
+            if k == bad:
+                raise RuntimeError("static conf")
+            self.values[k] = v
+
+    class _Session:
+        conf = _Conf()
+
+    monkeypatch.setattr(session, "_tune_warned", set())
+    stub = _Session()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        session.tune(stub)
+        session.tune(stub)
+    refused = [w for w in caught if bad in str(w.message)]
+    assert len(refused) == 1
+    assert refused[0].category is RuntimeWarning
+    assert len(caught) == 1
+    assert stub.conf.values == {
+        k: v for k, v in session.RUNTIME_CONF.items() if k != bad
+    }
+
+
 def test_lsh_candidates_are_same_lang_only(spark):
     """Regression for the cross-lang candidate gap: q45's verified pairs
     must all be within-lang (the verify bitmaps are dictionary-encoded per

@@ -1689,7 +1689,7 @@ def test_scrub_and_rep_sql_generators_pin():
     strings by a single byte (driver hashes would silently re-baseline):
     _Q208_SQL is now generated by _scrub_sql(...), _Q206_SQL/_Q212_SQL by
     _REP_CTES/_Q212_CTES concatenation, and _Q210_SQL embeds the shared
-    _curation_stage_sql chain — pin all four to the sha256 of the
+    _curation_chain_sql chain — pin all four to the sha256 of the
     pre-factoring literals (q208/q206 are the r8 strings; q210's r8
     string is unchanged by the chain factoring; q212's is its r9
     introduction string, now load-bearing because q213's oracle builds
@@ -1754,6 +1754,23 @@ def test_scrub_and_rep_sql_generators_pin():
         hashlib.sha256(_Q217_SQL.encode()).hexdigest()
         == "b679c5266c775f4a82c9f5835ede27e17fab10631f1673e1ca15cdd8d2b4440c"
     )
+    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
+        _Q73_SQL,
+        _Q78_SQL,
+        _Q187_SQL,
+        _Q218_SQL,
+    )
+
+    # q73/q78/q187 are generated from the shared token-set and closure
+    # CTEs, q218 from the shared curation chain, verdict and ledger
+    # generators; each pinned to its pre-generator literal
+    for sql, digest in (
+        (_Q73_SQL, "5df417d555e956f9036e8ddaad5b54e4eb36ccfd2b482a3e13b9fb2f26799e24"),
+        (_Q78_SQL, "2a72f5954d2c64c27020bd885179a4f9934a56efc004db89ee7836b29ecad79f"),
+        (_Q187_SQL, "5fa232f8bf164a4cb7027c1bde66c94f2dd44170d0af15698d9ff729559b6ce8"),
+        (_Q218_SQL, "56a73ef47e6e6742fe1bbb09132d36223a6af6a915b4ec18cd91132dbf940690"),
+    ):
+        assert hashlib.sha256(sql.encode()).hexdigest() == digest
 
 
 def test_q211_paragraph_scrub_edge_cases(spark, tmp_path):
