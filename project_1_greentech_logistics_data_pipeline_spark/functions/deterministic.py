@@ -2,15 +2,16 @@
 
 Floating-point SUM/AVG depend on accumulation order, which differs between
 Spark partitions and the DuckDB oracle (and between runs as AQE re-splits).
-Casting each element to decimal(38,6) before summing makes the aggregate
+Casting each element to decimal(38,s) before summing makes the aggregate
 exact and order-independent; casting the exact decimal result back to double
 is a single deterministic rounding. The testdata's numeric columns carry at
-most 2 fractional digits, so scale 6 loses nothing.
+most 2 fractional digits, so the default scale 6 loses nothing.
 
-Oracle-SQL twin of ``dsum(c)``:
-    CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE)
-and of ``davg(c)``:
-    CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE) / COUNT(c)
+This module is the one place the exact-sum type is spelled. Each Spark
+helper has an oracle-SQL twin: ``dec``/``dec_sql`` (the per-row cast, which
+window, COALESCE and CASE shapes wrap in their own text), ``dsum``/
+``dsum_sql``, ``moment_sums``/``moment_sums_sql``; ``davg(c)`` is
+``dsum_sql(c) / COUNT(c)``.
 """
 
 from __future__ import annotations
@@ -18,17 +19,67 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DEC = "decimal(38,6)"
+
+def _col(col: Column | str) -> Column:
+    return F.col(col) if isinstance(col, str) else col
 
 
-def dsum(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double")
+def dec(col: Column | str, scale: int = 6) -> Column:
+    return _col(col).cast(f"decimal(38,{scale})")
+
+
+def dsum(col: Column | str, scale: int = 6) -> Column:
+    return F.sum(dec(col, scale)).cast("double")
 
 
 def davg(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     return dsum(c) / F.count(c)
+
+
+def dec_sql(expr: str, scale: int = 6) -> str:
+    return f"CAST({expr} AS DECIMAL(38,{scale}))"
+
+
+def dsum_sql(expr: str, scale: int = 6) -> str:
+    return f"CAST(SUM({dec_sql(expr, scale)}) AS DOUBLE)"
+
+
+# Closed-form least squares and Pearson r start from one aggregate of exact
+# scale-12 moment sums (k, sx, sy, sxy, sxx[, syy]); the builtin regr_slope/
+# corr accumulate in float and are not cross-engine reproducible. The final
+# formulas are one SQL text, parsed verbatim by both engines.
+
+
+def moment_sums(x: Column | str, y: Column | str, syy: bool = False) -> list[Column]:
+    x, y = _col(x), _col(y)
+    terms = [("sx", x), ("sy", y), ("sxy", x * y), ("sxx", x * x)]
+    terms += [("syy", y * y)] if syy else []
+    k = F.count(F.lit(1)).cast("double").alias("k")
+    return [k] + [dsum(t, 12).alias(a) for a, t in terms]
+
+
+def moment_sums_sql(x: str, y: str, syy: bool = False) -> str:
+    """Twin of :func:`moment_sums`: the select list, one sum per line."""
+    terms = [("sx", x), ("sy", y), ("sxy", f"{x} * {y}"), ("sxx", f"{x} * {x}")]
+    terms += [("syy", f"{y} * {y}")] if syy else []
+    sums = [f"{dsum_sql(t, 12)} AS {a}" for a, t in terms]
+    return ",\n         ".join(["CAST(COUNT(*) AS DOUBLE) AS k"] + sums)
+
+
+OLS_SLOPE_SQL = "(k * sxy - sx * sy) / (k * sxx - sx * sx)"
+PEARSON_R_SQL = (
+    "(k * sxy - sx * sy)\n"
+    "         / (SQRT(k * sxx - sx * sx) * SQRT(k * syy - sy * sy))"
+)
+
+
+def ols_slope() -> Column:
+    return F.expr(OLS_SLOPE_SQL)
+
+
+def pearson_r() -> Column:
+    return F.expr(PEARSON_R_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -19,9 +19,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import (
+    OLS_SLOPE_SQL,
+    PEARSON_R_SQL,
+    dec,
     dsum,
+    dsum_sql,
     hilo_reconstruct,
     hilo_sum_exprs,
+    moment_sums,
+    moment_sums_sql,
+    ols_slope,
+    pearson_r,
     pos_zero,
 )
 from ..registry import query, table
@@ -84,11 +92,11 @@ def q117_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q118: calendar-spine gap fill + linear interpolation over sparse days.
 # ---------------------------------------------------------------------------
 
-_Q118_SQL = """
+_Q118_SQL = f"""
 WITH daily AS (
   SELECT event_type, CAST(DATE_TRUNC('day', ts) AS DATE) AS day,
          COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS day_value
+         {dsum_sql("value")} AS day_value
   FROM events WHERE value > 300 GROUP BY 1, 2
 ),
 spine AS (
@@ -194,14 +202,14 @@ def q118_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q120: fixed-width histogram (engine-agnostic width_bucket).
 # ---------------------------------------------------------------------------
 
-_Q120_SQL = """
+_Q120_SQL = f"""
 SELECT CAST(FLOOR(l_extendedprice / 5000.0) AS BIGINT) AS bucket,
        CAST(CAST(FLOOR(l_extendedprice / 5000.0) AS BIGINT) * 5000.0 AS DOUBLE)
          AS bucket_lo,
        CAST((CAST(FLOOR(l_extendedprice / 5000.0) AS BIGINT) + 1) * 5000.0 AS DOUBLE)
          AS bucket_hi,
        COUNT(*) AS n,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS total_price
+       {dsum_sql("l_extendedprice")} AS total_price
 FROM lineitem
 GROUP BY 1
 ORDER BY 1
@@ -571,7 +579,7 @@ def q136_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q138: time-weighted average value per event_type (TWAP).
 # ---------------------------------------------------------------------------
 
-_Q138_SQL = """
+_Q138_SQL = f"""
 WITH seg AS (
   SELECT event_type, value, ts,
          LEAD(ts) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS next_ts
@@ -583,7 +591,7 @@ w AS (
   FROM seg WHERE next_ts IS NOT NULL
 )
 SELECT event_type,
-       CAST(SUM(CAST(value * dur_us AS DECIMAL(38,6))) AS DOUBLE)
+       {dsum_sql("value * dur_us")}
          / CAST(SUM(dur_us) AS DOUBLE) AS twap,
        CAST(SUM(dur_us) AS BIGINT) AS total_dur_us,
        CAST(COUNT(*) AS BIGINT) AS n_segments
@@ -1492,10 +1500,10 @@ def q174_ks_drift_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q177b: revenue concentration — Gini coefficient over customers.
 # ---------------------------------------------------------------------------
 
-_Q177B_SQL = """
+_Q177B_SQL = f"""
 WITH cust AS (
   SELECT o_custkey,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+         {dsum_sql("o_totalprice")} AS revenue
   FROM orders GROUP BY o_custkey
 ),
 ranked AS (
@@ -1504,8 +1512,8 @@ ranked AS (
          COUNT(*) OVER () AS n
   FROM cust
 )
-SELECT CAST((2.0 * CAST(SUM(CAST(i * revenue AS DECIMAL(38,6))) AS DOUBLE))
-         / (MAX(n) * CAST(SUM(CAST(revenue AS DECIMAL(38,6))) AS DOUBLE))
+SELECT CAST((2.0 * {dsum_sql("i * revenue")})
+         / (MAX(n) * {dsum_sql("revenue")})
        - (MAX(n) + 1.0) / MAX(n) AS DOUBLE) AS gini,
        CAST(MAX(n) AS BIGINT) AS n_customers
 FROM ranked
@@ -1531,8 +1539,8 @@ def q177b_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = cust.count()
     return ranked.agg(
         (
-            (2.0 * F.sum((F.col("i") * F.col("revenue")).cast("decimal(38,6)")).cast("double"))
-            / (n * F.sum(F.col("revenue").cast("decimal(38,6)")).cast("double"))
+            (2.0 * dsum(F.col("i") * F.col("revenue")))
+            / (n * dsum("revenue"))
             - (n + 1.0) / n
         ).alias("gini"),
         F.lit(n).cast("bigint").alias("n_customers"),
@@ -1543,7 +1551,7 @@ def q177b_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q178: per-group linear trend (closed-form least squares).
 # ---------------------------------------------------------------------------
 
-_Q178_SQL = """
+_Q178_SQL = f"""
 WITH pts AS (
   SELECT event_type,
          CAST(EPOCH_US(ts) - EPOCH_US(TIMESTAMP '2024-01-01') AS DOUBLE)
@@ -1553,17 +1561,13 @@ WITH pts AS (
 ),
 sums AS (
   SELECT event_type,
-         CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx
+         {moment_sums_sql("x", "y")}
   FROM pts GROUP BY event_type
 )
 SELECT event_type,
-       CAST(n AS BIGINT) AS n_points,
-       (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_per_day,
-       (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n AS intercept
+       CAST(k AS BIGINT) AS n_points,
+       {OLS_SLOPE_SQL} AS slope_per_day,
+       (sy - {OLS_SLOPE_SQL} * sx) / k AS intercept
 FROM sums
 ORDER BY event_type
 """
@@ -1572,11 +1576,12 @@ ORDER BY event_type
 @query("q178_groupwise_trend", _Q178_SQL)
 def q178_groupwise_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment trend: closed-form least-squares slope/intercept of
-    value over time from ONE aggregate of component sums (n, Σx, Σy,
+    value over time from ONE aggregate of component sums (k, Σx, Σy,
     Σxy, Σx²) — no iteration, no ML library, map-side combinable. The
-    component sums go through decimal(38,12) so the slope arithmetic
-    starts from order-independent inputs (builtin regr_slope accumulates
-    in float and is NOT cross-engine reproducible — why it's not used).
+    component sums are exact decimal sums (moment_sums), so the slope
+    arithmetic starts from order-independent inputs (builtin regr_slope
+    accumulates in float and is NOT cross-engine reproducible — why it's
+    not used).
     x is exact integer microseconds scaled to days in one double op."""
     e = table(spark, sf_dir, "events")
     x = (
@@ -1587,23 +1592,14 @@ def q178_groupwise_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         / 86400000000.0
     )
     pts = e.select("event_type", x.alias("x"), F.col("value").alias("y"))
-    dec = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")  # noqa: E731
-    sums = pts.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dec(F.col("x")).alias("sx"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x") * F.col("y")).alias("sxy"),
-        dec(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    sums = pts.groupBy("event_type").agg(*moment_sums("x", "y"))
+    slope = ols_slope()
     return (
         sums.select(
             "event_type",
-            F.col("n").cast("bigint").alias("n_points"),
+            F.col("k").cast("bigint").alias("n_points"),
             slope.alias("slope_per_day"),
-            ((F.col("sy") - slope * F.col("sx")) / F.col("n")).alias("intercept"),
+            ((F.col("sy") - slope * F.col("sx")) / F.col("k")).alias("intercept"),
         )
         .orderBy("event_type")
     )
@@ -1613,7 +1609,13 @@ def q178_groupwise_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q179: chi-square independence test (event_type x day-of-week).
 # ---------------------------------------------------------------------------
 
-_Q179_SQL = """
+# per-cell (o - e)^2 / e, laid out as it sits in the oracle text
+_Q179_TERM = (
+    "POW(obs.o - (m.row_total * c.col_total / t.t), 2)\n"
+    "                     / (m.row_total * c.col_total / t.t)\n"
+    "               "
+)
+_Q179_SQL = f"""
 WITH obs AS (
   SELECT event_type, DAYOFWEEK(ts) AS dow, CAST(COUNT(*) AS DOUBLE) AS o
   FROM events GROUP BY 1, 2
@@ -1623,9 +1625,7 @@ margins AS (
 ),
 cols AS (SELECT dow, SUM(o) AS col_total FROM obs GROUP BY dow),
 total AS (SELECT SUM(o) AS t FROM obs)
-SELECT CAST(SUM(CAST(POW(obs.o - (m.row_total * c.col_total / t.t), 2)
-                     / (m.row_total * c.col_total / t.t)
-                AS DECIMAL(38,12))) AS DOUBLE) AS chi2,
+SELECT {dsum_sql(_Q179_TERM, 12)} AS chi2,
        CAST((COUNT(DISTINCT obs.event_type) - 1)
             * (COUNT(DISTINCT obs.dow) - 1) AS BIGINT) AS dof
 FROM obs
@@ -1658,7 +1658,7 @@ def q179_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cols), on="dow")
         .crossJoin(F.broadcast(total))
         .agg(
-            F.sum(term.cast("decimal(38,12)")).cast("double").alias("chi2"),
+            dsum(term, 12).alias("chi2"),
             (
                 (F.countDistinct("event_type") - 1) * (F.countDistinct("dow") - 1)
             ).cast("bigint").alias("dof"),
@@ -1806,7 +1806,7 @@ def q183_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q184: user feature-store build (wide ML feature row per user).
 # ---------------------------------------------------------------------------
 
-_Q184_SQL = """
+_Q184_SQL = f"""
 WITH base AS (
   SELECT user_id,
          CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1814,7 +1814,7 @@ WITH base AS (
            AS n_purchases,
          CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS days_active,
          MEDIAN(value) AS median_value,
-         CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
+         {dsum_sql("value")} AS total_value
   FROM events GROUP BY user_id
 ),
 last_ev AS (
@@ -1882,10 +1882,10 @@ def q184_user_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q185: whale count — minimum customers covering half the revenue.
 # ---------------------------------------------------------------------------
 
-_Q185_SQL = """
+_Q185_SQL = f"""
 WITH cust AS (
   SELECT o_custkey,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+         {dsum_sql("o_totalprice")} AS revenue
   FROM orders GROUP BY o_custkey
 ),
 ranked AS (
@@ -1933,7 +1933,14 @@ def q185_whale_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q186: population stability index (PSI) between two periods.
 # ---------------------------------------------------------------------------
 
-_Q186_SQL = """
+# per-bin (p - q) * ln(p / q), laid out as it sits in the oracle text
+_Q186_TERM = (
+    "(CAST(c.c1 AS DOUBLE) / t.t1 - CAST(c.c2 AS DOUBLE) / t.t2)\n"
+    "                     * LN((CAST(c.c1 AS DOUBLE) / t.t1)\n"
+    "                          / (CAST(c.c2 AS DOUBLE) / t.t2))\n"
+    "               "
+)
+_Q186_SQL = f"""
 WITH binned AS (
   SELECT LEAST(FLOOR(value / 10.0), 9) AS bin,
          CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'p1' ELSE 'p2' END AS period
@@ -1946,10 +1953,7 @@ counts AS (
   FROM binned GROUP BY bin
 ),
 tot AS (SELECT SUM(c1) AS t1, SUM(c2) AS t2 FROM counts)
-SELECT CAST(SUM(CAST((CAST(c.c1 AS DOUBLE) / t.t1 - CAST(c.c2 AS DOUBLE) / t.t2)
-                     * LN((CAST(c.c1 AS DOUBLE) / t.t1)
-                          / (CAST(c.c2 AS DOUBLE) / t.t2))
-                AS DECIMAL(38,18))) AS DOUBLE) AS psi,
+SELECT {dsum_sql(_Q186_TERM, 18)} AS psi,
        CAST(COUNT(*) AS BIGINT) AS n_bins
 FROM counts c CROSS JOIN tot t
 """
@@ -1980,7 +1984,7 @@ def q186_population_stability_index(spark: SparkSession, sf_dir: str) -> DataFra
     p2 = F.col("c2").cast("double") / F.col("t2")
     term = (p1 - p2) * F.log(p1 / p2)
     return counts.crossJoin(F.broadcast(tot)).agg(
-        F.sum(term.cast("decimal(38,18)")).cast("double").alias("psi"),
+        dsum(term, 18).alias("psi"),
         F.count(F.lit(1)).alias("n_bins"),
     )
 
@@ -1989,7 +1993,7 @@ def q186_population_stability_index(spark: SparkSession, sf_dir: str) -> DataFra
 # q188: lag-k autocorrelation of the daily event series (seasonality).
 # ---------------------------------------------------------------------------
 
-_Q188_SQL = """
+_Q188_SQL = f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS DOUBLE) AS n
   FROM events GROUP BY 1
@@ -2000,16 +2004,10 @@ lagged AS (
 ),
 pairs AS (SELECT n, n_lag FROM lagged WHERE n_lag IS NOT NULL),
 sums AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS k,
-         CAST(SUM(CAST(n AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(n_lag AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(n * n_lag AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(n * n AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(n_lag * n_lag AS DECIMAL(38,12))) AS DOUBLE) AS syy
+  SELECT {moment_sums_sql("n", "n_lag", syy=True)}
   FROM pairs
 )
-SELECT (k * sxy - sx * sy)
-         / (SQRT(k * sxx - sx * sx) * SQRT(k * syy - sy * sy)) AS autocorr_7d,
+SELECT {PEARSON_R_SQL} AS autocorr_7d,
        CAST(k AS BIGINT) AS n_pairs
 FROM sums
 """
@@ -2031,21 +2029,9 @@ def q188_weekly_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lagged = daily.withColumn("n_lag", F.lag("n", 7).over(Window.orderBy("day")))
     pairs = lagged.filter(F.col("n_lag").isNotNull())
-    dec = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")  # noqa: E731
-    sums = pairs.agg(
-        F.count(F.lit(1)).cast("double").alias("k"),
-        dec(F.col("n")).alias("sx"),
-        dec(F.col("n_lag")).alias("sy"),
-        dec(F.col("n") * F.col("n_lag")).alias("sxy"),
-        dec(F.col("n") * F.col("n")).alias("sxx"),
-        dec(F.col("n_lag") * F.col("n_lag")).alias("syy"),
-    )
-    r = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.sqrt(F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * F.sqrt(F.col("k") * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
+    sums = pairs.agg(*moment_sums("n", "n_lag", syy=True))
     return sums.select(
-        r.alias("autocorr_7d"), F.col("k").cast("bigint").alias("n_pairs")
+        pearson_r().alias("autocorr_7d"), F.col("k").cast("bigint").alias("n_pairs")
     )
 
 
@@ -2098,10 +2084,10 @@ def q189_calendar_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q190: share-of-parent in a hierarchy (nation within region).
 # ---------------------------------------------------------------------------
 
-_Q190_SQL = """
+_Q190_SQL = f"""
 WITH nat AS (
   SELECT r.r_name AS region, n.n_name AS nation,
-         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+         {dsum_sql("o.o_totalprice")} AS revenue
   FROM region r
   JOIN nation n ON n.n_regionkey = r.r_regionkey
   JOIN customer c ON c.c_nationkey = n.n_nationkey
@@ -2143,8 +2129,8 @@ def q190_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
             "region",
             "nation",
             "revenue",
-            (F.col("revenue") / F.sum(F.col("revenue").cast("decimal(38,6)")).over(wr).cast("double")).alias("share_of_region"),
-            (F.col("revenue") / F.sum(F.col("revenue").cast("decimal(38,6)")).over(wall).cast("double")).alias("share_of_total"),
+            (F.col("revenue") / F.sum(dec("revenue")).over(wr).cast("double")).alias("share_of_region"),
+            (F.col("revenue") / F.sum(dec("revenue")).over(wall).cast("double")).alias("share_of_total"),
         )
         .orderBy("region", "nation")
     )

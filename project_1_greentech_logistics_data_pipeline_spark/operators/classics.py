@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.deterministic import (
     dsum,
+    dsum_sql,
     hilo_reconstruct,
     hilo_sum_exprs,
     pos_zero,
@@ -25,10 +26,10 @@ from ..registry import query, table
 # TPC-H Q3 shape: shipping-priority top-10 (selective join + agg + top-k)
 # ---------------------------------------------------------------------------
 
-_Q60_SQL = """
+_Q60_SQL = f"""
 SELECT
   l.l_orderkey,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS revenue,
   STRFTIME(o.o_orderdate, '%Y-%m-%d') AS orderdate,
   o.o_orderpriority
@@ -74,10 +75,10 @@ def q60_tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
 # TPC-H Q5 shape: revenue by nation through a 5-way star join
 # ---------------------------------------------------------------------------
 
-_Q61_SQL = """
+_Q61_SQL = f"""
 SELECT
   n.n_name,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS revenue
 FROM region r
 JOIN nation n ON n.n_regionkey = r.r_regionkey

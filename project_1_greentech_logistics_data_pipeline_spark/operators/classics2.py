@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum, pos_zero_col
+from ..functions.deterministic import davg, dsum, dsum_sql, pos_zero_col
 from ..registry import query, table
 
 
@@ -39,12 +39,12 @@ from ..registry import query, table
 # TPC-H Q7 shape: volume shipping between two nations
 # ---------------------------------------------------------------------------
 
-_Q82_SQL = """
+_Q82_SQL = f"""
 SELECT
   n1.n_name AS supp_nation,
   n2.n_name AS cust_nation,
   YEAR(l.l_shipdate) AS l_year,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS revenue
 FROM supplier s
 JOIN lineitem l ON s.s_suppkey = l.l_suppkey
@@ -111,13 +111,16 @@ def q82_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H Q8 shape: national market share within a region
 # ---------------------------------------------------------------------------
 
-_Q83_SQL = """
+_Q83_NAT_VOL = (
+    "CASE WHEN n1.n_name = 'NATION_8'\n"
+    "                     THEN l.l_extendedprice * (1 - l.l_discount)\n"
+    "                     ELSE 0.0 END"
+)
+_Q83_SQL = f"""
 SELECT
   YEAR(o.o_orderdate) AS o_year,
-  CAST(SUM(CAST(CASE WHEN n1.n_name = 'NATION_8'
-                     THEN l.l_extendedprice * (1 - l.l_discount)
-                     ELSE 0.0 END AS DECIMAL(38,6))) AS DOUBLE)
-    / CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql(_Q83_NAT_VOL)}
+    / {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS mkt_share
 FROM part p
 JOIN lineitem l ON p.p_partkey = l.l_partkey
@@ -191,13 +194,16 @@ def q83_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H Q9 shape: profit by supplier nation and year
 # ---------------------------------------------------------------------------
 
-_Q88_SQL = """
+_Q88_PROFIT = (
+    "l.l_extendedprice * (1 - l.l_discount)\n"
+    "                - 0.8 * p.p_retailprice * l.l_quantity\n"
+    "          "
+)
+_Q88_SQL = f"""
 SELECT
   n.n_name AS nation,
   YEAR(o.o_orderdate) AS o_year,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                - 0.8 * p.p_retailprice * l.l_quantity
-           AS DECIMAL(38,6))) AS DOUBLE) AS sum_profit
+  {dsum_sql(_Q88_PROFIT)} AS sum_profit
 FROM part p
 JOIN lineitem l ON p.p_partkey = l.l_partkey
 JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -246,11 +252,11 @@ def q88_tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H Q10 shape: returned-item reporting (top 20 customers by lost revenue)
 # ---------------------------------------------------------------------------
 
-_Q84_SQL = """
+_Q84_SQL = f"""
 SELECT
   c.c_custkey,
   c.c_name,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS revenue,
   c.c_acctbal,
   n.n_name
@@ -299,10 +305,10 @@ def q84_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H Q19 shape: disjunctive (OR-of-AND-blocks) join predicate
 # ---------------------------------------------------------------------------
 
-_Q85_SQL = """
+_Q85_SQL = f"""
 SELECT
   COUNT(*) AS n_lines,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS revenue
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
@@ -431,15 +437,15 @@ def q86_tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame
 # TPC-H Q22 shape: scalar-average subquery + anti-join + derived group key
 # ---------------------------------------------------------------------------
 
-_Q87_SQL = """
+_Q87_SQL = f"""
 SELECT
   RIGHT(c.c_name, 1) AS cntrycode,
   COUNT(*) AS numcust,
-  CAST(SUM(CAST(c.c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS totacctbal
+  {dsum_sql("c.c_acctbal")} AS totacctbal
 FROM customer c
 WHERE RIGHT(c.c_name, 1) IN ('1', '3', '5', '7', '9')
   AND c.c_acctbal > (
-    SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(38,6))) AS DOUBLE) / COUNT(c2.c_acctbal)
+    SELECT {dsum_sql("c2.c_acctbal")} / COUNT(c2.c_acctbal)
     FROM customer c2 WHERE c2.c_acctbal > 0.0)
   AND NOT EXISTS (
     SELECT 1 FROM orders o
@@ -473,13 +479,7 @@ def q87_tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFram
     # sf0.001 goes empty on unlucky draws — 5-of-10 keeps the Q22
     # substring-derived IN-filter shape with a result at every SF.
     codes = ("1", "3", "5", "7", "9")
-    avg_bal = (
-        c.filter(F.col("c_acctbal") > 0.0)
-        .agg(
-            (F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double")
-             / F.count("c_acctbal")).alias("avg_bal")
-        )
-    )
+    avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(davg("c_acctbal").alias("avg_bal"))
     orders = table(spark, sf_dir, "orders")
     # timestamp-preserving interval arithmetic (NOT add_months, which
     # returns DATE and truncates time-of-day — the oracle's
@@ -740,10 +740,10 @@ def q99_pandas_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Year-over-year growth: window functions OVER an aggregate (two altitudes)
 # ---------------------------------------------------------------------------
 
-_Q106_SQL = """
+_Q106_SQL = f"""
 WITH yearly AS (
   SELECT n.n_name AS nation, YEAR(o.o_orderdate) AS o_year,
-    CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+    {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
       AS revenue
   FROM customer c
   JOIN nation n ON c.c_nationkey = n.n_nationkey

@@ -18,8 +18,8 @@ with the four canonical shapes those modules did not yet declare:
   fact aggregates + correlated per-part aggregate threshold + join chain
   up to the dimensions, all from one lineitem shuffle.
 
-All aggregates use the decimal(38,6) deterministic-sum convention
-(functions/deterministic.py) so exact hash comparison vs DuckDB holds.
+All aggregates use the exact decimal-sum kit (functions/deterministic.py)
+so exact hash comparison vs DuckDB holds.
 """
 
 from __future__ import annotations
@@ -27,7 +27,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum
+from ..functions.deterministic import (
+    PEARSON_R_SQL,
+    dec,
+    dsum,
+    dsum_sql,
+    moment_sums,
+    moment_sums_sql,
+    pearson_r,
+)
 from ..registry import query, table
 
 
@@ -35,9 +43,9 @@ from ..registry import query, table
 # q126: TPC-H Q6 — forecast revenue change (scan + filter + global agg).
 # ---------------------------------------------------------------------------
 
-_Q126_SQL = """
+_Q126_SQL = f"""
 SELECT
-  CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(38,6))) AS DOUBLE)
+  {dsum_sql("l_extendedprice * l_discount")}
     AS revenue,
   COUNT(*) AS n_items
 FROM lineitem
@@ -127,11 +135,11 @@ def q127_tpch_q12_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q128: TPC-H Q15 — top supplier by quarterly revenue.
 # ---------------------------------------------------------------------------
 
-_Q128_SQL = """
+_Q128_SQL = f"""
 WITH revenue AS (
   SELECT
     l_suppkey AS supplier_no,
-    CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+    {dsum_sql("l_extendedprice * (1 - l_discount)")}
       AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -152,7 +160,7 @@ def q128_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); the global MAX is a 1-row aggregate of THAT view, broadcast
     into an equality filter — the decorrelated form that never rescans
     lineitem. Ties are kept, as the spec requires. Revenue equality is
-    exact because both sides sum in decimal(38,6)."""
+    exact because both sides sum in exact decimals."""
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
@@ -174,15 +182,15 @@ def q128_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q129: TPC-H Q20 shape — dominant suppliers of red parts.
 # ---------------------------------------------------------------------------
 
-_Q129_SQL = """
+_Q129_SQL = f"""
 WITH part_totals AS (
   SELECT l_partkey,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS total_qty
+         {dsum_sql("l_quantity")} AS total_qty
   FROM lineitem GROUP BY l_partkey
 ),
 supplier_part AS (
   SELECT l_partkey, l_suppkey,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sup_qty
+         {dsum_sql("l_quantity")} AS sup_qty
   FROM lineitem GROUP BY l_partkey, l_suppkey
 ),
 dominant AS (
@@ -216,8 +224,6 @@ def q129_tpch_q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFra
     shipped' predicate is vacuous on this testdata — no supplier reaches
     50% at any sf — so the threshold is the always-defined per-part
     argmax, the same correlated-aggregate shape.)"""
-    from pyspark.sql import Window
-
     li = table(spark, sf_dir, "lineitem")
     sp = (
         li.groupBy("l_partkey", "l_suppkey")
@@ -228,7 +234,7 @@ def q129_tpch_q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFra
         "l_partkey",
         "l_suppkey",
         "sup_qty",
-        F.sum(F.col("sup_qty").cast("decimal(38,6)")).over(wp).cast("double").alias("total_qty"),
+        F.sum(dec("sup_qty")).over(wp).cast("double").alias("total_qty"),
         F.max("sup_qty").over(wp).alias("max_qty"),
     )
     red = table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
@@ -251,25 +257,19 @@ def q129_tpch_q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFra
 # q197: discount-quantity elasticity proxy per brand.
 # ---------------------------------------------------------------------------
 
-_Q197_SQL = """
+_Q197_SQL = f"""
 WITH joined AS (
   SELECT p.p_brand, l.l_discount AS x, l.l_quantity AS y
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 ),
 sums AS (
   SELECT p_brand,
-         CAST(COUNT(*) AS DOUBLE) AS k,
-         CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
+         {moment_sums_sql("x", "y", syy=True)}
   FROM joined GROUP BY p_brand
 )
 SELECT p_brand,
        CAST(k AS BIGINT) AS n_lines,
-       (k * sxy - sx * sy)
-         / (SQRT(k * sxx - sx * sx) * SQRT(k * syy - sy * sy)) AS discount_qty_corr
+       {PEARSON_R_SQL} AS discount_qty_corr
 FROM sums
 ORDER BY p_brand
 """
@@ -290,23 +290,11 @@ def q197_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey")).select(
         "p_brand", F.col("l_discount").alias("x"), F.col("l_quantity").alias("y")
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")  # noqa: E731
-    sums = joined.groupBy("p_brand").agg(
-        F.count(F.lit(1)).cast("double").alias("k"),
-        dec(F.col("x")).alias("sx"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x") * F.col("y")).alias("sxy"),
-        dec(F.col("x") * F.col("x")).alias("sxx"),
-        dec(F.col("y") * F.col("y")).alias("syy"),
-    )
-    r = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.sqrt(F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * F.sqrt(F.col("k") * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
+    sums = joined.groupBy("p_brand").agg(*moment_sums("x", "y", syy=True))
     return sums.select(
         "p_brand",
         F.col("k").cast("bigint").alias("n_lines"),
-        r.alias("discount_qty_corr"),
+        pearson_r().alias("discount_qty_corr"),
     ).orderBy("p_brand")
 
 
@@ -314,12 +302,12 @@ def q197_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q198: RFM segmentation (recency/frequency/monetary quintile codes).
 # ---------------------------------------------------------------------------
 
-_Q198_SQL = """
+_Q198_SQL = f"""
 WITH cust AS (
   SELECT o_custkey,
          MAX(o_orderdate) AS last_order,
          CAST(COUNT(*) AS BIGINT) AS frequency,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS monetary
+         {dsum_sql("o_totalprice")} AS monetary
   FROM orders GROUP BY o_custkey
 ),
 scored AS (

@@ -23,6 +23,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import dsum, dsum_sql
 from ..registry import query, table
 
 
@@ -102,14 +103,14 @@ def merge_frames(
 # both engines with no rounding-mode exposure.
 # ---------------------------------------------------------------------------
 
-_Q115_SQL = """
+_Q115_SQL = f"""
 WITH tgt AS (
   SELECT c_custkey, c_name, c_acctbal FROM customer WHERE c_mktsegment = 'BUILDING'
 ),
 src AS (
   SELECT o_custkey,
          COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+         {dsum_sql("o_totalprice")} AS total
   FROM orders GROUP BY o_custkey
 ),
 updated AS (
@@ -161,8 +162,6 @@ def q115_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     the check is independent. Scale shape: one shuffle on the merge key
     (source pre-aggregated, so no multi-match); with a small source the
     outer join broadcasts."""
-    from ..functions.deterministic import dsum
-
     tgt = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")

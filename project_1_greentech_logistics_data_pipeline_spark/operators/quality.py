@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import dec_sql, dsum
 from ..registry import query, table
 from .text import DOC_FP_SQL, doc_fp_expr, tokens_expr
 
@@ -811,7 +812,13 @@ def q166_hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q175: character-entropy quality scoring per document.
 # ---------------------------------------------------------------------------
 
-_Q175_SQL = """
+# per-character p * ln(p), laid out as it sits in the oracle text
+_Q175_PLNP = (
+    "(CAST(cc.c AS DOUBLE) / tot.t)\n"
+    "                      * LN(CAST(cc.c AS DOUBLE) / tot.t)\n"
+    "                "
+)
+_Q175_SQL = f"""
 WITH chars AS (
   SELECT doc_id, UNNEST(STRING_SPLIT(text, '')) AS ch FROM documents
 ),
@@ -820,9 +827,7 @@ tot AS (SELECT doc_id, SUM(c) AS t FROM cc GROUP BY 1)
 SELECT cc.doc_id,
        CAST(tot.t AS BIGINT) AS n_chars,
        CAST(COUNT(*) AS BIGINT) AS n_distinct_chars,
-       CAST(-SUM(CAST((CAST(cc.c AS DOUBLE) / tot.t)
-                      * LN(CAST(cc.c AS DOUBLE) / tot.t)
-                 AS DECIMAL(38,18))) AS DOUBLE) AS char_entropy_nats
+       CAST(-SUM({dec_sql(_Q175_PLNP, 18)}) AS DOUBLE) AS char_entropy_nats
 FROM cc JOIN tot USING (doc_id)
 GROUP BY cc.doc_id, tot.t
 ORDER BY cc.doc_id
@@ -835,7 +840,7 @@ def q175_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector that catches what token-level repetition (q130) can't:
     single-character floods, base64 blobs (too HIGH), padded whitespace
     (too LOW). One explode->count pass shuffled by doc_id; each p*ln(p)
-    term rounds to decimal(38,18) before the per-doc sum (the q161
+    term rounds to the scale-18 exact type before the per-doc sum (the q161
     discipline), so the entropy is order-independent and oracle-exact.
 
     Shape note (measured r3): a shuffle-free row-local variant — char
@@ -858,9 +863,7 @@ def q175_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "t")
         .agg(
             F.count(F.lit(1)).alias("n_distinct_chars"),
-            (-F.sum((p * F.log(p)).cast("decimal(38,18)")).cast("double")).alias(
-                "char_entropy_nats"
-            ),
+            (-dsum(p * F.log(p), 18)).alias("char_entropy_nats"),
         )
         .select(
             "doc_id",

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum
+from ..functions.deterministic import dec, dec_sql, dsum, dsum_sql
 from ..registry import query, table
 from ..session import tune
 
@@ -37,17 +37,17 @@ from ..session import tune
 # Generalizes the reference's filter/derive/route core (Glue_job.py:51-95).
 # ---------------------------------------------------------------------------
 
-_Q1_SQL = """
+_Q1_SQL = f"""
 SELECT
   l_returnflag,
   l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_base_price,
-  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS sum_disc_price,
-  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(38,6))) AS DOUBLE) AS sum_charge,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS avg_price,
-  CAST(SUM(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS avg_disc,
+  {dsum_sql("l_quantity")} AS sum_qty,
+  {dsum_sql("l_extendedprice")} AS sum_base_price,
+  {dsum_sql("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+  {dsum_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
+  {dsum_sql("l_quantity")} / COUNT(*) AS avg_qty,
+  {dsum_sql("l_extendedprice")} / COUNT(*) AS avg_price,
+  {dsum_sql("l_discount")} / COUNT(*) AS avg_disc,
   COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -156,12 +156,12 @@ def q03_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Joins (SURVEY §2.3 declared surface; none exist in the reference)
 # ---------------------------------------------------------------------------
 
-_Q04_SQL = """
+_Q04_SQL = f"""
 SELECT
   r.r_name,
   n.n_name,
   COUNT(*) AS n_orders,
-  CAST(SUM(CAST(o.o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_revenue
+  {dsum_sql("o.o_totalprice")} AS total_revenue
 FROM orders o
 JOIN customer c ON o.o_custkey = c.c_custkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -194,12 +194,12 @@ def q04_join_multiway_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q05_SQL = """
+_Q05_SQL = f"""
 SELECT
   c.c_custkey,
   c.c_name,
   COUNT(o.o_orderkey) AS n_orders,
-  CAST(COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS total_spent
+  CAST(COALESCE(SUM({dec_sql("o.o_totalprice")}), 0) AS DOUBLE) AS total_spent
 FROM customer c
 LEFT JOIN orders o ON o.o_custkey = c.c_custkey
 GROUP BY c.c_custkey, c.c_name
@@ -215,7 +215,7 @@ def q05_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_name")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum(F.col("o_totalprice").cast("decimal(38,6)")), F.lit(0))
+            F.coalesce(F.sum(dec("o_totalprice")), F.lit(0))
             .cast("double")
             .alias("total_spent"),
         )
@@ -307,12 +307,12 @@ def q08b_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Aggregations (SURVEY §2.4 declared surface; reference only has count())
 # ---------------------------------------------------------------------------
 
-_Q09_SQL = """
+_Q09_SQL = f"""
 SELECT
   o_orderpriority,
   COUNT(*) AS n_orders,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) / COUNT(o_totalprice) AS avg_price,
+  {dsum_sql("o_totalprice")} AS sum_price,
+  {dsum_sql("o_totalprice")} / COUNT(o_totalprice) AS avg_price,
   MIN(o_totalprice) AS min_price,
   MAX(o_totalprice) AS max_price
 FROM orders
@@ -365,11 +365,11 @@ def q10_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q11_SQL = """
+_Q11_SQL = f"""
 SELECT
   l_returnflag,
   l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
+  {dsum_sql("l_quantity")} AS sum_qty,
   COUNT(*) AS n_rows
 FROM lineitem
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
@@ -384,12 +384,12 @@ def q11_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q12_SQL = """
+_Q12_SQL = f"""
 SELECT
   o_orderstatus,
   o_orderpriority,
   COUNT(*) AS n_orders,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
+  {dsum_sql("o_totalprice")} AS sum_price
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
@@ -465,10 +465,10 @@ def q14_window_lag_lead_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q15_SQL = """
+_Q15_SQL = f"""
 SELECT
   user_id, event_id,
-  CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER (
+  CAST(SUM({dec_sql("value")}) OVER (
     PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
   ) AS DOUBLE) AS running_value,
@@ -493,10 +493,7 @@ def q15_window_running_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "user_id",
         "event_id",
-        F.sum(F.col("value").cast("decimal(38,6)"))
-        .over(w_run)
-        .cast("double")
-        .alias("running_value"),
+        F.sum(dec("value")).over(w_run).cast("double").alias("running_value"),
         F.count("*").over(w_frame).cast("bigint").alias("n_in_frame"),
     )
 
@@ -719,13 +716,13 @@ def q107_union_by_name_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Null-safe equality join (<=> / IS NOT DISTINCT FROM)
 # ---------------------------------------------------------------------------
 
-_Q108_SQL = """
+_Q108_SQL = f"""
 WITH a AS (
   SELECT NULLIF(o_orderpriority, '5-LOW') AS k, COUNT(*) AS n_orders
   FROM orders GROUP BY 1
 ), b AS (
   SELECT NULLIF(o_orderpriority, '5-LOW') AS k,
-    CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+    {dsum_sql("o_totalprice")} AS total
   FROM orders GROUP BY 1
 )
 SELECT a.k, a.n_orders, b.total
@@ -745,7 +742,7 @@ def q108_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.nullif("o_orderpriority", F.lit("5-LOW"))
     a = o.groupBy(k.alias("k")).agg(F.count("*").alias("n_orders"))
     b = o.groupBy(k.alias("k")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("total")
+        dsum("o_totalprice").alias("total")
     )
     bb = b.withColumnRenamed("k", "bk")
     return (

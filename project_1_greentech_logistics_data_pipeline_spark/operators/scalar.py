@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import dsum_sql
 from ..registry import query, table
 
 
@@ -440,10 +441,10 @@ def q101_map_transformations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parameterized SQL (named binds) — the injection-safe SQL entry point
 # ---------------------------------------------------------------------------
 
-_Q113_SQL = """
+_Q113_SQL = f"""
 SELECT o_orderpriority,
   COUNT(*) AS n_orders,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+  {dsum_sql("o_totalprice")} AS total
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_totalprice > 150000.0
 GROUP BY o_orderpriority
@@ -460,10 +461,10 @@ def q113_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlines the same values."""
     table(spark, sf_dir, "orders").createOrReplaceTempView("q113_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
           COUNT(*) AS n_orders,
-          CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+          {dsum_sql("o_totalprice")} AS total
         FROM q113_orders
         WHERE o_orderdate >= :cutoff AND o_totalprice > :min_price
         GROUP BY o_orderpriority

@@ -53,6 +53,30 @@ FROM ranked WHERE rk <= {TOP_K}
 """
 
 
+def _top_k(scored: DataFrame) -> DataFrame:
+    """Per-query top-TOP_K of ``(query_id, neighbor_id, cos_raw)`` by
+    descending cosine, ties on neighbor_id: the shared tail of q48, q49
+    and q74. pos_zero: a near-orthogonal neighbor's tiny negative cosine
+    rounds to zero with opposite signs on the two engines (q122 r4
+    signed-zero class)."""
+    w = W.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
+    return (
+        scored.select(
+            "query_id",
+            "neighbor_id",
+            "cos_raw",
+            F.row_number().over(w).cast("bigint").alias("rk"),
+        )
+        .filter(F.col("rk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            pos_zero_col(F.round("cos_raw", 6)).cast("double").alias("cosine"),
+            "rk",
+        )
+    )
+
+
 @query("q48_knn_bruteforce", _Q48_SQL)
 def q48_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for a small query set: broadcast the
@@ -69,25 +93,7 @@ def q48_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            "cos_raw",
-            F.row_number().over(w).cast("bigint").alias("rk"),
-        )
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            # pos_zero: a near-orthogonal neighbor's tiny negative cosine
-            # rounds to zero with opposite signs on the two engines
-            # (q122 r4 signed-zero class).
-            pos_zero_col(F.round("cos_raw", 6)).cast("double").alias("cosine"),
-            "rk",
-        )
-    )
+    return _top_k(scored)
 
 
 # --- approximate: random-hyperplane LSH buckets -----------------------------
@@ -98,7 +104,6 @@ def q48_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # clustered embeddings raise N_PLANES (coverage drops, locality carries
 # recall); the knob trades candidates-scored per query against recall.
 N_PLANES = 5
-N_PROBE_BITS = 2      # multi-probe: flip up to 2 bits -> 1+5+10 = 16 probes
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -133,7 +138,7 @@ def q49_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Corpus vectors hash to one sign-pattern bucket each (a linear scan);
     each query probes its own bucket plus all buckets within hamming distance
-    2 (37 probes over 256 buckets ~ 14% of the corpus scored per query).
+    2 (16 probes over 32 buckets ~ 50% of the corpus scored per query).
     Candidates join on bucket id — an equi-join, so at 100 TB this is one
     shuffle by bucket instead of a full cross product. Recall vs the exact
     q48 baseline is asserted in tests/test_similarity.py.
@@ -169,22 +174,7 @@ def q49_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            "cos_raw",
-            F.row_number().over(w).cast("bigint").alias("rk"),
-        )
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).cast("double").alias("cosine"),
-            "rk",
-        )
-    )
+    return _top_k(scored)
 
 
 # All three aggregation stages use the split-integer (hi/lo) long-sum
@@ -448,22 +438,7 @@ def q74_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            "cos_raw",
-            F.row_number().over(w).cast("bigint").alias("rk"),
-        )
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).cast("double").alias("cosine"),
-            "rk",
-        )
-    )
+    return _top_k(scored)
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum
+from ..functions.deterministic import dsum, dsum_sql
 from ..registry import query, table
 
 
@@ -52,13 +52,13 @@ def salted_join(
 # map-side, so the extra shuffle column costs nothing downstream.
 # ---------------------------------------------------------------------------
 
-_Q116_SQL = """
+_Q116_SQL = f"""
 WITH dim AS (
   SELECT DISTINCT event_type, LENGTH(event_type) AS type_weight FROM events
 )
 SELECT e.event_type,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(e.value * d.type_weight AS DECIMAL(38,6))) AS DOUBLE)
+       {dsum_sql("e.value * d.type_weight")}
          AS weighted_value,
        COUNT(DISTINCT e.user_id) AS n_users
 FROM events e JOIN dim d ON e.event_type = d.event_type

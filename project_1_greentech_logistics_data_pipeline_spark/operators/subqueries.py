@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import DEC, davg, dsum
+from ..functions.deterministic import davg, dec, dec_sql, dsum, dsum_sql
 from ..registry import query, table
 
 
@@ -28,14 +28,14 @@ from ..registry import query, table
 # Correlated scalar subquery (TPC-H Q17 shape): small-quantity revenue
 # ---------------------------------------------------------------------------
 
-_Q62_SQL = """
+_Q62_SQL = f"""
 SELECT
-  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / 7.0 AS avg_yearly
+  {dsum_sql("l.l_extendedprice")} / 7.0 AS avg_yearly
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
 WHERE p.p_brand = 'Brand#23'
   AND l.l_quantity < (
-    SELECT 0.2 * (CAST(SUM(CAST(l2.l_quantity AS DECIMAL(38,6))) AS DOUBLE)
+    SELECT 0.2 * ({dsum_sql("l2.l_quantity")}
                   / COUNT(l2.l_quantity))
     FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
 """
@@ -68,13 +68,13 @@ def q62_correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFram
 # HAVING + join-back (TPC-H Q18 shape): large-volume orders
 # ---------------------------------------------------------------------------
 
-_Q63_SQL = """
+_Q63_SQL = f"""
 WITH big AS (
   SELECT l_orderkey,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
+         {dsum_sql("l_quantity")} AS sum_qty
   FROM lineitem
   GROUP BY l_orderkey
-  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) > 300.0
+  HAVING {dsum_sql("l_quantity")} > 300.0
 )
 SELECT c.c_name, o.o_orderkey,
        STRFTIME(o.o_orderdate, '%Y-%m-%d') AS orderdate,
@@ -116,10 +116,10 @@ def q63_having_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFram
 # Scalar-subquery threshold (TPC-H Q11 shape): above-share nations
 # ---------------------------------------------------------------------------
 
-_Q64_SQL = """
+_Q64_SQL = f"""
 WITH nat_rev AS (
   SELECT n.n_name,
-         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+         {dsum_sql("o.o_totalprice")} AS revenue
   FROM orders o
   JOIN customer c ON o.o_custkey = c.c_custkey
   JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -128,7 +128,7 @@ WITH nat_rev AS (
 SELECT n_name, revenue
 FROM nat_rev
 WHERE revenue > (
-  SELECT 0.04 * CAST(SUM(CAST(revenue AS DECIMAL(38,6))) AS DOUBLE)
+  SELECT 0.04 * {dsum_sql("revenue")}
   FROM nat_rev)
 """
 
@@ -199,12 +199,12 @@ def q65_notin_anti_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Conditional aggregation (TPC-H Q14 shape): promo revenue share
 # ---------------------------------------------------------------------------
 
-_Q66_SQL = """
+_Q66_SQL = f"""
 SELECT
   100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                 THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))
-                 ELSE CAST(0 AS DECIMAL(38,6)) END) AS DOUBLE)
-        / CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE)
+                 THEN {dec_sql("l.l_extendedprice * (1 - l.l_discount)")}
+                 ELSE {dec_sql("0")} END) AS DOUBLE)
+        / {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")}
     AS promo_revenue
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
@@ -222,8 +222,8 @@ def q66_conditional_agg_promo_share(spark: SparkSession, sf_dir: str) -> DataFra
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(DEC))
+    rev = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(dec(F.lit(0)))
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
@@ -273,10 +273,10 @@ def q67_exists_group_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RANGE window frame: 30-minute trailing per-user event stats
 # ---------------------------------------------------------------------------
 
-_Q68_SQL = """
+_Q68_SQL = f"""
 SELECT event_id, user_id,
   COUNT(*) OVER w AS n_30m,
-  CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sum_30m
+  CAST(SUM({dec_sql("value")}) OVER w AS DOUBLE) AS sum_30m
 FROM events
 WINDOW w AS (
   PARTITION BY user_id ORDER BY epoch_us(ts)
@@ -302,7 +302,7 @@ def q68_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.count("*").over(w).alias("n_30m"),
-        F.sum(F.col("value").cast(DEC)).over(w).cast("double").alias("sum_30m"),
+        F.sum(dec("value")).over(w).cast("double").alias("sum_30m"),
     )
 
 
@@ -380,7 +380,7 @@ def q70_groupmin_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sliding event-time windows (batch twin of streaming sliding agg)
 # ---------------------------------------------------------------------------
 
-_Q71_SQL = """
+_Q71_SQL = f"""
 WITH contrib AS (
   SELECT TIME_BUCKET(INTERVAL '5 minutes', ts) AS ws, value FROM events
   UNION ALL
@@ -389,7 +389,7 @@ WITH contrib AS (
 )
 SELECT STRFTIME(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       {dsum_sql("value")} AS sum_value
 FROM contrib
 GROUP BY ws
 """

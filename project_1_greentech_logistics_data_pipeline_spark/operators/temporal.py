@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dsum
+from ..functions.deterministic import dec, dec_sql, dsum, dsum_sql
 from ..registry import query, table
 
 
@@ -121,12 +121,12 @@ _BANDS = [
     ("high", 75.0, 101.0),
 ]
 
-_Q31_SQL = """
+_Q31_SQL = f"""
 WITH bands(band, lo, hi) AS (
   VALUES ('low', 0.0, 25.0), ('mid', 25.0, 75.0), ('high', 75.0, 101.0)
 )
 SELECT b.band, COUNT(*) AS n_events,
-       CAST(SUM(CAST(e.value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       {dsum_sql("e.value")} AS sum_value
 FROM events e
 JOIN bands b ON e.value >= b.lo AND e.value < b.hi
 GROUP BY b.band
@@ -156,12 +156,12 @@ def q31_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tumbling window aggregation (batch form of the streaming windowed agg)
 # ---------------------------------------------------------------------------
 
-_Q32_SQL = """
+_Q32_SQL = f"""
 SELECT
   STRFTIME(TIME_BUCKET(INTERVAL '5 minutes', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
   event_type,
   COUNT(*) AS n_events,
-  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+  {dsum_sql("value")} AS sum_value
 FROM events
 GROUP BY 1, 2
 """
@@ -286,11 +286,11 @@ def q34_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-aggregate, not from raw
 # ---------------------------------------------------------------------------
 
-_Q94_SQL = """
+_Q94_SQL = f"""
 WITH hourly AS (
   SELECT DATE_TRUNC('hour', ts) AS bucket_ts,
     COUNT(*) AS n_events,
-    SUM(CAST(value AS DECIMAL(38,6))) AS v
+    SUM({dec_sql("value")}) AS v
   FROM events GROUP BY 1
 ), daily AS (
   SELECT DATE_TRUNC('day', bucket_ts) AS bucket_ts,
@@ -316,7 +316,7 @@ def q94_hierarchical_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-of-two-aggregations plan was measured to scan raw twice (Spark
     does not dedupe the shared subtree under union); the two-level
     rollup-from-pre-aggregate form is what you'd *materialize* in a real
-    hypertable — as a single query, Expand wins. Sums stay DECIMAL(38,6)
+    hypertable — as a single query, Expand wins. Sums stay exact decimals
     until the final projection, so the oracle's rollup-from-hourly plan is
     value-identical (decimal addition is associative; double's is not)."""
     e = table(spark, sf_dir, "events")
@@ -329,7 +329,7 @@ def q94_hierarchical_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed.groupingSets([["h"], ["d"]], "h", "d")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)")).alias("v"),
+            F.sum(dec("value")).alias("v"),
             F.grouping("h").alias("g_h"),
         )
         .select(

@@ -17,9 +17,17 @@ in one double op, identically shaped on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import (
+    OLS_SLOPE_SQL,
+    dec,
+    dec_sql,
+    moment_sums,
+    moment_sums_sql,
+    ols_slope,
+)
 from ..registry import query, table
 from .text import exchanged_docs, tokens_expr
 
@@ -205,6 +213,18 @@ def q125_token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _LM_K = 0.5  # add-k smoothing
+# add-k bigram log-probability over (c_ab, c_a, v), rounded to the scale-18
+# exact type before any per-doc sum; shared by q161 and _lm_tier_sql (the
+# trailing newline and indent are the oracle text's own layout)
+_LOGP_SQL = dec_sql(
+    f"LN((bc.c_ab + {_LM_K}) / (uc.c_a + {_LM_K} * vc.v))\n" + " " * 13, 18
+)
+
+
+def _logp() -> Column:
+    """Spark twin of ``_LOGP_SQL``."""
+    p = (F.col("c_ab") + _LM_K) / (F.col("c_a") + _LM_K * F.col("v"))
+    return dec(F.log(p), 18)
 
 
 _Q161_SQL = f"""
@@ -222,8 +242,7 @@ uni_c AS (SELECT a, COUNT(*) AS c_a FROM bi GROUP BY a),
 vocab AS (SELECT COUNT(DISTINCT b) AS v FROM bi),
 lm AS (
   SELECT bc.a, bc.b,
-         CAST(LN((bc.c_ab + {_LM_K}) / (uc.c_a + {_LM_K} * vc.v))
-              AS DECIMAL(38,18)) AS logp
+         {_LOGP_SQL} AS logp
   FROM big_c bc JOIN uni_c uc USING (a) CROSS JOIN vocab vc
 )
 SELECT d.doc_id,
@@ -249,7 +268,7 @@ def q161_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized side never shuffles for the join (here vocab^2 ~ 1e3;
     at 100 TB a mincount cut keeps it broadcastable — CCNet's own LMs
     are pruned the same way). Determinism: each ln() rounds to
-    decimal(38,18) BEFORE the per-doc sum, so the mean is
+    the scale-18 exact type BEFORE the per-doc sum, so the mean is
     order-independent and bit-identical on both engines."""
     d = table(spark, sf_dir, "documents")
     t = tokens_expr("text")
@@ -272,9 +291,7 @@ def q161_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a",
             "b",
-            F.log(
-                (F.col("c_ab") + _LM_K) / (F.col("c_a") + _LM_K * F.col("v"))
-            ).cast("decimal(38,18)").alias("logp"),
+            _logp().alias("logp"),
         )
     )
     return (
@@ -302,7 +319,7 @@ def q161_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counts group by (lang, a, b)), and the output carries the tier ledger.
 #
 # Determinism: the only float is avg_neg_logp, q161's pinned construction
-# (each ln() rounds to decimal(38,18) BEFORE the order-free per-doc sum,
+# (each ln() rounds to scale-18 decimal BEFORE the order-free per-doc sum,
 # so the mean agrees across engines to the driver's round-9 grain; the
 # LAST-ULP of the final decimal->double cast + /n division is engine-
 # dependent, measured on a hand corpus). The tier ORDER BY therefore uses
@@ -368,8 +385,7 @@ uni_c AS (SELECT lang, a, COUNT(*) AS c_a FROM bi GROUP BY lang, a),
 vocab AS (SELECT lang, COUNT(DISTINCT b) AS v FROM bi GROUP BY lang),
 lm AS (
   SELECT bc.lang AS lang, bc.a AS a, bc.b AS b,
-         CAST(LN((bc.c_ab + {_LM_K}) / (uc.c_a + {_LM_K} * vc.v))
-              AS DECIMAL(38,18)) AS logp
+         {_LOGP_SQL} AS logp
   FROM big_c bc
   JOIN uni_c uc ON uc.lang = bc.lang AND uc.a = bc.a
   JOIN vocab vc ON vc.lang = bc.lang
@@ -420,9 +436,7 @@ def _lm_tier_df(src: DataFrame) -> DataFrame:
             "lang",
             "a",
             "b",
-            F.log((F.col("c_ab") + _LM_K) / (F.col("c_a") + _LM_K * F.col("v")))
-            .cast("decimal(38,18)")
-            .alias("logp"),
+            _logp().alias("logp"),
         )
     )
     scored = (
@@ -665,7 +679,7 @@ def q177_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q193: Zipf power-law fit over the token frequency distribution.
 # ---------------------------------------------------------------------------
 
-_Q193_SQL = """
+_Q193_SQL = f"""
 WITH freq AS (
   SELECT tok, CAST(COUNT(*) AS DOUBLE) AS f
   FROM (SELECT UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
@@ -678,14 +692,10 @@ ranked AS (
   FROM freq
 ),
 sums AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS k,
-         CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx
+  SELECT {moment_sums_sql("x", "y")}
   FROM ranked
 )
-SELECT (k * sxy - sx * sy) / (k * sxx - sx * sx) AS zipf_exponent,
+SELECT {OLS_SLOPE_SQL} AS zipf_exponent,
        CAST(k AS BIGINT) AS vocab_size
 FROM sums
 """
@@ -711,17 +721,7 @@ def q193_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.row_number().over(w).cast("double")).alias("x"),
         F.log("f").alias("y"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")  # noqa: E731
-    sums = ranked.agg(
-        F.count(F.lit(1)).cast("double").alias("k"),
-        dec(F.col("x")).alias("sx"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x") * F.col("y")).alias("sxy"),
-        dec(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    sums = ranked.agg(*moment_sums("x", "y"))
     return sums.select(
-        slope.alias("zipf_exponent"), F.col("k").cast("bigint").alias("vocab_size")
+        ols_slope().alias("zipf_exponent"), F.col("k").cast("bigint").alias("vocab_size")
     )

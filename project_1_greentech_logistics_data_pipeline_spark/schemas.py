@@ -53,25 +53,6 @@ REASON_MISSING_LON = "missing_lon"
 
 PIPELINE_NAME = "green_tech_raw_to_curated_job"  # Glue/Glue_job.py:139
 
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("layer", T.StringType(), False),
-        T.StructField("record_count", T.LongType(), False),
-        T.StructField("pipeline_name", T.StringType(), False),
-        T.StructField("run_timestamp", T.TimestampType(), False),
-    ]
-)
-
-# --- multimodal column (north-star extension, SURVEY §2.10) ----------------
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
 # --- driver testdata (FIXTURES.md §B) --------------------------------------
 
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {

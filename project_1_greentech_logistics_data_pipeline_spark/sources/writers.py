@@ -17,6 +17,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import dec
+
 
 def write_table(
     df: DataFrame,
@@ -161,7 +163,7 @@ def incremental_agg(
     Returns the new state DataFrame (keys, cnt bigint, total decimal)."""
     partial = batch.groupBy(*keys).agg(
         F.count("*").alias("cnt"),
-        F.sum(F.col(value_col).cast("decimal(38,6)")).alias("total"),
+        F.sum(dec(value_col)).alias("total"),
     )
     prev = _read_committed(spark, state_path, "parquet")
     if prev is not None:

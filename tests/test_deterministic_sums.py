@@ -18,6 +18,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from project_1_greentech_logistics_data_pipeline_spark.functions.deterministic import (
+    dsum,
+    dsum_sql,
     hilo_reconstruct,
     hilo_sum_exprs,
 )
@@ -137,6 +139,57 @@ def test_hilo_sum_magnitude_guard_both_engines(spark):
 
     # just under the bound is exact, not trapped
     assert _duck_hilo([two53 - 1.0]) == two53 - 1.0
+
+
+# 2-decimal values (as the testdata's numeric columns carry), in cents,
+# bounded per scale so that |v| * 10^scale stays below 2^50
+_cents = {6: 10**11, 12: 10**5}
+
+
+@pytest.mark.parametrize("scale", [6, 12])
+@settings(max_examples=12, deadline=None)
+@given(data=st.data())
+def test_dsum_cross_engine_exact(spark, scale, data):
+    """dsum (Spark) and dsum_sql (DuckDB) return the bit-identical double
+    at any partitioning, and it is the exact sum rounded once.
+
+    PRECONDITION (the kit's documented input domain): every value has at
+    most 2 decimals, and |v| * 10^scale < 2^50. Inside it both engines'
+    double -> decimal(38,s) casts are exact, so the decimal sums are equal
+    and the single decimal -> double cast decides the result. Scale ties
+    (a value with more than ``scale`` decimals ending in 5) are out of
+    scope: the two engines' double -> decimal casts round them
+    differently (README, "Determinism against the oracle")."""
+    from fractions import Fraction
+    import struct
+
+    bound = _cents[scale]
+    cents = data.draw(
+        st.lists(
+            st.one_of(st.none(), st.integers(-bound, bound)), min_size=1, max_size=40
+        )
+    )
+    values = [None if c is None else c / 100 for c in cents]
+    present = [Fraction(c, 100) for c in cents if c is not None]
+    exact = float(sum(present)) if present else None
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in values])
+    duck = con.execute(f"SELECT {dsum_sql('v', scale)} FROM t").fetchone()[0]
+
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    sparks = [
+        df.repartition(n).agg(dsum("v", scale).alias("s")).collect()[0]["s"]
+        for n in (1, 3, 8)
+    ]
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    assert {bits(x) for x in sparks + [duck]} == {bits(exact)}, (
+        values, sparks, duck, exact
+    )
 
 
 def test_neg_sample_predicate_overflow_safe(spark):
