@@ -22,6 +22,7 @@ from ..functions.deterministic import (
     OLS_SLOPE_SQL,
     PEARSON_R_SQL,
     dec,
+    dec_sql,
     dsum,
     dsum_sql,
     hilo_reconstruct,
@@ -1659,8 +1660,12 @@ def q179_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(total))
         .agg(
             dsum(term, 12).alias("chi2"),
+            # set sizes, not two countDistincts: those plan an Expand whose
+            # group order follows expression-id hashes, so it flips between
+            # runs and each order compiles its own classes
             (
-                (F.countDistinct("event_type") - 1) * (F.countDistinct("dow") - 1)
+                (F.size(F.collect_set("event_type")) - 1)
+                * (F.size(F.collect_set("dow")) - 1)
             ).cast("bigint").alias("dof"),
         )
     )
@@ -2095,8 +2100,9 @@ WITH nat AS (
   GROUP BY 1, 2
 )
 SELECT region, nation, revenue,
-       revenue / SUM(revenue) OVER (PARTITION BY region) AS share_of_region,
-       revenue / SUM(revenue) OVER () AS share_of_total
+       revenue / CAST(SUM({dec_sql("revenue")}) OVER (PARTITION BY region) AS DOUBLE)
+         AS share_of_region,
+       revenue / CAST(SUM({dec_sql("revenue")}) OVER () AS DOUBLE) AS share_of_total
 FROM nat
 ORDER BY region, nation
 """

@@ -11,6 +11,18 @@ the settings that matter at scale turned on explicitly:
 - spark.sql.session.timeZone=UTC: timestamps in the testdata are naive UTC;
   pinning the session zone makes results reproducible across hosts.
 - Arrow: pandas interchange for the Pandas-UDF slow path.
+- Codegen class cache (``CODEGEN_CACHE_ENTRIES``): Spark keeps the classes
+  Janino compiles in one JVM-wide cache of 100 entries by default. The
+  registered query surface plus the batch and stream pipelines generate
+  2,276 distinct classes (one pass at sf0.001 on local[4], counted with
+  ``CodegenMetrics``), so a session that mixes queries evicted and
+  recompiled every query's classes on each run. The cache size is a static
+  conf, set once in :func:`get_spark`; :func:`tune` warns when a session
+  it did not build keeps a smaller cache. Generated class names carry no
+  codegen stage id: AQE numbers stages in the order they materialize,
+  which differs between runs of one plan. With the id in the name the
+  query surface alone generated 2,704 classes and, even in an unbounded
+  cache, recompiled 122 of them on a re-run.
 """
 
 from __future__ import annotations
@@ -34,10 +46,20 @@ RUNTIME_CONF = {
     # testdata events.ts is parquet TIMESTAMP(NANOS) — scan as long, convert
     # in readers.load_table (Spark has no native nanos timestamp scan)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # the stage id in a generated class name would make one plan's classes
+    # miss the codegen cache whenever AQE numbers its stages differently
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+# Static conf: fixed when the SparkContext starts, so RUNTIME_CONF cannot
+# carry it. 4,096 entries hold the surface's 2,276 classes (see the module
+# docstring) with about 80% headroom for new queries and plan variants.
+CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 _tune_warned: set[str] = set()
+_cache_warned = False
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -46,7 +68,10 @@ def tune(spark: SparkSession) -> SparkSession:
     Every declared query calls this first so behavior does not depend on who
     constructed the session. A key the session refuses (non-dynamic in some
     deployment) is skipped so the remaining keys still apply; the first
-    refusal of each key in a process emits one RuntimeWarning naming it."""
+    refusal of each key in a process emits one RuntimeWarning naming it, and
+    so does the first session seen with a codegen cache smaller than
+    CODEGEN_CACHE_ENTRIES (it cannot be resized at runtime)."""
+    global _cache_warned
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -59,6 +84,16 @@ def tune(spark: SparkSession) -> SparkSession:
                     RuntimeWarning,
                     stacklevel=2,
                 )
+    cache = int(spark.conf.get(CODEGEN_CACHE_KEY))
+    if cache < CODEGEN_CACHE_ENTRIES and not _cache_warned:
+        _cache_warned = True
+        warnings.warn(
+            f"{CODEGEN_CACHE_KEY}={cache} is below "
+            f"{CODEGEN_CACHE_ENTRIES}; generated classes get evicted and "
+            "recompiled when queries mix (build the session with get_spark)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return spark
 
 
@@ -71,6 +106,7 @@ def get_spark(app_name: str = "p1gl-spark", master: str | None = None) -> SparkS
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config(CODEGEN_CACHE_KEY, str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -279,6 +279,10 @@ def test_tune_warns_once_per_refused_key(monkeypatch):
                 raise RuntimeError("static conf")
             self.values[k] = v
 
+        def get(self, k):
+            assert k == session.CODEGEN_CACHE_KEY
+            return str(session.CODEGEN_CACHE_ENTRIES)
+
     class _Session:
         conf = _Conf()
 
@@ -295,6 +299,41 @@ def test_tune_warns_once_per_refused_key(monkeypatch):
     assert stub.conf.values == {
         k: v for k, v in session.RUNTIME_CONF.items() if k != bad
     }
+
+
+def test_tune_warns_once_on_small_codegen_cache(monkeypatch):
+    """A session built without get_spark keeps its codegen class cache
+    size (a static conf): tune() says so with one RuntimeWarning per
+    process and still applies every runtime conf."""
+    import warnings
+
+    from project_1_greentech_logistics_data_pipeline_spark import session
+
+    class _Conf:
+        def __init__(self):
+            self.values = {}
+
+        def set(self, k, v):
+            self.values[k] = v
+
+        def get(self, k):
+            assert k == session.CODEGEN_CACHE_KEY
+            return "100"  # Spark's default
+
+    class _Session:
+        conf = _Conf()
+
+    monkeypatch.setattr(session, "_cache_warned", False)
+    stub = _Session()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        session.tune(stub)
+        session.tune(stub)
+        session.tune(_Session())
+    assert len(caught) == 1
+    assert caught[0].category is RuntimeWarning
+    assert session.CODEGEN_CACHE_KEY in str(caught[0].message)
+    assert stub.conf.values == session.RUNTIME_CONF
 
 
 def test_lsh_candidates_are_same_lang_only(spark):

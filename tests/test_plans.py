@@ -732,3 +732,37 @@ def test_live_explain_prints_final_before_initial(spark):
     f, i = text.find("== Final Plan =="), text.find("== Initial Plan ==")
     assert f != -1 and i != -1, "AQE sections missing from executed explain"
     assert f < i, "Spark changed Final/Initial ordering — re-audit the census"
+
+
+def test_rerun_compiles_no_classes_after_mixed_queries(spark):
+    """Spark keeps Janino-compiled classes in one JVM-wide cache (100
+    entries unless the session is built larger). Between a probe query's
+    first run and its re-run the other queries use 120-145 generated
+    classes at sf0.001, so a default-size cache evicts the probe's classes
+    and the re-run compiles them again. A
+    session from get_spark holds the whole surface: the re-runs compile
+    nothing. q179 and q205 re-run too: q179's plan no longer depends on
+    expression-id hashes, and class names no longer carry AQE's
+    run-dependent codegen stage ids (which q205's varied)."""
+    from project_1_greentech_logistics_data_pipeline_spark import registry, session
+
+    qs = registry.queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(name):
+        before = compiles.getCount()
+        qs[name](spark, SF).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    probe = [
+        "q01_pricing_summary",
+        "q129_tpch_q20_dominant_supplier",
+        "q179_chi_square_independence",
+        "q205_join_size_forecast",
+    ]
+    filler = ["q10_agg_distinct", "q12_agg_cube", "q17_set_ops", "q87_tpch_q22_dormant_customers"]
+    for name in probe + filler:
+        run(name)
+    reruns = {name: run(name) for name in probe}
+    assert reruns == dict.fromkeys(probe, 0)
+    assert spark.conf.get(session.CODEGEN_CACHE_KEY) == str(session.CODEGEN_CACHE_ENTRIES)
