@@ -2243,8 +2243,12 @@ def q195_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retention TRIANGLE — q112's long-format cohort retention
     pivoted to the wide week0..week4 matrix analysts actually read (each
     row a cohort, each column a survival week, the diagonal the calendar
-    frontier). Distinct (user, cohort, offset) first, then conditional
-    distinct counts per offset — one pass, no per-column scans."""
+    frontier). Distinct (user, cohort, offset) first, then a conditional
+    count per offset — one pass, no per-column scans. A plain count equals
+    the oracle's COUNT(DISTINCT user_id): the rows are distinct on (user,
+    cohort, offset), the cohort is a function of the user, and the join
+    drops NULL user_ids. Distinct aggregates would plan an Expand whose
+    group order changes between runs."""
     e = table(spark, sf_dir, "events")
     first_week = e.groupBy("user_id").agg(
         F.min(F.date_trunc("week", "ts")).alias("cohort_week")
@@ -2261,7 +2265,7 @@ def q195_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     aggs = [
-        F.countDistinct(F.when(F.col("offset") == i, F.col("user_id"))).alias(f"w{i}")
+        F.count(F.when(F.col("offset") == i, F.col("user_id"))).alias(f"w{i}")
         for i in range(5)
     ]
     return (

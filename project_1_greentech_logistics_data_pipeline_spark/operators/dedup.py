@@ -25,11 +25,14 @@ bench.py does between queries.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import query, table
-from ..session import release_local_checkpoint
+from .graph import connected_components, sym_edges
 
 # The canonical document fingerprint has ONE definition, next to
 # tokens_expr in operators/text.py, shared by every consumer on both
@@ -547,10 +550,6 @@ def _blocked_cosine_pairs(
     exact baseline. For corpora where even that flop count is too much,
     the candidates path (q49 LSH / q74 IVF) replaces this oracle baseline.
     2M pair-dots: sub-second as GEMM vs ~22s as per-pair JVM fold."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     t_col = F.pmod(F.xxhash64("vec_id"), F.lit(tiles)).cast("int")
     base = emb.select("vec_id", "embedding", t_col.alias("tile"))
     # left role: vector of tile t serves groups (t, j) for j >= t
@@ -615,255 +614,6 @@ def _blocked_cosine_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    symmetrized: bool = False,
-) -> DataFrame:
-    """(node, comp): connected components by iterative min-label propagation
-    with pointer-doubling path compression, and an automatic large-star/
-    small-star fallback for high-diameter graphs.
-
-    Each round every node takes the min label among itself and its
-    neighbors, then shortcuts comp -> comp(comp) (path compression): the
-    label horizon roughly doubles per round, so convergence is O(log
-    diameter) rounds instead of O(diameter). The compression step is sound
-    because comp values are always node ids of the same component with
-    comp(x) <= x (initially comp = self; propagation takes mins of such
-    labels), so comp(comp(x)) is a valid — and no larger — component label
-    for x. The fixpoint is unchanged: at convergence every node's label is
-    stable under min-of-neighbors, which forces the label constant = min id
-    on each component, exactly the pre-compression contract. Measured on
-    the sf0.1 near-dup graph (1828 nodes, diameter ~9): 9 rounds -> 5, the
-    r14 optimization pass; output byte-identical (union-find differential
-    test + q73's recursive-CTE oracle both pin it).
-
-    If the label-sum fixpoint is NOT reached within max_iter, the function
-    does not return partial components — it reruns with
-    connected_components_star, whose round count is O(log^2 n) regardless
-    of diameter.
-
-    Each iteration localCheckpoints the label relation — without cutting
-    lineage, iterative Spark plans grow exponentially and re-execute the
-    whole history every round. The per-round driver action is a 1-row scalar
-    aggregate; all real work is distributed.
-
-    Round cadence (r15 optimization pass): each round is ONE driver job —
-    the new label relation is a LAZY localCheckpoint whose materialization
-    fuses with the convergence-sum aggregate (the round's only action).
-    The r14 loop ran 3 jobs per round (eager ``cand`` checkpoint, eager
-    ``new_labels`` checkpoint, then the sum): on subgraphs that converge
-    in 2-3 rounds the two extra job barriers were pure overhead — the
-    mechanism behind q217's r14 driver regression. Within the fused plan
-    the propagation aggregation appears on BOTH sides of the compression
-    self-join; AQE stage reuse materializes its exchange once, so the
-    duplicated part is one extra final-aggregate pass over the reused
-    shuffle output — A/B-measured cheaper than the eager barrier it
-    replaces both on a quiet machine (med 1.98 s vs 2.65 s per CC call at
-    sf0.1) and under 16-way CPU contention (med 5.05 vs 5.31), with round
-    counts and labelings byte-identical. Superseded rounds' checkpoint
-    blocks are released eagerly (session.release_local_checkpoint — the
-    r14 ADVICE item): executor storage stays O(1) label relations instead
-    of O(rounds).
-
-    ``symmetrized=True`` declares that ``edges`` IS already the
-    symmetrized+distinct+checkpointed relation (graph._sym_edges output,
-    columns named by ``src``/``dst``) — the build is skipped so a caller
-    running pagerank AND components over one pair graph (q145)
-    materializes it once (r14 optimization pass).
-    """
-    if symmetrized:
-        # Misuse here is silent (one-directional propagation converges to
-        # a sum-stable but WRONG labeling), so the cheap checkable part of
-        # the contract is enforced loudly; raise, not assert (-O safe).
-        if edges.columns[:2] != [src, dst]:
-            raise ValueError(
-                "symmetrized=True requires a relation whose first columns "
-                f"are [{src!r}, {dst!r}] (graph._sym_edges output); got "
-                f"{edges.columns!r}"
-            )
-        from .graph import assert_symmetrized
-
-        # SPARK_GRAFT_DEBUG_SYMMETRY=1: sampled reversed-row check (r15,
-        # ADVICE item 2) — one bounded job, off by default
-        assert_symmetrized(edges, src, dst)
-        sym = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    else:
-        from .graph import _sym_edges
-
-        # ONE canonical build (graph._sym_edges): union + distinct + an
-        # eager localCheckpoint — the edge relation is joined EVERY round,
-        # and without cutting its lineage each round re-executes the
-        # upstream pair-finding plan (measured 20s -> 6s on q73 at sf0.1).
-        sym = _sym_edges(edges, src, dst)
-    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "comp", F.col("node")
-    )
-    # lazy: the initial sum below is the materializing action (one job
-    # instead of checkpoint-then-sum — the same fusion as the round body)
-    labels = labels.localCheckpoint(eager=False)
-    # Convergence check without a per-round self-join: both the propagation
-    # and the compression step are MONOTONE (every comp only ever
-    # decreases), so the exact integer sum of labels strictly decreases
-    # until the fixpoint — equal sum ⟺ no label changed in either step,
-    # which is exactly the propagation fixpoint. One scalar aggregate per
-    # round over the checkpointed relation replaces join + filter + count.
-    # decimal(38,0) sum, not raw long: ANSI mode (Spark 4 default) raises
-    # on int64-sum overflow, and node ids at corpus scale (or hashed ids)
-    # overflow a long sum — the connected_components_star._checksum
-    # precedent, applied here too (review-caught, r14).
-    def _label_sum(lab: DataFrame):
-        return lab.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-
-    prev_sum = _label_sum(labels)
-    converged = False
-    for _ in range(max_iter):
-        msgs = sym.join(labels, sym.src == labels.node).select(
-            F.col("dst").alias("node"), F.col("comp")
-        )
-        cand = (
-            msgs.unionByName(labels)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # Path compression: comp -> comp(comp). Every comp value is a node
-        # id present in cand (labels only ever hold reachable node ids), so
-        # the left join's null arm only fires transiently within a round's
-        # plan; coalesce keeps the expression total. The self-join's probe
-        # side is keyed on ``comp`` — on a corpus with one giant connected
-        # component that key is maximally skewed (every member row hashes
-        # to one partition). At test scale AQE broadcasts the c2 side (no
-        # probe-side exchange at all); at 100 TB a sort-merge plan relies
-        # on AQE skew-join splitting, which handles even a single giant
-        # key for joins by chunking the skewed partition and replicating
-        # the matching build partition (spark.sql.adaptive.skewJoin,
-        # on by default here) — pinned by the giant-component unit test.
-        # Per-round exchange budget vs the uncompressed loop: one extra
-        # label-sized join — paid back by the halved round count whenever
-        # diameter > ~4 (measured 9–11 rounds -> 5–6 on the m-fold
-        # near-dup corpora, SCALE.md r14 probe); for near-clique graphs
-        # that converge in <= 3 rounds either way it is one tiny exchange
-        # fused into the round's single job.
-        c2 = cand.select(F.col("node").alias("n2"), F.col("comp").alias("comp2"))
-        new_labels = (
-            cand.join(c2, cand.comp == c2.n2, "left")
-            .select("node", F.coalesce("comp2", "comp").alias("comp"))
-            .localCheckpoint(eager=False)
-        )
-        # materializes new_labels' checkpoint AND computes the 1-row
-        # convergence scalar in the same job (r15: one job per round)
-        new_sum = _label_sum(new_labels)
-        release_local_checkpoint(labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    if not converged:
-        # Diameter exceeded max_iter: returning here would silently emit
-        # split components. Fall back to the diameter-independent algorithm.
-        import warnings
-
-        warnings.warn(
-            f"min-label propagation did not converge in {max_iter} rounds "
-            "(graph diameter too high); falling back to large-star/small-star",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return connected_components_star(sym)
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
-) -> DataFrame:
-    """(node, comp): connected components by alternating large-star /
-    small-star rounds (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — O(log^2 n) rounds INDEPENDENT of graph
-    diameter, the scale path for chain- or mesh-shaped graphs where
-    min-label propagation needs O(diameter) rounds.
-
-      large-star: each node u links every strictly-LARGER neighbor to
-                  m(u) = min(N(u) ∪ {u})
-      small-star: orient edges to the larger endpoint, then each node u
-                  links its (all smaller) neighbors and itself to m(u)
-
-    Both steps are a groupBy-min plus a join — pure shuffles, no driver
-    data. At the fixpoint the edge set is a union of stars: every node
-    points at its component's minimum, which is exactly the (node, comp)
-    labeling. Fixpoint detection uses an order-insensitive edge-set
-    checksum (sum of xxhash64(src,dst)) plus the edge count — one 1-row
-    aggregate per round, same hygiene as connected_components."""
-    cur = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _checksum(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: ANSI mode (Spark 4 default) raises on long overflow
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        m = e.groupBy("src").agg(F.min("dst").alias("min_nbr"))
-        return (
-            e.join(m, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(
-                F.col("dst").alias("src"),
-                F.least(F.col("src"), F.col("min_nbr")).alias("dst"),
-            )
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # orient every edge toward its larger endpoint: src > dst
-        o = e.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        ).distinct()
-        m = o.groupBy("src").agg(F.min("dst").alias("m"))
-        relink = (
-            o.join(m, "src")
-            .where(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        self_link = m.select("src", F.col("m").alias("dst"))
-        return relink.unionByName(self_link)
-
-    prev = _checksum(cur)
-    for _ in range(max_iter):
-        stepped = _small_star(_large_star(cur))
-        cur = (
-            stepped.union(stepped.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        now = _checksum(cur)
-        if now == prev:
-            break
-        prev = now
-    else:
-        raise RuntimeError(
-            f"large-star/small-star did not converge in {max_iter} rounds"
-        )
-    # Star fixpoint: every edge points from a member to its component min.
-    oriented = cur.select(
-        F.greatest("src", "dst").alias("node"), F.least("src", "dst").alias("comp")
-    )
-    roots = oriented.select(F.col("comp").alias("node"), F.col("comp"))
-    return (
-        oriented.unionByName(roots).groupBy("node").agg(F.min("comp").alias("comp"))
-    )
-
-
 def _closure_ctes_sql(src: str) -> str:
     """Oracle twin of :func:`neardup_pairs` + :func:`connected_components`
     over a ``(doc_id, lang, toks)`` CTE named ``src``: the within-lang
@@ -906,8 +656,8 @@ def q73_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the component's min doc_id, so results are deterministic. The oracle is
     a DuckDB recursive-CTE transitive closure — the iterative Spark
     algorithm is exactly checked, not rows-only."""
-    pairs = neardup_pairs(spark, sf_dir)
-    return connected_components(pairs, "doc_a", "doc_b").select(
+    sym = sym_edges(neardup_pairs(spark, sf_dir), "doc_a", "doc_b")
+    return connected_components(sym).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
@@ -2250,7 +2000,7 @@ def _fuzzy_keep(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     must be built over exactly ``docs``'s survivors: components of that
     induced subgraph can differ from restricting full-corpus components
     (dropping a junk node may split a cluster)."""
-    clusters = connected_components(pairs, "doc_a", "doc_b")
+    clusters = connected_components(sym_edges(pairs, "doc_a", "doc_b"))
     non_keepers = clusters.filter(F.col("comp") != F.col("node")).select(
         F.col("node").alias("doc_id")
     )

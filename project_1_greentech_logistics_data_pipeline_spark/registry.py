@@ -19,6 +19,7 @@ import glob
 import json
 import os
 import re
+import warnings
 from collections.abc import Callable
 from importlib import import_module
 
@@ -28,6 +29,7 @@ from .session import tune
 from .sources.readers import load_table
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_report_warned = False
 
 
 def _stamped_names() -> tuple[frozenset, frozenset, dict]:
@@ -36,7 +38,10 @@ def _stamped_names() -> tuple[frozenset, frozenset, dict]:
     mismatch, and the most recent round number that stamped each name
     (green or not) — used to cycle the verification window through the
     STALEST stamps once everything is green, instead of re-stamping the
-    same 50 every round."""
+    same 50 every round. An unreadable report contributes no stamps, which
+    moves the rotation; the first one in a process emits one
+    RuntimeWarning naming it."""
+    global _report_warned
     green: set = set()
     latest: dict[str, bool] = {}
     last_round: dict[str, int] = {}
@@ -44,7 +49,16 @@ def _stamped_names() -> tuple[frozenset, frozenset, dict]:
         try:
             with open(path) as fh:
                 report = json.load(fh)
-        except Exception:
+        except Exception as e:
+            if not _report_warned:
+                _report_warned = True
+                warnings.warn(
+                    f"skipping unreadable driver report {path} "
+                    f"({type(e).__name__}); its stamps do not count toward "
+                    "the verification rotation",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
             continue
         # round number is freshness metadata only — an oddly named report
         # (no digits) must still contribute its green/red stamps, so the

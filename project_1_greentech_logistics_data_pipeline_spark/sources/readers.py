@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +26,7 @@ from ..session import tune
 
 # path -> (mtime_ns at sniff time, nanos column tuple)
 _NS_TS_COLS: dict[str, tuple] = {}
+_sniff_warned = False
 
 
 def _ns_ts_cols(path: str, name: str) -> tuple:
@@ -37,8 +39,11 @@ def _ns_ts_cols(path: str, name: str) -> tuple:
     regeneration that flips orders/lineitem dates to nanos degrades to the
     same long-scan+convert path instead of a read error. One footer read
     per path decides the scan plan — O(1) at any data scale, never data
-    pages.
+    pages. A failed sniff falls back to the declared timestamp scan (which
+    fails on a nanos file); the first failure in a process emits one
+    RuntimeWarning naming the path.
     """
+    global _sniff_warned
     # Validated by mtime: a file regenerated in place with a different
     # timestamp unit — the exact drift this sniff exists for — invalidates
     # the cached plan instead of reading with a stale one until restart.
@@ -68,8 +73,17 @@ def _ns_ts_cols(path: str, name: str) -> tuple:
                 for c in ts_fields
                 if "timestamp[ns" in str(schema.field(c).type)
             )
-        except Exception:
+        except Exception as e:
             cols = ()
+            if not _sniff_warned:
+                _sniff_warned = True
+                warnings.warn(
+                    f"timestamp-unit footer sniff of {path} failed "
+                    f"({type(e).__name__}); scanning it with the declared "
+                    "timestamp types, which fails on a TIMESTAMP(NANOS) file",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
         _NS_TS_COLS[path] = (mtime, cols)
     return cols
 

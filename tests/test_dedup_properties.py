@@ -14,9 +14,12 @@ from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
     _jaccard_expr,
     _jaccard_mask_expr,
     bitmask_token_sets,
+    hashed_token_sets,
+)
+from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
     connected_components,
     connected_components_star,
-    hashed_token_sets,
+    sym_edges,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -86,10 +89,8 @@ def test_connected_components_matches_union_find(spark):
         n = 60
         edges = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(45)})
         edges = [(u, v) for u, v in edges if u != v]
-        df = spark.createDataFrame(edges, ["src", "dst"])
-        got = {
-            r["node"]: r["comp"] for r in connected_components(df).collect()
-        }
+        sym = sym_edges(spark.createDataFrame(edges, ["src", "dst"]), "src", "dst")
+        got = {r["node"]: r["comp"] for r in connected_components(sym).collect()}
         expected = _uf_components(n, edges)
         assert got == expected, f"trial {trial}: {got} != {expected}"
 
@@ -102,10 +103,8 @@ def test_star_components_matches_union_find(spark):
         n = 80
         edges = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(50)})
         edges = [(u, v) for u, v in edges if u != v]
-        df = spark.createDataFrame(edges, ["src", "dst"])
-        got = {
-            r["node"]: r["comp"] for r in connected_components_star(df).collect()
-        }
+        sym = sym_edges(spark.createDataFrame(edges, ["src", "dst"]), "src", "dst")
+        got = {r["node"]: r["comp"] for r in connected_components_star(sym).collect()}
         expected = _uf_components(n, edges)
         assert got == expected, f"trial {trial}: {got} != {expected}"
 
@@ -123,7 +122,8 @@ def test_star_components_deep_chain(spark):
     Star converges in O(log^2 n) rounds and must still label every node
     with the chain's minimum."""
     df, expected = _deep_chain(spark)
-    got = {r["node"]: r["comp"] for r in connected_components_star(df).collect()}
+    sym = sym_edges(df, "src", "dst")
+    got = {r["node"]: r["comp"] for r in connected_components_star(sym).collect()}
     assert got == expected
 
 
@@ -139,7 +139,7 @@ def test_label_prop_falls_back_on_deep_chain(spark):
         warnings.simplefilter("always")
         got = {
             r["node"]: r["comp"]
-            for r in connected_components(df, max_iter=3).collect()
+            for r in connected_components(sym_edges(df, "src", "dst"), max_iter=3).collect()
         }
     assert got == {i: 0 for i in range(n)}
     assert any("falling back" in str(x.message) for x in w)
@@ -154,9 +154,10 @@ def test_label_prop_path_compression_converges_on_deep_chain(spark):
     import warnings
 
     df, expected = _deep_chain(spark)
+    sym = sym_edges(df, "src", "dst")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+        got = {r["node"]: r["comp"] for r in connected_components(sym).collect()}
     assert got == expected
     assert not any("falling back" in str(x.message) for x in w)
 
@@ -175,71 +176,70 @@ def test_connected_components_giant_component_skew(spark):
     giant += [(399 + i, 400 + i) for i in range(0, 20)]
     giant += [(1, 399)]
     small = [(1000 + 3 * i, 1000 + 3 * i + 1) for i in range(30)]
-    df = spark.createDataFrame(giant + small, ["src", "dst"])
-    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+    sym = sym_edges(spark.createDataFrame(giant + small, ["src", "dst"]), "src", "dst")
+    got = {r["node"]: r["comp"] for r in connected_components(sym).collect()}
     expected = _uf_components(2000, giant + small)
     assert got == expected
     assert sum(1 for c in got.values() if c == 0) == 420  # the giant comp
 
 
 def test_connected_components_releases_round_blocks(spark):
-    """Pin the r15 storage cadence (the r14 ADVICE item): superseded
-    rounds' localCheckpoint blocks are released eagerly, so the
-    persistent-RDD count after a DEEP run (many rounds) grows by O(1) —
-    the symmetrized edges and the final labels — not O(rounds). Before
-    the fix every round left two checkpointed relations resident."""
+    """Superseded rounds' localCheckpoint blocks are released eagerly, so
+    the persistent-RDD count after a DEEP run (many rounds) grows by O(1)
+    — the symmetrized edges and the final relation — not O(rounds), for
+    min-label propagation and for large-star/small-star alike."""
     sc = spark.sparkContext
-    # a 121-node chain: ~7 propagate+compress rounds
+    # a 121-node chain: ~7 propagate+compress rounds, more star rounds
     edges = [(i, i + 1) for i in range(120)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    before = len(sc._jsc.getPersistentRDDs())
-    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
-    after = len(sc._jsc.getPersistentRDDs())
-    assert got == {i: 0 for i in range(121)}
-    # O(1) bound: sym + final labels (+ slack for the input relation);
-    # the pre-r15 loop leaked 2 blocks per round (~14 on this graph).
-    assert after - before <= 3, (
-        f"round checkpoint blocks leak: {before} -> {after} persistent RDDs"
-    )
+    for cc in (connected_components, connected_components_star):
+        before = len(sc._jsc.getPersistentRDDs())
+        got = {r["node"]: r["comp"] for r in cc(sym_edges(df, "src", "dst")).collect()}
+        after = len(sc._jsc.getPersistentRDDs())
+        assert got == {i: 0 for i in range(121)}
+        # O(1) bound: sym + final relation (+ slack for the input relation)
+        assert after - before <= 3, (
+            f"{cc.__name__} leaks round checkpoint blocks: "
+            f"{before} -> {after} persistent RDDs"
+        )
 
 
-def test_symmetrized_debug_check_catches_one_directional_edges(spark, monkeypatch):
-    """SPARK_GRAFT_DEBUG_SYMMETRY=1 (r15, ADVICE item 2): passing a
-    one-directional edge list with symmetrized=True must raise loudly
-    instead of silently converging to wrong components; a genuinely
-    symmetrized relation must pass, and with the flag OFF (default) the
-    misuse stays the caller's documented responsibility (no extra job)."""
+def test_graph_kit_node_set_typed_input_and_shared_edges(spark):
+    """Every graph operator reads one SymEdges relation: (1) a node whose
+    only edge is a self-loop is in no operator's output, whichever
+    components algorithm ran; (2) a raw DataFrame raises TypeError; (3)
+    the star fallback never releases the caller's SymEdges, which q145
+    reads again after components return."""
+    import warnings
+
+    import pytest
+
     from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
-        _sym_edges,
+        label_propagation,
+        pagerank,
     )
 
-    one_way = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["src", "dst"])
-    monkeypatch.setenv("SPARK_GRAFT_DEBUG_SYMMETRY", "1")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="NOT symmetric"):
-        connected_components(one_way, symmetrized=True).collect()
-    sym = _sym_edges(one_way, "src", "dst")
-    got = {r["node"]: r["comp"] for r in connected_components(sym, symmetrized=True).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-    monkeypatch.delenv("SPARK_GRAFT_DEBUG_SYMMETRY")
-    got2 = {r["node"]: r["comp"] for r in connected_components(one_way, symmetrized=True).collect()}
-    assert got2  # flag off: no check, documented caller-owned contract
-
-
-def test_symmetrized_debug_check_ignores_null_endpoints(spark, monkeypatch):
-    """A symmetric edge list with a NULL endpoint passes the debug check:
-    NULL never equi-joins, so a probed (x, NULL) row would otherwise
-    report its present reversal (NULL, x) as missing."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
-        assert_symmetrized,
+    df = spark.createDataFrame(
+        [(100, 100)] + [(i, i + 1) for i in range(39)], "src long, dst long"
     )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (3, None), (None, 3)], "src long, dst long"
-    )
-    monkeypatch.setenv("SPARK_GRAFT_DEBUG_SYMMETRY", "1")
-    assert_symmetrized(edges, "src", "dst")
+    sym = sym_edges(df, "src", "dst")
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        fallback = connected_components(sym, max_iter=1)
+    assert any("falling back" in str(x.message) for x in w)
+    ranks = pagerank(sym).collect()
+    outputs = {
+        "fallback": fallback.collect(),
+        "pagerank": ranks,
+        "components": connected_components(sym).collect(),
+        "star": connected_components_star(sym).collect(),
+        "lpa": label_propagation(sym).collect(),
+    }
+    for name, rows in outputs.items():
+        assert {r["node"] for r in rows} == set(range(40)), name
+    for op in (connected_components, connected_components_star, label_propagation, pagerank):
+        with pytest.raises(TypeError):
+            op(df)
 
 
 def test_release_local_checkpoint_warns_once(spark, monkeypatch):

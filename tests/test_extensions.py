@@ -788,8 +788,11 @@ def test_label_propagation_splits_bridged_cliques(spark):
     """Two 4-cliques joined by a single bridge edge: CC merges them into
     one component; LPA must resolve two communities (the bridge never
     wins a majority), with the deterministic min-label tiebreak."""
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import connected_components
-    from project_1_greentech_logistics_data_pipeline_spark.operators.graph import label_propagation
+    from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
+        connected_components,
+        label_propagation,
+        sym_edges,
+    )
 
     def clique(nodes):
         return [(a, b) for a in nodes for b in nodes if a < b]
@@ -797,10 +800,13 @@ def test_label_propagation_splits_bridged_cliques(spark):
     edges = clique([1, 2, 3, 4]) + clique([5, 6, 7, 8]) + [(4, 5)]
     df = spark.createDataFrame(edges, "src long, dst long")
 
-    comp = connected_components(df)
+    comp = connected_components(sym_edges(df, "src", "dst"))
     assert comp.select("comp").distinct().count() == 1  # CC: one blob
 
-    lpa = {r["node"]: r["community"] for r in label_propagation(df).collect()}
+    lpa = {
+        r["node"]: r["community"]
+        for r in label_propagation(sym_edges(df, "src", "dst")).collect()
+    }
     assert set(lpa) == set(range(1, 9))
     a = {lpa[n] for n in (1, 2, 3)}
     b = {lpa[n] for n in (6, 7, 8)}
@@ -843,8 +849,11 @@ def test_label_propagation_properties_random_graphs(spark):
     and communities REFINE connected components (never span two)."""
     from hypothesis import given, settings, strategies as st
 
-    from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import connected_components
-    from project_1_greentech_logistics_data_pipeline_spark.operators.graph import label_propagation
+    from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
+        connected_components,
+        label_propagation,
+        sym_edges,
+    )
 
     edge = st.tuples(
         st.integers(min_value=0, max_value=14), st.integers(min_value=0, max_value=14)
@@ -854,8 +863,9 @@ def test_label_propagation_properties_random_graphs(spark):
     @given(st.lists(edge, min_size=1, max_size=25, unique=True))
     def prop(edges):
         df = spark.createDataFrame(edges, "src long, dst long")
-        lpa = {r["node"]: r["community"] for r in label_propagation(df).collect()}
-        cc = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+        sym = sym_edges(df, "src", "dst")
+        lpa = {r["node"]: r["community"] for r in label_propagation(sym).collect()}
+        cc = {r["node"]: r["comp"] for r in connected_components(sym).collect()}
         nodes = {n for e in edges for n in e}
         assert set(lpa) == nodes  # total, exactly-once labeling
         assert set(lpa.values()) <= nodes  # labels are node ids
@@ -943,6 +953,51 @@ def test_registry_round_parse_tolerates_odd_report_names(tmp_path, monkeypatch):
     assert "q_x" in green and "q_y" in red
     assert last["q_x"] == 0 and last["q_y"] == 7
     assert "q_z" not in red and "q_z" in green
+
+
+def test_registry_warns_once_on_unreadable_report(tmp_path, monkeypatch):
+    """An unreadable CORRECTNESS report still contributes no stamps, but
+    is visible: the first one in a process emits one RuntimeWarning naming
+    the file and the exception type, and readable reports still count."""
+    import json
+    import warnings
+
+    from project_1_greentech_logistics_data_pipeline_spark import registry
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r02.json").write_text("[")
+    (tmp_path / "CORRECTNESS_r03.json").write_text(
+        json.dumps({"q_x": {"hash_match": True, "err": None}})
+    )
+    monkeypatch.setattr(registry, "_REPO_ROOT", str(tmp_path))
+    monkeypatch.setattr(registry, "_report_warned", False)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        green, _, _ = registry._stamped_names()
+    assert green == {"q_x"}
+    assert len(caught) == 1 and caught[0].category is RuntimeWarning
+    msg = str(caught[0].message)
+    assert "CORRECTNESS_r01.json" in msg and "JSONDecodeError" in msg
+
+
+def test_ns_ts_sniff_failure_warns_once(tmp_path, monkeypatch):
+    """A failed timestamp-unit footer sniff still falls back to the
+    declared scan, but is visible: the first failure in a process emits
+    one RuntimeWarning naming the path and the exception type."""
+    import warnings
+
+    from project_1_greentech_logistics_data_pipeline_spark.sources import readers
+
+    bad = tmp_path / "events.parquet"
+    bad.write_bytes(b"not a parquet file")
+    monkeypatch.setattr(readers, "_NS_TS_COLS", {})
+    monkeypatch.setattr(readers, "_sniff_warned", False)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert readers._ns_ts_cols(str(bad), "events") == ()
+        assert readers._ns_ts_cols(str(tmp_path / "orders.parquet"), "orders") == ()
+    assert len(caught) == 1 and caught[0].category is RuntimeWarning
+    assert str(bad) in str(caught[0].message)
 
 
 def test_registry_query_rejects_duplicate_name(monkeypatch):

@@ -741,9 +741,9 @@ def test_rerun_compiles_no_classes_after_mixed_queries(spark):
     classes at sf0.001, so a default-size cache evicts the probe's classes
     and the re-run compiles them again. A
     session from get_spark holds the whole surface: the re-runs compile
-    nothing. q179 and q205 re-run too: q179's plan no longer depends on
-    expression-id hashes, and class names no longer carry AQE's
-    run-dependent codegen stage ids (which q205's varied)."""
+    nothing. q179, q195 and q205 re-run too: the plans of q179 and q195
+    no longer depend on expression-id hashes, and class names no longer
+    carry AQE's run-dependent codegen stage ids (which q205's varied)."""
     from project_1_greentech_logistics_data_pipeline_spark import registry, session
 
     qs = registry.queries()
@@ -759,6 +759,7 @@ def test_rerun_compiles_no_classes_after_mixed_queries(spark):
         "q129_tpch_q20_dominant_supplier",
         "q179_chi_square_independence",
         "q205_join_size_forecast",
+        "q195_retention_triangle",
     ]
     filler = ["q10_agg_distinct", "q12_agg_cube", "q17_set_ops", "q87_tpch_q22_dormant_customers"]
     for name in probe + filler:

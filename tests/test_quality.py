@@ -164,13 +164,14 @@ def test_pagerank_conserves_mass_and_ranks_hubs(spark):
     out-ranks its leaves, and the result is deterministic."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
         pagerank,
+        sym_edges,
     )
 
     edges = spark.createDataFrame(
         [(0, 1), (0, 2), (0, 3), (0, 4), (5, 6), (6, 7)], "src LONG, dst LONG"
     )
-    r1 = {r.node: r.rank for r in pagerank(edges).collect()}
-    r2 = {r.node: r.rank for r in pagerank(edges).collect()}
+    r1 = {r.node: r.rank for r in pagerank(sym_edges(edges, "src", "dst")).collect()}
+    r2 = {r.node: r.rank for r in pagerank(sym_edges(edges, "src", "dst")).collect()}
     assert r1 == r2
     assert abs(sum(r1.values()) - 8) < 1e-6
     assert r1[0] > r1[1] > 0  # hub beats leaf
