@@ -1,4 +1,5 @@
-"""Deterministic (order-independent) aggregates over double columns.
+"""Deterministic (order-independent) aggregates over double columns, and
+the key-stable md5-prefix sampling key.
 
 Floating-point SUM/AVG depend on accumulation order, which differs between
 Spark partitions and the DuckDB oracle (and between runs as AQE re-splits).
@@ -11,7 +12,9 @@ This module is the one place the exact-sum type is spelled. Each Spark
 helper has an oracle-SQL twin: ``dec``/``dec_sql`` (the per-row cast, which
 window, COALESCE and CASE shapes wrap in their own text), ``dsum``/
 ``dsum_sql``, ``moment_sums``/``moment_sums_sql``; ``davg(c)`` is
-``dsum_sql(c) / COUNT(c)``.
+``dsum_sql(c) / COUNT(c)``. The sampling key ``md5_prefix``/
+``md5_prefix_sql`` and its cut ``frac_threshold_hex`` are pure functions
+of a row's key, so a sample is the same set on every engine and layout.
 """
 
 from __future__ import annotations
@@ -177,3 +180,58 @@ def hilo_reconstruct(alias: str) -> str:
     """The double value of the split sum — identical IEEE expression on
     both engines given identical hi/lo inputs."""
     return f"(CAST({alias}_hi AS DOUBLE) + CAST({alias}_lo AS DOUBLE) * 1e-10)"
+
+
+# ---------------------------------------------------------------------------
+# Key-stable sampling (md5-prefix key)
+# ---------------------------------------------------------------------------
+#
+# Portable deterministic sampling/splitting primitive: the first 15 hex
+# chars of md5(id || ':' || seed) are uniform on [0, 16^15) and IDENTICAL
+# in any engine that implements md5 (Spark, DuckDB, Python hashlib, ...) —
+# lowercase hex compares lexicographically, so "keep iff prefix < T(frac)"
+# needs no hex->int parsing anywhere. Unlike rand()-based samplers
+# (sampleBy/randomSplit), assignment is a pure function of the KEY: stable
+# under repartitioning, re-reads, engine swaps, and cluster size — the
+# property leakage-free reprocessing at 100 TB actually requires. md5 is a
+# JVM codegen built-in; on short id strings the cost is noise next to scan
+# I/O.
+
+
+def md5_prefix(id_col: str, seed: int) -> Column:
+    # COALESCE before hashing: concat NULL-propagates on both engines, and
+    # a NULL key would otherwise fail BOTH `key < T` and `key >= T`,
+    # dropping the row from train AND val (conservation violation)
+    return F.substring(
+        F.md5(
+            F.concat(
+                F.coalesce(F.col(id_col).cast("string"), F.lit("__null__")),
+                F.lit(f":{seed}"),
+            )
+        ),
+        1,
+        15,
+    )
+
+
+def md5_prefix_sql(id_sql: str, seed: int) -> str:
+    """DuckDB twin of md5_prefix — same bytes in, same hex out."""
+    return (
+        f"SUBSTR(MD5(COALESCE(CAST({id_sql} AS VARCHAR), '__null__')"
+        f" || ':{seed}'), 1, 15)"
+    )
+
+
+def frac_threshold_hex(frac: float) -> str:
+    """The threshold T with P(prefix < T) == frac (to 1 ulp of 16^-15).
+
+    frac >= 1 returns 'g': every hex prefix sorts before it ('f' < 'g'),
+    so the whole population is kept — the 16-digit hex for 16^15 would
+    compare lexicographically by FIRST character against 15-digit
+    prefixes and wrongly exclude everything above '0fff...'. frac <= 0
+    returns the all-zero threshold, which no prefix is below."""
+    if frac >= 1.0:
+        return "g"
+    if frac <= 0.0:
+        return "0" * 15
+    return format(int(round(frac * 16**15)), "015x")

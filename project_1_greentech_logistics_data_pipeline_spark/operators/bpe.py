@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens_expr
 from ..registry import query, table
-from .text import tokens_expr
 
 
 def _adjacent_pairs(col: F.Column) -> F.Column:

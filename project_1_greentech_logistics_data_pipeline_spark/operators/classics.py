@@ -15,10 +15,14 @@ from pyspark.sql import functions as F
 from ..functions.deterministic import (
     dsum,
     dsum_sql,
+    frac_threshold_hex,
     hilo_reconstruct,
     hilo_sum_exprs,
+    md5_prefix,
+    md5_prefix_sql,
     pos_zero,
 )
+from ..functions.text import DOC_TOKENS_SQL, doc_tokens
 from ..registry import query, table
 
 
@@ -121,11 +125,10 @@ def q61_tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Explode / lateral view: token frequency (the generalized P2)
 # ---------------------------------------------------------------------------
 
-_Q27_SQL = """
+_Q27_SQL = f"""
 SELECT tok, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
 FROM (
-  SELECT doc_id, UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
-  FROM documents
+  {DOC_TOKENS_SQL}
 )
 GROUP BY tok
 ORDER BY n_occurrences DESC, tok
@@ -139,10 +142,8 @@ def q27_explode_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the pipeline's array flatten (Glue_job.py:33). Partial aggregation
     runs map-side before the single shuffle on tok."""
     d = table(spark, sf_dir, "documents")
-    from .text import tokens_expr
-
     return (
-        d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
+        doc_tokens(d)
         .groupBy("tok")
         .agg(
             F.count("*").alias("n_occurrences"),
@@ -260,19 +261,17 @@ _Q29_FRAC = 0.1
 
 
 def _q29_sql() -> str:
-    from .text import _frac_threshold_hex, _md5_prefix_sql
-
-    key = _md5_prefix_sql("l_orderkey || ':' || l_linenumber", _Q29_SEED)
+    key = md5_prefix_sql("l_orderkey || ':' || l_linenumber", _Q29_SEED)
     return (
         "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem\n"
-        f"WHERE {key} < '{_frac_threshold_hex(_Q29_FRAC)}'"
+        f"WHERE {key} < '{frac_threshold_hex(_Q29_FRAC)}'"
     )
 
 
 @query("q29_sample", _q29_sql())
 def q29_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-stable Bernoulli sample over the (l_orderkey, l_linenumber)
-    primary key via the md5-prefix threshold (text._md5_prefix): the kept
+    primary key via the md5-prefix threshold (deterministic.md5_prefix): the kept
     SET is a pure function of each row's key, so — unlike ``df.sample(seed=)``,
     whose per-partition RNG reassigns rows whenever the partition layout
     changes (re-read with a different split count, AQE coalesce, engine
@@ -280,11 +279,9 @@ def q29_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine. That stability is what audit/reprocess at 100 TB requires, and
     it is also what makes an exact DuckDB oracle possible. The size check
     lives in tests/test_extensions.py."""
-    from .text import _frac_threshold_hex, _md5_prefix
-
     li = table(spark, sf_dir, "lineitem")
     # F.concat, not concat_ws: concat NULL-propagates exactly like the
-    # oracle's `||`, so a NULL key component reaches _md5_prefix's
+    # oracle's `||`, so a NULL key component reaches md5_prefix's
     # COALESCE('__null__') sentinel on BOTH engines (concat_ws would
     # silently drop the NULL on the Spark side only)
     keyed = li.withColumn(
@@ -296,7 +293,7 @@ def q29_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return (
-        keyed.filter(_md5_prefix("_sk", _Q29_SEED) < F.lit(_frac_threshold_hex(_Q29_FRAC)))
+        keyed.filter(md5_prefix("_sk", _Q29_SEED) < F.lit(frac_threshold_hex(_Q29_FRAC)))
         .select("l_orderkey", "l_linenumber", "l_quantity")
     )
 

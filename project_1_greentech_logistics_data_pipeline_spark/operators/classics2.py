@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import davg, dsum, dsum_sql, pos_zero_col
+from ..functions.text import WS_CLASS_PY, tokens_sql
 from ..registry import query, table
 
 
@@ -558,12 +559,12 @@ def q89_variant_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Python UDTF: lateral table function (Arrow-optimized), SURVEY §2.9 surface
 # ---------------------------------------------------------------------------
 
-_Q90_SQL = """
+_Q90_SQL = f"""
 SELECT tok, COUNT(*) AS n_docs
 FROM (
   SELECT
-    UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok,
-    GENERATE_SUBSCRIPTS(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+'), 1) AS pos
+    UNNEST({tokens_sql('text')}) AS tok,
+    GENERATE_SUBSCRIPTS({tokens_sql('text')}, 1) AS pos
   FROM documents
 )
 WHERE pos <= 2
@@ -578,10 +579,9 @@ def q90_udtf_leading_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (user-defined *table* function, Spark 3.5+/4.x): a lateral
     function emitting (pos, tok) rows per document, consumed via
     `table, LATERAL udtf(...)` — the declared UDTF surface of SURVEY §2.9.
-    Tokenization mirrors q27's `split(trim(text), r'\\s+')` exactly so the
-    DuckDB UNNEST + GENERATE_SUBSCRIPTS oracle is exact (the oracle spells
-    the same class as `[\\s\\x0b]+` because RE2's `\\s`, unlike Java's and
-    POSIX [:space:], omits vertical tab).
+    Tokenization mirrors q27's ``tokens_expr`` exactly (the text kit,
+    functions/text.py), so the DuckDB UNNEST + GENERATE_SUBSCRIPTS oracle
+    over ``tokens_sql`` is exact.
 
     UDTFs are the Python slow path (row-at-a-time yields); this one bounds
     its output to the first 2 tokens per document, so the Python-side work is
@@ -598,9 +598,8 @@ def q90_udtf_leading_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Mirror the JVM contract exactly: Spark trim strips ASCII
             # spaces ONLY (Python str.strip() would also eat tabs/newlines
             # and Unicode whitespace, dropping the edge-empty token the
-            # q27/oracle split keeps), and Java \s is the ASCII class
-            # including \x0B (Python re's \s is Unicode-aware).
-            toks = __import__("re").split("[ \t\n\x0b\f\r]+", text.strip(" "))
+            # q27/oracle split keeps).
+            toks = __import__("re").split(f"[{WS_CLASS_PY}]+", text.strip(" "))
             for i, tok in enumerate(toks[:limit], start=1):
                 yield i, tok
 

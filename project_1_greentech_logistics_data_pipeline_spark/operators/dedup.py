@@ -31,21 +31,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import DOC_FP_SQL, doc_fp_expr, split_sql, tokens_expr, tokens_sql
 from ..registry import query, table
 from .graph import connected_components, sym_edges
-
-# The canonical document fingerprint has ONE definition, next to
-# tokens_expr in operators/text.py, shared by every consumer on both
-# engines (q41/q43/q78/q92/q109/q146/q200/q210 and the streaming
-# incremental dedup) so the rule cannot drift; aliased to this module's
-# historical names.
 from .quality import _SCRUB_PATTERN as _REDACT_PATTERN
-from .text import DOC_FP_SQL as _DOC_FP_SQL
 from .text import _Q212_CTES as _Q212_CTES_SQL
-from .text import doc_fp_expr as _doc_fp_expr
 from .text import exchanged_docs, lang_id_from_toks, q212_gopher_quality_filter
 from .text import lang_stage_cte_sql as _lang_stage_cte_sql
-from .text import tokens_expr
 from .text2 import _lm_tier_df, _lm_tier_sql
 
 
@@ -55,7 +47,7 @@ from .text2 import _lm_tier_df, _lm_tier_sql
 
 _Q43_SQL = f"""
 SELECT
-  {_DOC_FP_SQL} AS fingerprint,
+  {DOC_FP_SQL} AS fingerprint,
   MIN(doc_id) AS keeper_doc_id,
   COUNT(*) AS n_copies
 FROM documents
@@ -69,7 +61,7 @@ def q43_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min doc_id) — the distributed form of dropDuplicates, made stable."""
     d = table(spark, sf_dir, "documents")
     return (
-        d.select(_doc_fp_expr().alias("fingerprint"), "doc_id")
+        d.select(doc_fp_expr().alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("n_copies"))
     )
@@ -97,8 +89,8 @@ def q43b_dedup_exact_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 JACCARD_THRESHOLD = 0.95
 
 # The per-document distinct token set every Jaccard oracle pairs up.
-_TOKSET_CTE_SQL = """d AS (
-  SELECT doc_id, lang, LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
+_TOKSET_CTE_SQL = f"""d AS (
+  SELECT doc_id, lang, LIST_DISTINCT({tokens_sql('text')}) AS toks
   FROM documents
 )"""
 
@@ -700,13 +692,13 @@ clusters AS (
 fp AS (
   SELECT doc_id,
     MIN(doc_id) OVER (
-      PARTITION BY {_DOC_FP_SQL}
+      PARTITION BY {DOC_FP_SQL}
     ) AS keeper
   FROM documents
 ),
 stats AS (
   SELECT doc_id, lang, n_chars,
-    LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS n_tokens
+    LEN({tokens_sql('text')}) AS n_tokens
   FROM documents
 )
 SELECT s.doc_id, s.lang, CAST(s.n_tokens AS BIGINT) AS n_tokens
@@ -734,7 +726,7 @@ def q78_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the pair-graph machinery — no sequential multi-pass rewrite of
     the corpus. Output: the surviving documents with their token counts."""
     d = table(spark, sf_dir, "documents")
-    keeper = F.min("doc_id").over(Window.partitionBy(_doc_fp_expr()))
+    keeper = F.min("doc_id").over(Window.partitionBy(doc_fp_expr()))
     stats = d.select(
         "doc_id",
         "lang",
@@ -767,7 +759,7 @@ def q78_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q109_SQL = f"""
 WITH fp AS (
   SELECT doc_id, lang,
-    {_DOC_FP_SQL} AS fingerprint
+    {DOC_FP_SQL} AS fingerprint
   FROM documents
 ), benchmark AS (
   SELECT DISTINCT fingerprint FROM fp WHERE doc_id % 50 = 0
@@ -793,7 +785,7 @@ def q109_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. For eval sets too big to broadcast, pre-partition both sides
     on the fingerprint prefix (the q41 shard_key)."""
     d = table(spark, sf_dir, "documents")
-    fp = d.select("doc_id", "lang", _doc_fp_expr().alias("fingerprint"))
+    fp = d.select("doc_id", "lang", doc_fp_expr().alias("fingerprint"))
     benchmark = (
         fp.filter(F.col("doc_id") % 50 == 0).select("fingerprint").distinct()
     )
@@ -1191,7 +1183,7 @@ def _unit_cte_sql(width: int, prefix: str) -> str:
     ``units``, whose struct column ``s`` carries {prefix}_id/{prefix}_text/
     {prefix}_len)."""
     return f"""WITH base AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks
+  SELECT doc_id, {tokens_sql('text')} AS toks
   FROM documents WHERE text IS NOT NULL
 ),
 units AS (
@@ -1501,7 +1493,7 @@ def q209_normalized_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # yields a leading/trailing '' exactly when the text is edged by such
 # whitespace — \s+ collapsing makes a mid-sequence '' impossible), and
 # both engines' regex split keeps edge empties (verified: ' a b ' ->
-# ['','a','b',''] on Spark split(-1) and DuckDB STRING_SPLIT_REGEX
+# ['','a','b',''] on Spark split(-1) and the DuckDB twin split_sql
 # alike). A TRIM in the oracle's re-split WOULD drop a leading ''
 # token the Spark flatten keeps — a first draft had exactly that bug
 # on tab-led documents (caught by review + repro, pinned by test).
@@ -1548,7 +1540,7 @@ keep_ids AS (
   SELECT MIN(doc_id) AS doc_id FROM {docs} GROUP BY fp
 ),
 {base} AS (
-  SELECT d.doc_id AS doc_id, STRING_SPLIT_REGEX(TRIM(d.text), '[\\s\\x0b]+') AS toks
+  SELECT d.doc_id AS doc_id, {tokens_sql('d.text')} AS toks
   FROM {docs} d JOIN keep_ids k ON d.doc_id = k.doc_id
 ),
 {units} AS (
@@ -1566,7 +1558,7 @@ kept_lines AS (
 ),
 {_SCRUBBED_CTE_SQL},
 base2 AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(clean_text, '[\\s\\x0b]+') AS toks
+  SELECT doc_id, {split_sql('clean_text')} AS toks
   FROM scrubbed
 ),
 spans AS (
@@ -1589,7 +1581,7 @@ def _gated_docs_sql(gate: str) -> str:
     """:func:`_curation_chain_sql` input of the gated compositions: the
     non-null documents whose doc_id is in the CTE ``gate``, with their
     fingerprint."""
-    return f"""SELECT d.doc_id AS doc_id, d.text AS text, {_DOC_FP_SQL} AS fp
+    return f"""SELECT d.doc_id AS doc_id, d.text AS text, {DOC_FP_SQL} AS fp
   FROM documents d JOIN {gate} q ON d.doc_id = q.doc_id
   WHERE d.text IS NOT NULL"""
 
@@ -1625,13 +1617,13 @@ _Q210_SQL = (
     "WITH "
     + _curation_chain_sql(
         "docs",
-        f"""SELECT doc_id, text, {_DOC_FP_SQL} AS fp
+        f"""SELECT doc_id, text, {DOC_FP_SQL} AS fp
   FROM documents WHERE text IS NOT NULL""",
         "",
     )
-    + """,
+    + f""",
 totals AS (
-  SELECT doc_id, LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS n_tokens
+  SELECT doc_id, LEN({tokens_sql('text')}) AS n_tokens
   FROM docs
 )
 """
@@ -1663,7 +1655,7 @@ def _curation_stages(base: DataFrame) -> list[tuple[str, DataFrame]]:
     (counts only, no reassembly text). Returns the chain's
     :func:`_yield_ledger` stages: kept_exact, scrub_kept_tokens,
     span_kept_tokens."""
-    fp = base.select("doc_id", _doc_fp_expr().alias("fp"))
+    fp = base.select("doc_id", doc_fp_expr().alias("fp"))
     keep_ids = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     survivors = base.join(keep_ids, "doc_id", "semi").select(
         "doc_id", tokens_expr("text").alias("toks")
@@ -1956,7 +1948,7 @@ def _fuzzy_keep_sql(docs: str) -> str:
     doc_id or in no cluster)."""
     return f"""dt AS (
   SELECT doc_id, lang,
-         LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS toks
+         LIST_DISTINCT({tokens_sql('text')}) AS toks
   FROM {docs}
 ),
 {_closure_ctes_sql("dt")},
@@ -1971,7 +1963,7 @@ fkeep AS (
 
 
 # :func:`_curation_chain_sql` input of the fuzzy compositions
-_FKEEP_DOCS_SQL = f"SELECT doc_id, text, {_DOC_FP_SQL} AS fp FROM fkeep"
+_FKEEP_DOCS_SQL = f"SELECT doc_id, text, {DOC_FP_SQL} AS fp FROM fkeep"
 
 _Q214_SQL = (
     _Q212_RECURSIVE_CTES_SQL
@@ -2080,8 +2072,8 @@ def q214_fuzzy_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reference equivalent (SURVEY.md §2.10 north-star extension).
 
 _Q216_SQL = (
-    """WITH base0 AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks
+    f"""WITH base0 AS (
+  SELECT doc_id, {tokens_sql('text')} AS toks
   FROM documents WHERE text IS NOT NULL
 ),
 units AS (
@@ -2102,9 +2094,9 @@ kept_lines AS (
 ),
 """
     + _SCRUBBED_CTE_SQL
-    + """,
+    + f""",
 clean_src AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(clean_text, '[\\s\\x0b]+') AS toks,
+  SELECT doc_id, {split_sql('clean_text')} AS toks,
          CAST(scrub_kept_tokens AS BIGINT) AS mass
   FROM scrubbed
 ),
@@ -2409,7 +2401,7 @@ def _doc_urls(base: DataFrame) -> DataFrame:
     slug = F.regexp_replace(
         F.array_join(
             F.slice(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
+                tokens_expr(F.lower(F.col("text"))),
                 1,
                 _URL_SLUG_TOKENS,
             ),
@@ -2445,8 +2437,8 @@ def _url_cte_sql() -> str:
     ``unorm`` (normalized key), ``ugrp`` (per-key keeper + group size),
     ``ukeep`` (kept doc_ids), ``usize`` (per-doc group size)."""
     slug = (
-        "REGEXP_REPLACE(ARRAY_TO_STRING(STRING_SPLIT_REGEX(TRIM(LOWER(d.text)),"
-        f" '[\\s\\x0b]+')[1:{_URL_SLUG_TOKENS}], '-'), '{_URL_STRIP}', '', 'g')"
+        f"REGEXP_REPLACE(ARRAY_TO_STRING({tokens_sql('LOWER(d.text)')}"
+        f"[1:{_URL_SLUG_TOKENS}], '-'), '{_URL_STRIP}', '', 'g')"
     )
     host = "COALESCE(d.lang, 'und') || '.example.com'"
     url = (
@@ -2644,10 +2636,9 @@ _SUBSTR_K = 8
 
 def _substr_gram_sql(k: int) -> str:
     """Oracle gram CTE: sliding ``k``-token windows with 1-based start
-    positions over the q207-family tokenization (TRIM + ``[\\s\\x0b]+``
-    split — the Java-\\s/RE2 parity spelling, see DOC_NORM_SQL)."""
+    positions over the q207-family tokenization (``tokens_sql``)."""
     return f"""base AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks
+  SELECT doc_id, {tokens_sql('text')} AS toks
   FROM documents WHERE text IS NOT NULL
 ),
 grams AS (
@@ -3209,7 +3200,7 @@ _Q221_SQL = f"""
 WITH {_SUBSTR_LEDGER_CTES},
 led AS ({_Q219_LEDGER_SELECT}),
 fps AS (
-  SELECT doc_id, {_DOC_FP_SQL} AS fp FROM documents WHERE text IS NOT NULL
+  SELECT doc_id, {DOC_FP_SQL} AS fp FROM documents WHERE text IS NOT NULL
 ),
 copies AS (
   SELECT fp, COUNT(*) AS n_copies FROM fps GROUP BY fp
@@ -3250,7 +3241,7 @@ def q221_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint group-by; all arithmetic in codegen)."""
     led = q219_substring_dedup(spark, sf_dir)
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    fps = d.select("doc_id", _doc_fp_expr().alias("fp"))
+    fps = d.select("doc_id", doc_fp_expr().alias("fp"))
     copies = fps.groupBy("fp").agg(F.count("*").alias("n_copies"))
     # fp join-back left to AQE (the q208/q218 rationale): copies is one
     # row per distinct content — broadcast when small, shuffled when a

@@ -23,8 +23,9 @@ text stats (operators/text.py) and near-dup removal (operators/dedup.py):
   for semantic dedup at scale. Rows-only (iterative; pytest pins
   precision vs the exact all-pairs baseline).
 
-Tokenization is the engine-wide whitespace form (text.tokens_expr ⟷
-STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) so results compose with q27/q40.
+Tokenization is the engine-wide whitespace form of the text kit
+(functions/text.py: tokens_expr ⟷ tokens_sql, doc_tokens ⟷
+DOC_TOKENS_SQL), so results compose with q27/q40.
 """
 
 from __future__ import annotations
@@ -34,17 +35,23 @@ from pyspark.sql import functions as F
 
 from ..functions.deterministic import dec_sql, dsum
 from ..registry import query, table
-from .text import DOC_FP_SQL, doc_fp_expr, tokens_expr
+from ..functions.text import (
+    DOC_FP_SQL,
+    DOC_TOKENS_SQL,
+    doc_fp_expr,
+    doc_tokens,
+    tokens_expr,
+    tokens_sql,
+)
 
 
 # ---------------------------------------------------------------------------
 # q130: repetition quality metrics per document (Gopher rules).
 # ---------------------------------------------------------------------------
 
-_Q130_SQL = """
+_Q130_SQL = f"""
 WITH toks AS (
-  SELECT doc_id, UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
-  FROM documents
+  {DOC_TOKENS_SQL}
 ),
 tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
 tok_rank AS (
@@ -63,7 +70,7 @@ bi AS (
   SELECT doc_id,
          UNNEST(LIST_TRANSFORM(RANGE(1, LEN(l)),
                                i -> l[i] || ' ' || l[i + 1])) AS bigram
-  FROM (SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS l
+  FROM (SELECT doc_id, {tokens_sql('text')} AS l
         FROM documents)
 ),
 bc AS (SELECT doc_id, bigram, COUNT(*) AS c FROM bi GROUP BY 1, 2),
@@ -94,7 +101,7 @@ def q130_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the cheapest useful quality gate: no joins wider than doc_id,
     no Python."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
+    toks = doc_tokens(d)
     tc = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("doc_id").orderBy(F.col("c").desc(), "tok")
     tok_stats = tc.groupBy("doc_id").agg(
@@ -206,7 +213,7 @@ WITH g AS (
          UNNEST(LIST_TRANSFORM(
            RANGE(1, LEN(l) - {_NGRAM - 2}),
            i -> ARRAY_TO_STRING(l[i:i+{_NGRAM - 1}], ' '))) AS ng
-  FROM (SELECT doc_id, source, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS l
+  FROM (SELECT doc_id, source, {tokens_sql('text')} AS l
         FROM documents)
 ),
 eval_g AS (SELECT DISTINCT ng FROM g WHERE source = '{_EVAL_SOURCE}'),
@@ -557,7 +564,7 @@ def q143_substring_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q146_SQL = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS n_tokens
+         LEN({tokens_sql('text')}) AS n_tokens
   FROM documents
 ),
 fp AS (
@@ -673,8 +680,7 @@ _REP_GATE = 0.15  # top-token fraction above this = boilerplate (p95 here)
 
 _Q157_SQL = f"""
 WITH toks AS (
-  SELECT doc_id, UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
-  FROM documents
+  {DOC_TOKENS_SQL}
 ),
 tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
 rep AS (
@@ -710,7 +716,7 @@ def q157_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts. Plan: the repetition aggregate and the containment anti-join
     are the only shuffles; the mixture filter is free at scan time."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
+    toks = doc_tokens(d)
     rep = (
         toks.groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -883,7 +889,7 @@ _Q200_SQL = f"""
 WITH fp AS (
   SELECT doc_id,
          {DOC_FP_SQL} AS fingerprint,
-         LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS n_tokens,
+         LEN({tokens_sql('text')}) AS n_tokens,
          lang, source
   FROM documents
 )

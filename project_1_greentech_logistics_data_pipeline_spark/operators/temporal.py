@@ -188,21 +188,55 @@ def q32_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sessionization (gaps-and-islands; 30-minute inactivity gap)
 # ---------------------------------------------------------------------------
 
-_Q33_SQL = """
-WITH marked AS (
-  SELECT user_id, event_id, ts,
-    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              > INTERVAL '30 minutes'
-         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+SESSION_GAP_SQL = "INTERVAL '30 minutes'"
+
+
+def sessionize(events: DataFrame, *cols: str) -> DataFrame:
+    """``(user_id, event_id, ts, *cols, session_id)``: a user's session
+    starts at their first event and after every gap longer than
+    :data:`SESSION_GAP_SQL`, compared as an exact interval (microseconds,
+    not truncated seconds); ``session_id`` is the running count of starts
+    in (ts, event_id) order. One shuffle on user_id, two window passes over
+    the same partitioning. Oracle twin: :func:`_sessions_ctes_sql`."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    keep = ["user_id", "event_id", "ts", *cols]
+    prev = F.col("prev")
+    is_new = F.when((F.col("ts") - prev > F.expr(SESSION_GAP_SQL)) | prev.isNull(), 1)
+    return (
+        events.select(*keep, F.lag("ts").over(w).alias("prev"))
+        .select(*keep, is_new.otherwise(0).alias("is_new"))
+        .select(
+            *keep,
+            F.sum("is_new")
+            .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+            .alias("session_id"),
+        )
+    )
+
+
+def _sessions_ctes_sql(*cols: str) -> str:
+    """Oracle twin of :func:`sessionize`: CTEs ``marked`` and ``sessions``
+    over ``events``."""
+    sel = ", ".join(["user_id", "event_id", "ts", *cols])
+    prev = "LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+    return f"""marked AS (
+  SELECT {sel},
+    CASE WHEN ts - {prev}
+              > {SESSION_GAP_SQL}
+         OR {prev} IS NULL
          THEN 1 ELSE 0 END AS is_new
   FROM events
 ),
 sessions AS (
-  SELECT user_id, event_id, ts,
+  SELECT {sel},
     CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
   FROM marked
-)
+)"""
+
+
+_Q33_SQL = f"""
+WITH {_sessions_ctes_sql()}
 SELECT user_id, session_id,
   COUNT(*) AS n_events,
   STRFTIME(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
@@ -215,39 +249,18 @@ GROUP BY user_id, session_id
 
 @query("q33_sessionize", _Q33_SQL)
 def q33_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands sessionization: one shuffle on user_id, two window
-    passes over the same partitioning (Catalyst reuses the sort). The
-    streaming twin is session_window() in streaming/jobs.py."""
-    e = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    """Gaps-and-islands sessionization (:func:`sessionize`). The streaming
+    twin is session_window() in streaming/jobs.py."""
     # ntz has no direct long cast; go through ltz (session tz is UTC)
     epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    marked = e.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0).alias("is_new"),
-    )
-    sessions = marked.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.sum("is_new").over(w_run).cast("bigint").alias("session_id"),
-    )
     return (
-        sessions.groupBy("user_id", "session_id")
+        sessionize(table(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_id")
         .agg(
             F.count("*").alias("n_events"),
             F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
             F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            (
-                F.max(F.col("ts").cast("timestamp").cast("long"))
-                - F.min(F.col("ts").cast("timestamp").cast("long"))
-            )
-            .cast("bigint")
-            .alias("duration_sec"),
+            (F.max(epoch) - F.min(epoch)).cast("bigint").alias("duration_sec"),
         )
     )
 
@@ -645,21 +658,8 @@ def q176_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q181: top session paths (ordered event-type sequences per session)
 # ---------------------------------------------------------------------------
 
-_Q181_SQL = """
-WITH marked AS (
-  SELECT user_id, event_id, ts, event_type,
-    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              > INTERVAL '30 minutes'
-         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         THEN 1 ELSE 0 END AS is_new
-  FROM events
-),
-sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM marked
-),
+_Q181_SQL = f"""
+WITH {_sessions_ctes_sql("event_type")},
 paths AS (
   SELECT user_id, session_id,
          STRING_AGG(event_type, '>' ORDER BY ts, event_id) AS path,
@@ -687,24 +687,7 @@ def q181_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (ts, event_id, type) structs, never bare collect_list; the path
     space collapses map-side before the global top-25
     TakeOrderedAndProject."""
-    e = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    marked = e.select("user_id", "event_id", "ts", "event_type").withColumn(
-        "is_new",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
-                > 30 * 60 * 1_000_000
-            ),
-            1,
-        ).otherwise(0),
-    )
-    sessions = marked.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(W.unboundedPreceding, 0)),
-    )
+    sessions = sessionize(table(spark, sf_dir, "events"), "event_type")
     paths = (
         sessions.groupBy("user_id", "session_id")
         .agg(
@@ -736,21 +719,8 @@ def q181_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q202: first-session conversion (cold-start quality of acquisition)
 # ---------------------------------------------------------------------------
 
-_Q202_SQL = """
-WITH marked AS (
-  SELECT user_id, event_id, ts, event_type,
-    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              > INTERVAL '30 minutes'
-         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         THEN 1 ELSE 0 END AS is_new
-  FROM events
-),
-sessions AS (
-  SELECT user_id, event_type,
-    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM marked
-),
+_Q202_SQL = f"""
+WITH {_sessions_ctes_sql("event_type")},
 first_sessions AS (
   SELECT user_id,
          MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted,
@@ -773,23 +743,7 @@ def q202_first_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame
     lifetime conversion rate (q111) hides, since later sessions carry
     accumulated intent. Same one-shuffle sessionization; the first
     session filters by running session_id = 1 before any aggregation."""
-    e = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    marked = e.select("user_id", "event_id", "ts", "event_type").withColumn(
-        "is_new",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
-                > 30 * 60 * 1_000_000
-            ),
-            1,
-        ).otherwise(0),
-    )
-    sessions = marked.withColumn(
-        "session_id", F.sum("is_new").over(w.rowsBetween(W.unboundedPreceding, 0))
-    )
+    sessions = sessionize(table(spark, sf_dir, "events"), "event_type")
     first = (
         sessions.filter(F.col("session_id") == 1)
         .groupBy("user_id")

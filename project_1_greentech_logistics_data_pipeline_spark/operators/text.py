@@ -12,7 +12,25 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import pos_zero, pos_zero_col
+from ..functions.deterministic import (
+    frac_threshold_hex,
+    md5_prefix,
+    md5_prefix_sql,
+    pos_zero,
+    pos_zero_col,
+)
+from ..functions.text import (
+    DOC_FP_SQL,
+    DOC_NORM_SQL,
+    DOC_TOKENS_SQL,
+    WS_CLASS,
+    WS_CLASS_SQL,
+    doc_fp_expr,
+    doc_norm_expr,
+    doc_tokens,
+    tokens_expr,
+    tokens_sql,
+)
 from ..registry import query, table
 
 
@@ -27,11 +45,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 LANG_ORDER = ["en", "fr", "es", "de", "zh"]
 
 STOPWORDS = ["the", "a", "of", "and", "is"]
-
-
-def tokens_expr(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(c), r"\s+")
 
 
 def doc_id_exchange(d: DataFrame) -> DataFrame:
@@ -57,25 +70,6 @@ def exchanged_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_id_exchange(
         table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
-
-
-# The canonical document normalization and fingerprint — THE single
-# definition, shared by every consumer on both engines (q41/q43/q78/q92/
-# q109/q146/q200/q210 and the streaming incremental dedup): lowercase +
-# whitespace collapse (+ md5 for the fingerprint). The two spellings are
-# the SAME regex semantics: Spark compiles Java regex, whose \s includes
-# vertical tab (\x0B); DuckDB compiles RE2, whose \s does not — so the
-# oracle spells the class out as [\s\x0b].
-DOC_NORM_SQL = "LOWER(REGEXP_REPLACE(TRIM(text), '[\\s\\x0b]+', ' ', 'g'))"
-DOC_FP_SQL = f"MD5({DOC_NORM_SQL})"
-
-
-def doc_norm_expr(col: str = "text") -> Column:
-    return F.lower(F.regexp_replace(F.trim(F.col(col)), r"\s+", " "))
-
-
-def doc_fp_expr(col: str = "text") -> Column:
-    return F.md5(doc_norm_expr(col))
 
 
 def _in_set(markers: list[str]):
@@ -124,10 +118,10 @@ def lang_id_expr(text: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-_Q40_SQL = """
+_Q40_SQL = f"""
 WITH t AS (
   SELECT doc_id, lang, n_chars,
-    STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks
+    {tokens_sql('text')} AS toks
   FROM documents
 )
 SELECT
@@ -250,7 +244,7 @@ def _lang_case_sql() -> str:
     scores_sel = _lang_scores_sel_sql()
     return f"""
 WITH t AS (
-  SELECT doc_id, lang, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks FROM documents
+  SELECT doc_id, lang, {tokens_sql('text')} AS toks FROM documents
 ),
 scored AS (
   SELECT doc_id, lang,
@@ -290,63 +284,12 @@ def q42_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 STRATA_FRACTIONS = {"en": 0.2, "fr": 0.5, "es": 0.5, "de": 0.5, "zh": 0.5}
 SPLIT_SEED = 42
 
-# Portable deterministic sampling/splitting primitive: the first 15 hex
-# chars of md5(id || ':' || seed) are uniform on [0, 16^15) and IDENTICAL
-# in any engine that implements md5 (Spark, DuckDB, Python hashlib, ...) —
-# lowercase hex compares lexicographically, so "keep iff prefix < T(frac)"
-# needs no hex->int parsing anywhere. Unlike rand()-based samplers
-# (sampleBy/randomSplit), assignment is a pure function of the KEY: stable
-# under repartitioning, re-reads, engine swaps, and cluster size — the
-# property leakage-free reprocessing at 100 TB actually requires. md5 is a
-# JVM codegen built-in; on short id strings the cost is noise next to scan
-# I/O.
-
-
-def _md5_prefix(id_col: str, seed: int) -> F.Column:
-    # COALESCE before hashing: concat NULL-propagates on both engines, and
-    # a NULL key would otherwise fail BOTH `key < T` and `key >= T`,
-    # dropping the row from train AND val (conservation violation)
-    return F.substring(
-        F.md5(
-            F.concat(
-                F.coalesce(F.col(id_col).cast("string"), F.lit("__null__")),
-                F.lit(f":{seed}"),
-            )
-        ),
-        1,
-        15,
-    )
-
-
-def _md5_prefix_sql(id_sql: str, seed: int) -> str:
-    """DuckDB twin of _md5_prefix — same bytes in, same hex out."""
-    return (
-        f"SUBSTR(MD5(COALESCE(CAST({id_sql} AS VARCHAR), '__null__')"
-        f" || ':{seed}'), 1, 15)"
-    )
-
-
-def _frac_threshold_hex(frac: float) -> str:
-    """The threshold T with P(prefix < T) == frac (to 1 ulp of 16^-15).
-
-    frac >= 1 returns 'g': every hex prefix sorts before it ('f' < 'g'),
-    so the whole population is kept — the 16-digit hex for 16^15 would
-    compare lexicographically by FIRST character against 15-digit
-    prefixes and wrongly exclude everything above '0fff...'. frac <= 0
-    returns the all-zero threshold, which no prefix is below."""
-    if frac >= 1.0:
-        return "g"
-    if frac <= 0.0:
-        return "0" * 15
-    return format(int(round(frac * 16**15)), "015x")
-
-
 _Q79_SQL = (
     "WITH kept AS (\n"
     "  SELECT lang FROM documents\n"
-    f"  WHERE {_md5_prefix_sql('doc_id', SPLIT_SEED)} < CASE lang\n"
+    f"  WHERE {md5_prefix_sql('doc_id', SPLIT_SEED)} < CASE lang\n"
     + "\n".join(
-        f"    WHEN '{lang}' THEN '{_frac_threshold_hex(frac)}'"
+        f"    WHEN '{lang}' THEN '{frac_threshold_hex(frac)}'"
         for lang, frac in STRATA_FRACTIONS.items()
     )
     + "\n    ELSE '000000000000000' END\n"
@@ -361,7 +304,7 @@ def q79_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified (per-language) sampling — the rebalancing step a
     training-data pipeline uses to downweight an over-represented language.
     A one-pass filter with per-stratum keep-thresholds over the md5-prefix
-    key (see _md5_prefix): no shuffle, no count-first, and — unlike
+    key (see md5_prefix): no shuffle, no count-first, and — unlike
     sampleBy's per-partition RNG — the kept SET is a pure function of the
     doc ids, so it is reproducible across engines and partitionings (which
     is also what makes an exact DuckDB oracle possible). Strata not in the
@@ -370,10 +313,10 @@ def q79_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresh = F.lit("0" * 15)
     for lang, frac in STRATA_FRACTIONS.items():
         thresh = (
-            F.when(F.col("lang") == lang, F.lit(_frac_threshold_hex(frac)))
+            F.when(F.col("lang") == lang, F.lit(frac_threshold_hex(frac)))
             .otherwise(thresh)
         )
-    sampled = d.filter(_md5_prefix("doc_id", SPLIT_SEED) < thresh)
+    sampled = d.filter(md5_prefix("doc_id", SPLIT_SEED) < thresh)
     return sampled.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_sampled"))
 
 
@@ -386,9 +329,9 @@ def train_val_split(
     the id gives the SAME assignment for a row no matter how the data is
     partitioned, which is what leakage-free reprocessing requires at scale.
     The md5-prefix key additionally makes the assignment engine-portable
-    (reproducible outside Spark — see _md5_prefix)."""
-    key = _md5_prefix(id_col, seed)
-    thresh = F.lit(_frac_threshold_hex(val_fraction))
+    (reproducible outside Spark — see md5_prefix)."""
+    key = md5_prefix(id_col, seed)
+    thresh = F.lit(frac_threshold_hex(val_fraction))
     val = df.filter(key < thresh)
     train = df.filter(key >= thresh)
     return train, val
@@ -397,8 +340,8 @@ def train_val_split(
 _Q79B_SQL = f"""
 WITH tagged AS (
   SELECT lang,
-         CASE WHEN {_md5_prefix_sql('doc_id', SPLIT_SEED)}
-                   < '{_frac_threshold_hex(0.1)}'
+         CASE WHEN {md5_prefix_sql('doc_id', SPLIT_SEED)}
+                   < '{frac_threshold_hex(0.1)}'
               THEN 1 ELSE 0 END AS is_val
   FROM documents
 )
@@ -436,13 +379,13 @@ def q79b_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GPT-2-style pretokenizer classes, simplified to the lookahead-free subset
 # both Java regex (Spark) and RE2 (DuckDB) execute identically: runs of
 # letters, runs of digits, runs of other non-space symbols.
-_BPE_PAT = "[a-z]+|[0-9]+|[^a-z0-9\\s]+"
+_BPE_PAT = f"[a-z]+|[0-9]+|[^a-z0-9{WS_CLASS}]+"
 
-_Q91_SQL = """
+_Q91_SQL = f"""
 WITH t AS (
   SELECT doc_id,
-    REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+|[0-9]+|[^a-z0-9\\s\\x0b]+') AS bpe_toks,
-    STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS ws_toks
+    REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+|[0-9]+|[^a-z0-9{WS_CLASS_SQL}]+') AS bpe_toks,
+    {tokens_sql('text')} AS ws_toks
   FROM documents
 )
 SELECT
@@ -572,8 +515,7 @@ _Q93_SQL = f"""
 WITH lex(word, score) AS (
   VALUES ('fast', 2), ('big', 1), ('small', -1), ('slow', -2)
 ), toks AS (
-  SELECT doc_id, UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
-  FROM documents
+  {DOC_TOKENS_SQL}
 )
 SELECT
   t.doc_id,
@@ -599,7 +541,7 @@ def q93_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores keep the aggregation exact."""
     d = table(spark, sf_dir, "documents")
     lex = spark.createDataFrame(SENTIMENT_LEXICON, "word string, score int")
-    toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
+    toks = doc_tokens(d)
     ssum = F.sum("score")
     return (
         toks.join(F.broadcast(lex), toks.tok == lex.word)
@@ -629,7 +571,7 @@ _STRIDE = 40  # 10-token overlap
 
 _Q102_SQL = f"""
 WITH t AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks FROM documents
+  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
 ), c AS (
   SELECT doc_id, toks,
     UNNEST(RANGE(0, GREATEST(CAST(CEIL((LEN(toks) - {_CHUNK}) / {_STRIDE}.0) AS BIGINT) + 1, 1))) AS chunk_id
@@ -686,7 +628,7 @@ _BUDGET = 2048
 _Q103_SQL = f"""
 WITH t AS (
   SELECT doc_id, lang,
-    CAST(LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS BIGINT) AS n_tokens
+    CAST(LEN({tokens_sql('text')}) AS BIGINT) AS n_tokens
   FROM documents
 ), packed AS (
   SELECT lang, doc_id, n_tokens,
@@ -825,10 +767,10 @@ def q110_fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuilding _Q206_SQL through it is byte-identical to the prior literal
 # (pinned by tests/test_extensions.py::test_scrub_and_rep_sql_generators_pin),
 # so q206's oracle hash is unchanged by construction.
-_REP_CTES = """
+_REP_CTES = f"""
 WITH base AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks,
-         LEN(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS n
+  SELECT doc_id, {tokens_sql('text')} AS toks,
+         LEN({tokens_sql('text')}) AS n
   FROM documents WHERE text IS NOT NULL
 ),
 g2 AS (

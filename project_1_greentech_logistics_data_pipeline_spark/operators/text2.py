@@ -4,9 +4,9 @@ bigram language statistics, and frequency-based quality scoring.
 Extends operators/text.py's per-document signals with corpus-relative ones
 — the scores an LLM-data curation pipeline derives from global token
 statistics (rarity-weighted keywords, n-gram distributions, OOV rates).
-Tokenization is the engine-wide whitespace form (text.tokens_expr ⟷
-STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) so results compose with
-q27/q40/q91.
+Tokenization is the engine-wide whitespace form of the text kit
+(functions/text.py: tokens_expr ⟷ tokens_sql, doc_tokens ⟷
+DOC_TOKENS_SQL), so results compose with q27/q40/q91.
 
 Determinism note: idf is the RATIONAL form (n_docs+1)/(df+1), not
 log-scaled — monotone in 1/df, so top-k ranking is unaffected, and it
@@ -29,12 +29,12 @@ from ..functions.deterministic import (
     ols_slope,
 )
 from ..registry import query, table
-from .text import exchanged_docs, tokens_expr
+from ..functions.text import DOC_TOKENS_SQL, doc_tokens, tokens_expr, tokens_sql
+from .text import exchanged_docs
 
 
-_TOKS_SQL = """
-  SELECT doc_id, UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
-  FROM documents
+_TOKS_SQL = f"""
+  {DOC_TOKENS_SQL}
 """
 
 
@@ -74,7 +74,7 @@ def q119_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw text. At 100 TB the vocab-side stays broadcastable after a
     mincount cut; tf dominates and is map-side combinable."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
+    toks = doc_tokens(d)
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
     # corpus size as a lazy 1-row broadcast (no separate driver job)
@@ -98,12 +98,12 @@ def q119_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q124: corpus-wide top bigrams.
 # ---------------------------------------------------------------------------
 
-_Q124_SQL = """
+_Q124_SQL = f"""
 WITH bi AS (
   SELECT doc_id,
          UNNEST(LIST_TRANSFORM(RANGE(1, LEN(l)),
                                i -> l[i] || ' ' || l[i + 1])) AS bigram
-  FROM (SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS l
+  FROM (SELECT doc_id, {tokens_sql('text')} AS l
         FROM documents)
 )
 SELECT bigram, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
@@ -178,7 +178,7 @@ def q125_token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     divided once. Identical shape at 100 TB: vocab stays O(k), the
     groupBy(doc_id) shuffle is the only large one."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
+    toks = doc_tokens(d)
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     w = Window.orderBy(F.col("n").desc(), "tok")
     vocab = (
@@ -229,7 +229,7 @@ def _logp() -> Column:
 
 _Q161_SQL = f"""
 WITH toks AS (
-  SELECT doc_id, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS l FROM documents
+  SELECT doc_id, {tokens_sql('text')} AS l FROM documents
 ),
 bi AS (
   SELECT doc_id,
@@ -486,8 +486,8 @@ def _lm_tier_df(src: DataFrame) -> DataFrame:
 
 
 _Q215_SQL = (
-    """WITH base AS (
-  SELECT doc_id, lang, STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+') AS toks
+    f"""WITH base AS (
+  SELECT doc_id, lang, {tokens_sql('text')} AS toks
   FROM documents WHERE text IS NOT NULL
 ),
 src AS (
@@ -541,11 +541,11 @@ def q215_ccnet_perplexity_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q165: vocabulary indexing — encode documents as id sequences.
 # ---------------------------------------------------------------------------
 
-_Q165_SQL = """
+_Q165_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok,
-         GENERATE_SUBSCRIPTS(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+'), 1) AS pos
+         UNNEST({tokens_sql('text')}) AS tok,
+         GENERATE_SUBSCRIPTS({tokens_sql('text')}, 1) AS pos
   FROM documents
 ),
 freq AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
@@ -612,7 +612,7 @@ _PMI_MIN_PAIRS = 25
 _Q177_SQL = f"""
 WITH dt AS (
   SELECT DISTINCT doc_id,
-         UNNEST(LIST_DISTINCT(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+'))) AS tok
+         UNNEST(LIST_DISTINCT({tokens_sql('text')})) AS tok
   FROM documents
 ),
 n_docs AS (SELECT COUNT(DISTINCT doc_id) AS n FROM dt),
@@ -682,7 +682,7 @@ def q177_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q193_SQL = f"""
 WITH freq AS (
   SELECT tok, CAST(COUNT(*) AS DOUBLE) AS f
-  FROM (SELECT UNNEST(STRING_SPLIT_REGEX(TRIM(text), '[\\s\\x0b]+')) AS tok
+  FROM (SELECT UNNEST({tokens_sql('text')}) AS tok
         FROM documents)
   GROUP BY tok
 ),

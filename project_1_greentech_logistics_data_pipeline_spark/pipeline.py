@@ -51,38 +51,37 @@ from .sources.writers import write_table
 # --- validation rules -------------------------------------------------------
 # Single source of truth mirroring the reference's three copies
 # (Glue_job.py:56-61, Validation_checks.json:3-31, README.md:110-119).
-# Each rule: (flag_column, predicate builder, rejection reason).
-
-
-def _rules():
-    return [
-        ("truck_id_present", F.col("truck_id").isNotNull(), REASON_MISSING_TRUCK_ID),
-        (
-            "fuel_level_valid",
-            F.col("fuel_level").between(*FUEL_RANGE),
-            REASON_FUEL_OUT_OF_RANGE,
-        ),
-        (
-            "temperature_valid",
-            F.col("temperature").between(*TEMPERATURE_RANGE),
-            REASON_TEMP_OUT_OF_RANGE,
-        ),
-        (
-            "delivery_status_valid",
-            F.col("delivery_status").isin(*VALID_DELIVERY_STATUSES),
-            REASON_INVALID_STATUS,
-        ),
-        (
-            "lat_present",
-            F.col("location").isNotNull() & F.col("location.lat").isNotNull(),
-            REASON_MISSING_LAT,
-        ),
-        (
-            "lon_present",
-            F.col("location").isNotNull() & F.col("location.lon").isNotNull(),
-            REASON_MISSING_LON,
-        ),
-    ]
+# Each rule: (flag column, rejection reason, predicate builder). The
+# predicates are builders because a Column needs a live SparkContext.
+RULES = [
+    ("truck_id_present", REASON_MISSING_TRUCK_ID, lambda: F.col("truck_id").isNotNull()),
+    (
+        "fuel_level_valid",
+        REASON_FUEL_OUT_OF_RANGE,
+        lambda: F.col("fuel_level").between(*FUEL_RANGE),
+    ),
+    (
+        "temperature_valid",
+        REASON_TEMP_OUT_OF_RANGE,
+        lambda: F.col("temperature").between(*TEMPERATURE_RANGE),
+    ),
+    (
+        "delivery_status_valid",
+        REASON_INVALID_STATUS,
+        lambda: F.col("delivery_status").isin(*VALID_DELIVERY_STATUSES),
+    ),
+    (
+        "lat_present",
+        REASON_MISSING_LAT,
+        lambda: F.col("location").isNotNull() & F.col("location.lat").isNotNull(),
+    ),
+    (
+        "lon_present",
+        REASON_MISSING_LON,
+        lambda: F.col("location").isNotNull() & F.col("location.lon").isNotNull(),
+    ),
+]
+FLAG_COLUMNS = [flag for flag, _, _ in RULES]
 
 
 def normalize(df: DataFrame) -> DataFrame:
@@ -110,21 +109,15 @@ def validate(df: DataFrame) -> DataFrame:
       reference's array_remove(arr, NULL) returns NULL for every row
       (correction 2).
     """
-    rules = _rules()
     out = df
-    for flag, pred, _ in rules:
-        out = out.withColumn(flag, F.coalesce(pred, F.lit(False)))
+    for flag, _, pred in RULES:
+        out = out.withColumn(flag, F.coalesce(pred(), F.lit(False)))
     is_valid = None
-    for flag, _, _ in rules:
+    for flag in FLAG_COLUMNS:
         is_valid = F.col(flag) if is_valid is None else is_valid & F.col(flag)
     out = out.withColumn("is_valid", is_valid)
     reasons = F.array_compact(
-        F.array(
-            *[
-                F.when(~F.col(flag), F.lit(reason))
-                for flag, _, reason in rules
-            ]
-        )
+        F.array(*[F.when(~F.col(flag), F.lit(reason)) for flag, reason, _ in RULES])
     )
     out = out.withColumn("rejection_reasons", reasons)
     # processing-time stamp (Glue_job.py:81). The reference converts to
@@ -132,18 +125,6 @@ def validate(df: DataFrame) -> DataFrame:
     # presentation, not storage.
     out = out.withColumn("processed_at", F.current_timestamp())
     return out
-
-
-# static: _rules() builds Column objects, which needs a live SparkContext,
-# so the flag-name list is spelled out rather than derived at import time
-FLAG_COLUMNS = [
-    "truck_id_present",
-    "fuel_level_valid",
-    "temperature_valid",
-    "delivery_status_valid",
-    "lat_present",
-    "lon_present",
-]
 
 
 def split(validated: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -189,15 +170,14 @@ class QualityReport:
 
 
 def quality_gate(curated: DataFrame) -> QualityReport:
-    rules = _rules()
     aggs = [F.count("*").alias("n_rows")] + [
-        F.count(F.when(F.coalesce(pred, F.lit(False)) == False, 1)).alias(flag)  # noqa: E712
-        for flag, pred, _ in rules
+        F.count(F.when(F.coalesce(pred(), F.lit(False)) == False, 1)).alias(flag)  # noqa: E712
+        for flag, _, pred in RULES
     ]
     row = curated.agg(*aggs).collect()[0]
     return QualityReport(
         n_rows=row["n_rows"],
-        violations={flag: row[flag] for flag, _, _ in rules},
+        violations={flag: row[flag] for flag in FLAG_COLUMNS},
     )
 
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import doc_fp_expr
 from ..pipeline import route_and_write
 from ..sources.readers import parse_raw_lines
 from ..sources.writers import restore_interrupted_swap, upsert_by_key
@@ -273,8 +274,6 @@ def run_incremental_dedup_stream(
         if not batch_df.take(1):
             return
         sess = batch_df.sparkSession
-        from ..operators.text import doc_fp_expr
-
         b = batch_df.withColumn("fingerprint", doc_fp_expr())
         if "doc_id" not in b.columns:
             raise ValueError(

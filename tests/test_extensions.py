@@ -470,14 +470,14 @@ def test_sample_is_exactly_the_hashlib_keep_set(spark):
         _Q29_SEED,
         q29_sample,
     )
-    from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
-        _frac_threshold_hex,
+    from project_1_greentech_logistics_data_pipeline_spark.functions.deterministic import (
+        frac_threshold_hex,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
         load_table,
     )
 
-    thresh = _frac_threshold_hex(_Q29_FRAC)
+    thresh = frac_threshold_hex(_Q29_FRAC)
     all_keys = [
         (r["l_orderkey"], r["l_linenumber"])
         for r in load_table(spark, SF, "lineitem")
@@ -694,11 +694,13 @@ def test_chunking_conservation(spark):
     union of chunk tokens covers the whole document."""
     from pyspark.sql import functions as F
 
+    from project_1_greentech_logistics_data_pipeline_spark.functions.text import (
+        tokens_expr,
+    )
     from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
         _CHUNK,
         _STRIDE,
         q102_document_chunking,
-        tokens_expr,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
         load_table,
@@ -737,10 +739,12 @@ def test_sequence_packing_invariants(spark):
     bound); pack ids are dense from 0."""
     from pyspark.sql import functions as F
 
+    from project_1_greentech_logistics_data_pipeline_spark.functions.text import (
+        tokens_expr,
+    )
     from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
         _BUDGET,
         q103_sequence_packing,
-        tokens_expr,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
         load_table,
@@ -1039,13 +1043,15 @@ def test_md5_split_matches_independent_hashlib_implementation(spark):
     assignment (and, transitively via the q79b oracle test, DuckDB's)
     must equal a from-scratch Python hashlib computation of the same
     contract — first 15 hex chars of md5('<id>:<seed>') compared against
-    _frac_threshold_hex. Also sanity-checks the threshold math: the kept
+    frac_threshold_hex. Also sanity-checks the threshold math: the kept
     fraction lands near the requested fraction."""
     import hashlib
 
+    from project_1_greentech_logistics_data_pipeline_spark.functions.deterministic import (
+        frac_threshold_hex,
+    )
     from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
         SPLIT_SEED,
-        _frac_threshold_hex,
         train_val_split,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
@@ -1058,9 +1064,9 @@ def test_md5_split_matches_independent_hashlib_implementation(spark):
     spark_val = {r["doc_id"] for r in val.collect()}
 
     ids = [r["doc_id"] for r in d.collect()]
-    thresh = _frac_threshold_hex(frac)
+    thresh = frac_threshold_hex(frac)
 
-    def key(i):  # mirror _md5_prefix's NULL contract exactly
+    def key(i):  # mirror md5_prefix's NULL contract exactly
         return "__null__" if i is None else str(i)
 
     py_val = {
@@ -1205,7 +1211,7 @@ def test_q207_span_dedup_invariants(spark):
         _SPAN,
         q207_span_dedup_reassemble,
     )
-    from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
+    from project_1_greentech_logistics_data_pipeline_spark.functions.text import (
         tokens_expr,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
@@ -1324,7 +1330,7 @@ def test_q208_line_boilerplate_invariants(spark):
         _LINE,
         q208_line_boilerplate_scrub,
     )
-    from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
+    from project_1_greentech_logistics_data_pipeline_spark.functions.text import (
         tokens_expr,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
@@ -1570,9 +1576,19 @@ def test_whitespace_class_cross_engine_vertical_tab(spark, tmp_path):
     span); q43 additionally OUTPUTS the fingerprint md5, so a
     normalization split surfaces as a value mismatch, not a count skew."""
     import os
+    import re
 
     import duckdb
 
+    from project_1_greentech_logistics_data_pipeline_spark.functions.text import (
+        DOC_NORM_SQL,
+        DOC_TOKENS_SQL,
+        WS_CLASS_PY,
+        doc_norm_expr,
+        doc_tokens,
+        tokens_expr,
+        tokens_sql,
+    )
     from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
         _Q43_SQL,
         _Q210_SQL,
@@ -1611,6 +1627,77 @@ def test_whitespace_class_cross_engine_vertical_tab(spark, tmp_path):
     sfp = sorted(tuple(r) for r in q43_dedup_exact_docs(spark, d).collect())
     dfp = sorted(tuple(r) for r in con.execute(_Q43_SQL).fetchall())
     assert sfp == dfp  # fingerprint hex itself agrees, not just row counts
+
+    # The text kit's twins, directly, on this corpus plus q90's edge docs
+    # (tab-led, \x0B-led, space-led, NBSP, empty): tokens_expr ⟷
+    # tokens_sql, doc_norm_expr ⟷ DOC_NORM_SQL, doc_tokens ⟷
+    # DOC_TOKENS_SQL, and the split q90's Python UDTF runs against both.
+    edge = [(11, "\ta b"), (12, "\x0bx y"), (13, " z q"), (14, "a\u00a0b c"), (15, "")]
+    twins = docs + edge
+    s_tw = {
+        r[0]: (list(r[1]), r[2])
+        for r in spark.createDataFrame(twins, "doc_id long, text string")
+        .select("doc_id", tokens_expr("text"), doc_norm_expr())
+        .collect()
+    }
+    con.execute("CREATE TABLE twins (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO twins VALUES (?, ?)", twins)
+    d_tw = {
+        r[0]: (r[1], r[2])
+        for r in con.execute(
+            f"SELECT doc_id, {tokens_sql('text')}, {DOC_NORM_SQL} FROM twins"
+        ).fetchall()
+    }
+    assert s_tw == d_tw
+    assert s_tw[11][0] == ["", "a", "b"] and s_tw[14][0] == ["a\u00a0b", "c"]
+    for k, text in twins:
+        assert re.split(f"[{WS_CLASS_PY}]+", text.strip(" ")) == s_tw[k][0], k
+    stoks = sorted(tuple(r) for r in doc_tokens(spark.read.parquet(
+        os.path.join(d, "documents.parquet"))).collect())
+    assert stoks == sorted(con.execute(DOC_TOKENS_SQL).fetchall())
+
+
+def test_sessionize_gap_is_exact_interval(spark, tmp_path):
+    """A session breaks on a gap LONGER than 30 minutes, compared as an
+    exact interval on both engines. Gaps of 1799.5 s and 1800.0 s keep one
+    session; 1800.5 s starts a second. Comparing floor-truncated epoch
+    seconds (1800 vs 1800) would keep that pair in one session on the
+    Spark side only."""
+    import datetime as dt
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from project_1_greentech_logistics_data_pipeline_spark.operators.temporal import (
+        _Q33_SQL,
+        q33_sessionize,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    gaps = {1: 1799.5, 2: 1800.0, 3: 1800.5}
+    rows = [(u, t) for u, g in gaps.items() for t in (t0, t0 + dt.timedelta(seconds=g))]
+    path = os.path.join(str(tmp_path), "events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array([t for _, t in rows], pa.timestamp("us")),
+            "user_id": pa.array([u for u, _ in rows], pa.int64()),
+            "event_type": ["view"] * len(rows),
+            "value": pa.array([0.0] * len(rows), pa.float64()),
+            "props": pa.array([None] * len(rows), pa.string()),
+        }),
+        path,
+    )
+
+    srows = sorted(tuple(r) for r in q33_sessionize(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    drows = sorted(tuple(r) for r in con.execute(_Q33_SQL).fetchall())
+    assert srows == drows, (srows, drows)
+    n_sessions = {u: sum(r[0] == u for r in srows) for u in gaps}
+    assert n_sessions == {1: 1, 2: 1, 3: 2}
 
 
 def test_q90_udtf_tokenization_mirrors_oracle_on_edged_docs(spark, tmp_path):
@@ -1702,7 +1789,7 @@ def test_doc_unit_fanout_roundtrip_identity(spark, width):
         _doc_unit_fanout,
         _reassemble_kept,
     )
-    from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
+    from project_1_greentech_logistics_data_pipeline_spark.functions.text import (
         tokens_expr,
     )
     from project_1_greentech_logistics_data_pipeline_spark.sources.readers import (
