@@ -1,18 +1,35 @@
-"""Vector expressions over array<float>/array<double> columns, JVM-side.
+"""Embedding kit: the vector primitives of similarity search and semantic
+dedup (SURVEY §2.10), each JVM expression next to its numpy twin.
 
-Built from higher-order functions (aggregate/zip_with/transform) so they run
-inside whole-stage codegen — no Python in the hot path. These are the
-primitives for similarity search and embedding-cosine dedup (SURVEY §2.10).
+- JVM side: expressions over array<float>/array<double> columns, built
+  from higher-order functions (aggregate/zip_with/transform) so they run
+  inside whole-stage codegen with no Python in the row path.
+- numpy side: the same math on Arrow batches inside pandas UDFs
+  (``as_matrix`` -> ``unit_rows`` -> one GEMM), and on the driver for the
+  bounded k-means training sample.
+
+Every element is widened to double BEFORE it is squared or multiplied, so
+``l2_normalize_expr`` and ``unit_rows(as_matrix(...))`` agree to ~1 ulp and
+a pair scored on either side rounds to the same 6-dp cosine. Operators
+compose these helpers; none re-derives a normalization, a centroid
+ranking, a k-means loop or the pair kernel.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def _as_col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def lit_vec(values) -> Column:
+    """A literal array<double> (a centroid, hyperplane or PCA axis)."""
+    return F.array(*[F.lit(float(x)) for x in values])
 
 
 def dot_expr(a: Column | str, b: Column | str) -> Column:
@@ -40,6 +57,99 @@ def cosine_similarity_expr(a: Column | str, b: Column | str) -> Column:
 
 
 def l2_normalize_expr(a: Column | str) -> Column:
+    """Unit-norm array<double>; numpy twin: ``unit_rows(as_matrix(...))``."""
     a = _as_col(a)
     n = norm_expr(a)
     return F.transform(a, lambda x: x.cast("double") / n)
+
+
+def as_matrix(vectors) -> np.ndarray:
+    """An iterable of equal-length vectors (an Arrow array column's pandas
+    Series, or collected lists) as one float64 row matrix, 0 x 0 when
+    there are none."""
+    rows = [np.asarray(v, dtype=np.float64) for v in vectors]
+    return np.array(rows) if rows else np.empty((0, 0))
+
+
+def unit_rows(m: np.ndarray) -> np.ndarray:
+    """Each row scaled to unit L2 norm; JVM twin: ``l2_normalize_expr``."""
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def nearest_centroids(col: Column | str, centroids, m: int) -> Column:
+    """array<int> of the ``m`` centroid ids with the largest dot product,
+    best first; on unit vectors that is the nearest by cosine. numpy twin:
+    the first ``m`` of a stable ``argsort`` of ``-(unit_rows(M) @ C.T)``,
+    so an exact tie ranks the lower id first on both sides.
+
+    k (dot, -id) structs, sorted descending, sliced to m. Each dot stays a
+    zip_with/aggregate against a literal vector: unrolling k x dim literal
+    terms into one flat expression was measured 3.5x SLOWER (the
+    >1000-node tree exceeds codegen method limits and falls back to
+    interpreted eval with none of the lambda reuse)."""
+    col = _as_col(col)
+    scored = F.array(
+        *[
+            F.struct(dot_expr(col, lit_vec(c)).alias("d"), F.lit(-i).alias("i"))
+            for i, c in enumerate(centroids)
+        ]
+    )
+    return F.transform(F.slice(F.sort_array(scored, asc=False), 1, m), lambda s: -s["i"])
+
+
+TRAIN_SAMPLE = 16384  # k-means training sample bound (FAISS-style)
+
+
+def spherical_kmeans(emb: DataFrame, k: int, iters: int) -> np.ndarray:
+    """k x dim unit centroids of spherical k-means over ``emb``'s
+    ``(vec_id, embedding)``, trained on a BOUNDED sample.
+
+    This is how IVF quantizers train at any scale (FAISS trains on a
+    sample, not the corpus): one collect pulls the <= TRAIN_SAMPLE lowest
+    vec_ids to the driver, Lloyd rounds run in numpy (one GEMM each), and
+    only the k x dim result goes back out as literals or a broadcast. The
+    full corpus is touched only by the caller's assignment pass.
+    Deterministic: the seeds are the k lowest vec_ids. Spherical: members
+    are unit rows and each mean is re-normalized, so the argmax dot is the
+    nearest centroid by cosine."""
+    rows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(TRAIN_SAMPLE).collect()
+    mat = unit_rows(as_matrix(r["embedding"] for r in rows))
+    centroids = mat[:k].copy()
+    for _ in range(iters):
+        assign = (mat @ centroids.T).argmax(axis=1)
+        for ci in np.unique(assign):
+            centroids[ci] = mat[assign == ci].mean(axis=0)
+        centroids = unit_rows(centroids)
+    return centroids
+
+
+PAIR_SCHEMA = "vec_a long, vec_b long, cosine double"
+
+
+def pair_gemm(
+    ids_l: np.ndarray,
+    m_l: np.ndarray,
+    ids_r: np.ndarray,
+    m_r: np.ndarray,
+    threshold: float,
+    same_block: bool,
+) -> pd.DataFrame:
+    """PAIR_SCHEMA rows for every (left, right) pair of unit-row blocks
+    whose cosine, rounded to 6 dp, is >= ``threshold``: one GEMM, then the
+    threshold on the ROUNDED value (the oracle's ROUND-then-WHERE order).
+    ``same_block``: both sides hold the same vectors, so only
+    ``ids_l < ids_r`` is kept (each unordered pair once, no self-pairs).
+    Every pair comes out oriented as (min id, max id)."""
+    if not len(ids_l) or not len(ids_r):
+        return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
+            {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
+        )
+    sims = np.round(m_l @ m_r.T, 6)
+    keep = sims >= threshold
+    if same_block:
+        keep &= ids_l[:, None] < ids_r[None, :]
+    li, ri = np.nonzero(keep)
+    a, b = ids_l[li], ids_r[ri]
+    return pd.DataFrame(
+        {"vec_a": np.minimum(a, b), "vec_b": np.maximum(a, b), "cosine": sims[li, ri]}
+    )

@@ -11,7 +11,8 @@ Scale stance per variant:
   verified only on candidate pairs. No crossJoin anywhere.
 - SimHash: 64-bit signature via per-token xxhash64 bit-majority; near-dup =
   hamming<=k via bit_count(xor) on band-joined candidates.
-- embedding cosine: JVM-side higher-order-function cosine on candidate pairs.
+- embedding cosine: all pairs as triangle-tiled numpy GEMMs (the embedding
+  kit's pair_gemm), no driver collect.
 
 Cache contract: the pair-generating operators cache() their packed token
 sets — deliberately, because composed queries (q78/q187/q192 build the q44
@@ -25,13 +26,11 @@ bench.py does between queries.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.text import DOC_FP_SQL, doc_fp_expr, split_sql, tokens_expr, tokens_sql
+from ..functions.vectors import PAIR_SCHEMA, as_matrix, pair_gemm, unit_rows
 from ..registry import query, table
 from .graph import connected_components, sym_edges
 from .quality import _SCRUB_PATTERN as _REDACT_PATTERN
@@ -123,24 +122,15 @@ def _size_band(sa: Column, sb: Column, threshold: float) -> Column:
     return (sb.cast("double") >= sa * threshold) & (sa.cast("double") >= sb * threshold)
 
 
-def bitmask_token_sets(
-    spark: SparkSession,
-    sf_dir: str,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, lang, mask array<long>, sz): token sets as dense bitmaps.
-
-    ``keep`` (optional doc_id relation) gates the documents scan with a
-    SEMI join BEFORE the dictionary/bitmap build — the q214 composition
-    enumerates near-dup pairs over quality survivors only, and at corpus
-    scale the gate must drop mass before this build, not after the pairs
-    exist. Per-pair Jaccard is encoding-invariant (set sizes and
-    intersections don't depend on the dictionary), so gating here equals
-    filtering pair endpoints afterwards — cheaper, same edges. ``docs``
-    (optional ``(doc_id, lang, text)`` relation) replaces the documents
-    scan so the graph can be built over transformed text (q217's
-    redacted survivors); defaults keep every existing plan unchanged.
+def bitmask_token_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, mask array<long>, sz): token sets of a
+    ``(doc_id, lang, text)`` relation as dense bitmaps. Callers pass the
+    documents table, a gated scan of it (q214 semi-joins the quality
+    survivors in, so the gate drops mass BEFORE this build) or
+    transformed text (q217's redacted survivors). Per-pair Jaccard is
+    encoding-invariant (set sizes and intersections don't depend on the
+    dictionary), so gating the input equals filtering pair endpoints
+    afterwards — cheaper, same edges.
 
     Dictionary-encode tokens to per-lang dense indices (a tiny broadcast
     vocab built with one distinct + row_number), then pack each doc's set
@@ -155,10 +145,7 @@ def bitmask_token_sets(
     dwarf the sparse array — keep hashed_token_sets for that regime. The
     same dictionary-encode-then-bitmap idea underlies bitmap indexes and
     roaring bitmaps; this is the flat fixed-width variant."""
-    d = docs if docs is not None else table(spark, sf_dir, "documents")
-    if keep is not None:
-        d = d.join(keep.select("doc_id"), "doc_id", "semi")
-    toks = d.select(
+    toks = docs.select(
         "doc_id", "lang", F.explode(F.array_distinct(tokens_expr("text"))).alias("tok")
     )
     vocab = (
@@ -269,22 +256,14 @@ def q44_ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of per-pair array_intersect hash sets — this corpus is dense in
     its vocabulary, see bitmask_token_sets), and a salted self-join
     (:func:`_salted_pairs`)."""
-    return _exact_pairs(spark, sf_dir)
+    return _exact_pairs(table(spark, sf_dir, "documents"))
 
 
-def _exact_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """q44's scored pair enumeration, parameterized by an optional doc_id
-    gate (``keep`` SEMI-joins the scan before the bitmap build) so the
-    q214 composition can enumerate pairs over quality survivors only, and
-    an optional ``docs`` relation override (q217's redacted survivors).
-    With both defaults this IS q44's plan, expression for expression."""
+def _exact_pairs(docs: DataFrame) -> DataFrame:
+    """q44's scored pair enumeration over a ``(doc_id, lang, text)``
+    relation; over the documents table this IS q44's plan."""
     return (
-        _salted_pairs(bitmask_token_sets(spark, sf_dir, keep, docs), JACCARD_THRESHOLD)
+        _salted_pairs(bitmask_token_sets(docs), JACCARD_THRESHOLD)
         .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select(
             "doc_a", "doc_b", F.round("jaccard_raw", 6).cast("double").alias("jaccard")
@@ -387,7 +366,7 @@ def q45_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q44's order).
     """
     cand = lsh_candidate_pairs(spark, sf_dir)
-    masks = bitmask_token_sets(spark, sf_dir).cache()
+    masks = bitmask_token_sets(table(spark, sf_dir, "documents")).cache()
     a = masks.select(
         F.col("doc_id").alias("doc_a"), F.col("mask").alias("mask_a"), F.col("sz").alias("sz_a")
     )
@@ -514,8 +493,8 @@ WHERE ROUND(LIST_COSINE_SIMILARITY(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
 def q47_embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup by cosine. Brute-force pairs here (the testdata
     embedding table is a fixed 500-2000 vectors); the LSH-bucketed scale
-    variant is operators/similarity.py::q49. Cosine is a zip_with/aggregate
-    expression — whole-stage codegen, no UDF."""
+    variant is operators/similarity.py::q49. Cosines come from the
+    embedding kit's pair GEMM over triangle tiles (_blocked_cosine_pairs)."""
     e = table(spark, sf_dir, "embeddings")
     return _blocked_cosine_pairs(spark, e, COSINE_DUP_THRESHOLD)
 
@@ -564,41 +543,20 @@ def _blocked_cosine_pairs(
     )
     tiled = left.unionByName(right)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_a", T.LongType()),
-            T.StructField("vec_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def _tile_gemm(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _tile_gemm(key, pdf):
         ti, tj = key
         lp = pdf[pdf["role"] == 0]
         rp = pdf[pdf["role"] == 1]
-        if not len(lp) or not len(rp):
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        ids_l = lp["vec_id"].to_numpy()
-        ids_r = rp["vec_id"].to_numpy()
-        m_l = np.array([np.asarray(v, dtype=np.float64) for v in lp["embedding"]])
-        m_r = np.array([np.asarray(v, dtype=np.float64) for v in rp["embedding"]])
-        m_l = m_l / np.linalg.norm(m_l, axis=1, keepdims=True)
-        m_r = m_r / np.linalg.norm(m_r, axis=1, keepdims=True)
-        sims = m_l @ m_r.T
-        keep = np.round(sims, 6) >= threshold
-        if ti == tj:
-            keep &= ids_l[:, None] < ids_r[None, :]
-        li, ri = np.nonzero(keep)
-        a, b = ids_l[li], ids_r[ri]
-        # cross-tile groups: orient output by vec_id (oracle order)
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame(
-            {"vec_a": lo, "vec_b": hi, "cosine": np.round(sims[li, ri], 6)}
+        return pair_gemm(
+            lp["vec_id"].to_numpy(),
+            unit_rows(as_matrix(lp["embedding"])),
+            rp["vec_id"].to_numpy(),
+            unit_rows(as_matrix(rp["embedding"])),
+            threshold,
+            same_block=ti == tj,
         )
 
-    return tiled.groupBy("ti", "tj").applyInPandas(_tile_gemm, schema=out_schema)
+    return tiled.groupBy("ti", "tj").applyInPandas(_tile_gemm, schema=PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -648,35 +606,28 @@ def q73_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the component's min doc_id, so results are deterministic. The oracle is
     a DuckDB recursive-CTE transitive closure — the iterative Spark
     algorithm is exactly checked, not rows-only."""
-    sym = sym_edges(neardup_pairs(spark, sf_dir), "doc_a", "doc_b")
+    sym = sym_edges(neardup_pairs(table(spark, sf_dir, "documents")), "doc_a", "doc_b")
     return connected_components(sym).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
 
-def neardup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    keep: DataFrame | None = None,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate-pair source for clustering/curation (q73/q78/q214): q44's
-    within-lang blocked all-pairs — the oracle baseline, exact by
-    construction, quadratic per lang block.
+def neardup_pairs(docs: DataFrame) -> DataFrame:
+    """Candidate-pair source for clustering/curation (q73/q78/q214/q217)
+    over a ``(doc_id, lang, text)`` relation: q44's within-lang blocked
+    all-pairs — the oracle baseline, exact by construction, quadratic per
+    lang block.
 
-    ``keep`` (optional doc_id relation) restricts the pair graph to the
-    induced subgraph on those documents — enforced by gating the SCAN,
-    not by filtering endpoints afterwards, so the expensive build only
-    ever sees surviving mass (pair existence is pairwise, so the two are
-    equivalent; the induced-subgraph point matters one level up, where
+    A gated relation (q214: documents semi-joined to the quality
+    survivors) yields the induced subgraph on those documents, and the
+    expensive build only ever sees surviving mass (pair existence is
+    pairwise; the induced-subgraph point matters one level up, where
     connected components over the gated edges CAN differ from restricting
     full-corpus components — removing a junk node may split a cluster).
-
-    ``docs`` (optional ``(doc_id, lang, text)`` relation) replaces the
-    documents scan — q217 builds the pair graph over redaction-transformed
-    survivor text, where pair existence itself changes (two docs differing
-    only in blocklisted terms become near-identical after redaction)."""
-    return _exact_pairs(spark, sf_dir, keep, docs).select("doc_a", "doc_b")
+    A transformed relation (q217: redacted survivor text) changes pair
+    existence itself: two docs differing only in blocklisted terms become
+    near-identical after redaction."""
+    return _exact_pairs(docs).select("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -935,12 +886,9 @@ def _neg_sample_sql(a: str, b: str) -> str:
     )
 
 
-def _ngram_jaccard_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    min_score: float = _NEG_BAND[0],
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard) for every same-lang pair with Jaccard >=
+def _ngram_jaccard_scored(docs: DataFrame, min_score: float = _NEG_BAND[0]) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for every same-lang pair of a
+    ``(doc_id, lang, text)`` relation with Jaccard >=
     ``min_score`` — q44's salted bitmap machinery with the size-band
     prune relaxed to the lower bound (sound: the band predicate is
     monotone in the threshold), no final dup-threshold filter. The band
@@ -948,7 +896,7 @@ def _ngram_jaccard_scored(
     the threshold but ROUNDS up to it (e.g. 0.3999995 -> 0.40) is still
     generated as a candidate: the final filter is on the rounded value."""
     return (
-        _salted_pairs(bitmask_token_sets(spark, sf_dir), max(min_score - 1e-6, 0.0))
+        _salted_pairs(bitmask_token_sets(docs), max(min_score - 1e-6, 0.0))
         # ROUND first, then filter — matching the oracle's ROUND-then-WHERE
         # order, so the 6-dp boundary (raw in [t-5e-7, t)) lands on the
         # same side in both engines.
@@ -991,7 +939,7 @@ def q194_dedup_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded-quadratic scoring pass feeds both labels (the hard-negative
     band requires the quadratic).
     """
-    scored = _ngram_jaccard_scored(spark, sf_dir)
+    scored = _ngram_jaccard_scored(table(spark, sf_dir, "documents"))
     pos = scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", "jaccard", F.lit(True).alias("is_duplicate")
     )
@@ -1923,8 +1871,8 @@ def q213_filtered_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
 # the Jaccard comparison itself, computed as the SAME single IEEE
 # division on both engines (q44's driver-green construction).
 #
-# 100 TB shape: the gate drops mass BEFORE the pair build (keep= gates
-# the scan, not the pair endpoints), bitmaps ship instead of text,
+# 100 TB shape: the gate drops mass BEFORE the pair build (the pair
+# source reads the semi-joined scan, not the full corpus), bitmaps ship instead of text,
 # components converge in O(diameter) rounds of partial-agg min-label
 # propagation with localCheckpoint lineage cuts and 1-row convergence
 # collects, and the downstream stages are q210's adjudicated shapes. No
@@ -2013,12 +1961,11 @@ def q214_fuzzy_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB plan shape."""
     qkeep = _quality_keep(spark, sf_dir)
     base0 = exchanged_docs(spark, sf_dir).select("doc_id", "text")
-    # stage 1 — fuzzy dedup over the GATED corpus (keep= gates the pair
-    # scan); stages 2-4 — the shared chain over the fuzzy survivors (the
-    # df table counts the filtered, fuzzy-deduped corpus)
-    fkeep = _fuzzy_keep(
-        base0.join(qkeep, "doc_id", "semi"), neardup_pairs(spark, sf_dir, keep=qkeep)
-    )
+    # stage 1 — fuzzy dedup over the GATED corpus (the pair source reads
+    # the semi-joined scan); stages 2-4 — the shared chain over the fuzzy
+    # survivors (the df table counts the filtered, fuzzy-deduped corpus)
+    gated = table(spark, sf_dir, "documents").join(qkeep.select("doc_id"), "doc_id", "semi")
+    fkeep = _fuzzy_keep(base0.join(qkeep, "doc_id", "semi"), neardup_pairs(gated))
     return _yield_ledger(
         base0, [("kept_quality", qkeep), ("kept_fuzzy", fkeep), *_curation_stages(fkeep)]
     )
@@ -2213,7 +2160,7 @@ def q216_ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB shape: the redaction is one regexp_replace in whole-stage
 # codegen over the ALREADY-GATED scan (no extra shuffle — it fuses into
 # the semi-join projection); the redacted relation is cache()d because
-# three consumers need it (pair build via neardup_pairs(docs=), the
+# three consumers need it (the pair build via neardup_pairs, the
 # fuzzy-survivor text, the ledger's hits column) — the module's
 # documented cache contract, released by session.release_session_state.
 # No reference equivalent (SURVEY.md §2.10 north-star extension).
@@ -2277,11 +2224,11 @@ def q217_tagged_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         .cache()
     )
     # stage 2 — fuzzy dedup over the REDACTED survivors: pair existence
-    # itself changes under redaction (the docs= override); stages 3-5 —
+    # itself changes under redaction; stages 3-5 —
     # the shared chain over the redacted fuzzy survivors
     fkeep = _fuzzy_keep(
         redacted.select("doc_id", "text"),
-        neardup_pairs(spark, sf_dir, docs=redacted.select("doc_id", "lang", "text")),
+        neardup_pairs(redacted.select("doc_id", "lang", "text")),
     )
     return _yield_ledger(
         base0,

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dec
-from ..registry import query
+from ..registry import query, table
 from ..session import release_local_checkpoint
 
 _DAMPING = 0.85
@@ -333,7 +333,7 @@ def _neardup_sym(spark: SparkSession, sf_dir: str) -> SymEdges:
     # dedup imports this module at load time, so the import runs here
     from .dedup import neardup_pairs
 
-    return sym_edges(neardup_pairs(spark, sf_dir), "doc_a", "doc_b")
+    return sym_edges(neardup_pairs(table(spark, sf_dir, "documents")), "doc_a", "doc_b")
 
 
 @query("q145_neardup_pagerank", None)  # rows-only: iterative power method

@@ -17,11 +17,11 @@ text stats (operators/text.py) and near-dup removal (operators/dedup.py):
   with hll_union_agg to per-lang estimates: the re-aggregatable sketch
   layer a 100 TB warehouse stores instead of raw distinct counts.
   Rows-only (DuckDB's approx_count_distinct is a different HLL).
-- q132 clustered semantic dedup — full-data distributed Lloyd's k-means
-  over embeddings (bounded k x dim driver state per round), then exact
-  cosine verification WITHIN clusters only: the candidates+verify shape
-  for semantic dedup at scale. Rows-only (iterative; pytest pins
-  precision vs the exact all-pairs baseline).
+- q132 clustered semantic dedup — spherical k-means over embeddings
+  (trained on a bounded sample, then one JVM assignment pass over the
+  corpus), then exact cosine verification WITHIN clusters only: the
+  candidates+verify shape for semantic dedup at scale. Rows-only
+  (k-means; pytest pins precision vs the exact all-pairs baseline).
 
 Tokenization is the engine-wide whitespace form of the text kit
 (functions/text.py: tokens_expr ⟷ tokens_sql, doc_tokens ⟷
@@ -42,6 +42,14 @@ from ..functions.text import (
     doc_tokens,
     tokens_expr,
     tokens_sql,
+)
+from ..functions.vectors import (
+    PAIR_SCHEMA,
+    as_matrix,
+    l2_normalize_expr,
+    nearest_centroids,
+    pair_gemm,
+    spherical_kmeans,
 )
 
 
@@ -301,27 +309,8 @@ def q133_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q132: clustered semantic dedup (distributed k-means -> in-cluster verify).
+# q132: clustered semantic dedup (k-means candidates -> in-cluster verify).
 # ---------------------------------------------------------------------------
-
-
-def _top_m_centroids_expr(emb_col: str, centroids: list[list[float]], m: int) -> F.Column:
-    """Array of the m nearest centroid ids (by dot on unit vectors), JVM-side:
-    k (dot, id) structs, sort_array desc on the struct ordering, slice m."""
-    from ..functions.vectors import dot_expr
-
-    structs = F.array(
-        *[
-            F.struct(
-                dot_expr(F.col(emb_col), F.array(*[F.lit(float(x)) for x in c])).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.transform(
-        F.slice(F.sort_array(structs, asc=False), 1, m), lambda s: s["i"]
-    )
 
 
 def kmeans_assign(
@@ -330,53 +319,23 @@ def kmeans_assign(
     n_iter: int = 3,
     probe: int = 1,
 ) -> DataFrame:
-    """Full-data distributed Lloyd's k-means over unit-normalized
-    embeddings; returns (vec_id, nemb, clusters) where ``clusters`` is the
-    ``probe`` nearest cluster ids (probe=1 -> hard assignment).
+    """Spherical k-means over unit-normalized embeddings; returns
+    (vec_id, nemb, clusters) where ``clusters`` is the ``probe`` nearest
+    cluster ids (probe=1 -> hard assignment).
 
-    Per round: assignment is a JVM argmax-dot against k broadcast literal
-    centroids (no Python in the row path), the centroid update is one
-    posexplode + groupBy(cluster, dim) avg — a k*dim-row aggregate — and
-    only those k*dim numbers ever reach the driver (bounded, like IVF
-    training; NOT a data collect). Init is the k lowest vec_ids:
-    deterministic, no RNG. Spherical variant: means are re-normalized, so
-    argmax-dot == min-cosine-distance. Training always hard-assigns;
-    ``probe`` > 1 only widens the RETURNED assignment (soft/multi-probe
-    candidates for recall)."""
-    from .similarity import _nearest_centroid_expr, _normalized
-
-    import math
-
-    # checkpoint once: every training round (and the final assignment) scans
-    # this relation; without cutting lineage each round re-reads parquet and
-    # re-normalizes (measured ~30% of q132 at sf0.1)
-    n = emb.select("vec_id", _normalized("embedding").alias("nemb")).localCheckpoint()
-    seed_rows = (
-        n.orderBy("vec_id").limit(k).select("nemb").collect()
-    )  # k rows, bounded
-    centroids = [list(r["nemb"]) for r in seed_rows]
-    for _ in range(n_iter):
-        assigned = n.withColumn("cluster", _nearest_centroid_expr("nemb", centroids))
-        sums = (
-            assigned.select("cluster", F.posexplode("nemb").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )  # k*dim rows, bounded
-        by_cluster: dict[int, list[float]] = {}
-        counts: dict[int, int] = {}
-        dim = len(centroids[0])
-        for r in sums:
-            by_cluster.setdefault(r["cluster"], [0.0] * dim)[r["dim"]] = r["s"]
-            counts[r["cluster"]] = r["c"]
-        for ci, vec in by_cluster.items():
-            mean = [x / counts[ci] for x in vec]
-            nrm = math.sqrt(sum(x * x for x in mean)) or 1.0
-            centroids[ci] = [x / nrm for x in mean]
-    return n.withColumn("clusters", _top_m_centroids_expr("nemb", centroids, probe))
+    Training is the kit's bounded-sample trainer (one collect; only the
+    k x dim centroids come back). Assignment is one JVM pass over the
+    whole corpus: nearest-centroid ranking against k literal centroids, no
+    Python in the row path. Training always hard-assigns; ``probe`` > 1
+    only widens the RETURNED assignment (soft/multi-probe candidates for
+    recall)."""
+    centroids = spherical_kmeans(emb, k, n_iter)
+    return emb.select("vec_id", l2_normalize_expr("embedding").alias("nemb")).withColumn(
+        "clusters", nearest_centroids("nemb", centroids, probe)
+    )
 
 
-@query("q132_semantic_dedup_clustered", None)  # rows-only: iterative k-means
+@query("q132_semantic_dedup_clustered", None)  # rows-only: k-means candidates
 def q132_semantic_dedup_clustered(
     spark: SparkSession, sf_dir: str, threshold: float | None = None
 ) -> DataFrame:
@@ -385,10 +344,10 @@ def q132_semantic_dedup_clustered(
     clusters only (equi-join on cluster id — never the all-pairs
     cartesian), and candidates are verified with the exact cosine. The
     scale path for what q47 computes exactly: expected candidate volume
-    drops from N^2 to sum over clusters of |c|^2, and every stage is an
-    equi-join or bounded-state k-means round. Precision is 1.0 by
-    construction (exact verify); recall misses only pairs k-means split
-    across clusters (pytest pins it on testdata)."""
+    drops from N^2 to sum over clusters of |c|^2, and k-means trains on a
+    bounded sample. Precision is 1.0 by construction (exact verify);
+    recall misses only pairs k-means split across clusters (pytest pins
+    it on testdata)."""
     from .dedup import COSINE_DUP_THRESHOLD
 
     if threshold is None:
@@ -397,35 +356,19 @@ def q132_semantic_dedup_clustered(
     assigned = kmeans_assign(emb, probe=2).localCheckpoint(eager=False)
     # multi-probe candidates: a pair is a candidate if ANY of each side's
     # top-2 clusters coincide — explode to (cluster, vec) postings, then
-    # verify WITHIN each cluster with one numpy GEMM per cluster group
-    # (the q47 tile pattern: Arrow batch in, dense matmul, thresholded
-    # pairs out — ~2x over per-pair JVM fold dots at sf0.1) and dedup
-    # pairs found via both probes.
-    import pandas as pd
-
+    # verify WITHIN each cluster with the kit's pair GEMM (q47's kernel:
+    # Arrow batch in, dense matmul, thresholded pairs out — ~2x over
+    # per-pair JVM fold dots at sf0.1) and dedup pairs found via both
+    # probes.
     postings = assigned.select(
         "vec_id", "nemb", F.explode("clusters").alias("cluster")
     )
 
-    def _cluster_gemm(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
+    def _cluster_gemm(key, pdf):
+        ids, m = pdf["vec_id"].to_numpy(), as_matrix(pdf["nemb"])
+        return pair_gemm(ids, m, ids, m, threshold, same_block=True)
 
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        ids = pdf["vec_id"].to_numpy()
-        m = np.array([np.asarray(v, dtype=np.float64) for v in pdf["nemb"]])
-        sims = np.round(m @ m.T, 6)  # unit vectors: dot == cosine
-        keep = (sims >= threshold) & (ids[:, None] < ids[None, :])
-        li, ri = np.nonzero(keep)
-        return pd.DataFrame(
-            {"vec_a": ids[li], "vec_b": ids[ri], "cosine": sims[li, ri]}
-        )
-
-    pairs = postings.groupBy("cluster").applyInPandas(
-        _cluster_gemm, schema="vec_a long, vec_b long, cosine double"
-    )
+    pairs = postings.groupBy("cluster").applyInPandas(_cluster_gemm, schema=PAIR_SCHEMA)
     return pairs.distinct().orderBy("vec_a", "vec_b")
 
 

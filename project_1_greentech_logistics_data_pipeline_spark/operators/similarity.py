@@ -15,11 +15,22 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity_expr, dot_expr
+from ..functions.vectors import (
+    as_matrix,
+    cosine_similarity_expr,
+    dot_expr,
+    l2_normalize_expr,
+    lit_vec,
+    nearest_centroids,
+    spherical_kmeans,
+    unit_rows,
+)
 from ..functions.deterministic import (
     hilo_reconstruct,
     hilo_sum_exprs,
@@ -126,8 +137,7 @@ def _bucket_expr(emb_col: str, planes: list[list[float]]) -> F.Column:
     """Sign-pattern bucket id: bit i = (emb . plane_i) >= 0, JVM-side."""
     bucket = F.lit(0)
     for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        d = dot_expr(F.col(emb_col), lit_plane)
+        d = dot_expr(F.col(emb_col), lit_vec(plane))
         bucket = bucket + F.shiftleft(F.when(d >= 0, F.lit(1)).otherwise(F.lit(0)), i)
     return bucket.cast("int")
 
@@ -300,63 +310,6 @@ IVF_NPROBE = 4    # clusters probed per query (~nprobe/K of the corpus scored)
 IVF_ITERS = 3     # Lloyd iterations
 
 
-def _normalized(emb_col: str) -> F.Column:
-    v = F.col(emb_col)
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    return F.transform(v, lambda x: x / norm)
-
-
-def _nearest_centroid_expr(emb_col: str, centroids: list[list[float]]) -> F.Column:
-    """argmax-dot cluster assignment against literal centroids, JVM-side.
-
-    Kept as zip_with/aggregate dots: unrolling k x dim literal terms into a
-    flat expression was measured 3.5x SLOWER (the >1000-node expression
-    tree exceeds codegen method limits and falls back to interpreted eval
-    with none of the lambda reuse)."""
-    scores = F.array(
-        *[
-            dot_expr(F.col(emb_col), F.array(*[F.lit(float(x)) for x in c]))
-            for c in centroids
-        ]
-    )
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-
-
-IVF_TRAIN_SAMPLE = 16384  # quantizer training sample bound (FAISS-style)
-
-
-def train_ivf_centroids(
-    emb: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS
-) -> list[list[float]]:
-    """Spherical k-means coarse quantizer, trained on a BOUNDED sample.
-
-    This is how IVF quantizers train at any scale (FAISS trains on a
-    sample, not the corpus): pull <= IVF_TRAIN_SAMPLE vectors to the
-    driver, run Lloyd iterations in numpy (one GEMM per round), broadcast
-    the k x dim centroid matrix back. The driver-side data is O(sample),
-    never O(corpus); the full corpus is touched only by the distributed
-    assignment pass in the caller. Deterministic: sample = lowest vec_ids,
-    seeds = first k of the sample."""
-    import numpy as np
-
-    rows = (
-        emb.select("vec_id", _normalized("embedding").alias("nemb"))
-        .orderBy("vec_id")
-        .limit(IVF_TRAIN_SAMPLE)
-        .collect()
-    )
-    mat = np.array([list(r["nemb"]) for r in rows])  # unit-norm already
-    centroids = mat[:k].copy()
-    for _ in range(iters):
-        assign = (mat @ centroids.T).argmax(axis=1)  # spherical: max dot
-        for ci in range(k):
-            members = mat[assign == ci]
-            if len(members):
-                c = members.mean(axis=0)
-                centroids[ci] = c / (np.linalg.norm(c) or 1.0)
-    return [[float(x) for x in c] for c in centroids]
-
-
 @query("q74_knn_ivf", None)  # approximate -> rows-only; recall tested in pytest
 def q74_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via an IVF index: spherical k-means coarse
@@ -372,65 +325,36 @@ def q74_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the locality assumption is for. Recall floor asserted in
     tests/test_extensions.py."""
     e = table(spark, sf_dir, "embeddings")
-    centroids = train_ivf_centroids(e)
+    centroids = spherical_kmeans(e, IVF_K, IVF_ITERS)
 
     # corpus -> inverted lists: one Arrow pass, normalize + argmax-dot as a
     # numpy GEMM per batch against the broadcast centroid matrix (the
     # JVM-lambda assignment was ~2x slower end-to-end at sf0.1)
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cmat = np.array(centroids)
-    bc = spark.sparkContext.broadcast(cmat)
-    assign_schema = T.StructType(
-        [
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("c_emb", T.ArrayType(T.DoubleType())),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
+    bc = spark.sparkContext.broadcast(centroids)
 
     def _assign(batches):
         cm = bc.value
         for pdf in batches:
-            m = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cl = (m @ cm.T).argmax(axis=1).astype("int32")
+            m = unit_rows(as_matrix(pdf["embedding"]))
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["vec_id"].to_numpy(),
                     "c_emb": list(m),
-                    "cluster": cl,
+                    "cluster": (m @ cm.T).argmax(axis=1).astype("int32"),
                 }
             )
 
-    corpus = e.select("vec_id", "embedding").mapInPandas(_assign, schema=assign_schema)
-
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), _normalized("embedding").alias("q_emb")
+    corpus = e.select("vec_id", "embedding").mapInPandas(
+        _assign, schema="neighbor_id long, c_emb array<double>, cluster int"
     )
-    # nprobe nearest centroids per query: rank the k dot products, explode
-    cscores = F.array(
-        *[
-            dot_expr(F.col("q_emb"), F.array(*[F.lit(float(x)) for x in c]))
-            for c in centroids
-        ]
-    )
-    probes = (
-        q.select(
-            "query_id",
-            "q_emb",
-            F.posexplode(cscores).alias("cluster", "cscore"),
-        )
-        .withColumn(
-            "crk",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(F.col("cscore").desc(), "cluster")
-            ),
-        )
-        .filter(F.col("crk") <= IVF_NPROBE)
-        .select("query_id", "q_emb", "cluster")
+    # each query probes its IVF_NPROBE nearest lists, ranked on the JVM
+    probes = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        l2_normalize_expr("embedding").alias("q_emb"),
+    ).select(
+        "query_id",
+        "q_emb",
+        F.explode(nearest_centroids("q_emb", centroids, IVF_NPROBE)).alias("cluster"),
     )
     cos = dot_expr(F.col("q_emb"), F.col("c_emb"))  # both unit-norm -> dot = cosine
     scored = (
@@ -503,17 +427,13 @@ def pca_components(emb: DataFrame, k: int = 4) -> tuple[list[list[float]], list[
     tree-aggregate shape where the data never moves, only d^2 numbers per
     partition do. Eigenvector sign is fixed (largest-|coord| positive) so
     results are deterministic across partitionings."""
-    import numpy as np
-
     d_dim = len(emb.select("embedding").first()["embedding"])
 
     def _partials(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+            m = as_matrix(pdf["embedding"])
             yield pd.DataFrame(
                 {
                     "n": [len(m)],
@@ -552,14 +472,11 @@ def q153_pca_project(spark: SparkSession, sf_dir: str, k: int = 4) -> DataFrame:
     embedding — no Python in the row path, no shuffle."""
     emb = table(spark, sf_dir, "embeddings")
     comps, _evs, mean = pca_components(emb, k=k)
-    mean_lit = F.array(*[F.lit(x) for x in mean])
     centered = F.zip_with(
-        F.col("embedding").cast("array<double>"), mean_lit, lambda a, b: a - b
+        F.col("embedding").cast("array<double>"), lit_vec(mean), lambda a, b: a - b
     )
     cols = [
-        F.round(
-            dot_expr(centered, F.array(*[F.lit(x) for x in c])), 9
-        ).alias(f"pc{i + 1}")
+        F.round(dot_expr(centered, lit_vec(c)), 9).alias(f"pc{i + 1}")
         for i, c in enumerate(comps)
     ]
     return emb.select("vec_id", *cols).orderBy("vec_id")

@@ -451,78 +451,77 @@ def q97_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Funnel analysis: ordered view -> click -> purchase progression per user
 # ---------------------------------------------------------------------------
 
-_Q111_SQL = """
+FUNNEL_STAGES = ("view", "click", "purchase")
+
+
+def funnel(
+    events: DataFrame, names: tuple[str, ...], deadlines: tuple[int | None, ...] = (None, None)
+) -> DataFrame:
+    """One row of per-stage user counts, aliased ``names``: users who
+    viewed, then clicked AFTER their first view, then purchased AFTER
+    that first click — stage order enforced by timestamps, not mere event
+    existence. ``deadlines`` optionally bounds each conversion (hours
+    after the previous stage's first time; None = unbounded). Oracle
+    twin: :func:`_funnel_sql`.
+
+    One conditional minimum per stage, stacked as window projections over
+    ONE user_id partitioning: a single shuffle serves all stages (a staged
+    join formulation was measured at 16 exchanges — each stage's subtree
+    re-executed). At 100 TB the per-user pass is the whole cost; the
+    funnel itself is a 3-row driver-side reduction."""
+    w = W.partitionBy("user_id")
+    staged, prev = events.select("user_id", "event_type", "ts"), None
+    for stage, hours in zip(FUNNEL_STAGES, (None, *deadlines)):
+        cond = F.col("event_type") == stage
+        if prev is not None:
+            cond = cond & (F.col("ts") > F.col(prev))
+        if hours is not None:
+            cond = cond & (F.col("ts") <= F.col(prev) + F.expr(f"INTERVAL {hours} HOURS"))
+        prev = f"t_{stage}"
+        staged = staged.withColumn(prev, F.min(F.when(cond, F.col("ts"))).over(w))
+    cols = [f"t_{stage}" for stage in FUNNEL_STAGES]
+    per_user = staged.groupBy("user_id").agg(*(F.first(c).alias(c) for c in cols))
+    return per_user.agg(*(F.count(c).alias(n) for c, n in zip(cols, names)))
+
+
+def _funnel_sql(
+    names: tuple[str, ...], deadlines: tuple[int | None, ...] = (None, None)
+) -> str:
+    """Oracle twin of :func:`funnel`: one CTE per stage, each joined to
+    the previous stage's first time."""
+
+    def within(prev: str, hours: int | None) -> str:
+        return "" if hours is None else f"\n    AND e.ts <= {prev} + INTERVAL {hours} HOUR"
+
+    return f"""
 WITH v AS (
   SELECT user_id, MIN(ts) AS t_view FROM events
   WHERE event_type = 'view' GROUP BY user_id
 ), c AS (
   SELECT e.user_id, MIN(e.ts) AS t_click
   FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ts > v.t_view
+  WHERE e.event_type = 'click' AND e.ts > v.t_view{within("v.t_view", deadlines[0])}
   GROUP BY e.user_id
 ), p AS (
   SELECT e.user_id, MIN(e.ts) AS t_purchase
   FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.t_click
+  WHERE e.event_type = 'purchase' AND e.ts > c.t_click{within("c.t_click", deadlines[1])}
   GROUP BY e.user_id
 )
 SELECT
-  (SELECT COUNT(*) FROM v) AS n_viewed,
-  (SELECT COUNT(*) FROM c) AS n_clicked_after_view,
-  (SELECT COUNT(*) FROM p) AS n_purchased_after_click
+  (SELECT COUNT(*) FROM v) AS {names[0]},
+  (SELECT COUNT(*) FROM c) AS {names[1]},
+  (SELECT COUNT(*) FROM p) AS {names[2]}
 """
 
 
-@query("q111_funnel_analysis", _Q111_SQL)
+_Q111_NAMES = ("n_viewed", "n_clicked_after_view", "n_purchased_after_click")
+
+
+@query("q111_funnel_analysis", _funnel_sql(_Q111_NAMES))
 def q111_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel: users who viewed, then clicked AFTER their first
-    view, then purchased AFTER that first click — stage order enforced by
-    timestamps, not mere event existence. Computed as one conditional
-    aggregation per user (min ts per stage with the order constraints
-    folded in via earlier-stage minimums) — a single shuffle on user_id,
-    then three scalar counts. At 100 TB the per-user pass is the whole
-    cost; the funnel itself is a 3-row driver-side reduction."""
-    e = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id")
-    # three stacked window projections over ONE partitioning: a single
-    # shuffle on user_id serves all stages (a staged join formulation was
-    # measured at 16 exchanges — each stage's subtree re-executed)
-    staged = (
-        e.select("user_id", "event_type", "ts")
-        .withColumn(
-            "t_view",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click") & (F.col("ts") > F.col("t_view")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("t_click")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.first("t_view").alias("t_view"),
-        F.first("t_click").alias("t_click"),
-        F.first("t_purchase").alias("t_purchase"),
-    )
-    return per_user.agg(
-        F.count("t_view").alias("n_viewed"),
-        F.count("t_click").alias("n_clicked_after_view"),
-        F.count("t_purchase").alias("n_purchased_after_click"),
-    )
+    """Ordered view -> click -> purchase funnel over all time."""
+    return funnel(table(spark, sf_dir, "events"), _Q111_NAMES)
 
 
 # ---------------------------------------------------------------------------
@@ -579,79 +578,18 @@ def q112_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q176: time-bounded funnel (convert WITHIN a deadline per stage)
 # ---------------------------------------------------------------------------
 
-_Q176_SQL = """
-WITH v AS (
-  SELECT user_id, MIN(ts) AS t_view FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-), c AS (
-  SELECT e.user_id, MIN(e.ts) AS t_click
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ts > v.t_view
-    AND e.ts <= v.t_view + INTERVAL 6 HOUR
-  GROUP BY e.user_id
-), p AS (
-  SELECT e.user_id, MIN(e.ts) AS t_purchase
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-    AND e.ts <= c.t_click + INTERVAL 48 HOUR
-  GROUP BY e.user_id
-)
-SELECT
-  (SELECT COUNT(*) FROM v) AS n_viewed,
-  (SELECT COUNT(*) FROM c) AS n_clicked_within_6h,
-  (SELECT COUNT(*) FROM p) AS n_purchased_within_48h
-"""
+_Q176_NAMES = ("n_viewed", "n_clicked_within_6h", "n_purchased_within_48h")
+_Q176_DEADLINES = (6, 48)  # hours: click after first view, purchase after that click
 
 
-@query("q176_funnel_time_bounded", _Q176_SQL)
+@query("q176_funnel_time_bounded", _funnel_sql(_Q176_NAMES, _Q176_DEADLINES))
 def q176_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deadline funnel: q111's ordered stages with per-stage conversion
     WINDOWS (click within 6h of first view, purchase within 48h of that
     click) — the form product analytics actually reports, since an
     unbounded funnel credits conversions that happen weeks later. Same
-    single-shuffle formulation: three stacked conditional window minimums
-    over ONE user_id partitioning, deadlines folded into the conditions."""
-    e = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id")
-    staged = (
-        e.select("user_id", "event_type", "ts")
-        .withColumn(
-            "t_view",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts") > F.col("t_view"))
-                    & (F.col("ts") <= F.col("t_view") + F.expr("INTERVAL 6 HOURS")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("t_click"))
-                    & (F.col("ts") <= F.col("t_click") + F.expr("INTERVAL 48 HOURS")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.first("t_view").alias("t_view"),
-        F.first("t_click").alias("t_click"),
-        F.first("t_purchase").alias("t_purchase"),
-    )
-    return per_user.agg(
-        F.count("t_view").alias("n_viewed"),
-        F.count("t_click").alias("n_clicked_within_6h"),
-        F.count("t_purchase").alias("n_purchased_within_48h"),
-    )
+    single-shuffle formulation, deadlines folded into the conditions."""
+    return funnel(table(spark, sf_dir, "events"), _Q176_NAMES, _Q176_DEADLINES)
 
 
 # ---------------------------------------------------------------------------

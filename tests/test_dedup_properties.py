@@ -21,6 +21,7 @@ from project_1_greentech_logistics_data_pipeline_spark.operators.graph import (
     connected_components_star,
     sym_edges,
 )
+from project_1_greentech_logistics_data_pipeline_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -30,7 +31,7 @@ def test_bitmap_jaccard_equals_array_jaccard(spark):
     quadratic at sf0.001), popcount-over-masks must equal
     array_intersect-over-hashed-sets exactly."""
     arr = hashed_token_sets(spark, SF).select("doc_id", "lang", "hset")
-    msk = bitmask_token_sets(spark, SF).select(
+    msk = bitmask_token_sets(load_table(spark, SF, "documents")).select(
         F.col("doc_id"), F.col("lang").alias("mlang"), "mask", "sz"
     )
     docs = arr.join(msk.drop("mlang"), "doc_id")
@@ -379,13 +380,13 @@ def test_lsh_pairs_match_exact_pairs(spark):
 
 
 def test_neardup_pairs_docs_override_composes_with_keep(spark, tmp_path):
-    """The docs= relation override and the keep= doc_id gate COMPOSE:
-    keep SEMI-gates the provided relation before the bitmap build — the
-    contract q217 relies on half of (docs= alone) and future compositions
-    may rely on jointly. Corpus: three mutual near-dup docs (identical
-    text) plus an unrelated doc; keep excludes one member of the trio, so
-    the gated graph must contain exactly the one surviving pair and never
-    touch the excluded id."""
+    """A caller's own documents relation and a doc_id gate COMPOSE: the
+    pair source takes any ``(doc_id, lang, text)`` relation (q217 passes
+    redacted text), and a SEMI-gated one (q214's form) yields the induced
+    subgraph. Corpus: three mutual near-dup docs (identical text) plus an
+    unrelated doc; keep excludes one member of the trio, so the gated
+    graph must contain exactly the one surviving pair and never touch the
+    excluded id."""
     from project_1_greentech_logistics_data_pipeline_spark.operators.dedup import (
         neardup_pairs,
     )
@@ -400,11 +401,11 @@ def test_neardup_pairs_docs_override_composes_with_keep(spark, tmp_path):
     keep = spark.createDataFrame([(1,), (2,), (4,)], "doc_id long")
     full = {
         (r["doc_a"], r["doc_b"])
-        for r in neardup_pairs(spark, "unused-sf-dir", docs=docs).collect()
+        for r in neardup_pairs(docs).collect()
     }
     gated = {
         (r["doc_a"], r["doc_b"])
-        for r in neardup_pairs(spark, "unused-sf-dir", keep=keep, docs=docs).collect()
+        for r in neardup_pairs(docs.join(keep.select("doc_id"), "doc_id", "semi")).collect()
     }
     assert full == {(1, 2), (1, 3), (2, 3)}
     assert gated == {(1, 2)}

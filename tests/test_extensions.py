@@ -2376,6 +2376,7 @@ def test_q214_consistency_sf(spark):
     from project_1_greentech_logistics_data_pipeline_spark.operators.text import (
         q212_gopher_quality_filter,
     )
+    from project_1_greentech_logistics_data_pipeline_spark.sources.readers import load_table
 
     r214 = {r["doc_id"]: r.asDict() for r in q214_fuzzy_curation_pipeline(spark, SF).collect()}
     r212 = {r["doc_id"]: r.asDict() for r in q212_gopher_quality_filter(spark, SF).collect()}
@@ -2394,7 +2395,8 @@ def test_q214_consistency_sf(spark):
     qkeep = (
         q212_gopher_quality_filter(spark, SF).filter(F.col("kept")).select("doc_id")
     )
-    edges = neardup_pairs(spark, SF, keep=qkeep).collect()
+    docs = load_table(spark, SF, "documents")
+    edges = neardup_pairs(docs.join(qkeep.select("doc_id"), "doc_id", "semi")).collect()
     touched = {r["doc_a"] for r in edges} | {r["doc_b"] for r in edges}
     assert dropped <= touched
 
